@@ -33,17 +33,24 @@ def write_documents(spark, out: Path, n_docs: int, seed: int, files: int) -> Non
     ).write.mode("overwrite").parquet(str(out))
 
 
-def write_corpus_dictionary(spark, out: Path) -> None:
+def write_corpus_dictionary(out: Path) -> None:
+    """The corpus-wide dictionary as one parquet file, written with
+    pyarrow: a small local table needs no Spark job (a cold one costs
+    seconds of set-up)."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
     from named_architecture_entity_recognition_spark.synth import synth_gazetteer
 
+    out.mkdir(parents=True, exist_ok=True)
     names = synth_gazetteer(GAZETTEER_SIZE)
-    spark.createDataFrame([(n,) for n in names], "name string").coalesce(1).write.mode(
-        "overwrite"
-    ).parquet(str(out))
+    pq.write_table(pa.table({"name": names}), str(out / "part-0.parquet"))
 
 
-def read_corpus_dictionary(spark, path: Path) -> list:
-    return sorted(r.name for r in spark.read.parquet(str(path)).collect())
+def read_corpus_dictionary(path: Path) -> list:
+    import pyarrow.parquet as pq
+
+    return sorted(pq.read_table(str(path)).column("name").to_pylist())
 
 
 def write_project_dictionaries(spark, docs_path: Path, out: Path, seed: int) -> None:
@@ -99,15 +106,12 @@ def write_flat_corpus(spark, docs_path: Path, out: Path) -> None:
     flat.write.mode("overwrite").parquet(str(out))
 
 
-def document_sizes(spark, docs_path: Path) -> dict:
-    row = (
-        spark.read.parquet(str(docs_path))
-        .select(
-            F.count("*").alias("docs"),
-            F.sum(F.size(F.filter("spans", lambda s: s["kind"] == "text"))).alias(
-                "sentences"
-            ),
-        )
-        .first()
-    )
-    return {"docs": int(row.docs), "sentences": int(row.sentences)}
+def document_sizes(docs_path: Path) -> dict:
+    """Documents and text sentences (text spans) of the documents table,
+    counted with pyarrow (no Spark job)."""
+    import pyarrow.compute as pc
+    import pyarrow.dataset as ds
+
+    spans = ds.dataset(str(docs_path), format="parquet").to_table(columns=["spans"])
+    kinds = pc.struct_field(pc.list_flatten(spans.column("spans")), "kind")
+    return {"docs": spans.num_rows, "sentences": pc.sum(pc.equal(kinds, "text")).as_py()}

@@ -46,15 +46,16 @@ def process_start_epoch() -> float:
     return btime + start_ticks / os.sysconf("SC_CLK_TCK")
 
 
-def probe_ms() -> float:
-    """Fixed single-thread CPU work (~4 ms unloaded); its wall time moves
-    only with host CPU steal or contention, so it tells a noisy host
-    apart from a slower program."""
-    t0 = time.perf_counter()
+def probe_ms() -> tuple:
+    """Fixed single-thread CPU work (~4 ms unloaded): its wall time and
+    its CPU time in ms. Both move only with the host (steal, contention
+    for the core), so they tell a noisy host apart from a slower
+    program."""
+    t0, c0 = time.perf_counter(), time.thread_time()
     h = b"probe"
     for _ in range(10_000):
         h = hashlib.md5(h).digest()
-    return (time.perf_counter() - t0) * 1000.0
+    return (time.perf_counter() - t0) * 1000.0, (time.thread_time() - c0) * 1000.0
 
 
 def _descendants(pid: int) -> list:
@@ -74,6 +75,33 @@ def _descendants(pid: int) -> list:
         out.append(p)
         todo.extend(children.get(p, ()))
     return out
+
+
+def tree_cpu_s() -> tuple:
+    """CPU seconds (user + system) used so far by this process and its
+    live descendants — the driver, the JVM and the Python workers, plus
+    whatever children of theirs have already been reaped — and, of
+    that, by the JVM's JIT compiler threads."""
+    total = jit = 0
+    for pid in _descendants(os.getpid()):
+        try:
+            with open(f"/proc/{pid}/stat") as fh:
+                fields = fh.read().rsplit(")", 1)[1].split()
+            threads = os.listdir(f"/proc/{pid}/task")
+        except OSError:
+            continue
+        total += sum(int(f) for f in fields[11:15])
+        for tid in threads if len(threads) > 1 else ():
+            try:
+                with open(f"/proc/{pid}/task/{tid}/stat") as fh:
+                    stat = fh.read()
+            except OSError:
+                continue
+            if "CompilerThre" in stat[stat.index("(") : stat.rindex(")")]:
+                fields = stat.rsplit(")", 1)[1].split()
+                jit += int(fields[11]) + int(fields[12])
+    tick = os.sysconf("SC_CLK_TCK")
+    return total / tick, jit / tick
 
 
 class PeakRss(threading.Thread):
@@ -152,43 +180,64 @@ class Run:
         outside, then ``check(result)`` (untimed). An exception or a
         failed check marks the operation failed; its time becomes
         +inf so it also misses every latency figure."""
-        probe = probe_ms()
+        probe, probe_cpu = probe_ms()
         if self.first_op_at is None:
             self.first_op_at = time.time()
+        cpu0 = tree_cpu_s()
         t0 = time.perf_counter()
         seconds = None
         try:
             result = fn()
             seconds = time.perf_counter() - t0
+            cpu1 = tree_cpu_s()
             problem = check(result)
         except Exception as exc:  # the run goes on; the op counts as failed
             problem = f"{type(exc).__name__}: {str(exc)[:300]}"
         end = time.perf_counter()
         if seconds is None:
             seconds = end - t0
+            cpu1 = tree_cpu_s()
+        jit = cpu1[1] - cpu0[1]
         self.ops.append({
             "kind": kind,
             "traced": traced,
             "seconds": seconds if problem is None else float("inf"),
             "wall_s": seconds,
+            "cpu_s": cpu1[0] - cpu0[0] - jit,
+            "jit_cpu_s": jit,
             "check_s": end - t0 - seconds,
             "probe_ms": probe,
+            "probe_cpu_ms": probe_cpu,
             "problem": problem,
         })
 
-    def seconds_of(self, kind: str) -> list:
-        """Times of the untraced operations of one kind."""
-        return [o["seconds"] for o in self.ops if o["kind"] == kind and not o["traced"]]
+    def seconds_of(self, kind: str, key: str = "seconds") -> list:
+        """Times of the untraced operations of one kind; a failed one is
+        +inf. ``key="cpu_s"`` gives their CPU seconds instead."""
+        return [
+            o[key] if o["problem"] is None else float("inf")
+            for o in self.ops
+            if o["kind"] == kind and not o["traced"]
+        ]
 
 
-def make_session(work: Path, cpus: int):
+def task_slots(cpus: int) -> int:
+    """Spark task threads for ``cpus`` CPUs: half of them. A task that
+    crosses the Python boundary keeps two processes busy at once (the
+    JVM task thread and the Python worker it streams Arrow batches to),
+    so ``local[cpus]`` would run about twice as many busy threads as
+    there are CPUs and time the OS scheduler more than the program."""
+    return max(1, cpus // 2)
+
+
+def make_session(work: Path, slots: int):
     from named_architecture_entity_recognition_spark.session import get_spark
 
     tmp = work / "tmp"
     tmp.mkdir(parents=True, exist_ok=True)
     spark = get_spark(
         "perfbench",
-        master=f"local[{cpus}]",
+        master=f"local[{slots}]",
         extra_conf={
             # fixed, pre-touched heap: its share of peak_rss_mb is constant
             # instead of following G1's timing-dependent heap growth
@@ -196,8 +245,11 @@ def make_session(work: Path, cpus: int):
             "spark.ui.showConsoleProgress": "false",
             "spark.local.dir": str(tmp),
             "spark.sql.warehouse.dir": str(work / "warehouse"),
+            # compiler threads that never exit: their CPU time stays
+            # readable per thread, so it can be left out of cpu_s
             "spark.driver.extraJavaOptions": (
                 f"-Djava.io.tmpdir={tmp} -Xms{HEAP} -XX:+AlwaysPreTouch"
+                " -XX:-UseDynamicNumberOfCompilerThreads"
             ),
         },
     )
@@ -242,7 +294,8 @@ def summarize(bench: dict, run: Run, result: dict, setup_s: float, peak_mb: floa
     else:
         names = bench["end_to_end"]
         values = {
-            "docs_per_s": result["docs"] / statistics.median(result["op_seconds"]),
+            "docs_per_cpu_s": result["docs"]
+            / statistics.median(run.seconds_of(result["kind"], "cpu_s")),
             "setup_s": setup_s,
             "peak_rss_mb": peak_mb,
             "passed_frac": (attempted - failed) / attempted,
@@ -290,9 +343,8 @@ def main(argv=None) -> int:
     rss.start()
     spark = None
     try:
-        cpus = len(os.sched_getaffinity(0))
         t_session = time.time()
-        spark = make_session(work, cpus)
+        spark = make_session(work, task_slots(len(os.sched_getaffinity(0))))
         run = Run(spark, work, args.seed, args.seconds, bool(args.trace))
         run.info["setup_phases_s"] = {"session": round(time.time() - t_session, 3)}
         result = workloads.WORKLOADS[args.workload](run, args.scale)
@@ -325,6 +377,10 @@ def main(argv=None) -> int:
     if run.tracer is not None:
         run.tracer.write(records / f"{tag}.spans.jsonl")
 
+    if "kind" in result:  # wall-clock rates, for reading beside the metrics
+        wall = statistics.median(run.seconds_of(result["kind"]))
+        record["extra"]["docs_per_s"] = result["docs"] / wall
+        record["extra"]["sentences_per_s"] = run.info["sizes"]["sentences"] / wall
     print(json.dumps({k: record[k] for k in ("workload", "sizes", "samples", "extra")}))
     print(json.dumps(line))
     return 0

@@ -52,6 +52,33 @@ def test_multiset_check(spark):
     assert checks.multiset_problem(_df(spark, changed), want)
 
 
+def _write_sink(path, rows):
+    """``rows`` as a sink-shaped table: parquet files partitioned by
+    ``pred`` and ``subj_bucket`` directories."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    for i, (subj, pred, obj) in enumerate(rows):
+        part = path / f"pred={pred}" / f"subj_bucket={len(subj) % 2}"
+        part.mkdir(parents=True, exist_ok=True)
+        pq.write_table(pa.table({"subj": [subj], "obj": [obj]}), str(part / f"part-{i}.parquet"))
+
+
+def test_sink_check(tmp_path):
+    _write_sink(tmp_path / "want", TRIPLES)
+    want = checks.sorted_triples(tmp_path / "want")
+    assert len(want) == len(TRIPLES)
+
+    def problem(name, rows):
+        _write_sink(tmp_path / name, rows)
+        return checks.sorted_problem(checks.sorted_triples(tmp_path / name), want)
+
+    assert problem("same", list(reversed(TRIPLES))) is None
+    assert problem("lost", TRIPLES[:-1])  # row lost
+    assert problem("dup", TRIPLES + TRIPLES[:1])  # duplicated
+    assert problem("changed", TRIPLES[:-1] + [("doc2#beta", "hasName", "Gamma")])
+
+
 def test_lookup_check():
     rows = [dict(zip(checks.TRIPLE_COLS, t)) for t in TRIPLES[:3]]
     assert checks.lookup_problem(rows, TRIPLES[:3]) is None
@@ -76,6 +103,21 @@ def test_corpus_check():
     assert checks.corpus_problem(good + good[:1], ids, cluster_of)  # doc twice
     rep_dropped = [("d1", "quality")] + good[1:]
     assert checks.corpus_problem(rep_dropped, ids, cluster_of)
+    assert checks.corpus_problem(list(reversed(good)), ids, cluster_of, good) is None
+    verdict_changed = good[:2] + [("d3", "kept"), ("d4", "kept")]
+    assert checks.corpus_problem(verdict_changed, ids, cluster_of, good)
+
+
+def test_clusters_table(tmp_path):
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    (tmp_path / "clusters").mkdir()
+    pq.write_table(
+        pa.table({"doc_id": ["d1", "d2"], "cluster_id": ["d1", "d1"]}),
+        str(tmp_path / "clusters" / "part-0.parquet"),
+    )
+    assert checks.clusters(tmp_path) == {"d1": "d1", "d2": "d1"}
 
 
 #: kg_resume runs by hand only (DESIGN.md) but must keep working

@@ -4,7 +4,8 @@
 scale, does its set-up, then repeats its timed operation, each followed
 by its check, for ``run.seconds``.
 
-Untraced, a workload returns ``{"docs", "op_seconds"}`` for the
+Untraced, a workload returns ``{"docs", "kind"}`` (its input size and
+the kind of its timed operations) for the
 end-to-end metrics. Traced, untraced operations (the baseline for the
 tracing overhead and for coverage) take turns with traced ones (spans,
 noop-sink prefixes, wrappers and SQL metrics), and the workload returns
@@ -31,6 +32,9 @@ BUILD_DOCS = 200
 #: buckets and per-file cost dominates a pass: at the default 256 one
 #: pass takes ~9 s on 4 cores, too long to repeat inside a run.
 BUILD_BUCKETS = 32
+#: untimed passes after the reference: the first passes still carry
+#: JIT compilation of the writer's per-file code
+BUILD_WARMUP = 2
 N_LOOKUPS = 100
 # kg_resume: a cycle = crash (untimed) -> checkpointed_pipeline -> count
 RESUME_DOCS = 100
@@ -42,11 +46,17 @@ LINEAGE_DOCS = 64
 #: (tests/test_lineage.py's two crash shapes), in all three stages
 WIPED, ORPHANED = 2, 5
 STAGES = ("mentions", "entities", "triples")
-# corpus_prep: a pass = prepare_corpus(max_bucket_size=64) -> status table
+# corpus_prep: a pass = prepare_corpus(max_bucket_size=64, materialize_dir)
+# -> status table
 PREP_DOCS = 100
 MAX_BUCKET = 64
+#: a prep pass costs ~8 s, and without the JIT compiler threads its CPU
+#: time is flat from the first pass after the warm-up, so two suffice
+PREP_MIN_OPS = 2
 
-MIN_OPS = 2
+#: at least this many timed operations per run, so the reported median
+#: is never the first (coldest) one alone
+MIN_OPS = 3
 
 
 def _scaled(n: int, scale: float) -> int:
@@ -78,7 +88,7 @@ def _alternate(budget_s: float, untraced_op, traced_op) -> None:
         second()
         pairs.append(None)
 
-    _repeat(budget_s, MIN_OPS, pair)
+    _repeat(budget_s, 2, pair)  # one ABBA cycle at least
 
 
 def _noop(df) -> None:
@@ -125,9 +135,9 @@ def kg_build(run, scale: float) -> dict:
     n_docs = _scaled(BUILD_DOCS, scale)
     with run.phase("inputs"):
         inputs.write_documents(spark, work / "docs", n_docs, run.seed, run.cpus)
-        inputs.write_corpus_dictionary(spark, work / "dictionary")
+        inputs.write_corpus_dictionary(work / "dictionary")
     docs = read_documents(spark, str(work / "docs"))
-    gaz = inputs.read_corpus_dictionary(spark, work / "dictionary")
+    gaz = inputs.read_corpus_dictionary(work / "dictionary")
     pipe = RecognizerPipeline(gaz)
 
     # reference output from the unfused path, computed once; it also
@@ -137,10 +147,11 @@ def kg_build(run, scale: float) -> dict:
             assemble_entities(detect_mentions_df(docs, gaz, validate_format=True))
         ).write.parquet(str(work / "reference"))
     reference = spark.read.parquet(str(work / "reference"))
+    reference_rows = checks.sorted_triples(work / "reference")
     with run.phase("sizes"):
         run.info["sizes"] = {
-            **inputs.document_sizes(spark, work / "docs"),
-            "triples": reference.count(),
+            **inputs.document_sizes(work / "docs"),
+            "triples": len(reference_rows),
             "dictionaries": 1,
             "sink_buckets": BUILD_BUCKETS,
         }
@@ -151,18 +162,19 @@ def kg_build(run, scale: float) -> dict:
         write_triples(pipe.triples(docs), str(sink), n_buckets=BUILD_BUCKETS)
 
     def check_pass(_):
-        return checks.multiset_problem(read_triples(spark, str(sink)), reference)
+        return checks.sorted_problem(checks.sorted_triples(sink), reference_rows)
 
     def build_pass(body=None) -> None:
         shutil.rmtree(sink, ignore_errors=True)  # a fresh sink, untimed
         run.timed("pass", body or write_pass, check_pass, traced=body is not None)
 
     with run.phase("warmup"):
-        write_pass()  # the fused plan and the partitioned writer
+        for _ in range(BUILD_WARMUP):  # the fused plan and the partitioned writer
+            write_pass()
 
     if not run.trace:
-        _repeat(run.seconds, 3, build_pass)
-        return {"docs": n_docs, "op_seconds": run.seconds_of("pass")}
+        _repeat(run.seconds, MIN_OPS, build_pass)
+        return {"docs": n_docs, "kind": "pass"}
 
     # traced: untraced passes (the baseline) take turns with passes that
     # are split into layers by noop-sink prefixes
@@ -205,7 +217,7 @@ def kg_build(run, scale: float) -> dict:
     lineage_docs = work / "lineage" / "docs"
     docs.orderBy("doc_id").limit(LINEAGE_DOCS).write.parquet(str(lineage_docs))
     res = Resume(run, read_documents(spark, str(lineage_docs)), gaz, work / "lineage")
-    _repeat(run.seconds / 4, MIN_OPS, lambda: res.cycle(traced=True))
+    _repeat(run.seconds / 4, 2, lambda: res.cycle(traced=True))
     lineage = res.layers()
     layers.update((k, lineage[k]) for k in LINEAGE_SELF + LINEAGE_COUNTS)
     return {"layers": _host(run, layers)}
@@ -423,7 +435,7 @@ def kg_resume(run, scale: float) -> dict:
         res.crash()  # the first resume after the full run is still cold
         res.call().count()
     run.info["sizes"] = {
-        **inputs.document_sizes(spark, work / "docs"),
+        **inputs.document_sizes(work / "docs"),
         "triples": res.n_triples,
         "dictionaries": len(set(gaz.values())),
         "checkpoint_buckets": RESUME_BUCKETS,
@@ -431,7 +443,7 @@ def kg_resume(run, scale: float) -> dict:
     }
     if not run.trace:
         _repeat(run.seconds, MIN_OPS, res.cycle)
-        return {"docs": n_docs, "op_seconds": run.seconds_of("resume")}
+        return {"docs": n_docs, "kind": "resume"}
 
     _alternate(run.seconds, res.cycle, lambda: res.cycle(traced=True))
     layers = res.layers()
@@ -455,42 +467,40 @@ def corpus_prep(run, scale: float) -> dict:
     flat = spark.read.parquet(str(work / "flat"))
     input_ids = [r.doc_id for r in flat.select("doc_id").collect()]
 
-    def prep_pass():
-        out = prepare_corpus(flat, max_bucket_size=MAX_BUCKET)
+    # every pass goes through the program's stage-table path into an
+    # empty directory (cleared untimed before the pass) and leaves its
+    # near-dup clusters (doc_id, cluster_id) there for its check
+    stages = work / "stages"
+
+    def call():
+        return prepare_corpus(flat, max_bucket_size=MAX_BUCKET, materialize_dir=str(stages))
+
+    def collect(out):
         return [(r.doc_id, r.status) for r in out.select("doc_id", "status").collect()]
 
-    # warm-up through the program's stage-table path, which also leaves
-    # the near-dup clusters (doc_id, cluster_id) for the checks
-    stages = work / "stages"
     with run.phase("warmup"):
-        prepare_corpus(
-            flat, max_bucket_size=MAX_BUCKET, materialize_dir=str(stages)
-        ).collect()
-    cluster_of = {
-        r.doc_id: r.cluster_id
-        for r in spark.read.parquet(str(stages / "clusters")).collect()
-    }
+        first = collect(call())
     run.info["sizes"] = {
-        **inputs.document_sizes(spark, work / "docs"),
+        **inputs.document_sizes(work / "docs"),
         "triples": 0,
         "dictionaries": 0,
-        "clusters": len(set(cluster_of.values())),
+        "clusters": len(set(checks.clusters(stages).values())),
     }
 
     def check(rows):
-        return checks.corpus_problem(rows, input_ids, cluster_of)
+        return checks.corpus_problem(rows, input_ids, checks.clusters(stages), first)
+
+    def timed_pass(body, traced=False):
+        shutil.rmtree(stages, ignore_errors=True)
+        run.timed("prep", body, check, traced)
 
     def untraced_pass():
-        run.timed("prep", prep_pass, check)
+        timed_pass(lambda: collect(call()))
 
     if not run.trace:
-        _repeat(run.seconds, MIN_OPS, untraced_pass)
-        return {"docs": n_docs, "op_seconds": run.seconds_of("prep")}
+        _repeat(run.seconds, PREP_MIN_OPS, untraced_pass)
+        return {"docs": n_docs, "kind": "prep"}
 
-    # the first lazy pass after the stage-table warm-up is still cold
-    # (new plan shapes to generate code for); untimed here, so it does
-    # not bias the untraced baseline the traced passes are compared to
-    prep_pass()
     tr = run.tracer
     samples: list = []
 
@@ -500,19 +510,18 @@ def corpus_prep(run, scale: float) -> dict:
 
         def body():
             with tr.span("prep") as sp, job_group(spark, f"prep{len(samples)}") as jobs:
-                with stage_wrappers(tr, stats), tr.span("corpus.call") as call:
-                    out = prepare_corpus(flat, max_bucket_size=MAX_BUCKET)
+                with stage_wrappers(tr, stats), tr.span("corpus.call") as span_call:
+                    out = call()
                 with tr.span("corpus.action") as act:
-                    rows = [
-                        (r.doc_id, r.status)
-                        for r in out.select("doc_id", "status").collect()
-                    ]
+                    rows = collect(out)
                 sample["jobs"] = jobs()
-            sample.update(span=sp, call=call, action=act, iterations=stats.get("cc_iterations", 0))
+            sample.update(
+                span=sp, call=span_call, action=act, iterations=stats.get("cc_iterations", 0)
+            )
             sample["rows"] = rows
             return rows
 
-        run.timed("prep", body, check, traced=True)
+        timed_pass(body, traced=True)
         samples.append(sample)
 
     _alternate(run.seconds, untraced_pass, traced_pass)
