@@ -332,7 +332,7 @@ def compact_headline(result):
         "metric": result["metric"],
         "value": result["value"],
         "unit": result["unit"],
-        "queries": result["queries"],
+        "queries": dict(result["queries"]),
         "sf": result["sf"],
         "n_docs": result.get("n_docs"),
         "triples_per_sec": result.get("triples_per_sec"),

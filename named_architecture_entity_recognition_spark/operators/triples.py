@@ -7,16 +7,14 @@ entities rows -> (subj, pred, obj):
   (entity_id, 'occursIn',            doc#s<no>#<ref>)  per occurrence
 with entity_id = '<doc_id>#<lower(name)>'.
 
-Narrow per-row transforms + one union; written partitioned by pred
-(and bucketed by subj at real scale — Iceberg hidden partitioning).
+Narrow per-row transforms and one explode; the S7 sink that writes
+them by (pred, bucket(subj)) is ``sources/lakehouse.write_triples``.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-
-PREDICATES = ("instanceOf", "hasName", "hasAlternativeName", "occursIn")
 
 
 def entity_id() -> "F.Column":
@@ -26,8 +24,8 @@ def entity_id() -> "F.Column":
 def to_triples(entities: DataFrame) -> DataFrame:
     """Single-pass triple generation: per entity row, build the full
     (pred, obj) array and explode ONCE. A union of four projections
-    would re-execute the upstream lineage (mapInPandas detection +
-    aggregation) four times; this shape scans entities exactly once and
+    would re-execute the upstream lineage (the fused mapInArrow
+    detection) four times; this shape scans entities exactly once and
     stays narrow."""
     pairs = F.concat(
         F.array(
@@ -62,10 +60,3 @@ def to_triples(entities: DataFrame) -> DataFrame:
         .select("subj", F.col("po.pred").alias("pred"), F.col("po.obj").alias("obj"))
     )
 
-
-def write_triples(triples: DataFrame, path: str, mode: str = "overwrite") -> None:
-    """Partitioned write; at production scale this is an Iceberg
-    ``writeTo(...).partitionedBy('pred', bucket(N,'subj'))`` — parquet
-    with partitionBy is the sandbox equivalent (no Iceberg runtime jar
-    in this environment)."""
-    triples.write.mode(mode).partitionBy("pred").parquet(path)

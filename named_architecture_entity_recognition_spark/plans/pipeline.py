@@ -1,17 +1,14 @@
 """End-to-end recognition pipeline (reference E1/E2 lifecycle, SURVEY §3).
 
-    documents --(validate/quarantine)--> valid docs
-              --(mapInPandas mention detection, gazetteer-assisted)--> mentions
-              --(groupBy assemble + dedup)--> entities
-              --(triple materialization)--> triples
+    documents --(one fused mapInArrow pass: F1 validation, detection,
+                 per-(doc_id, name) assembly)--> entities --> triples
+              --(lakehouse.write_triples)--> (pred, bucket(subj)) sink
 
-Shuffle inventory at 10^12-doc scale:
-  * quarantine verdict: 1 hash agg on doc_id (map-side combined)
-  * mention detection: ZERO shuffles (mapInPandas, partition-preserving)
-  * entity assembly: 1 hash agg on (doc_id, name)
-  * triples: narrow
-The gazetteer rides in the detection closure (broadcast semantics);
-no similarity work ever crosses doc boundaries.
+Shuffle inventory at 10^12-doc scale: ZERO up to triples (entities are
+doc-local; triples are one narrow explode), then ONE rebalance Exchange
+on (pred, subj_bucket), owned by write_triples, for one file per sink
+partition directory. The gazetteer rides in the detection closure
+(broadcast semantics); no similarity work ever crosses doc boundaries.
 """
 
 from __future__ import annotations

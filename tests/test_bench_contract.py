@@ -68,7 +68,11 @@ def test_compact_headline_prefers_dropping_extras_over_flagship():
     # inflate with many synthetic per-query entries to force trimming
     for i in range(200):
         r["queries"][f"q_padding_entry_number_{i:04d}"] = 999.123456789
+    before = dict(r["queries"])
     compact = bench.compact_headline(r)
     line = json.dumps(compact)
     assert len(line) < 1800
     assert "naer_kg_pipeline" in compact["queries"]
+    # the trim works on a copy: the caller's full result stays whole
+    assert len(compact["queries"]) < len(before)
+    assert r["queries"] == before

@@ -84,3 +84,24 @@ def test_every_oracle_numeric_kind_matches_spark_schema(spark, duck):
         "driver-hash type mismatches (cast the oracle column, e.g. "
         "::BIGINT / ::DOUBLE):\n" + "\n".join(bad)
     )
+
+
+def test_check_oracles_kinds_compatible_zero_rows_and_typed_widening():
+    """tools/check_oracles.py's kind gate: an int-vs-float pair with no
+    rows hashes identically at the driver (nothing to stringify), so it
+    passes; a typed widening with no null behind it still fails, and a
+    null-driven one passes."""
+    import pandas as pd
+
+    sys.path.insert(0, str(Path(__file__).resolve().parents[1] / "tools"))
+    from check_oracles import kinds_compatible
+
+    ints = pd.Series([1, 2], dtype="int64")
+    assert kinds_compatible("int", "float", pd.Series([], dtype="int64"),
+                            pd.Series([], dtype="float64"))
+    assert not kinds_compatible("int", "float", ints,
+                                pd.Series([1.0, 2.0], dtype="float64"))
+    assert not kinds_compatible("float", "int",
+                                pd.Series([1.0, 2.0], dtype="float64"), ints)
+    assert kinds_compatible("int", "float", ints,
+                            pd.Series([1.0, None], dtype="float64"))

@@ -105,11 +105,10 @@ def dtype_kinds(df):
             for c in df.columns}
 
 
-def kinds_compatible(sk, dk, col, sdf_col, ddf_col):
+def kinds_compatible(sk, dk, sdf_col, ddf_col):
     """int-vs-float (either direction) is the driver-visible failure;
-    everything else (obj vs anything) is representation noise we let
-    the value hash arbitrate.  A column that is all-null on the
-    float side is exempt (nullable ints widen to float64 in pandas)."""
+    other kinds are noise the value hash arbitrates. Exempt: a float side
+    with a null (pandas widens nullable ints) or zero rows (same hash)."""
     if sk == dk:
         return True
     pair = {sk, dk}
@@ -118,7 +117,7 @@ def kinds_compatible(sk, dk, col, sdf_col, ddf_col):
         vals = floaty.to_numpy()
         # nulls force float64; only flag when the widening is typed,
         # not null-driven
-        return bool(np.isnan(vals.astype("float64")).any())
+        return len(vals) == 0 or bool(np.isnan(vals.astype("float64")).any())
     return True
 
 
@@ -174,7 +173,7 @@ def main():
             sk, dk = dtype_kinds(spd), dtype_kinds(dpd)
             kind_bad = [
                 f"{c}:{sk[c]}/{dk[c]}" for c in spd.columns
-                if not kinds_compatible(sk[c], dk[c], c, spd[c], dpd[c])
+                if not kinds_compatible(sk[c], dk[c], spd[c], dpd[c])
             ]
         ok = ok_count and ok_cols and ok_hash and not kind_bad
         status = "OK  " if ok else "FAIL"

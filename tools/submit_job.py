@@ -51,6 +51,12 @@ def load_gazetteer(path: str) -> list:
     return sorted(names)
 
 
+def sink_files(output: str):
+    """Parquet data files under a local --output; None for a table."""
+    root = Path(output)
+    return sum(1 for _ in root.rglob("*.parquet")) if root.is_dir() else None
+
+
 def main(argv=None):
     ap = argparse.ArgumentParser(description=__doc__)
     ap.add_argument("--input", help="documents table (parquet path or iceberg name)")
@@ -107,6 +113,7 @@ def main(argv=None):
         "n_triples": n,
         "sec": round(dt, 2),
         "triples_per_sec": round(n / dt, 1),
+        "sink_files": sink_files(args.output),
         "stage_metrics": metrics,
     }
     print(json.dumps(out))
