@@ -8,11 +8,15 @@ entities sharing any pool name land in one component, and the
 component's canonical label (min name) plays the role of the
 reference's unified name.
 
-Algorithm: alternating min-label propagation (a.k.a. large-star /
-small-star simplification) over an edge list, converging in
-O(log(diameter)) Spark jobs. Alias chains are short (name variants of
-one concept), so 2-4 iterations suffice; each iteration is two
-hash-agg shuffles. Deterministic: labels are strings, min is total.
+Algorithm: per-partition union-find plus boundary merge (BTS,
+"Load-Balanced Distributed Union-Find", ICDE 2024). A round runs a numpy
+union-find over each partition's edges where they sit (no shuffle, so a
+hub's edges are never gathered into one task), takes each node's min
+local root, and keeps the (root, min root) edges where a node's
+partitions disagree. That boundary graph is the next round's input on
+at most half as many partitions; a one-partition round is exact, so CC
+takes at most log2(P)+1 rounds whatever the diameter. Deterministic:
+labels are strings, min is total.
 """
 
 from __future__ import annotations
@@ -20,107 +24,113 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+# boundary edges per union-find task (numpy: 10^6 edges in < 1 s)
+_EDGES_PER_TASK = 1 << 20
+
+
+def _local_roots(batches):
+    """mapInArrow kernel: one partition's edges -> (node, root), root =
+    min node of the node's component among this partition's edges."""
+    import numpy as np
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    batches = list(batches)
+    if not batches:
+        return
+    t = pa.Table.from_batches(batches)
+    t = t.filter(pc.and_(pc.is_valid(t["src"]), pc.is_valid(t["dst"])))
+    if t.num_rows == 0:
+        return
+    ends = pa.concat_arrays([t["src"].combine_chunks(), t["dst"].combine_chunks()])
+    # factorize in sorted (UTF-8 byte = Spark string) order: the smallest
+    # index of a component is its smallest string
+    names = pc.unique(ends)
+    names = names.take(pc.sort_indices(names))
+    idx = pc.index_in(ends, value_set=names).to_numpy()
+    u, v = idx[: t.num_rows], idx[t.num_rows :]
+    parent = np.arange(len(names))
+    while True:
+        # hook each root onto the smallest root it shares an edge with,
+        # then jump pointers until every node points at a root again
+        lo = np.minimum(parent[u], parent[v])
+        hi = np.maximum(parent[u], parent[v])
+        cross = lo != hi
+        if not cross.any():
+            break
+        np.minimum.at(parent, hi[cross], lo[cross])
+        while not np.array_equal(up := parent[parent], parent):
+            parent = up
+    yield pa.RecordBatch.from_arrays([names, names.take(parent)], ["node", "root"])
+
 
 def connected_components(
     edges: DataFrame,
-    max_iter: int = 10,
     checkpoint_dir: str | None = None,
     stats: dict | None = None,
 ) -> DataFrame:
     """edges(src string, dst string) -> (node string, component string).
 
-    component = lexicographic min node id reachable. Undirected.
+    component = lexicographic min node id reachable. Undirected; edges
+    with a NULL endpoint are ignored.
 
-    One Spark action per iteration: the changed-label count rides as a
-    column through the propagation plan, and the single
-    ``agg(sum(changed))`` both materializes the (lazy) checkpoint and
-    returns the convergence signal — no separate join+count job.
+    One Spark action per round: the boundary-edge count is the only
+    convergence signal and materializes the round's lazy checkpoint; a
+    one-partition round is exact and runs none. The per-round maps
+    compose lazily, one left join per extra round.
 
-    ``checkpoint_dir``: when set, iterations use RELIABLE checkpointing
-    (``df.checkpoint`` into that dir) so an executor loss mid-job
-    recomputes from durable storage instead of failing the whole
-    iterative job — required at production scale. Default is
-    ``localCheckpoint`` (executor-memory lineage truncation), fine for
-    the sandbox / short-lived jobs.
+    ``checkpoint_dir``: when set, rounds use RELIABLE checkpointing
+    (``df.checkpoint`` into that dir), so an executor loss recomputes
+    from durable storage — required at production scale. Default is
+    ``localCheckpoint`` (executor-memory lineage truncation).
 
-    ``stats``: optional dict filled with {"iterations": n} for tests.
+    ``stats``: optional dict filled with {"iterations": rounds}.
     """
-    spark = edges.sparkSession
     if checkpoint_dir:
-        spark.sparkContext.setCheckpointDir(checkpoint_dir)
+        edges.sparkSession.sparkContext.setCheckpointDir(checkpoint_dir)
 
     def _ckpt(df: DataFrame) -> DataFrame:
-        # lazy: the checkpoint is persisted by this iteration's single
-        # aggregate action below, not by an extra job here
+        # lazy: persisted by the round's count action (or by the caller's
+        # first action after a one-partition round), not by a job here
         if checkpoint_dir:
             return df.checkpoint(eager=False)
         return df.localCheckpoint(eager=False)
 
-    sym = (
-        edges.select("src", "dst")
-        .unionByName(edges.select(F.col("dst").alias("src"), F.col("src").alias("dst")))
-        .filter(F.col("src").isNotNull() & F.col("dst").isNotNull())
-        .dropDuplicates(["src", "dst"])
-    )
-    # the edge list joins into EVERY iteration; without truncation its
-    # full upstream lineage (e.g. a 10^7-pair LSH band join) re-executes
-    # per iteration — measured 3-4x the whole CC cost on dup-cluster
-    # workloads. Lazy checkpoint: materialized by iteration 1's action,
-    # reused afterwards.
-    sym = _ckpt(sym)
-    # label(node) = min(node, min neighbor label); iterate to fixpoint
-    labels = (
-        sym.groupBy("src")
-        .agg(F.least(F.min("dst"), F.first("src")).alias("label"))
-        .select(F.col("src").alias("node"), "label")
-    )
-    labels = _ckpt(labels.withColumn("label", F.least("node", "label")))
-    iters = 0
-    for _ in range(max_iter):
-        iters += 1
-        # propagate: new_label(node) = min over neighbors of their label
-        neigh = (
-            sym.join(labels.withColumnRenamed("node", "dst"), "dst")
-            .groupBy("src")
-            .agg(F.min("label").alias("nlabel"))
-            .select(F.col("src").alias("node"), "nlabel")
-        )
-        new_labels = (
-            labels.join(neigh, "node", "left")
-            .select(
-                "node",
-                F.col("label").alias("old_label"),
-                F.least(
-                    "label", F.coalesce("nlabel", F.col("label"))
-                ).alias("label"),
+    edges = edges.select("src", "dst")
+    maps, parts = [], None
+    while True:
+        # each node's local roots, smallest first; the checkpoint keeps an
+        # upstream LSH join from re-running when the final map is read
+        roots = _ckpt(
+            edges.mapInArrow(_local_roots, "node string, root string")
+            .withColumn("part", F.spark_partition_id())
+            .groupBy("node")
+            .agg(
+                F.array_sort(F.collect_set("root")).alias("roots"),
+                F.max("part").alias("part"),
             )
         )
-        # label-pointer jumping: label -> label-of-label (path halving)
-        ptr = labels.select(
-            F.col("node").alias("label"), F.col("label").alias("plabel")
-        )
-        new_labels = (
-            new_labels.join(ptr, "label", "left")
-            .select(
-                "node",
-                F.least("label", F.coalesce("plabel", F.col("label"))).alias("label"),
-                (
-                    F.least("label", F.coalesce("plabel", F.col("label")))
-                    != F.col("old_label")
-                ).cast("long").alias("changed"),
-            )
-        )
-        new_labels = _ckpt(new_labels)
-        # THE one action: materializes the checkpoint blocks AND counts
-        # changed labels (map-side partial sum, no extra shuffle stage
-        # beyond the scalar aggregate)
-        changed = new_labels.agg(F.sum("changed")).first()[0] or 0
-        labels = new_labels.select("node", "label")
-        if changed == 0:
+        maps.append(roots.select("node", F.col("roots")[0].alias("root")))
+        if parts == 1:
             break
+        n_boundary, top = roots.agg(F.sum(F.size("roots") - 1), F.max("part")).first()
+        if not n_boundary:
+            break
+        parts = max(1, min((top + 1) // 2, -(-n_boundary // _EDGES_PER_TASK)))
+        edges = roots.select(
+            F.explode(F.slice("roots", 2, F.size("roots"))).alias("src"),
+            F.col("roots")[0].alias("dst"),
+        ).coalesce(parts)
     if stats is not None:
-        stats["iterations"] = iters
-    return labels.select("node", F.col("label").alias("component"))
+        stats["iterations"] = len(maps)
+    comp = maps[0]
+    for up in maps[1:]:
+        comp = comp.join(
+            up.select(F.col("node").alias("root"), F.col("root").alias("up")),
+            "root",
+            "left",
+        ).select("node", F.coalesce("up", "root").alias("root"))
+    return comp.select("node", F.col("root").alias("component"))
 
 
 def canonicalize_aliases(entities: DataFrame) -> DataFrame:
@@ -131,9 +141,7 @@ def canonicalize_aliases(entities: DataFrame) -> DataFrame:
     (min) '<doc_id>#<pool name>' of the alias component, suitable as a
     grouping key for merged entities.
     """
-    with_key = entities.withColumn(
-        "node", F.concat_ws("#", "doc_id", F.lower("name"))
-    )
+    with_key = entities.withColumn("node", F.concat_ws("#", "doc_id", F.lower("name")))
     pool = with_key.select(
         F.col("node").alias("src"),
         "doc_id",
@@ -151,9 +159,7 @@ def canonicalize_aliases(entities: DataFrame) -> DataFrame:
                 ),
             )
         ).alias("alias"),
-    ).select(
-        "src", F.concat_ws("#", "doc_id", F.col("alias")).alias("dst")
-    )
+    ).select("src", F.concat_ws("#", "doc_id", F.col("alias")).alias("dst"))
     comp = connected_components(pool)
     return with_key.join(comp, "node", "left").withColumn(
         "component", F.coalesce("component", F.col("node"))
@@ -166,28 +172,22 @@ def canonicalize_corpus(entities: DataFrame) -> DataFrame:
     entities from DIFFERENT docs unify when any of their surface forms
     (name or alias), case/hyphen/space-collapsed, coincide.
 
-    Bipartite edges (doc#name) --- (name:<normalized surface>); CC over
-    the union converges in ~2 propagation rounds (star-shaped
-    components). Adds ``canonical_id``: the component's min label, a
-    deterministic corpus-wide entity id. Hot surfaces make wide stars,
-    which the min-aggregation handles with map-side partial aggs (no
-    single-reducer hotspot).
+    Bipartite edges (doc#name) --- (name:<normalized surface>). Adds
+    ``canonical_id``: the component's min label, a deterministic
+    corpus-wide entity id. Hot surfaces make wide stars; CC's union-find
+    runs where the edges sit, so a hub's edges never meet in one task.
     """
     def norm_col(c):
         # normalize_name in SQL: strip non-alnum, lowercase
         return F.lower(F.regexp_replace(c, r"[^A-Za-z0-9]+", ""))
 
-    with_key = entities.withColumn(
-        "node", F.concat_ws("#", "doc_id", F.lower("name"))
-    )
+    with_key = entities.withColumn("node", F.concat_ws("#", "doc_id", F.lower("name")))
     surfaces = with_key.select(
         F.col("node").alias("src"),
         F.explode(
             F.array_union(
                 F.array(F.col("name")),
-                F.coalesce(
-                    "alternative_names", F.array().cast("array<string>")
-                ),
+                F.coalesce("alternative_names", F.array().cast("array<string>")),
             )
         ).alias("surface"),
     ).select(

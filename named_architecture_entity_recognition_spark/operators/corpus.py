@@ -9,8 +9,11 @@ assignment that survives re-runs and backfills, packing of short
 documents into fixed token budgets, and an eval-set leakage check.
 
 Portability rule (same as dedup.py): all hashing is md5-based so every
-operator has an exact DuckDB oracle. Everything is Catalyst built-ins —
-no Python anywhere.
+operator has an exact DuckDB oracle. Everything is Catalyst built-ins
+except two Python kernels on the near-dup path: the minhash signatures
+(operators/dedup.py, ``impl="python"`` by default; ``impl="expr"`` is
+the Catalyst form the oracle mirrors) and the per-partition union-find
+of connected components (operators/cc.py).
 """
 
 from __future__ import annotations
@@ -30,7 +33,6 @@ def dup_clusters(
     n_hashes: int = 8,
     bands: int = 4,
     shingle_n: int = 3,
-    max_iter: int = 10,
     checkpoint_dir: str | None = None,
     max_bucket_size: int | None = None,
 ) -> DataFrame:
@@ -45,10 +47,10 @@ def dup_clusters(
     training pipeline.
 
     Scale: pairs come from the banded LSH equi-join (never all-pairs);
-    CC is min-label propagation with one action per iteration
-    (operators/cc.py); the final join back to docs is a shuffle on
-    doc_id. Duplicate clusters are small (near-dup transitivity), so CC
-    converges in 2-3 iterations.
+    CC is per-partition union-find plus a boundary merge over the pairs'
+    own partitions (operators/cc.py): one round and one action when
+    every cluster sits inside one partition, at most log2(P)+1 rounds
+    otherwise. The final join back to docs is a shuffle on doc_id.
     """
     from named_architecture_entity_recognition_spark.operators.cc import (
         connected_components,
@@ -71,9 +73,7 @@ def dup_clusters(
     edges = pairs.select(
         key(F.col("doc_a")).alias("src"), key(F.col("doc_b")).alias("dst")
     )
-    comp = connected_components(
-        edges, max_iter=max_iter, checkpoint_dir=checkpoint_dir
-    )
+    comp = connected_components(edges, checkpoint_dir=checkpoint_dir)
     joined = ids.join(
         comp.select(
             F.col("node").cast(doc_type).alias("doc_id"),

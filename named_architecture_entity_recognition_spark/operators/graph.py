@@ -25,14 +25,14 @@ contribution sum (map-side partial agg collapses per-partition
 contributions to a dst before the exchange) plus the nodes⨝contrib
 join. The static (src, dst, outdeg) edge frame is checkpointed once —
 without truncation its upstream lineage (e.g. a triple-extraction
-pipeline) re-executes every iteration (the same trap measured 3-4x in
-cc.py). Iteration state is lazily checkpointed so the final action
-doesn't drag a 10-deep join lineage. With ``tol`` set, each iteration
-pays one scalar action (max |Δrank| rides the same aggregate that
-materializes the checkpoint — the cc.py trick) in exchange for early
-exit. At production scale pass ``checkpoint_dir`` for reliable
-checkpointing (executor loss mid-iteration otherwise kills the job —
-same contract as connected_components).
+pipeline) re-executes every iteration. Iteration state is lazily
+checkpointed so the final action doesn't drag a 10-deep join lineage.
+With ``tol`` set, each iteration pays one scalar action: max |Δrank|
+is computed by the same aggregate that materializes that iteration's
+checkpoint, so early exit costs no extra job. At production scale pass
+``checkpoint_dir`` for reliable checkpointing (executor loss
+mid-iteration otherwise kills the job — same contract as
+connected_components).
 
 Reference parity: beyond-reference capability (the reference holds one
 in-memory document and has no graph analytics).

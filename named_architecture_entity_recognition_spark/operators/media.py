@@ -296,8 +296,13 @@ def decode_wav(buf: bytes):
     uncompressed format): RIFF/WAVE header, fmt chunk (PCM only,
     16-bit), data chunk -> (sample_rate, channels, int16 sample array,
     mono-mixed). Raises ValueError on malformed input — callers
-    quarantine, the job never dies on one bad clip. Compressed codecs
-    (MP3/AAC/...) remain the external-library integration point."""
+    quarantine, the job never dies on one bad clip. Chunk sizes are
+    checked strictly: any chunk, the trailing data chunk included, whose
+    declared size runs past the end of the buffer raises. Streaming
+    writers that leave a placeholder data size (e.g. 0xFFFFFFFF) are
+    therefore quarantined, not decoded to the frames present. Compressed
+    codecs (MP3/AAC/...) remain the external-library integration
+    point."""
     if len(buf) < 44 or buf[0:4] != b"RIFF" or buf[8:12] != b"WAVE":
         raise ValueError("not a RIFF/WAVE file")
     pos = 12

@@ -57,12 +57,6 @@ def mean_word_length(col) -> Column:
     ) / F.greatest(F.size(t), F.lit(1))
 
 
-def punct_ratio(col) -> Column:
-    c = F.col(col) if isinstance(col, str) else col
-    stripped = F.regexp_replace(c, r"[^\p{L}\p{N}\s]", "")
-    return (F.length(c) - F.length(stripped)) / F.greatest(F.length(c), F.lit(1))
-
-
 def quality_score(col) -> Column:
     """Composite [0,1] quality heuristic: length band + stopword band +
     word-length band (crude but deterministic and monotone-sane)."""
@@ -110,11 +104,6 @@ def _ngrams_of(t: Column, n: int) -> Column:
             lambda i: F.array_join(F.slice(t, i + F.lit(1), n), " "),
         ),
     ).otherwise(F.array().cast("array<string>"))
-
-
-def ngrams(col, n: int) -> Column:
-    """Array of space-joined word n-grams (empty array when < n words)."""
-    return _ngrams_of(tokens(col), n)
 
 
 def _run_stats(grams: Column) -> Column:
@@ -279,20 +268,6 @@ def redact_pii(docs: DataFrame, text_col: str = "text") -> DataFrame:
         )
         red = F.regexp_replace(red, pat, repl)
     return docs.select(*out_cols, *counts, red.alias(text_col))
-
-
-def text_stats(docs: DataFrame, text_col: str = "text") -> DataFrame:
-    c = F.col(text_col)
-    return docs.select(
-        "doc_id",
-        word_count(c).alias("n_words"),
-        token_count(c).alias("n_tokens"),
-        F.round(stopword_ratio(c), 6).alias("stopword_ratio"),
-        F.round(mean_word_length(c), 6).alias("mean_word_len"),
-        quality_score(c).alias("quality"),
-        lang_id(c).alias("lang_pred"),
-        fingerprint(c).alias("fingerprint"),
-    )
 
 
 def collocations(

@@ -1,5 +1,8 @@
 """Connected components (alias canonicalization, J3 general form)."""
 
+import random
+from collections import deque
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -166,3 +169,142 @@ def test_pipeline_canonicalize_flag_adds_sameas(spark):
     same = t.filter("pred = 'sameAs'").select("obj").distinct()
     assert t.filter("pred = 'sameAs'").count() == 2
     assert same.count() == 1  # both docs' entities share one canonical id
+
+
+# --- differential tests: connected_components against a pure-Python BFS
+
+
+def bfs_components(edges):
+    """Reference CC: breadth-first search over an adjacency map; every
+    node is labelled with the smallest node of its component. Edges with
+    a None endpoint are ignored."""
+    adj = {}
+    for s, d in edges:
+        if s is None or d is None:
+            continue
+        adj.setdefault(s, set()).add(d)
+        adj.setdefault(d, set()).add(s)
+    label = {}
+    for start in adj:
+        if start in label:
+            continue
+        seen, queue = {start}, deque([start])
+        while queue:
+            for nxt in adj[queue.popleft()]:
+                if nxt not in seen:
+                    seen.add(nxt)
+                    queue.append(nxt)
+        low = min(seen)
+        for node in seen:
+            label[node] = low
+    return label
+
+
+def _edges_df(spark, rows, partitions):
+    return spark.createDataFrame(rows, "src string, dst string").repartition(partitions)
+
+
+def _cc(df):
+    stats = {}
+    got = {r.node: r.component for r in connected_components(df, stats=stats).collect()}
+    return got, stats["iterations"]
+
+
+def _random_graph(rng, tag):
+    # mixed-case, accented and CJK names: the answer depends on Spark's
+    # byte-wise string order, which must match the kernel's sort
+    alphabet = ["a", "B", "z", "é", "Ä", "日", "0", "-"]
+    names = sorted(
+        {tag + "".join(rng.choice(alphabet) for _ in range(rng.randint(1, 4)))
+         for _ in range(rng.randint(5, 120))}
+    )
+    edges = []
+    for _ in range(rng.randint(1, 2 * len(names))):
+        s, d = rng.choice(names), rng.choice(names)
+        edges.append((s, d))
+        if rng.random() < 0.2:
+            edges.append((d, s))  # reversed duplicate
+    return edges
+
+
+@pytest.mark.parametrize("partitions", [1, 3, 7])
+def test_random_graphs_match_bfs(spark, partitions):
+    rng = random.Random(1000 + partitions)
+    rows = [e for g in range(8) for e in _random_graph(rng, f"g{g}.")]
+    got, rounds = _cc(_edges_df(spark, rows, partitions))
+    assert got == bfs_components(rows)
+    assert rounds <= 4  # log2(7) + 1
+
+
+def test_long_path_over_four_partitions(spark):
+    """Rounds are bounded by the partition count, not the diameter: a
+    4,096-node path over 4 partitions is exact in log2(4) + 1 rounds."""
+    nodes = [f"n{i:05d}" for i in range(4096)]
+    rows = list(zip(nodes, nodes[1:]))
+    got, rounds = _cc(_edges_df(spark, rows, 4))
+    assert got == bfs_components(rows)
+    assert set(got.values()) == {"n00000"}
+    assert rounds <= 3  # log2(4) + 1
+
+
+def test_mega_star_over_partitions_in_two_rounds(spark):
+    n = 100_000
+    edges = spark.range(0, n, numPartitions=8).select(
+        F.lit("~hub").alias("src"),  # '~' sorts after every leaf
+        F.format_string("leaf%06d", "id").alias("dst"),
+    )
+    got, rounds = _cc(edges)
+    rows = [("~hub", f"leaf{i:06d}") for i in range(n)]
+    assert got == bfs_components(rows)
+    assert rounds <= 2
+
+
+def test_self_loops_nulls_duplicates_and_reversed_edges(spark):
+    rows = [
+        ("a", "a"),  # self-loop only: its own component
+        ("b", None),  # NULL endpoint: ignored, so b is not a node
+        (None, "c"),
+        (None, None),
+        ("c", "c"),
+        ("d", "e"),
+        ("e", "d"),
+        ("d", "e"),
+        ("f", "f"),
+        ("g", "f"),
+    ]
+    got, _ = _cc(_edges_df(spark, rows, 3))
+    assert got == bfs_components(rows)
+    assert got == {"a": "a", "c": "c", "d": "d", "e": "d", "f": "f", "g": "f"}
+
+
+def test_boundary_round_runs_over_seven_partitions(spark):
+    rng = random.Random(7)
+    nodes = [f"v{i:04d}" for i in range(400)]
+    rows = [(rng.choice(nodes), rng.choice(nodes)) for _ in range(500)]
+    got, rounds = _cc(_edges_df(spark, rows, 7))
+    assert got == bfs_components(rows)
+    assert rounds == 2  # local union-find, then one exact boundary round
+
+
+def test_boundary_needing_several_rounds(spark, monkeypatch):
+    """With one boundary edge per task the partition count only halves
+    per round (8 -> 4 -> 2 -> 1), so the boundary graph itself takes
+    more than one round; the answer must not change and the rounds stay
+    within log2(8) + 1."""
+    from named_architecture_entity_recognition_spark.operators import cc
+
+    monkeypatch.setattr(cc, "_EDGES_PER_TASK", 1)
+    key = "spark.sql.adaptive.coalescePartitions.enabled"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "false")  # keep each round on its partitions
+    try:
+        nodes = [f"w{i:05d}" for i in range(3000)]
+        order = list(range(3000))
+        random.Random(3).shuffle(order)
+        rows = [(nodes[a], nodes[b]) for a, b in zip(order, order[1:])]
+        rows += [("x1", "x2"), ("x2", "x3")]
+        got, rounds = _cc(_edges_df(spark, rows, 8))
+    finally:
+        spark.conf.set(key, old)
+    assert got == bfs_components(rows)
+    assert 3 <= rounds <= 4
