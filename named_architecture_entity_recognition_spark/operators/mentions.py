@@ -1,26 +1,33 @@
-"""Distributed mention detection: mapInArrow over whole documents.
+"""Distributed gazetteer detection: one mapInArrow kernel over whole
+documents (anaphora is doc-sequential state, so the unit of parallelism
+is the document, not the sentence).
 
-Anaphora (pronoun/head-noun rules) is doc-sequential state, so the unit
-of parallelism is the document, not the sentence. Each Arrow batch of
-document rows is processed in one Python call; the compiled gazetteer
-rides along as a broadcast-like closure constant and is compiled at
-most once per (dictionary, config) per worker process (workers are
-reused across tasks, so the cache amortizes over the whole job).
+``_detect`` holds the one Arrow kernel, a batch loop: gc pause,
+``doc_id``/``sents`` decode, F1 check, dictionary resolution,
+``detect_doc``. Two output builders consume it: ``_mention_batch`` ('mention', 'alias' and
+'quarantined' records, schema.MENTIONS) and ``_entity_batch`` (the
+A1-A4 grouping fused per (doc_id, name), schema.ENTITIES).
 
-Scale design: the Python boundary receives ONLY (doc_id, sents:
-array<string>) — the text sentences are projected out of the
-interleaved span structs JVM-side (whole-stage codegen `filter` +
-`transform`), so media_ref/kind/offset bytes never cross the Arrow
-boundary. At 32 cores this halved the detection stage's memory-
-bandwidth footprint versus shipping the full span structs.
+One dictionary resolver serves every dictionary shape: a JOIN row
+carries its own packed ``TYPE\\x00name`` list; a closure dictionary
+(flat list, typed map or ``{doc_id: names}``) is the degenerate case of
+a row without one, where the doc_id picks the names. Compiled
+gazetteers are cached per (reused) worker process.
 
-No shuffle: documents in -> mention rows out, partition-preserving.
+The Python boundary receives ONLY (doc_id, sents[, names]): sentences
+are projected out of the span structs JVM-side (``_sents_expr``), so
+media_ref/kind/offset bytes never cross it; at 32 cores that halved the
+detection stage's memory-bandwidth footprint versus shipping the span
+structs. No shuffle: documents in -> rows out, partition-preserving.
 """
 
 from __future__ import annotations
 
+import functools
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.pandas.types import to_arrow_schema
 
 from named_architecture_entity_recognition_spark.operators.matching import (
     MatcherConfig,
@@ -83,267 +90,24 @@ def _line_is_valid(ln) -> bool:
     return bool(t) and t[-1] in ".!?"
 
 
-def detect_mentions_df(
-    docs: DataFrame,
-    gazetteer_names,
-    cfg: MatcherConfig | None = None,
-    validate_format: bool = False,
-) -> DataFrame:
-    """documents(doc_id, spans) -> mentions rows (see schema.MENTIONS).
-
-    ``gazetteer_names`` is either one corpus-wide name list, or a dict
-    ``{doc_id: [names]}`` for per-document dictionaries (the reference
-    evaluates each project against its own component list). The mapping
-    rides in the task closure — broadcast semantics.
-
-    Emits 'mention' records (doc_id, name, sent_no, ref_type, rule) and
-    'alias' records for doc-induced acronym aliases (KMS -> Kurento),
-    which later join into the entities' alternative_names. Sentence
-    numbers are 1-indexed positions among the doc's text spans, exactly
-    the reference's line numbering
-    (model/SoftwareArchitectureDocumentation.java:117-124).
-    """
-    cfg = cfg or MatcherConfig()
-    default_names, gaz_map, _ = normalize_gazetteer(gazetteer_names)
-
-    def process(batches):
-        import gc
-
-        import pyarrow as pa
-
-        # the matcher allocates many short-lived acyclic objects per
-        # line; CPython's cyclic GC adds measurable contention at high
-        # core counts for zero reclaim. Pause it for the batch loop.
-        # try/finally: generators can be closed early (downstream
-        # limit/take) or raise mid-batch — the worker process is reused,
-        # so gc must be restored on EVERY exit path.
-        gc_was_enabled = gc.isenabled()
-        gc.disable()
-
-        out_schema = pa.schema(
-            [
-                ("doc_id", pa.string()),
-                ("record", pa.string()),
-                ("name", pa.string()),
-                ("sent_no", pa.int32()),
-                ("ref_type", pa.string()),
-                ("rule", pa.string()),
-                ("alias", pa.string()),
-            ]
-        )
-        try:
-            yield from _mention_batches(batches, out_schema)
-        finally:
-            if gc_was_enabled:
-                gc.enable()
-                gc.collect()
-
-    def _mention_batches(batches, out_schema):
-        import pyarrow as pa
-
-        for batch in batches:
-            doc_ids = batch.column("doc_id").to_pylist()
-            sents = batch.column("sents")
-            if isinstance(sents, pa.ChunkedArray):
-                sents = sents.combine_chunks()
-            offsets = sents.offsets.to_pylist()
-            texts = sents.values.to_pylist()
-            cols = {k: [] for k in (
-                "doc_id", "record", "name", "sent_no", "ref_type", "rule", "alias"
-            )}
-
-            def emit(doc_id, record, name, sent_no, ref_type, rule, alias):
-                cols["doc_id"].append(doc_id)
-                cols["record"].append(record)
-                cols["name"].append(name)
-                cols["sent_no"].append(sent_no)
-                cols["ref_type"].append(ref_type)
-                cols["rule"].append(rule)
-                cols["alias"].append(alias)
-
-            for r, doc_id in enumerate(doc_ids):
-                lines = texts[offsets[r] : offsets[r + 1]]
-                if validate_format:
-                    # F1 validation in the SAME pass (no extra doc scan):
-                    # reference fails the doc; we quarantine + count
-                    n_bad = sum(1 for ln in lines if not _line_is_valid(ln))
-                    if n_bad:
-                        emit(doc_id, "quarantined", "", n_bad, None, "F1", None)
-                        continue
-                names = gaz_map.get(doc_id, default_names) if gaz_map else default_names
-                gaz = _compiled_gaz(names, cfg)
-                mentions, aliases = detect_doc(lines, gaz, cfg)
-                for sent_no, name, ref, rule in mentions:
-                    emit(doc_id, "mention", name, sent_no, ref, rule, None)
-                for acro, (name, _rx) in aliases.items():
-                    emit(doc_id, "alias", name, None, None, "R_ALIAS", acro)
-            yield pa.RecordBatch.from_pydict(cols, schema=out_schema)
-
-    # reference only spans.text / spans.kind (GetArrayStructFields) so
-    # nested schema pruning reaches the parquet scan: ReadSchema becomes
-    # struct<kind,text> — media_ref/offset bytes are never decoded.
-    # (filter(spans, s -> ...) over the whole struct defeats pruning.)
-    sents = F.transform(
-        F.filter(
-            F.zip_with(
-                F.col("spans").getField("text"),
-                F.col("spans").getField("kind"),
-                lambda t, k: F.struct(t.alias("t"), k.alias("k")),
-            ),
-            lambda x: x["k"] == F.lit("text"),
-        ),
-        lambda x: x["t"],
-    )
-    slim = docs.select("doc_id", sents.alias("sents"))
-    return slim.mapInArrow(process, schema=MENTIONS)
-
-
-def _entity_process_factory(
-    cfg: MatcherConfig,
-    name_to_type: dict,
-    validate_format: bool,
-    default_names: tuple = (),
-    gaz_map: dict | None = None,
-    names_in_batch: bool = False,
-):
-    """Build the Arrow entity-detection kernel. Two dictionary
-    transports share this one kernel (parity-tested):
-
-    - closure (``default_names``/``gaz_map``): the dictionary rides in
-      the task binary — right for corpus-wide or few-project lists.
-    - ``names_in_batch``: each batch row carries its own ``names``
-      list column, produced by a doc_id-local JOIN against a
-      ``(doc_id, name)`` dictionary TABLE — the 100×-scale form: with
-      10^9 docs × doc-specific dictionaries, closure shipping is
-      O(all dictionaries) serialized into every task; the join ships
-      each doc only its own names (see detect_entities_df_joined).
-    """
-
-    def process(batches):
-        import gc
-
-        import pyarrow as pa
-
-        out_schema = pa.schema(
-            [
-                ("doc_id", pa.string()),
-                ("name", pa.string()),
-                ("entity_type", pa.string()),
-                ("alternative_names", pa.list_(pa.string())),
-                (
-                    "occurrences",
-                    pa.list_(
-                        pa.struct(
-                            [("sent_no", pa.int32()), ("ref_type", pa.string())]
-                        )
-                    ),
-                ),
-            ]
-        )
-        # see detect_mentions_df: restore gc on every generator exit path
-        gc_was_enabled = gc.isenabled()
-        gc.disable()
-        try:
-            yield from _entity_batches(batches, out_schema)
-        finally:
-            if gc_was_enabled:
-                gc.enable()
-                gc.collect()
-
-    def _entity_batches(batches, out_schema):
-        import pyarrow as pa
-
-        for batch in batches:
-            doc_ids = batch.column("doc_id").to_pylist()
-            sents = batch.column("sents")
-            if isinstance(sents, pa.ChunkedArray):
-                sents = sents.combine_chunks()
-            offsets = sents.offsets.to_pylist()
-            texts = sents.values.to_pylist()
-            row_names = (
-                batch.column("names").to_pylist() if names_in_batch else None
-            )
-            # columnar accumulation: nested columns as flat value lists
-            # + offset lists, assembled into Arrow List/Struct arrays
-            # directly — avoids one Python dict per occurrence (~18M at
-            # 144k docs) that RecordBatch.from_pydict then re-walks.
-            # On this synth corpus the stage stays matcher-CPU-bound
-            # (~6 ms/doc cold, measured single-task), so the win here
-            # is the serialization share, which grows on real corpora
-            # with higher per-worker line-cache hit rates.
-            col_doc: list = []
-            col_name: list = []
-            col_type: list = []
-            alt_flat: list = []
-            alt_off = [0]
-            occ_sent: list = []
-            occ_ref: list = []
-            occ_off = [0]
-            for r, doc_id in enumerate(doc_ids):
-                lines = texts[offsets[r] : offsets[r + 1]]
-                if validate_format and any(
-                    not _line_is_valid(ln) for ln in lines
-                ):
-                    continue  # quarantined (F1): no entities from this doc
-                if names_in_batch:
-                    names = tuple(row_names[r]) if row_names[r] else ()
-                else:
-                    names = (
-                        gaz_map.get(doc_id, default_names)
-                        if gaz_map
-                        else default_names
-                    )
-                gaz = _compiled_gaz(names, cfg)
-                mentions, aliases = detect_doc(lines, gaz, cfg)
-                occ_by_name: dict = {}
-                for sent_no, name, ref, _rule in mentions:
-                    occ_by_name.setdefault(name, set()).add((sent_no, ref))
-                alias_by_name: dict = {}
-                for acro, (name, _rx) in aliases.items():
-                    alias_by_name.setdefault(name, set()).add(acro)
-                for name in sorted(occ_by_name):
-                    col_doc.append(doc_id)
-                    col_name.append(name)
-                    col_type.append(name_to_type.get(name, "COMPONENT"))
-                    alt_flat.extend(sorted(alias_by_name.get(name, ())))
-                    alt_off.append(len(alt_flat))
-                    for s, t in sorted(occ_by_name[name]):
-                        occ_sent.append(s)
-                        occ_ref.append(t)
-                    occ_off.append(len(occ_sent))
-            occ_struct = pa.StructArray.from_arrays(
-                [
-                    pa.array(occ_sent, pa.int32()),
-                    pa.array(occ_ref, pa.string()),
-                ],
-                names=["sent_no", "ref_type"],
-            )
-            yield pa.RecordBatch.from_arrays(
-                [
-                    pa.array(col_doc, pa.string()),
-                    pa.array(col_name, pa.string()),
-                    pa.array(col_type, pa.string()),
-                    pa.ListArray.from_arrays(
-                        pa.array(alt_off, pa.int32()),
-                        pa.array(alt_flat, pa.string()),
-                    ),
-                    pa.ListArray.from_arrays(
-                        pa.array(occ_off, pa.int32()), occ_struct
-                    ),
-                ],
-                schema=out_schema,
-            )
-
-    return process
+def _unpack(packed: tuple):
+    """A JOIN row's packed 'TYPE\\x00name' strings -> (names,
+    name_to_type), with ENTITY_TYPES precedence on collisions; unknown
+    or blank types degrade to COMPONENT (reference default)."""
+    by_type: dict = {t: [] for t in ENTITY_TYPES}
+    for s in packed:
+        etype, _, name = s.partition("\x00")
+        by_type[etype if etype in by_type else "COMPONENT"].append(name)
+    names, _, name_to_type = normalize_gazetteer(by_type)
+    return names, name_to_type
 
 
 def _sents_expr():
-    """Project the text sentences out of the interleaved span structs
+    """The text sentences of the interleaved span structs, projected
     JVM-side. Only spans.text / spans.kind are referenced
-    (GetArrayStructFields) so nested schema pruning reaches the parquet
-    scan: ReadSchema becomes struct<kind,text> — media_ref/offset bytes
-    are never decoded. (filter(spans, s -> ...) over the whole struct
-    defeats pruning.)"""
+    (GetArrayStructFields), so nested schema pruning reaches the parquet
+    scan: ReadSchema becomes struct<kind,text> and media_ref/offset bytes
+    are never decoded (filter(spans, s -> ...) would defeat pruning)."""
     return F.transform(
         F.filter(
             F.zip_with(
@@ -354,6 +118,163 @@ def _sents_expr():
             lambda x: x["k"] == F.lit("text"),
         ),
         lambda x: x["t"],
+    ).alias("sents")
+
+
+def _detect(
+    docs, build, schema, cfg, validate_format, gazetteer_names=(), gaz_names=None
+):
+    """documents -> ``schema`` rows through the one Arrow kernel.
+    ``build`` turns a batch's per-document ``(doc_id, n_bad, mentions,
+    aliases, name_to_type)`` into its output RecordBatch. A row's
+    dictionary is its packed ``names`` column when ``gaz_names`` is
+    joined in; otherwise ``gazetteer_names`` rides in the task closure
+    (broadcast semantics)."""
+    cfg = cfg or MatcherConfig()
+    default_names, gaz_map, closure_types = normalize_gazetteer(gazetteer_names)
+    joined = gaz_names is not None
+
+    def detected(batch):
+        import pyarrow as pa
+
+        doc_ids = batch.column("doc_id").to_pylist()
+        sents = batch.column("sents")
+        if isinstance(sents, pa.ChunkedArray):
+            sents = sents.combine_chunks()
+        offsets = sents.offsets.to_pylist()
+        texts = sents.values.to_pylist()
+        packed = batch.column("names").to_pylist() if joined else [None] * len(doc_ids)
+        # memoized per batch, not per worker: per-doc dictionaries
+        # would otherwise pile up for the life of the process
+        unpack = functools.cache(_unpack)
+        for r, doc_id in enumerate(doc_ids):
+            lines = texts[offsets[r] : offsets[r + 1]]
+            # F1 validation in the SAME pass (no extra doc scan): the
+            # reference fails the doc; we quarantine it
+            n_bad = validate_format and sum(not _line_is_valid(ln) for ln in lines)
+            if n_bad:
+                yield doc_id, n_bad, (), {}, {}
+                continue
+            if packed[r] is None:  # closure dictionary, or no JOIN match
+                names, types = gaz_map.get(doc_id, default_names), closure_types
+            else:
+                names, types = unpack(tuple(packed[r]))
+            mentions, aliases = detect_doc(lines, _compiled_gaz(names, cfg), cfg)
+            yield doc_id, 0, mentions, aliases, types
+
+    def process(batches):
+        import gc
+
+        # the matcher allocates many short-lived acyclic objects per
+        # line; cyclic GC adds contention at high core counts for zero
+        # reclaim. The worker process is reused and the generator can be
+        # closed early or raise, so gc is restored on EVERY exit path.
+        gc_was_enabled = gc.isenabled()
+        gc.disable()
+        try:
+            for batch in batches:
+                yield build(detected(batch))
+        finally:
+            if gc_was_enabled:
+                gc.enable()
+                gc.collect()
+
+    slim = docs.select("doc_id", _sents_expr())
+    if joined:
+        slim = slim.join(gaz_names, "doc_id", "left")
+    return slim.mapInArrow(process, schema=schema)
+
+
+_MENTIONS_ARROW = to_arrow_schema(MENTIONS)
+_ENTITIES_ARROW = to_arrow_schema(ENTITIES)
+
+
+def _mention_batch(detected):
+    """'mention' (doc_id, name, sent_no, ref_type, rule), 'alias'
+    (doc-induced acronym -> name) and 'quarantined' (F1: sent_no = the
+    number of invalid lines) records, one row each."""
+    import pyarrow as pa
+
+    rows = []
+    for doc_id, n_bad, mentions, aliases, _types in detected:
+        if n_bad:
+            rows.append((doc_id, "quarantined", "", n_bad, None, "F1", None))
+        for sent_no, name, ref, rule in mentions:
+            rows.append((doc_id, "mention", name, sent_no, ref, rule, None))
+        for acro, (name, _rx) in aliases.items():
+            rows.append((doc_id, "alias", name, None, None, "R_ALIAS", acro))
+    cols = list(zip(*rows)) or [()] * len(_MENTIONS_ARROW)
+    return pa.RecordBatch.from_arrays(
+        [pa.array(c, f.type) for c, f in zip(cols, _MENTIONS_ARROW)],
+        schema=_MENTIONS_ARROW,
+    )
+
+
+def _entity_batch(detected):
+    """Fused per-(doc_id, name) entity rows (none for an F1-invalid
+    doc), accumulated columnar: nested columns as flat value + offset
+    lists, so no Python dict per occurrence (~18M at 144k docs)."""
+    import pyarrow as pa
+
+    col_doc, col_name, col_type = [], [], []
+    alt_flat, alt_off = [], [0]
+    occ_sent, occ_ref, occ_off = [], [], [0]
+    for doc_id, n_bad, mentions, aliases, name_to_type in detected:
+        if n_bad:
+            continue
+        occ_by_name: dict = {}
+        for sent_no, name, ref, _rule in mentions:
+            occ_by_name.setdefault(name, set()).add((sent_no, ref))
+        alias_by_name: dict = {}
+        for acro, (name, _rx) in aliases.items():
+            alias_by_name.setdefault(name, set()).add(acro)
+        for name in sorted(occ_by_name):
+            col_doc.append(doc_id)
+            col_name.append(name)
+            col_type.append(name_to_type.get(name, "COMPONENT"))
+            alt_flat.extend(sorted(alias_by_name.get(name, ())))
+            alt_off.append(len(alt_flat))
+            for s, t in sorted(occ_by_name[name]):
+                occ_sent.append(s)
+                occ_ref.append(t)
+            occ_off.append(len(occ_sent))
+    occ = pa.StructArray.from_arrays(
+        [pa.array(occ_sent, pa.int32()), pa.array(occ_ref, pa.string())],
+        fields=list(_ENTITIES_ARROW.field("occurrences").type.value_type),
+    )
+    return pa.RecordBatch.from_arrays(
+        [
+            pa.array(col_doc, pa.string()),
+            pa.array(col_name, pa.string()),
+            pa.array(col_type, pa.string()),
+            pa.ListArray.from_arrays(
+                pa.array(alt_off, pa.int32()), pa.array(alt_flat, pa.string())
+            ),
+            pa.ListArray.from_arrays(pa.array(occ_off, pa.int32()), occ),
+        ],
+        schema=_ENTITIES_ARROW,
+    )
+
+
+def detect_mentions_df(
+    docs: DataFrame,
+    gazetteer_names,
+    cfg: MatcherConfig | None = None,
+    validate_format: bool = False,
+) -> DataFrame:
+    """documents(doc_id, spans) -> mentions rows (see schema.MENTIONS).
+
+    ``gazetteer_names``: any normalize_gazetteer shape; per-doc
+    ``{doc_id: [names]}`` is how the reference evaluates each project
+    against its own component list. Emits 'mention' records, 'alias'
+    records for doc-induced acronyms (KMS -> Kurento, later joined into
+    alternative_names) and, with ``validate_format``, one 'quarantined'
+    record per F1-invalid doc. Sentence numbers are 1-indexed positions
+    among the doc's text spans, the reference's line numbering
+    (model/SoftwareArchitectureDocumentation.java:117-124).
+    """
+    return _detect(
+        docs, _mention_batch, MENTIONS, cfg, validate_format, gazetteer_names
     )
 
 
@@ -374,17 +295,9 @@ def detect_entities_df(
     the reference's TreeSet<Occurrence> (model/NamedEntity.java:192-198),
     aliases sorted distinct, alias-only groups dropped.
     """
-    cfg = cfg or MatcherConfig()
-    default_names, gaz_map, name_to_type = normalize_gazetteer(gazetteer_names)
-    process = _entity_process_factory(
-        cfg,
-        name_to_type,
-        validate_format,
-        default_names=default_names,
-        gaz_map=gaz_map,
+    return _detect(
+        docs, _entity_batch, ENTITIES, cfg, validate_format, gazetteer_names
     )
-    slim = docs.select("doc_id", _sents_expr().alias("sents"))
-    return slim.mapInArrow(process, schema=ENTITIES)
 
 
 def detect_entities_df_joined(
@@ -397,95 +310,32 @@ def detect_entities_df_joined(
     """Per-document gazetteers as a JOIN instead of a task closure —
     the 100×-scale transport for doc-specific dictionaries.
 
-    ``gaz_df`` is a ``(doc_id, name)`` DataFrame (optionally with an
-    ``entity_type`` column). It is pre-aggregated to one
-    ``(doc_id, names)`` row per doc (one small exchange on the
-    dictionary side, partial-agg combined), then LEFT-joined to the
-    documents on doc_id; the Arrow kernel reads each row's dictionary
-    from the batch. Docs without dictionary rows get an empty gazetteer
-    (no mentions) — identical to the closure path's ``{doc_id: names}``
-    semantics for missing keys (parity-tested).
+    ``gaz_df`` is a ``(doc_id, name[, entity_type])`` DataFrame,
+    pre-aggregated to one ``(doc_id, names)`` row per doc (one small
+    exchange on the dictionary side) and LEFT-joined to the documents on
+    doc_id. Docs without dictionary rows get an empty gazetteer, as the
+    closure path's ``{doc_id: names}`` does for missing keys
+    (parity-tested). ``entity_type`` types entities like the reference
+    enum (model/NamedEntityType.java:8); collisions resolve by
+    ENTITY_TYPES precedence then name order, as in normalize_gazetteer.
 
-    ``broadcast=True`` hints the aggregated dictionary for broadcast —
-    right when dictionaries are per-project (small distinct set): the
-    documents side then never shuffles. With truly per-doc dictionaries
-    at 10^9 rows leave it False and let AQE pick a sort-merge join;
-    that shuffle is the price of not serializing every dictionary into
-    every task binary (the closure path's failure mode).
-
-    Type-aware dictionaries: pass ``entity_type`` in ``gaz_df`` to type
-    entities like the reference enum (model/NamedEntityType.java:8);
-    collisions resolve by ENTITY_TYPES precedence then name order,
-    matching normalize_gazetteer.
+    ``broadcast=True`` suits per-project dictionaries (small distinct
+    set): the documents side then never shuffles. With truly per-doc
+    dictionaries at 10^9 rows leave it False and let AQE pick a
+    sort-merge join — the price of not serializing every dictionary
+    into every task binary (the closure path's failure mode).
     """
-    cfg = cfg or MatcherConfig()
-    has_type = "entity_type" in gaz_df.columns
-    if has_type:
-        # per-name type rides the join as "TYPE\x00name" packed strings
-        # (one list column crosses the Arrow boundary, not two parallel
-        # lists that could zip-drift)
-        packed = F.concat_ws("\x00", "entity_type", "name")
-        gaz_names = gaz_df.groupBy("doc_id").agg(
-            F.array_sort(F.array_distinct(F.collect_list(packed))).alias(
-                "names"
-            )
-        )
-    else:
-        gaz_names = gaz_df.groupBy("doc_id").agg(
-            F.array_sort(F.array_distinct(F.collect_list("name"))).alias(
-                "names"
-            )
-        )
+    # one packed "TYPE\x00name" list crosses the Arrow boundary, not two
+    # parallel lists that could zip-drift; a blank or null type is
+    # COMPONENT (concat_ws would drop a null type and its separator)
+    typed = "entity_type" in gaz_df.columns
+    etype = F.coalesce(F.col("entity_type"), F.lit("")) if typed else F.lit("")
+    packed = F.concat_ws("\x00", etype, "name")
+    gaz_names = gaz_df.groupBy("doc_id").agg(
+        F.array_sort(F.array_distinct(F.collect_list(packed))).alias("names")
+    )
     if broadcast:
         gaz_names = F.broadcast(gaz_names)
-
-    def unpack(names: tuple):
-        """tuple of packed 'TYPE\\x00name' -> (names tuple, name_to_type)
-        with ENTITY_TYPES precedence on collisions."""
-        by_type: dict = {t: [] for t in ENTITY_TYPES}
-        for s in names:
-            etype, _, name = s.partition("\x00")
-            # unknown/blank types degrade to COMPONENT (reference default)
-            by_type[etype if etype in by_type else "COMPONENT"].append(name)
-        return normalize_gazetteer(by_type)
-
-    if has_type:
-
-        def process(batches):
-            # thin adapter: unpack types per row, then reuse the closure
-            # kernel per distinct dictionary via the worker LRU cache
-            import pyarrow as pa
-
-            for batch in batches:
-                namecol = batch.column("names").to_pylist()
-                uniq = {}
-                for row in namecol:
-                    key = tuple(row) if row else ()
-                    if key not in uniq:
-                        names, _, name_to_type = unpack(key)
-                        uniq[key] = (names, name_to_type)
-                # group rows by dictionary: one sub-batch per distinct
-                # dictionary so the inner kernel sees homogeneous state
-                idx_by_key: dict = {}
-                for i, row in enumerate(namecol):
-                    idx_by_key.setdefault(tuple(row) if row else (), []).append(i)
-                for key, idxs in idx_by_key.items():
-                    names, name_to_type = uniq[key]
-                    inner = _entity_process_factory(
-                        cfg,
-                        name_to_type,
-                        validate_format,
-                        default_names=names,
-                    )
-                    sub = batch.take(pa.array(idxs, pa.int32()))
-                    yield from inner(iter([sub]))
-
-    else:
-        process = _entity_process_factory(
-            cfg, {}, validate_format, names_in_batch=True
-        )
-
-    slim = docs.select("doc_id", _sents_expr().alias("sents")).join(
-        gaz_names, "doc_id", "left"
+    return _detect(
+        docs, _entity_batch, ENTITIES, cfg, validate_format, gaz_names=gaz_names
     )
-    return slim.mapInArrow(process, schema=ENTITIES)

@@ -47,8 +47,10 @@ class RecognizerPipeline:
 
     def entities(self, docs: DataFrame) -> DataFrame:
         # A1-A4 grouping is (doc_id, name)-local, so it runs fused
-        # inside the detection workers (detect_entities_df): the
-        # flagship needs NO shuffle at all. assemble_entities remains
+        # inside the detection workers: detect_entities_df runs the same
+        # Arrow kernel and dictionary resolver as detect_mentions_df,
+        # with the entity output builder instead of the mention one, and
+        # the flagship needs NO shuffle at all. assemble_entities remains
         # the grouping operator for mention streams from other sources
         # (parsed LLM answers), and an equivalence test pins
         # detect_entities_df == assemble(detect_mentions_df).

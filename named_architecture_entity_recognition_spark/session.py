@@ -8,7 +8,9 @@ multi-executor cluster; in this sandbox it runs local[N].
 from __future__ import annotations
 
 import os
+from pathlib import Path
 
+from pyspark import SparkConf
 from pyspark.sql import SparkSession
 
 #: knobs chosen for the 100TB design point and safe at local scale
@@ -68,6 +70,14 @@ def get_spark(
         conf["spark.sql.shuffle.partitions"] = str(shuffle_partitions)
     if extra_conf:
         conf.update(extra_conf)
+    # Python workers unpickle the package's Arrow kernels by reference,
+    # so they must import the package even when the driver starts
+    # outside the repo root: put its parent directory first on their
+    # PYTHONPATH, keeping any value already configured
+    key = "spark.executorEnv.PYTHONPATH"
+    existing = conf.get(key) or SparkConf().get(key, "")
+    paths = [str(Path(__file__).resolve().parents[1]), *existing.split(os.pathsep)]
+    conf[key] = os.pathsep.join(dict.fromkeys(p for p in paths if p))
     for k, v in conf.items():
         builder = builder.config(k, v)
     return builder.getOrCreate()

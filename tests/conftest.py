@@ -12,6 +12,13 @@ EVAL_RESOURCES = Path(
     "/root/reference/src/test/resources/evaluation_resources"
 )
 
+#: gates that read the ArDoCo reference corpus skip with a reason naming
+#: the missing path, so the summary shows which of them did not run
+requires_corpus = pytest.mark.skipif(
+    not EVAL_RESOURCES.exists(),
+    reason=f"ArDoCo reference corpus absent: {EVAL_RESOURCES}",
+)
+
 
 @pytest.fixture(scope="session")
 def spark():

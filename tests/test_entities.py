@@ -123,3 +123,37 @@ def test_fused_entities_equal_assembled(spark):
     assert fused.exceptAll(assembled).count() == 0
     assert assembled.exceptAll(fused).count() == 0
     assert fused.count() > 0
+
+
+def test_mention_kernel_emits_quarantine_and_alias_records(spark):
+    """detect_mentions_df with validate_format: an F1-invalid doc
+    yields exactly one 'quarantined' record (sent_no = its number of
+    invalid lines) and nothing else; an acronym-defining doc yields its
+    'alias' record next to its mentions."""
+    from named_architecture_entity_recognition_spark.operators.mentions import (
+        detect_mentions_df,
+    )
+    from named_architecture_entity_recognition_spark.schema import DOCUMENTS
+    from named_architecture_entity_recognition_spark.sources.sad import doc_row
+
+    docs = spark.createDataFrame(
+        [
+            doc_row("bad", ["Kurento runs", "", "Kurento streams video."]),
+            doc_row(
+                "acro",
+                ["Kurento Media Server (KMS) streams video.", "KMS scales out."],
+            ),
+        ],
+        DOCUMENTS,
+    )
+    mentions = detect_mentions_df(docs, ["Kurento"], validate_format=True)
+    got = sorted((tuple(r) for r in mentions.collect()), key=repr)
+    assert got == sorted(
+        [
+            ("bad", "quarantined", "", 2, None, "F1", None),
+            ("acro", "mention", "Kurento", 1, "DIRECT", "R_EXACT", None),
+            ("acro", "mention", "Kurento", 2, "DIRECT", "R_ALIAS", None),
+            ("acro", "alias", "Kurento", None, None, "R_ALIAS", "KMS"),
+        ],
+        key=repr,
+    )

@@ -184,3 +184,97 @@ def test_compiled_gazetteer_cache_is_a_bounded_lru(monkeypatch):
     mentions._compiled_gaz(dicts[1], cfg)
     assert compiles[-1] == dicts[1] and len(compiles) == 18
     assert len(mentions._COMPILED) == 16
+
+
+def test_dictionary_resolver_join_equals_closure_in_one_batch(spark):
+    """One Arrow batch holding several dictionaries resolves each doc's
+    own: typed JOIN rows equal the typed closure ({TYPE: names}, one run
+    per doc) and untyped JOIN rows equal the {doc_id: names} closure,
+    row for row. Covers a name listed under two types (ENTITY_TYPES
+    precedence), an unknown and a null type (COMPONENT), a doc without a
+    dictionary and an F1-invalid doc under validate_format."""
+    docs = spark.createDataFrame(
+        [
+            doc_row(
+                "d1",
+                [
+                    "The Billing Service handles payment.",
+                    "It talks to the Audit Log.",
+                    "The Audit Log stores events.",
+                ],
+            ),
+            doc_row(
+                "d2",
+                [
+                    "The Billing Service is unknown here.",
+                    "The Query Planner optimizes requests.",
+                ],
+            ),
+            doc_row("d3", ["Nothing relevant at all."]),
+            doc_row("d4", ["The Billing Service runs", "The Audit Log stores."]),
+            doc_row(
+                "d5", ["The Audit Log (AL) records access.", "AL is append-only."]
+            ),
+        ],
+        DOCUMENTS,
+    ).coalesce(1)
+    typed_rows = [
+        ("d1", "Billing Service", "COMPONENT"),
+        ("d1", "Audit Log", "CLASS"),
+        ("d1", "Audit Log", "INTERFACE"),  # wins: INTERFACE precedes CLASS
+        ("d2", "Query Planner", "WEIRD"),  # unknown type -> COMPONENT
+        ("d2", "Billing Service", None),  # null type -> COMPONENT
+        ("d4", "Billing Service", "COMPONENT"),  # F1-invalid doc
+        ("d4", "Audit Log", "COMPONENT"),
+        ("d5", "Audit Log", "CLASS"),
+        ("d5", "Billing Service", "COMPONENT"),
+    ]
+    gaz_df = spark.createDataFrame(
+        typed_rows, "doc_id string, name string, entity_type string"
+    )
+    typed = detect_entities_df_joined(
+        docs, gaz_df, validate_format=True, broadcast=True
+    )
+    untyped = detect_entities_df_joined(
+        docs, gaz_df.drop("entity_type"), validate_format=True, broadcast=True
+    )
+    # the documents side stays in one partition: one task, one batch
+    assert typed.rdd.getNumPartitions() == 1
+    assert untyped.rdd.getNumPartitions() == 1
+
+    typed_closure = []
+    for doc_id in ("d1", "d2", "d4", "d5"):
+        by_type: dict = {}
+        for d, name, etype in typed_rows:
+            if d == doc_id:
+                etype = etype if etype in ("INTERFACE", "CLASS") else "COMPONENT"
+                by_type.setdefault(etype, []).append(name)
+        typed_closure += _rows(
+            detect_entities_df(
+                docs.filter(F.col("doc_id") == doc_id),
+                {t: sorted(n) for t, n in by_type.items()},
+                validate_format=True,
+            )
+        )
+    assert _rows(typed) == sorted(typed_closure)
+
+    names_by_doc: dict = {}
+    for d, name, _ in typed_rows:
+        names_by_doc.setdefault(d, set()).add(name)
+    untyped_closure = detect_entities_df(
+        docs, {d: sorted(n) for d, n in names_by_doc.items()}, validate_format=True
+    )
+    assert _rows(untyped) == _rows(untyped_closure)
+
+    # the comparison is not vacuous: every case above shows in the rows
+    got = {(r[0], r[1]): r[2] for r in _rows(typed)}
+    assert got == {
+        ("d1", "Billing Service"): "COMPONENT",
+        ("d1", "Audit Log"): "INTERFACE",
+        ("d2", "Query Planner"): "COMPONENT",
+        ("d2", "Billing Service"): "COMPONENT",
+        ("d5", "Audit Log"): "CLASS",
+    }
+    assert {r[0] for r in _rows(untyped)} == {"d1", "d2", "d5"}
+    d5 = ("d5", "Audit Log", "CLASS", ("AL",), ((1, "DIRECT"), (2, "DIRECT")))
+    assert d5 in _rows(typed)

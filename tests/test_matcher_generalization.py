@@ -18,6 +18,8 @@ from named_architecture_entity_recognition_spark.operators.matching import (
 )
 from named_architecture_entity_recognition_spark.synth import synth_holdout_sad
 
+from conftest import requires_corpus
+
 P_FLOOR = 0.9
 R_FLOOR = 0.9
 N_DOCS = 16
@@ -86,6 +88,7 @@ def test_holdout_through_spark_pipeline(spark):
         assert m.recall >= R_FLOOR, (m.doc_id, m.recall)
 
 
+@requires_corpus
 def test_ablation_full_config_dominates():
     """Ablation harness (tools/ablation.py — the engine's analogue of
     the reference's 13-config prompt-ablation methodology): the full

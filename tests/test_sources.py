@@ -14,7 +14,7 @@ from named_architecture_entity_recognition_spark.sources.sad import (
     split_sentences,
 )
 
-from conftest import EVAL_RESOURCES
+from conftest import EVAL_RESOURCES, requires_corpus
 
 
 def test_split_sentences_java_R_semantics():
@@ -22,6 +22,7 @@ def test_split_sentences_java_R_semantics():
     assert split_sentences("a.\r\nb!\rc?\nd.") == ["a.", "b!", "c?", "d."]
 
 
+@requires_corpus
 def test_discover_projects():
     projects = discover_projects(EVAL_RESOURCES)
     assert set(projects) == {
@@ -32,6 +33,7 @@ def test_discover_projects():
         assert meta["gazetteer"].exists()
 
 
+@requires_corpus
 def test_read_sad_files(spark):
     projects = discover_projects(EVAL_RESOURCES)
     df = read_sad_files(spark, [projects["teastore"]["sad"]], media_every=3)
@@ -47,6 +49,7 @@ def test_read_sad_files(spark):
     assert offsets == list(range(1, len(offsets) + 1))
 
 
+@requires_corpus
 def test_read_gold_csv(spark):
     projects = discover_projects(EVAL_RESOURCES)
     gold = read_gold_csv(spark, projects["teastore"]["gold"])
@@ -55,6 +58,7 @@ def test_read_gold_csv(spark):
     assert {type(r.sentence) for r in rows} == {int}
 
 
+@requires_corpus
 def test_read_gazetteer_csv(spark):
     projects = discover_projects(EVAL_RESOURCES)
     gaz = read_gazetteer_csv(spark, projects["teastore"]["gazetteer"])
