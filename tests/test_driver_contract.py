@@ -1,27 +1,29 @@
 """Driver-contract guard: entry() runs and has a stable schema; every
-queries() entry is callable at sf0.001; oracle_sql() keys line up with
-queries() (rows-only exceptions listed explicitly); and (since r3) the
-FIRST-50 window composition is pinned — the driver's per-round
+queries() entry is callable at sf0.001 and has an oracle_sql() entry;
+and the FIRST-50 window composition is pinned — the driver's per-round
 correctness run verifies only the first 50 keys, and r2 lost the
-flagship's external correctness signal to a silent mid-dict insert."""
+flagship's external correctness signal to a silent mid-dict insert.
+The window order is checked against the committed CORRECTNESS
+artifacts, read here with the test's own code."""
 
-import re
+import json
+import math
+import shutil
+import subprocess
 import sys
 from pathlib import Path
 
 import pytest
 
-sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
+REPO = Path(__file__).resolve().parents[1]
+sys.path.insert(0, str(REPO))
 
 import __spark_entry__ as entrymod
 
 SF = "/root/testdata/sf0.001"
 
-#: operators with no SQL-expressible oracle. Empty since r4: the last
-#: rows-only entry (q_media_features) became value-oracled when its
-#: fake decoder switched to md5-derived features (engine-portable —
-#: DuckDB recomputes width/height/embedding components bit-for-bit).
-ROWS_ONLY = set()
+#: the driver re-verifies this many leading queries() keys per round
+DRIVER_WINDOW = 50
 
 #: queries that must NEVER leave the driver's 50-query verification
 #: window (independent literal copy — editing WINDOW_PINNED in the
@@ -41,6 +43,23 @@ WINDOW_REQUIRED = {
 }
 
 
+def _last_hash_green_from_artifacts(root: Path) -> dict:
+    """Each query's latest round N whose CORRECTNESS_r<N>.json under
+    ``root`` records it hash-green. Rows- or schema-only greens do NOT
+    count — the rotation is about value verification."""
+    last = {}
+    for path in root.glob("CORRECTNESS_r*.json"):
+        rnd = int(path.stem.rsplit("_r", 1)[1])
+        for q, v in json.loads(path.read_text()).items():
+            if v.get("hash_match"):
+                last[q] = max(last.get(q, 0), rnd)
+    return last
+
+
+def _stalest_first(extras, last: dict) -> list:
+    return sorted(extras, key=lambda k: (last.get(k, 0), k))
+
+
 def test_entry_runs_with_stable_schema(spark):
     df = entrymod.entry(spark)
     assert df.columns == ["subj", "pred", "obj"]
@@ -48,12 +67,7 @@ def test_entry_runs_with_stable_schema(spark):
 
 
 def test_oracle_keys_match_queries():
-    q = set(entrymod.queries())
-    o = set(entrymod.oracle_sql())
-    assert o <= q, f"oracles without queries: {o - q}"
-    assert q - o == ROWS_ONLY, (
-        f"unexpected rows-only queries: {(q - o) ^ ROWS_ONLY}"
-    )
+    assert set(entrymod.queries()) == set(entrymod.oracle_sql())
 
 
 @pytest.mark.parametrize("name", sorted(entrymod.queries()))
@@ -73,7 +87,7 @@ def test_query_is_lazy_and_well_formed(spark, name):
 
 def test_window_contains_flagship_and_core():
     keys = list(entrymod.queries())
-    window = set(keys[: entrymod.WINDOW_SIZE])
+    window = set(keys[:DRIVER_WINDOW])
     missing = WINDOW_REQUIRED - window
     assert not missing, (
         f"queries() positions 1-50 lost required queries: {sorted(missing)}"
@@ -82,93 +96,117 @@ def test_window_contains_flagship_and_core():
     assert WINDOW_REQUIRED <= set(entrymod.WINDOW_PINNED)
 
 
-def _last_hash_green_from_artifacts(max_round):
-    """Independently recompute each query's last hash-green round from
-    the committed CORRECTNESS_r0N.json artifacts (rounds 1..max_round).
-    rows-only greens (err == no_oracle) do NOT count — the rotation is
-    about value verification."""
-    import json
-
-    root = Path(entrymod.__file__).resolve().parent
-    last = {}
-    for rnd in range(1, max_round + 1):
-        path = root / f"CORRECTNESS_r0{rnd}.json"
-        for q, v in json.loads(path.read_text()).items():
-            if v.get("hash_match"):
-                last[q] = rnd
-    return last
-
-
-def test_rotation_table_matches_correctness_artifacts():
-    """LAST_HASH_GREEN (the rotation schedule's input) must equal what
-    the committed driver artifacts actually record, for every
-    non-pinned query — a hand-maintained staleness table that drifts
-    from reality fails HERE instead of silently starving a query of
-    driver re-verification. Bump WINDOW_AS_OF_ROUND + refresh the table
-    when a new CORRECTNESS_r0N.json lands."""
-    actual = _last_hash_green_from_artifacts(entrymod.WINDOW_AS_OF_ROUND)
-    pinned = set(entrymod.WINDOW_PINNED)
-    expected = {
-        q: r
-        for q, r in actual.items()
-        if q not in pinned and q in entrymod.queries()
-    }
-    assert entrymod.LAST_HASH_GREEN == expected
+def test_spare_window_slots_hold_the_stalest_extras():
+    """Positions 27-50 are exactly the 24 extras whose last hash-green
+    round in the committed artifacts is oldest (never green first, name
+    as the tiebreak) — a window computed from a stale round would put
+    fresher queries there."""
+    keys = list(entrymod.queries())
+    pinned = WINDOW_REQUIRED
+    assert set(keys[: len(pinned)]) == pinned
+    extras = set(keys) - pinned
+    last = _last_hash_green_from_artifacts(REPO)
+    n_spare = DRIVER_WINDOW - len(pinned)
+    assert keys[len(pinned):DRIVER_WINDOW] == _stalest_first(extras, last)[:n_spare]
 
 
 def test_window_rotation_fills_spare_slots_with_stalest_extras():
-    """The spare window slots (after the pinned head) must hold exactly
-    the stalest extras: never-hash-green first, then oldest hash-green
-    round. Recomputed here without window_order so the ordering logic
-    itself is under test."""
+    """The whole tail after the pinned head is ordered stalest-first,
+    so every spare slot is at least as stale as anything left outside
+    the window."""
     keys = list(entrymod.queries())
     pinned = entrymod.WINDOW_PINNED
     assert keys[: len(pinned)] == pinned
-    extras = [k for k in keys if k not in set(pinned)]
-    expected = sorted(
-        extras, key=lambda k: (entrymod.LAST_HASH_GREEN.get(k, 0), k)
-    )
-    assert keys[len(pinned):] == expected
-    # and the rotation actually reaches the stale tail: every spare
-    # slot is at least as stale as anything left outside the window
-    spare = keys[len(pinned): entrymod.WINDOW_SIZE]
-    outside = keys[entrymod.WINDOW_SIZE:]
+    last = _last_hash_green_from_artifacts(REPO)
+    extras = keys[len(pinned):]
+    assert extras == _stalest_first(extras, last)
+    spare = keys[len(pinned):DRIVER_WINDOW]
+    outside = keys[DRIVER_WINDOW:]
     if spare and outside:
-        stale = entrymod.LAST_HASH_GREEN.get
-        assert max(stale(k, 0) for k in spare) <= min(
-            stale(k, 0) for k in outside
-        )
+        stale = lambda k: last.get(k, 0)  # noqa: E731
+        assert max(map(stale, spare)) <= min(map(stale, outside))
 
 
-def test_staleness_bound_documented_accurately():
-    """Worst-case rotation staleness is ceil(n_extras / n_spare_slots)
-    rounds; the docstring above LAST_HASH_GREEN must state the current
-    value so the bound stays visible as the contract grows (VERDICT r4
-    #5 — the old comment said 2 after the contract had grown to 3)."""
-    import math
+def test_window_order_reads_rounds_as_integers_and_needs_no_artifacts(
+    tmp_path, monkeypatch
+):
+    monkeypatch.setattr(entrymod, "_ARTIFACTS", tmp_path)
+    pinned = entrymod.WINDOW_PINNED
+    extras = sorted(set(entrymod.oracle_sql()) - set(pinned))
 
+    # no artifacts: every extra counts as never green -> name order
     keys = list(entrymod.queries())
-    n_extras = len(keys) - len(entrymod.WINDOW_PINNED)
-    n_spare = entrymod.WINDOW_SIZE - len(entrymod.WINDOW_PINNED)
-    bound = math.ceil(n_extras / n_spare)
-    src = Path(entrymod.__file__).read_text()
-    doc = src.split("LAST_HASH_GREEN = {", 1)[0].rsplit("#: Rotation", 1)[1]
-    m = re.search(r"ceil\(\d+/\d+\)\s*=\s*(\d+)", doc)
-    assert m, "rotation docstring must state the ceil(extras/slots) bound"
-    assert int(m.group(1)) == bound, (
-        f"documented staleness bound {m.group(1)} != actual {bound} "
-        f"(ceil({n_extras}/{n_spare})) — update the comment above "
-        "LAST_HASH_GREEN"
+    assert set(keys) == set(entrymod.oracle_sql())
+    assert keys == pinned + extras
+
+    # r10 is the round after r09, not a file a "r0*" glob skips or a
+    # lexical sort misplaces: a is green in both, b only in r09
+    a, b = extras[0], extras[1]
+    green = {"hash_match": True}
+    (tmp_path / "CORRECTNESS_r09.json").write_text(
+        json.dumps({a: green, b: green})
+    )
+    (tmp_path / "CORRECTNESS_r10.json").write_text(
+        json.dumps({a: green, b: {"hash_match": False}})
+    )
+    keys = list(entrymod.queries())
+    assert keys[: len(pinned)] == pinned
+    assert keys[-2:] == [b, a]
+
+
+def test_every_extra_enters_the_window_within_the_staleness_bound(
+    tmp_path, monkeypatch
+):
+    """Spark-free simulation from the committed artifacts: each round
+    the driver hash-verifies the first 50 keys and commits them as
+    green. Every extra must enter the window within
+    ceil(n_extras / n_spare_slots) rounds."""
+    arts = sorted(REPO.glob("CORRECTNESS_r*.json"))
+    for path in arts:
+        shutil.copy(path, tmp_path / path.name)
+    monkeypatch.setattr(entrymod, "_ARTIFACTS", tmp_path)
+    latest = max(int(p.stem.rsplit("_r", 1)[1]) for p in arts)
+    extras = set(entrymod.oracle_sql()) - WINDOW_REQUIRED
+    bound = math.ceil(len(extras) / (DRIVER_WINDOW - len(WINDOW_REQUIRED)))
+
+    entered = set()
+    for rnd in range(latest + 1, latest + 1 + bound):
+        window = list(entrymod.queries())[:DRIVER_WINDOW]
+        assert WINDOW_REQUIRED <= set(window)
+        entered.update(window)
+        (tmp_path / f"CORRECTNESS_r{rnd:02d}.json").write_text(
+            json.dumps({q: {"hash_match": True} for q in window})
+        )
+    assert extras <= entered, (
+        f"not re-verified within {bound} rounds: {sorted(extras - entered)}"
     )
 
 
-def test_no_silent_window_shift_via_duplicate_keys():
-    """Python dicts keep the FIRST occurrence's position on key
-    re-assignment, so a duplicated literal in the queries() source
-    would silently shift the window. The dict API already dedupes, so
-    scan the source text."""
-    src = Path(entrymod.__file__).read_text()
-    body = src.split("def queries()", 1)[1].split("def ", 1)[0]
-    keys = re.findall(r'"(q_\w+)":', body)
-    dupes = {k for k in keys if keys.count(k) > 1}
-    assert not dupes, f"duplicate keys in queries() source: {dupes}"
+def test_declaring_a_query_twice_raises():
+    """A second builder under a registered name must fail at import,
+    not silently replace the first one or shift the window."""
+    before = entrymod.oracle_sql()
+
+    def _q_validate_f1(spark, sf):
+        raise AssertionError("never registered")
+
+    with pytest.raises(ValueError, match="q_validate_f1"):
+        entrymod._oracle("SELECT 1")(_q_validate_f1)
+    assert entrymod.oracle_sql() == before
+    assert entrymod.queries()["q_validate_f1"] is not _q_validate_f1
+
+
+def test_plan_snapshot_requires_an_output_path(tmp_path):
+    """Without an argument the snapshot tool prints its usage and exits
+    non-zero before Spark starts; it must not write a default file
+    (which, run from the repo root, overwrote a committed snapshot)."""
+    run = subprocess.run(
+        [sys.executable, str(REPO / "tools" / "plan_snapshot.py")],
+        cwd=tmp_path,
+        capture_output=True,
+        text=True,
+        timeout=120,
+    )
+    assert run.returncode != 0
+    assert "Usage: python tools/plan_snapshot.py <out_md>" in run.stderr
+    assert list(tmp_path.iterdir()) == []

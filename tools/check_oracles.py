@@ -149,14 +149,6 @@ def main():
             print(f"FAIL  {name}: spark error: {e}")
             failures.append(name)
             continue
-        if name not in oracles:
-            print(
-                f"rows  {name}: {len(spd)} rows (no oracle) "
-                f"[{time.time()-t0:.1f}s]"
-            )
-            if len(spd) == 0:
-                print(f"WARN  {name}: zero rows")
-            continue
         try:
             dpd = con.execute(oracles[name]).df()
         except Exception as e:

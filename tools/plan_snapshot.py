@@ -1,10 +1,13 @@
-"""Emit PLANS_r0N.md: the formatted physical plans of the flagship
+"""Emit a PLANS_r<N>.md: the formatted physical plans of the flagship
 pipeline and the headline queries, as a committed artifact — the plans
 the 100 TB claims rest on (zero-exchange flagship, pushed filters,
 broadcast joins, partial-agg caps) should be reviewable without
 running Spark.
 
-Usage: python tools/plan_snapshot.py [out_md]
+Usage: python tools/plan_snapshot.py <out_md>
+
+The output path is required: a default would overwrite a committed
+snapshot when run from the repo root.
 """
 
 from __future__ import annotations
@@ -111,4 +114,6 @@ def main(out: str) -> None:
 
 
 if __name__ == "__main__":
-    main(sys.argv[1] if len(sys.argv) > 1 else "PLANS_r03.md")
+    if len(sys.argv) != 2:
+        sys.exit(__doc__)
+    main(sys.argv[1])
