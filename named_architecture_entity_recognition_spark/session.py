@@ -32,6 +32,8 @@ _DEFAULTS = {
     # deterministic timezone for reproducible hashing
     "spark.sql.session.timeZone": "UTC",
     "spark.ui.enabled": "false",
+    # no carriage-return stage bars glued to result lines of a captured log
+    "spark.ui.showConsoleProgress": "false",
     "spark.driver.memory": "8g",
 }
 

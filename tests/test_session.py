@@ -1,5 +1,5 @@
 """session.get_spark: Python workers import the package wherever the
-driver process starts."""
+driver process starts, and no console progress bar is drawn."""
 
 import os
 import subprocess
@@ -54,3 +54,10 @@ def test_driver_outside_repo_root_runs_package_kernels(tmp_path):
         timeout=600,
     )
     assert "ROWS 1" in run.stdout.splitlines(), run.stderr[-3000:]
+
+
+def test_console_progress_bar_off(spark):
+    """The shared session draws no carriage-return stage bars on stderr,
+    so a captured log keeps one result per line."""
+    assert spark.sparkContext.getConf().get("spark.ui.showConsoleProgress") == "false"
+    assert not spark.sparkContext._jsc.sc().progressBar().isDefined()

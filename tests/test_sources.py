@@ -72,13 +72,29 @@ def test_gazetteer_from_names(spark):
     assert [r.name for r in g.orderBy("name").collect()] == ["A", "B"]
 
 
+def files_read(q):
+    """numFiles metric of the executed scan — files AFTER partition
+    pruning (inputFiles() lists the relation pre-pruning)."""
+    q.collect()
+    leaf = q._jdf.queryExecution().executedPlan().collectLeaves().apply(0)
+    return leaf.metrics().apply("numFiles").value()
+
+
+def bucket_of(spark, subj, n_buckets):
+    """The subj_bucket of ``subj``, from the hash written out here
+    rather than taken from the writer's own subj_bucket_col."""
+    return (
+        spark.createDataFrame([(subj,)], "subj string")
+        .select(F.pmod(F.xxhash64("subj"), F.lit(n_buckets)).cast("int").alias("b"))
+        .first()["b"]
+    )
+
+
 def test_lakehouse_roundtrip_and_partition_pruning(spark, tmp_path):
     """S7 sink executed for real (parquet fallback of the Iceberg
     `(pred, bucket(subj))` hidden partitioning): a pred filter and a
     subj-bucket filter must each cut the scanned input files, not just
     the rows — proven by inputFiles() counts, not plan text alone."""
-    from pyspark.sql import functions as F
-
     from named_architecture_entity_recognition_spark.sources.lakehouse import (
         read_triples,
         write_triples,
@@ -98,13 +114,6 @@ def test_lakehouse_roundtrip_and_partition_pruning(spark, tmp_path):
     assert back.count() == 120
     assert "subj_bucket" in back.columns
 
-    def files_read(q):
-        """numFiles metric of the executed scan — files AFTER partition
-        pruning (inputFiles() lists the relation pre-pruning)."""
-        q.collect()
-        leaf = q._jdf.queryExecution().executedPlan().collectLeaves().apply(0)
-        return leaf.metrics().apply("numFiles").value()
-
     total_files = files_read(back)
     by_pred = back.filter(back.pred == "hasName")
     assert by_pred.count() == 40
@@ -115,11 +124,7 @@ def test_lakehouse_roundtrip_and_partition_pruning(spark, tmp_path):
 
     # bucket pruning: compute the bucket of one subj with the SAME
     # expression the writer used, filter on it, assert fewer files read
-    bucket = (
-        spark.createDataFrame([("d1#e7",)], "subj string")
-        .select(F.pmod(F.xxhash64("subj"), F.lit(8)).cast("int").alias("b"))
-        .first()["b"]
-    )
+    bucket = bucket_of(spark, "d1#e7", 8)
     by_bucket = back.filter(
         (back.pred == "hasName") & (back.subj_bucket == bucket)
     )
@@ -131,14 +136,19 @@ def test_sink_writes_one_file_per_partition_directory(spark, tmp_path):
     """The parquet sink clusters rows by (pred, subj_bucket) before the
     writer, so input spread over several tasks still leaves exactly one
     data file per partition directory (an unclustered write leaves one
-    per task that saw the key). The rows read back with pyarrow, not
-    through read_triples, equal the input as a multiset."""
+    per task that saw the key). The sink is written through the
+    checksum-free local filesystem, so it holds no .crc file, and that
+    choice stays with its writer: a plain parquet write made afterwards
+    in the same session still writes its checksums. The rows read back
+    with pyarrow, not through read_triples, equal the input as a
+    multiset, and a (pred, subj_bucket) lookup reads exactly one file."""
     import sys
     from pathlib import Path
 
     import pyarrow.dataset as ds
 
     from named_architecture_entity_recognition_spark.sources.lakehouse import (
+        read_triples,
         write_triples,
     )
 
@@ -171,6 +181,18 @@ def test_sink_writes_one_file_per_partition_directory(spark, tmp_path):
     )
     got = sorted(zip(*(back.column(c).to_pylist() for c in ("subj", "pred", "obj"))))
     assert got == sorted(rows)
+    assert list(target.rglob("*.crc")) == []
+
+    table = read_triples(spark, str(target))
+    lookup = table.filter(
+        (F.col("pred") == "hasName") & (F.col("subj_bucket") == bucket_of(spark, "d1#e7", 8))
+    )
+    assert files_read(lookup) == 1
+    assert lookup.filter(F.col("subj") == "d1#e7").count() == 1
+
+    plain = tmp_path / "plain"
+    triples.write.parquet(str(plain))
+    assert len(list(plain.glob(".*.parquet.crc"))) == len(list(plain.glob("*.parquet"))) > 0
 
 
 def test_sink_roundtrip_both_branches(spark, tmp_path):
@@ -233,6 +255,40 @@ def test_compact_table_preserves_rows_and_reduces_files(spark, tmp_path):
     a = spark.read.parquet(src).select("id", "payload")
     b = spark.read.parquet(dst).select("id", "payload")
     assert a.exceptAll(b).count() == 0 and b.exceptAll(a).count() == 0
+
+
+def test_compact_table_keeps_sink_partition_directories(spark, tmp_path):
+    """Compacting the triples sink rewrites it into the same
+    pred=*/subj_bucket=* directories, one file each, so a
+    (pred, subj_bucket) lookup still reads one file; rows are equal."""
+    from named_architecture_entity_recognition_spark.sources.lakehouse import (
+        compact_table,
+        read_triples,
+        write_triples,
+    )
+
+    rows = [
+        (f"d{i % 3}#e{i}", pred, f"obj{i}")
+        for i in range(100)
+        for pred in ("instanceOf", "hasName")
+    ]
+    triples = spark.createDataFrame(rows, "subj string, pred string, obj string")
+    src, dst = tmp_path / "triples", tmp_path / "compact"
+    write_triples(triples, str(src), n_buckets=4)
+    stats = compact_table(spark, str(src), str(dst), target_mb=1)
+
+    src_dirs = sorted(d.relative_to(src) for d in src.glob("pred=*/subj_bucket=*"))
+    dst_dirs = sorted(d.relative_to(dst) for d in dst.glob("pred=*/subj_bucket=*"))
+    assert len(dst_dirs) == 2 * 4 and dst_dirs == src_dirs
+    assert stats["files_out"] == len(dst_dirs)
+    assert stats["n_rows"] == len(rows)
+    a, b = read_triples(spark, str(src)), read_triples(spark, str(dst))
+    assert b.columns == a.columns
+    assert a.exceptAll(b).count() == 0 and b.exceptAll(a).count() == 0
+    for subj in ("d0#e0", "d1#e1", "d2#e2"):
+        lookup = b.filter((b.pred == "hasName") & (b.subj_bucket == bucket_of(spark, subj, 4)))
+        assert files_read(lookup) == 1
+        assert lookup.filter(b.subj == subj).count() == 1
 
 
 def test_bucketed_join_plans_no_exchange(spark, tmp_path):
