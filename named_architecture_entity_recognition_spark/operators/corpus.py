@@ -11,9 +11,9 @@ documents into fixed token budgets, and an eval-set leakage check.
 Portability rule (same as dedup.py): all hashing is md5-based so every
 operator has an exact DuckDB oracle. Everything is Catalyst built-ins
 except two Python kernels on the near-dup path: the minhash signatures
-(operators/dedup.py, ``impl="python"`` by default; ``impl="expr"`` is
-the Catalyst form the oracle mirrors) and the per-partition union-find
-of connected components (operators/cc.py).
+(operators/dedup.minhash_signatures_df, identical to the Catalyst
+minhash_signature column the oracle mirrors) and the per-partition
+union-find of connected components (operators/cc.py).
 """
 
 from __future__ import annotations
@@ -25,6 +25,23 @@ from named_architecture_entity_recognition_spark.operators.dedup import (
     minhash_lsh_pairs,
     shingles,
 )
+from named_architecture_entity_recognition_spark.operators.sketch import (
+    md5_hex_value,
+)
+from named_architecture_entity_recognition_spark.operators.textstats import (
+    fingerprint,
+    lang_id,
+    quality_score,
+    tokens,
+)
+
+#: the salted md5 fractions below read 8 hex digits
+_HEX8 = float(16**8)
+
+
+def _unit_fraction(id_col: str, salt: str) -> Column:
+    """md5(salt || id)'s first 8 hex digits / 16^8: uniform on [0, 1)."""
+    return md5_hex_value(F.col(id_col), salt, 8) / F.lit(_HEX8)
 
 
 def dup_clusters(
@@ -113,11 +130,7 @@ def hash_split(
     if not weights or any(w < 0 for w in weights.values()) or sum(weights.values()) <= 0:
         raise ValueError(f"weights must be non-empty and non-negative: {weights}")
     total = sum(weights.values())
-    frac = (
-        F.conv(F.substring(F.md5(F.concat(F.lit(salt), F.col(id_col).cast("string"))), 1, 8), 16, 10)
-        .cast("double")
-        / F.lit(float(16**8))
-    )
+    frac = _unit_fraction(id_col, salt)
     cum = 0.0
     expr = None
     items = list(weights.items())
@@ -163,16 +176,7 @@ def sample_mixture(
             f"rates must be non-empty with values in [0,1]: {bad or rates},"
             f" default_rate={default_rate}"
         )
-    frac = (
-        F.conv(
-            F.substring(
-                F.md5(F.concat(F.lit(salt), F.col(id_col).cast("string"))), 1, 8
-            ),
-            16,
-            10,
-        ).cast("double")
-        / F.lit(float(16**8))
-    )
+    frac = _unit_fraction(id_col, salt)
     rate = None
     for k, r in rates.items():
         cond = F.col(key_col) == k
@@ -246,16 +250,8 @@ def weighted_sample(
     """
     if k < 1:
         raise ValueError(f"k must be >= 1, got {k}")
-    u = (
-        F.conv(
-            F.substring(
-                F.md5(F.concat(F.lit(salt), F.col(id_col).cast("string"))), 1, 8
-            ),
-            16,
-            10,
-        ).cast("double")
-        + F.lit(1.0)
-    ) / F.lit(float(16**8))  # (0, 1]: ln(u) defined, key finite
+    # (0, 1]: ln(u) defined, key finite
+    u = (md5_hex_value(F.col(id_col), salt, 8) + F.lit(1.0)) / F.lit(_HEX8)
     key = -F.log(u) / F.col(weight_col).cast("double")
     return (
         docs.filter(F.col(weight_col).isNotNull() & (F.col(weight_col) > 0))
@@ -267,7 +263,9 @@ def weighted_sample(
 
 
 def token_count(col) -> Column:
-    """Whitespace token count (textstats-compatible)."""
+    """Whitespace token count: the size of trim(col) split on runs of
+    whitespace (an empty text counts 1). Unlike textstats.token_count
+    it drops no empty tokens and adds no subword estimate."""
     c = F.col(col) if isinstance(col, str) else col
     return F.size(F.split(F.trim(c), r"\s+"))
 
@@ -420,12 +418,6 @@ def prepare_corpus(
     plans/lineage.py. Output identical either way (pytest-asserted);
     the stage tables double as resume points.
     """
-    from named_architecture_entity_recognition_spark.operators.textstats import (
-        fingerprint,
-        lang_id,
-        quality_score,
-    )
-
     def mat(df: DataFrame, name: str) -> DataFrame:
         # stage-table materialization: cuts the re-scan every branch
         # fork costs in the lazy plan, and truncates lineage (a failed
@@ -517,10 +509,6 @@ def chunk_documents(
         raise ValueError(
             f"need 0 <= overlap < max_tokens, got {overlap}/{max_tokens}"
         )
-    from named_architecture_entity_recognition_spark.operators.textstats import (
-        tokens,
-    )
-
     stride = max_tokens - overlap
     w = tokens(F.col(text_col))
     base = docs.select(

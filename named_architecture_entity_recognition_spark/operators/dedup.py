@@ -3,8 +3,11 @@
 
 Portability rule: all hashing is md5-based (identical in Spark SQL and
 DuckDB), so every operator has an exact DuckDB oracle and results are
-engine-stable. Everything below is whole-stage-codegen'd Catalyst
-expressions — no Python in any hot path.
+engine-stable. The per-row MinHash and SimHash signatures run as
+Arrow-batched Python kernels, each asserted identical in tests to its
+Catalyst column (minhash_signature, simhash64), which is the form the
+DuckDB oracles mirror; everything else is whole-stage-codegen'd
+Catalyst.
 
 Scale notes (100 TB): shingling/minhash are narrow per-row maps; the
 only shuffles are the final groupBy/join on band/bucket keys, which is
@@ -14,6 +17,9 @@ join handles residual imbalance.
 """
 
 from __future__ import annotations
+
+import hashlib
+import re
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
@@ -121,21 +127,29 @@ def minhash_signature(col, n_hashes: int = 8, shingle_n: int = 3) -> Column:
     )
 
 
-def minhash_lsh_pairs(
+def _banded_pairs(
     docs: DataFrame,
-    text_col: str = "text",
-    n_hashes: int = 8,
-    bands: int = 4,
-    shingle_n: int = 3,
-    impl: str = "python",
-    max_bucket_size: int | None = None,
+    text_col: str,
+    shingle_n: int,
+    signatures,
+    bands: Column,
+    keys: tuple,
+    max_bucket_size: int | None,
+    carry: tuple = (),
 ) -> DataFrame:
-    """Candidate near-dup pairs via banded MinHash-LSH.
+    """The banded candidate self-join of minhash_lsh_pairs and
+    simhash_pairs: docs sharing any band collide.
 
-    signature split into ``bands`` bands of n_hashes/bands rows; docs
-    sharing any full band collide. Output (doc_a, doc_b) with doc_a <
-    doc_b, distinct. Shuffle = one groupBy-free self-equi-join on
-    (band_idx, band_key).
+    ``signatures`` maps the eligible docs to (doc_id, sig); ``bands`` is
+    the array of band values computed from ``sig``, posexploded into the
+    two ``keys`` columns. Output (doc_a, doc_b, plus ``<c>_a``/``<c>_b``
+    for each ``carry`` column) with doc_a < doc_b, distinct on the pair.
+
+    Docs with fewer than shingle_n words have EMPTY shingle sets and
+    identical signatures — at 10^12 rows they would pair QUADRATICALLY
+    in one degenerate bucket. No shingles = no content to near-match
+    (exact dedup owns identical empties), so they are excluded up front
+    by a codegen'd pre-filter.
 
     ``max_bucket_size``: hot-bucket guard. A band bucket holding B docs
     emits B*(B-1)/2 pairs — template/boilerplate corpora put thousands
@@ -144,54 +158,64 @@ def minhash_lsh_pairs(
     whole prep funnel). With the cap set, buckets larger than it are
     dropped: such a bucket is a template CLUSTER, better handled by
     exact-dedup of the template or a dedicated clustering pass, not by
-    enumerating every pair. None (default) = exact candidate set.
+    enumerating every pair. None = exact candidate set.
     """
     from named_architecture_entity_recognition_spark.session import (
         ensure_parallelism,
     )
 
-    rows_per_band = n_hashes // bands
-    # docs with fewer than shingle_n words have EMPTY shingle sets and
-    # identical (all-null) signatures — at 10^12 rows they would pair
-    # QUADRATICALLY in one degenerate bucket. No shingles = no content
-    # to near-match (exact dedup owns identical empties), so they are
-    # excluded up front by a codegen'd pre-filter.
-    eligible = docs.filter(
-        F.size(F.split(F.trim(F.lower(F.col(text_col))), r"\s+"))
-        >= F.lit(shingle_n)
-    )
-    sig = minhash_signatures_df(
-        ensure_parallelism(eligible), text_col=text_col, n_hashes=n_hashes,
-        shingle_n=shingle_n, impl=impl,
-    )
-    banded = sig.select(
-        "doc_id",
-        F.posexplode(
-            F.transform(
-                F.sequence(F.lit(0), F.lit(bands - 1)),
-                lambda b: F.concat_ws(
-                    "|", F.slice("sig", b * rows_per_band + 1, rows_per_band)
-                ),
-            )
-        ).alias("band_idx", "band_key"),
+    eligible = docs.filter(F.size(_words(text_col)) >= F.lit(shingle_n))
+    banded = signatures(ensure_parallelism(eligible)).select(
+        "doc_id", *carry, F.posexplode(bands).alias(*keys)
     )
     if max_bucket_size is not None:
-        banded = _drop_hot_buckets(
-            banded, ("band_idx", "band_key"), max_bucket_size
-        )
+        banded = _drop_hot_buckets(banded, keys, max_bucket_size)
     a = banded.alias("a")
     b = banded.alias("b")
+    on = [F.col(f"a.{k}") == F.col(f"b.{k}") for k in keys]
     return (
-        a.join(
-            b,
-            (F.col("a.band_idx") == F.col("b.band_idx"))
-            & (F.col("a.band_key") == F.col("b.band_key"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
+        a.join(b, on + [F.col("a.doc_id") < F.col("b.doc_id")])
         .select(
-            F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b")
+            F.col("a.doc_id").alias("doc_a"),
+            F.col("b.doc_id").alias("doc_b"),
+            *[F.col(f"{s}.{c}").alias(f"{c}_{s}") for c in carry for s in "ab"],
         )
-        .dropDuplicates()
+        .dropDuplicates(["doc_a", "doc_b"])
+    )
+
+
+def minhash_lsh_pairs(
+    docs: DataFrame,
+    text_col: str = "text",
+    n_hashes: int = 8,
+    bands: int = 4,
+    shingle_n: int = 3,
+    max_bucket_size: int | None = None,
+) -> DataFrame:
+    """Candidate near-dup pairs via banded MinHash-LSH.
+
+    signature split into ``bands`` bands of n_hashes/bands rows; docs
+    sharing any full band collide. Output (doc_a, doc_b) with doc_a <
+    doc_b, distinct. Shuffle = one groupBy-free self-equi-join on
+    (band_idx, band_key). ``max_bucket_size``: the hot-bucket cap of
+    _banded_pairs (None = exact candidate set).
+    """
+    rows_per_band = n_hashes // bands
+    return _banded_pairs(
+        docs,
+        text_col,
+        shingle_n,
+        lambda d: minhash_signatures_df(
+            d, text_col=text_col, n_hashes=n_hashes, shingle_n=shingle_n
+        ),
+        F.transform(
+            F.sequence(F.lit(0), F.lit(bands - 1)),
+            lambda b: F.concat_ws(
+                "|", F.slice("sig", b * rows_per_band + 1, rows_per_band)
+            ),
+        ),
+        ("band_idx", "band_key"),
+        max_bucket_size,
     )
 
 
@@ -285,7 +309,6 @@ def simhash_pairs(
     max_hamming: int = 3,
     shingle_n: int = 2,
     text_col: str = "text",
-    impl: str = "numpy",
     max_bucket_size: int | None = None,
 ) -> DataFrame:
     """Hamming-<=k candidate pairs over 64-bit SimHash signatures.
@@ -294,21 +317,14 @@ def simhash_pairs(
     (max_hamming+1) equal contiguous blocks; any pair within Hamming
     distance <= max_hamming must agree EXACTLY on at least one block,
     so an equi-join on (block_idx, block_bits) finds all such pairs
-    with zero false negatives and no all-pairs scan — the same
-    scale shape as banded MinHash-LSH. Verification = exact Hamming
-    distance on the joined signatures, confined to candidates.
+    with zero false negatives and no all-pairs scan — the same banded
+    self-join as minhash_lsh_pairs (_banded_pairs, including its
+    short-doc filter and ``max_bucket_size`` hot-block cap).
+    Verification = exact Hamming distance on the joined signatures,
+    confined to candidates.
 
     Output: (doc_a, doc_b, hamming) with doc_a < doc_b, distinct.
-
-    ``max_bucket_size``: same hot-block guard as minhash_lsh_pairs —
-    template corpora put thousands of docs in one block and the
-    equi-join goes quadratic; blocks above the cap are dropped (they
-    are template clusters, not pairwise near-dups). None = exact.
     """
-    from named_architecture_entity_recognition_spark.session import (
-        ensure_parallelism,
-    )
-
     nb = max_hamming + 1
     if 64 % nb:
         raise ValueError(
@@ -316,46 +332,20 @@ def simhash_pairs(
             "use 0, 1, 3, 7, 15, 31 or 63"
         )
     blk = 64 // nb
-    # same degenerate-bucket guard as minhash_lsh_pairs: all empty-
-    # shingle docs share the all-ones signature and would pair O(n^2)
-    eligible = docs.filter(
-        F.size(F.split(F.trim(F.lower(F.col(text_col))), r"\s+"))
-        >= F.lit(shingle_n)
-    )
-    sig = simhash_signatures(
-        ensure_parallelism(eligible), text_col=text_col, shingle_n=shingle_n,
-        impl=impl,
-    )
-    banded = sig.select(
-        "doc_id",
-        "sig",
-        F.posexplode(
-            F.transform(
-                F.sequence(F.lit(0), F.lit(nb - 1)),
-                lambda b: F.col("sig").substr(b * blk + F.lit(1), F.lit(blk)),
-            )
-        ).alias("block_idx", "block"),
-    )
-    if max_bucket_size is not None:
-        banded = _drop_hot_buckets(
-            banded, ("block_idx", "block"), max_bucket_size
-        )
-    a = banded.alias("a")
-    b = banded.alias("b")
-    cand = (
-        a.join(
-            b,
-            (F.col("a.block_idx") == F.col("b.block_idx"))
-            & (F.col("a.block") == F.col("b.block"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .select(
-            F.col("a.doc_id").alias("doc_a"),
-            F.col("b.doc_id").alias("doc_b"),
-            F.col("a.sig").alias("sig_a"),
-            F.col("b.sig").alias("sig_b"),
-        )
-        .dropDuplicates(["doc_a", "doc_b"])
+    cand = _banded_pairs(
+        docs,
+        text_col,
+        shingle_n,
+        lambda d: simhash_signatures(
+            d, text_col=text_col, shingle_n=shingle_n
+        ),
+        F.transform(
+            F.sequence(F.lit(0), F.lit(nb - 1)),
+            lambda b: F.col("sig").substr(b * blk + F.lit(1), F.lit(blk)),
+        ),
+        ("block_idx", "block"),
+        max_bucket_size,
+        carry=("sig",),
     )
     hamming = F.size(
         F.filter(
@@ -372,50 +362,56 @@ def simhash_pairs(
     )
 
 
-def simhash_signatures(
-    docs: DataFrame,
-    text_col: str = "text",
-    shingle_n: int = 2,
-    impl: str = "numpy",
+def _shingle_signatures(
+    docs: DataFrame, text_col: str, shingle_n: int, sig_of, sig_type: str
 ) -> DataFrame:
-    """(doc_id, sig) SimHash signatures, two interchangeable kernels.
+    """(doc_id, sig) by one Arrow-batched mapInPandas: each text's
+    distinct word shingles, tokenized like the ``shingles`` column, go
+    through ``sig_of`` (a list of strings -> a ``sig_type`` value).
 
-    impl='numpy' (default): Arrow-batched mapInPandas — md5 digests
-    unpacked to bit matrices and summed vectorized. BIT-IDENTICAL to
-    the expression path (SimHash is pure integer arithmetic: per-bit
-    counts + threshold, no float order anywhere) and ~200x faster than
-    the interpreted 64-wide HOF accumulator; asserted identical in
-    tests/test_dedup_similarity.py.
-
-    impl='expr': the pure-Catalyst simhash64 column (the DuckDB-oracle
-    reference form; no Python anywhere).
-    """
-    if impl == "expr":
-        return docs.select(
-            "doc_id", simhash64(F.col(text_col), shingle_n).alias("sig")
-        )
-
-    import re as _re
+    Tokenization follows Spark, not Python: trim strips only spaces,
+    and Java's ``\\s`` is ASCII whitespace, so a tab at either end or a
+    no-break space between words changes the shingles as it does in
+    the column."""
     from typing import Iterator
 
-    import numpy as np
     import pandas as pd
 
-    def sig_of(text: str) -> str:
-        words = _re.split(r"\s+", (text or "").strip().lower())
-        seen = set()
-        sh = []
-        for i in range(max(len(words) - (shingle_n - 1), 0)):
-            s = " ".join(words[i : i + shingle_n])
-            if s not in seen:
-                seen.add(s)
-                sh.append(s)
+    def sig(text: str):
+        words = re.split(r"[ \t\n\x0b\f\r]+", (text or "").strip(" ").lower())
+        n = max(len(words) - (shingle_n - 1), 0)
+        shingles = (" ".join(words[i : i + shingle_n]) for i in range(n))
+        return sig_of(list(dict.fromkeys(shingles)))
+
+    def process(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in batches:
+            yield pd.DataFrame(
+                {"doc_id": pdf["doc_id"], "sig": pdf[text_col].map(sig)}
+            )
+
+    doc_type = dict(docs.select("doc_id").dtypes)["doc_id"]
+    return docs.select("doc_id", text_col).mapInPandas(
+        process, schema=f"doc_id {doc_type}, sig {sig_type}"
+    )
+
+
+def simhash_signatures(
+    docs: DataFrame, text_col: str = "text", shingle_n: int = 2
+) -> DataFrame:
+    """(doc_id, sig) SimHash signatures: md5 digests unpacked to bit
+    matrices and summed with numpy. BIT-IDENTICAL to the Catalyst
+    simhash64 column, the DuckDB-oracle reference form (SimHash is pure
+    integer arithmetic: per-bit counts + threshold, no float order
+    anywhere) and ~200x faster than its interpreted 64-wide HOF
+    accumulator; asserted identical in tests/test_dedup_similarity.py.
+    """
+    import numpy as np
+
+    def sig_of(sh: list) -> str:
         if not sh:
             # expression semantics: 0 shingles -> every count 0 and
             # 2*0 >= n(=0) is true -> all-ones signature
             return "1" * 64
-        import hashlib
-
         bits = np.zeros(64, dtype=np.int64)
         for s in sh:
             d = hashlib.md5(s.encode()).digest()[:8]
@@ -425,16 +421,7 @@ def simhash_signatures(
         n = len(sh)
         return "".join("1" if 2 * b >= n else "0" for b in bits)
 
-    def process(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield pd.DataFrame(
-                {"doc_id": pdf["doc_id"], "sig": pdf[text_col].map(sig_of)}
-            )
-
-    doc_type = dict(docs.select("doc_id").dtypes)["doc_id"]
-    return docs.select("doc_id", text_col).mapInPandas(
-        process, schema=f"doc_id {doc_type}, sig string"
-    )
+    return _shingle_signatures(docs, text_col, shingle_n, sig_of, "string")
 
 
 def minhash_signatures_df(
@@ -442,57 +429,26 @@ def minhash_signatures_df(
     text_col: str = "text",
     n_hashes: int = 8,
     shingle_n: int = 3,
-    impl: str = "python",
 ) -> DataFrame:
-    """(doc_id, sig array<string>) MinHash signatures, two
-    interchangeable kernels (same pattern as simhash_signatures).
-
-    impl='python' (default): Arrow-batched mapInPandas — hashlib md5
-    per (seed, shingle) and Python ``min`` over hex strings, which is
+    """(doc_id, sig array<string>) MinHash signatures: hashlib md5 per
+    (seed, shingle) and Python ``min`` over hex strings, which is
     byte-identical to the JVM's lexicographic string min (both compare
-    ASCII hex). Skips the interpreted HOF fold entirely.
-
-    impl='expr': the pure-Catalyst minhash_signature column (the
-    DuckDB-oracle reference form).
-
-    Docs with no shingles get all-null signature entries in BOTH
-    kernels (array_min-of-empty semantics).
+    ASCII hex), so the signatures equal the Catalyst minhash_signature
+    column (the DuckDB-oracle reference form) without its interpreted
+    HOF fold. Docs with no shingles get all-null signature entries, as
+    in the column (array_min-of-empty semantics).
     """
-    if impl == "expr":
-        return docs.select(
-            "doc_id",
-            minhash_signature(F.col(text_col), n_hashes, shingle_n).alias("sig"),
-        )
 
-    import hashlib as _hashlib
-    import re as _re
-    from typing import Iterator
-
-    import pandas as pd
-
-    def sig_of(text: str):
-        words = _re.split(r"\s+", (text or "").strip().lower())
-        sh = set()
-        for i in range(max(len(words) - (shingle_n - 1), 0)):
-            sh.add(" ".join(words[i : i + shingle_n]))
+    def sig_of(sh: list) -> list:
         if not sh:
             return [None] * n_hashes
         return [
-            min(
-                _hashlib.md5((str(k) + s).encode()).hexdigest() for s in sh
-            )
+            min(hashlib.md5((str(k) + s).encode()).hexdigest() for s in sh)
             for k in range(n_hashes)
         ]
 
-    def process(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield pd.DataFrame(
-                {"doc_id": pdf["doc_id"], "sig": pdf[text_col].map(sig_of)}
-            )
-
-    doc_type = dict(docs.select("doc_id").dtypes)["doc_id"]
-    return docs.select("doc_id", text_col).mapInPandas(
-        process, schema=f"doc_id {doc_type}, sig array<string>"
+    return _shingle_signatures(
+        docs, text_col, shingle_n, sig_of, "array<string>"
     )
 
 

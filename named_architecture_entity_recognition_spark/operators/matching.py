@@ -474,7 +474,7 @@ class LineView:
 
     __slots__ = (
         "line", "low", "spans", "words", "low_words", "token_set",
-        "_prefix4", "_firstchars", "_acr_equiv", "gap_dotted", "_initials",
+        "_firstchars", "_acr_equiv", "gap_dotted", "_initials",
         "_window_norms", "_tok_prefix6",
     )
 
@@ -490,25 +490,11 @@ class LineView:
         for k in range(len(self.spans) - 1):
             g.append("." in line[self.spans[k][2] : self.spans[k + 1][1]])
         self.gap_dotted = g
-        self._prefix4 = None
         self._firstchars = None
         self._acr_equiv = None
         self._initials = None
         self._window_norms = None
         self._tok_prefix6 = None
-
-    @property
-    def prefix4(self):
-        """Lazy: only consulted when the dictionary has stem entries."""
-        if self._prefix4 is None:
-            pf = set()
-            lw = self.low_words
-            for k, w in enumerate(lw):
-                pf.add(w[:4])
-                if k + 1 < len(lw):
-                    pf.add((w + lw[k + 1])[:4])
-            self._prefix4 = pf
-        return self._prefix4
 
     @property
     def firstchars(self):

@@ -5,13 +5,12 @@ scale paths: LSH bucketing (random-hyperplane signs -> equi-join) and
 IVF probing (centroid inverted lists -> partition-pruned probe). At
 10^12 rows both replace the quadratic join with a bucket/list join.
 
-Dual-kernel pattern (shared with operators/dedup.py): every heavy
-per-row computation has a pure-Catalyst expression form — the
-DuckDB-oracle reference, exactly reproducible in SQL — and an
-Arrow-batched Python kernel proven identical to it (bit-for-bit where
-the math is integer or order-pinned sequential IEEE folds) that does
-the same work ~50-200x faster. Queries stay oracle-checked while the
-default execution path is the fast kernel.
+The LSH bucket runs as an Arrow-batched Python kernel
+(hyperplane_buckets_df), asserted bit-identical in tests to the
+Catalyst hyperplane_bucket column that the DuckDB oracle mirrors. IVF
+assignment still has two forms (cosine_topk_ivf's ``assign``), but its
+only caller, __spark_entry__'s q_ann_ivf_topk, pins the fold expression;
+the numpy matmul default (ivf_assign_numpy) is run only by tests.
 """
 
 from __future__ import annotations
@@ -52,8 +51,7 @@ def _pynorm(vec) -> float:
     (A flat a1*b1+a2*b2+... expression chain was tried for the dots
     themselves and rejected: 16 centroids x 64 dims explodes the
     generated Java past janino's limits — codegen OOM. The HOF fold
-    stays; the production-scale assignment path is the numpy kernel in
-    ivf_assign_numpy.)"""
+    stays.)"""
     import math
 
     s = 0.0
@@ -64,6 +62,31 @@ def _pynorm(vec) -> float:
 
 def _as_double(df: DataFrame, col: str) -> DataFrame:
     return df.withColumn(col, F.col(col).cast("array<double>"))
+
+
+def _queries(queries: DataFrame) -> DataFrame:
+    return _as_double(queries, "embedding").select(
+        "query_id", F.col("embedding").alias("q_emb")
+    )
+
+
+def _topk(pairs: DataFrame, k: int, id_col: str, vec_col: str) -> DataFrame:
+    """Per query, the k corpus rows of ``pairs`` (corpus x query rows)
+    with the highest cosine(vec_col, q_emb), rounded to 6 places; ties
+    go to the lower neighbor id. One window over the candidate rows."""
+    scored = pairs.select(
+        "query_id",
+        F.col(id_col).alias("neighbor_id"),
+        F.round(cosine(F.col(vec_col), F.col("q_emb")), 6).alias("score"),
+    )
+    w = Window.partitionBy("query_id").orderBy(
+        F.desc("score"), F.asc("neighbor_id")
+    )
+    return (
+        scored.withColumn("rank", F.row_number().over(w))
+        .filter(F.col("rank") <= k)
+        .select("query_id", "neighbor_id", "score", "rank")
+    )
 
 
 def cosine_topk(
@@ -80,21 +103,8 @@ def cosine_topk(
     the final per-query top-k window over k*|queries| rows.
     """
     corpus = _as_double(embeddings.select(id_col, vec_col), vec_col)
-    qs = _as_double(queries, "embedding").select(
-        F.col("query_id"), F.col("embedding").alias("q_emb")
-    )
-    scored = corpus.crossJoin(F.broadcast(qs)).select(
-        "query_id",
-        F.col(id_col).alias("neighbor_id"),
-        F.round(cosine(F.col(vec_col), F.col("q_emb")), 6).alias("score"),
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc("score"), F.asc("neighbor_id")
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "score", "rank")
+    return _topk(
+        corpus.crossJoin(F.broadcast(_queries(queries))), k, id_col, vec_col
     )
 
 
@@ -147,7 +157,6 @@ def cosine_topk_lsh(
     n_planes: int = 8,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    impl: str = "python",
     multiprobe: int = 0,
 ) -> DataFrame:
     """Approximate top-k: candidates restricted to the query's LSH
@@ -155,11 +164,9 @@ def cosine_topk_lsh(
     This is the shape that survives 10^12 rows (bucket join instead of
     cross join).
 
-    ``impl`` selects the bucket kernel (hyperplane_buckets_df):
-    'python' (default, Arrow-batched, bit-identical buckets) or 'expr'
-    (pure Catalyst, the oracle-reference form). Buckets are computed
-    AFTER the float->double cast on both paths, so the fold inputs are
-    identical doubles.
+    Buckets come from hyperplane_buckets_df, computed AFTER the
+    float->double cast on both sides, so the fold inputs are the same
+    doubles the hyperplane_bucket column (and its oracle) sees.
 
     ``multiprobe``: recall knob. 0 probes only the query's own bucket;
     1 additionally probes every Hamming-1 neighbor bucket (n_planes
@@ -169,13 +176,10 @@ def cosine_topk_lsh(
     untouched."""
     corpus = hyperplane_buckets_df(
         _as_double(embeddings.select(id_col, vec_col), vec_col),
-        vec_col=vec_col, n_planes=n_planes, impl=impl,
+        vec_col=vec_col, n_planes=n_planes,
     )
     qs = hyperplane_buckets_df(
-        _as_double(queries, "embedding").select(
-            "query_id", F.col("embedding").alias("q_emb")
-        ),
-        vec_col="q_emb", n_planes=n_planes, impl=impl,
+        _queries(queries), vec_col="q_emb", n_planes=n_planes
     )
     if multiprobe:
         if multiprobe != 1:
@@ -197,17 +201,7 @@ def cosine_topk_lsh(
             ),
         )
         qs = qs.withColumn("bucket", F.explode(probes))
-    scored = corpus.join(F.broadcast(qs), "bucket").select(
-        "query_id",
-        F.col(id_col).alias("neighbor_id"),
-        F.round(cosine(F.col(vec_col), F.col("q_emb")), 6).alias("score"),
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("score"), F.asc("neighbor_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "score", "rank")
-    )
+    return _topk(corpus.join(F.broadcast(qs), "bucket"), k, id_col, vec_col)
 
 
 def cosine_topk_ivf(
@@ -240,13 +234,13 @@ def cosine_topk_ivf(
     similarity (array_max struct ordering), mirrored by the oracle.
 
     ``assign``: 'numpy' (default) uses the Arrow-batched matmul kernel
-    (ivf_assign_numpy), ~µs/row — the production path at 10^12 rows;
-    'expr' computes the assignment with Catalyst fold expressions —
-    the oracle-exact reference form the driver query pins (BLAS
-    summation order can differ from the sequential fold by float ulps,
-    so only 'expr' is guaranteed hash-stable against the SQL oracle).
-    Both agree on real data (see test_dedup_similarity); they can
-    differ only when two centroid similarities tie within float ulps.
+    (ivf_assign_numpy); 'expr' computes the assignment with Catalyst
+    fold expressions — the oracle-exact reference form (BLAS summation
+    order can differ from the sequential fold by float ulps, so only
+    'expr' is guaranteed hash-stable against the SQL oracle). The only
+    non-test caller, __spark_entry__'s q_ann_ivf_topk, passes 'expr'; the
+    numpy branch is run only by tests (test_dedup_similarity), where
+    both forms return the same rows.
     """
     corpus = _as_double(embeddings.select(id_col, vec_col), vec_col)
     if centroids is None:
@@ -279,19 +273,15 @@ def cosine_topk_ivf(
             ]
         )
 
-    def with_best(df, vcol, out):
-        vn = _norm(F.col(vcol))
-        return df.withColumn("v_norm", vn).withColumn(
-            out, F.array_max(cent_sims(F.col(vcol), F.col("v_norm")))["c"]
-        )
-
     if assign == "numpy":
         assigned = ivf_assign_numpy(corpus, centroids, vec_col=vec_col)
     else:
-        assigned = with_best(corpus, vec_col, "cent").drop("v_norm")
+        vn = _norm(F.col(vec_col))
+        best = F.array_max(cent_sims(F.col(vec_col), F.col("v_norm")))["c"]
+        assigned = corpus.withColumn("v_norm", vn).withColumn("cent", best)
+        assigned = assigned.drop("v_norm")
     qs = (
-        _as_double(queries, "embedding")
-        .select("query_id", F.col("embedding").alias("q_emb"))
+        _queries(queries)
         .withColumn("v_norm", _norm(F.col("q_emb")))
         .withColumn(
             "probes",
@@ -310,17 +300,7 @@ def cosine_topk_ivf(
         )
         .select("query_id", "q_emb", F.explode("probes").alias("cent"))
     )
-    scored = assigned.join(F.broadcast(qs), "cent").select(
-        "query_id",
-        F.col(id_col).alias("neighbor_id"),
-        F.round(cosine(F.col(vec_col), F.col("q_emb")), 6).alias("score"),
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("score"), F.asc("neighbor_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "score", "rank")
-    )
+    return _topk(assigned.join(F.broadcast(qs), "cent"), k, id_col, vec_col)
 
 
 def ivf_assign_numpy(
@@ -376,27 +356,17 @@ def hyperplane_buckets_df(
     vec_col: str = "embedding",
     n_planes: int = 8,
     seed: int = 42,
-    impl: str = "python",
-    out_col: str = "bucket",
 ) -> DataFrame:
-    """Append the LSH bucket column, two interchangeable kernels.
+    """Append the LSH ``bucket`` column by an Arrow-batched mapInPandas.
 
-    impl='python' (default): Arrow-batched mapInPandas. The hyperplane
-    constants are md5-derived doubles precomputed once per batch, and
-    the per-plane dot product is an explicit SEQUENTIAL Python fold —
-    the same IEEE-double addition order as the Catalyst aggregate, so
-    sign bits (and therefore buckets) are BIT-IDENTICAL to the
-    expression path; asserted in tests. ~50x less interpreted work than
-    n_planes x dim HOF lambdas per row.
-
-    impl='expr': the pure-Catalyst hyperplane_bucket column (the
-    DuckDB-oracle reference form).
+    The hyperplane constants are md5-derived doubles computed once per
+    (plane, dim), and the per-plane dot product is an explicit
+    SEQUENTIAL Python fold — the same IEEE-double addition order as the
+    Catalyst hyperplane_bucket column (the DuckDB-oracle reference
+    form), so sign bits (and therefore buckets) are BIT-IDENTICAL to it;
+    asserted in tests. ~50x less interpreted work than n_planes x dim
+    HOF lambdas per row.
     """
-    if impl == "expr":
-        return vectors.withColumn(
-            out_col, hyperplane_bucket(F.col(vec_col), n_planes, seed)
-        )
-
     import hashlib as _hashlib
     from typing import Iterator
 
@@ -419,8 +389,10 @@ def hyperplane_buckets_df(
         return plane_cache[key]
 
     def bucket_of(vec) -> str:
-        if vec is None:
-            return "" 
+        if vec is None or len(vec) == 0:
+            # the column's plane folds are null here (sequence(0, -1)
+            # counts DOWN over an empty vector), and concat_ws drops them
+            return ""
         xs = [float(x) for x in vec]
         dim = len(xs)
         bits = []
@@ -432,15 +404,14 @@ def hyperplane_buckets_df(
             bits.append("1" if acc >= 0 else "0")
         return "".join(bits)
 
-    cols = [f for f in vectors.columns]
     out_schema = ", ".join(
         f"`{name}` {dt}" for name, dt in vectors.dtypes
-    ) + f", {out_col} string"
+    ) + ", bucket string"
 
     def process(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             pdf = pdf.copy()
-            pdf[out_col] = pdf[vec_col].map(bucket_of)
+            pdf["bucket"] = pdf[vec_col].map(bucket_of)
             yield pdf
 
     return vectors.mapInPandas(process, schema=out_schema)
@@ -532,19 +503,6 @@ def cosine_topk_int8(
             / F.lit(255.0),
         ).alias("xq"),
     )
-    qs = _as_double(queries, "embedding").select(
-        F.col("query_id"), F.col("embedding").alias("q_emb")
-    )
-    scored = deq.crossJoin(F.broadcast(qs)).select(
-        "query_id",
-        F.col(id_col).alias("neighbor_id"),
-        F.round(cosine(F.col("xq"), F.col("q_emb")), 6).alias("score"),
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc("score"), F.asc("neighbor_id")
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "score", "rank")
+    return _topk(
+        deq.crossJoin(F.broadcast(_queries(queries))), k, id_col, "xq"
     )

@@ -40,15 +40,22 @@ _HASH_BITS = 13
 _HASH_DENOM = float(16**_HASH_BITS)
 
 
+def md5_hex_value(col: Column, salt: str, digits: int) -> Column:
+    """The first ``digits`` hex digits of md5(salt || col) as a double,
+    exact up to 13 digits; DuckDB reads the same integer as
+    ``('0x' || substr(md5(salt || v), 1, digits))::UBIGINT``."""
+    return F.conv(
+        F.substring(F.md5(F.concat(F.lit(salt), col.cast("string"))), 1, digits),
+        16,
+        10,
+    ).cast("double")
+
+
 def uniform_hash(col: Column, salt: str = "kmv-v1") -> Column:
     """Deterministic uniform hash of ``col`` in (0, 1], portable to
     DuckDB as ``(('0x' || substr(md5(salt || v), 1, 13))::UBIGINT + 1)
     / 16.0^13``."""
-    h = F.conv(
-        F.substring(F.md5(F.concat(F.lit(salt), col.cast("string"))), 1, _HASH_BITS),
-        16,
-        10,
-    ).cast("double")
+    h = md5_hex_value(col, salt, _HASH_BITS)
     return (h + F.lit(1.0)) / F.lit(_HASH_DENOM)
 
 

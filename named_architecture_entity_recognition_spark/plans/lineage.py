@@ -2,11 +2,10 @@
 (north_rule requirement).
 
 Every stage writes its output partitioned by ``doc_bucket =
-pmod(xxhash64(doc_id), n_buckets)`` plus a manifest recording, per
-bucket: rows in/out, wall time, and the stage input fingerprint. A
-resumed run recomputes ONLY buckets missing from the manifest (the
-anti-join happens on bucket ids, i.e. partition pruning at the file
-level — no data read for completed buckets).
+pmod(xxhash64(doc_id), n_buckets)`` plus a manifest recording rows
+in/out per bucket. A resumed run recomputes ONLY buckets missing from
+the manifest (the anti-join happens on bucket ids, i.e. partition
+pruning at the file level — no data read for completed buckets).
 
 At production scale the same protocol is Iceberg snapshots + hidden
 bucket partitioning; parquet directories are the sandbox stand-in.
@@ -17,7 +16,6 @@ from __future__ import annotations
 import json
 import os
 import shutil
-import time
 from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession
@@ -89,7 +87,6 @@ class StageCheckpoint:
             self._recover(done)
             staging = self.dir / "_staging"
             pending = bucketed.filter(F.col("doc_bucket").isin(todo))
-            t0 = time.time()
             out = compute(pending)
             if "doc_bucket" not in out.columns:
                 out = with_bucket(out, self.n_buckets, key)
@@ -116,7 +113,6 @@ class StageCheckpoint:
                 )
             else:
                 rows_out_rows = None
-            stats = {}
             if rows_out_rows is not None:
                 joined = rows_in.join(rows_out_rows, "doc_bucket", "full")
             else:
@@ -128,11 +124,10 @@ class StageCheckpoint:
                 }
                 for r in joined.collect()
             }
-            wall = time.time() - t0
             for b in todo:
-                entry = stats.get(b, {"rows_in": 0, "rows_out": 0})
-                entry["wall_ms"] = int(wall * 1000 / max(len(todo), 1))
-                manifest["buckets"][str(b)] = entry
+                manifest["buckets"][str(b)] = stats.get(
+                    b, {"rows_in": 0, "rows_out": 0}
+                )
             # atomic manifest commit (write-temp + rename)
             tmp = self.manifest_path.with_suffix(".json.tmp")
             tmp.write_text(json.dumps(manifest, indent=1))

@@ -17,6 +17,15 @@ from pyspark.sql import functions as F
 
 N_SUBJ_BUCKETS = 256
 
+#: writer options for local parquet output: Hadoop's checksum-free
+#: RawLocalFileSystem (no `.crc` sibling per file, as on an object
+#: store), kept out of the JVM-wide FileSystem cache so writers without
+#: these options keep their checksums
+RAW_LOCAL_FS = {
+    "fs.file.impl": "org.apache.hadoop.fs.RawLocalFileSystem",
+    "fs.file.impl.disable.cache": "true",
+}
+
 
 def iceberg_available(spark: SparkSession) -> bool:
     try:
@@ -62,17 +71,15 @@ def write_triples(
     write distribution mode requests the same clustering.
 
     The fallback writes through Hadoop's checksum-free
-    RawLocalFileSystem, set on this writer alone: no `.crc` sibling per
-    file, as on an object store, and `disable.cache` keeps that instance
-    out of the JVM-wide FileSystem cache, so other writers keep their
-    checksums. What is left is a per-file floor. Without the Hadoop
-    native library every created file and directory forks a `chmod`,
-    and every Parquet file's writer set-up scans the whole (~1,100-entry)
-    Hadoop configuration. A 200-doc, 32-bucket build on 4 vCPUs writes
-    its 96 files in 1.5-1.8 CPU-s where the same rows as one file take
-    0.2-0.25 s: 13-16 CPU-ms per file, ~5 of them in the two forked
-    chmods (its directory's and its own) and ~3 in the JVM's system
-    time."""
+    RawLocalFileSystem (RAW_LOCAL_FS), set on this writer and
+    compact_table's alone. What is left is a per-file floor. Without
+    the Hadoop native library every created file and directory forks a
+    `chmod`, and every Parquet file's writer set-up scans the whole
+    (~1,100-entry) Hadoop configuration. A 200-doc, 32-bucket build on
+    4 vCPUs writes its 96 files in 1.5-1.8 CPU-s where the same rows as
+    one file take 0.2-0.25 s: 13-16 CPU-ms per file, ~5 of them in the
+    two forked chmods (its directory's and its own) and ~3 in the JVM's
+    system time."""
     spark = triples.sparkSession
     if "/" not in target and iceberg_available(spark):
         (
@@ -85,8 +92,7 @@ def write_triples(
         triples.withColumn("subj_bucket", subj_bucket_col(n_buckets))
         .hint("rebalance", "pred", "subj_bucket")
         .write.mode("overwrite")
-        .option("fs.file.impl", "org.apache.hadoop.fs.RawLocalFileSystem")
-        .option("fs.file.impl.disable.cache", "true")
+        .options(**RAW_LOCAL_FS)
         .partitionBy("pred", "subj_bucket")
         .parquet(target)
     )
@@ -125,7 +131,8 @@ def compact_table(
     triples sink's ``pred=*/subj_bucket=*``) keeps its partition
     directories: rows are clustered by the partition columns, so each
     directory is rewritten as ONE file and readers keep directory
-    pruning.
+    pruning. The rewrite goes through write_triples' checksum-free
+    local filesystem (RAW_LOCAL_FS), so it writes no `.crc` files.
 
     Returns {"files_in", "bytes_in", "files_out", "n_rows"}.
     Row-preservation (count + content) is pytest-asserted; file count
@@ -157,6 +164,7 @@ def compact_table(
     (
         df.repartition(n_files, *part_cols)
         .write.mode("overwrite")
+        .options(**RAW_LOCAL_FS)
         .partitionBy(*part_cols)
         .parquet(target)
     )

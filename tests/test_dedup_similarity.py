@@ -267,17 +267,21 @@ def test_cosine_topk_ivf_numpy_path_end_to_end(spark, embeddings):
     qs = embeddings.filter(F.col("vec_id") < 3).select(
         F.col("vec_id").alias("query_id"), "embedding"
     )
-    a = cosine_topk_ivf(embeddings, qs, k=3, n_centroids=8, nprobe=3).collect()
+    a = cosine_topk_ivf(
+        embeddings, qs, k=3, n_centroids=8, nprobe=3, assign="expr"
+    ).collect()
     b = cosine_topk_ivf(
         embeddings, qs, k=3, n_centroids=8, nprobe=3, assign="numpy"
     ).collect()
+    assert len(a) == 9
     assert sorted(map(tuple, a)) == sorted(map(tuple, b))
 
 
 def test_simhash_numpy_kernel_identical_to_expression(spark):
     """SimHash is integer arithmetic, so the vectorized numpy kernel
     must be BIT-identical to the Catalyst expression — including the
-    empty-shingle all-ones edge."""
+    empty-shingle all-ones edge and Spark's whitespace rules (trim
+    strips only spaces; a no-break space is not a separator)."""
     from named_architecture_entity_recognition_spark.operators.dedup import (
         simhash_signatures,
     )
@@ -286,12 +290,17 @@ def test_simhash_numpy_kernel_identical_to_expression(spark):
         "/root/testdata/sf0.001/documents.parquet"
     ).select("doc_id", "text").limit(80)
     edge = spark.createDataFrame(
-        [(9001, "oneword"), (9002, ""), (9003, "  two words  ")],
+        [(9001, "oneword"), (9002, ""), (9003, "  two words  "),
+         (9004, "\tlead tab words"), (9005, "trailing newline words\n"),
+         (9006, "no\u00a0break space here"), (9007, " \t ")],
         "doc_id bigint, text string",
     )
     both = docs.unionByName(edge)
-    a = {r.doc_id: r.sig for r in simhash_signatures(both, impl="expr").collect()}
-    b = {r.doc_id: r.sig for r in simhash_signatures(both, impl="numpy").collect()}
+    a = {
+        r.doc_id: r.sig
+        for r in both.select("doc_id", simhash64(F.col("text"), 2).alias("sig")).collect()
+    }
+    b = {r.doc_id: r.sig for r in simhash_signatures(both).collect()}
     assert a == b
     assert a[9001] == "1" * 64 and a[9002] == "1" * 64  # <2 words
 
@@ -349,18 +358,23 @@ def test_ann_operators_survive_zero_vectors(spark):
     )
     out = cosine_topk(emb, qz, k=3).orderBy("rank").collect()
     assert all(r.score == 0.0 for r in out)  # no direction -> sim 0 to all
-    # both IVF kernels agree on the degenerate rows too
-    a = cosine_topk_ivf(emb, qz, k=3, n_centroids=2, nprobe=2).collect()
-    b = cosine_topk_ivf(
-        emb, qz, k=3, n_centroids=2, nprobe=2, assign="numpy"
+    # both IVF kernels agree on the degenerate rows too. One probe: the
+    # zero query ties on every centroid and probes the highest cid, 1
+    # (the zero vector itself), whose list holds only the zero vector
+    a = cosine_topk_ivf(
+        emb, qz, k=3, n_centroids=2, nprobe=1, assign="expr"
     ).collect()
+    b = cosine_topk_ivf(
+        emb, qz, k=3, n_centroids=2, nprobe=1, assign="numpy"
+    ).collect()
+    assert [(r.neighbor_id, r.score) for r in a] == [(2, 0.0)]
     assert sorted(map(tuple, a)) == sorted(map(tuple, b))
 
 
 def test_minhash_python_kernel_identical_to_expression(spark):
     """Python min over md5 hex == JVM lexicographic string min, so the
     vectorized kernel must produce identical signatures — including the
-    all-null empty-shingle rows."""
+    all-null empty-shingle rows and Spark's whitespace rules."""
     from named_architecture_entity_recognition_spark.operators.dedup import (
         minhash_signatures_df,
     )
@@ -369,14 +383,15 @@ def test_minhash_python_kernel_identical_to_expression(spark):
         "/root/testdata/sf0.001/documents.parquet"
     ).select("doc_id", "text").limit(60)
     edge = spark.createDataFrame(
-        [(9001, "one two"), (9002, ""), (9003, "a b c d")],
+        [(9001, "one two"), (9002, ""), (9003, "a b c d"),
+         (9004, "\tthe quick brown fox"), (9005, "the quick brown fox\n"),
+         (9006, "the quick\u00a0brown fox jumps"), (9007, "em\u2003space a b c")],
         "doc_id bigint, text string",
     )
     both = docs.unionByName(edge)
-    a = {r.doc_id: tuple(r.sig) for r in
-         minhash_signatures_df(both, impl="expr").collect()}
-    b = {r.doc_id: tuple(r.sig) for r in
-         minhash_signatures_df(both, impl="python").collect()}
+    a = {r.doc_id: tuple(r.sig) for r in both.select(
+        "doc_id", minhash_signature(F.col("text"), 8, 3).alias("sig")).collect()}
+    b = {r.doc_id: tuple(r.sig) for r in minhash_signatures_df(both).collect()}
     assert a == b
     assert a[9002] == (None,) * 8  # < 3 words -> all-null signature
 
@@ -384,19 +399,28 @@ def test_minhash_python_kernel_identical_to_expression(spark):
 def test_hyperplane_python_kernel_identical_to_expression(spark, embeddings):
     """The Python sequential fold reproduces the Catalyst aggregate's
     sign bits exactly (same IEEE addition order, same md5-derived plane
-    constants) — buckets, and therefore LSH results, are identical."""
+    constants) — buckets, and therefore LSH results, are identical,
+    including on zero, signed-zero, short and empty vectors."""
     from named_architecture_entity_recognition_spark.operators.similarity import (
         _as_double,
+        hyperplane_bucket,
         hyperplane_buckets_df,
     )
 
-    base = _as_double(embeddings.select("vec_id", "embedding"), "embedding")
+    edge = spark.createDataFrame(
+        [(901, [0.0] * 16), (902, [-0.0] * 16), (903, [1.0, -2.0, 0.5]), (904, [])],
+        "vec_id long, embedding array<float>",
+    )
+    base = _as_double(
+        embeddings.select("vec_id", "embedding").unionByName(edge), "embedding"
+    )
     for planes in (4, 8):
-        a = {r.vec_id: r.bucket for r in
-             hyperplane_buckets_df(base, n_planes=planes, impl="expr").collect()}
+        a = {r.vec_id: r.bucket for r in base.withColumn(
+            "bucket", hyperplane_bucket(F.col("embedding"), planes)).collect()}
         b = {r.vec_id: r.bucket for r in
-             hyperplane_buckets_df(base, n_planes=planes, impl="python").collect()}
+             hyperplane_buckets_df(base, n_planes=planes).collect()}
         assert a == b
+        assert len(set(a.values())) > 2  # the planes split the corpus
 
 
 def test_lsh_multiprobe_recovers_one_flip_neighbor(spark, embeddings):

@@ -42,10 +42,11 @@ def test_small_dim_join_is_broadcast(spark):
     assert "BroadcastHashJoin" in plan
 
 
-def test_kg_pipeline_zero_shuffle(spark):
+def test_kg_pipeline_zero_shuffle(spark, tmp_path):
     """The whole documents->triples pipeline must contain NO exchange:
     detection+assembly run fused in one partition-preserving mapInArrow
-    pass (entities are doc-local) and triples are narrow."""
+    pass (entities are doc-local) and triples are narrow. The docs come
+    from parquet, so every python node in the plan is the pipeline's."""
     from named_architecture_entity_recognition_spark.plans.pipeline import (
         RecognizerPipeline,
     )
@@ -54,17 +55,18 @@ def test_kg_pipeline_zero_shuffle(spark):
         synth_gazetteer,
     )
 
-    docs = synth_documents(spark, 10, seed=1, gazetteer_size=10)
-    t = RecognizerPipeline(synth_gazetteer(10)).triples(docs)
+    path = str(tmp_path / "docs")
+    synth_documents(spark, 10, seed=1, gazetteer_size=10).write.parquet(path)
+    t = RecognizerPipeline(synth_gazetteer(10)).triples(spark.read.parquet(path))
     simple = t._sc._jvm.PythonSQLUtils.explainString(
         t._jdf.queryExecution(), "simple"
     )
     assert simple.count("Exchange") == 0, simple
-    plan = plan_of(t)
-    # no row-at-a-time python: the only python boundary is Arrow-batched
-    assert "ArrowEvalPython" not in plan  # no scalar python UDF in plan
-    assert "BatchEvalPython" not in plan  # no legacy row-python anywhere
-    assert "MapInPandas" in plan or "mapInPandas" in plan.lower()
+    # the only python boundary is the Arrow-batched detection kernel: no
+    # scalar python UDF, no legacy row-python, no pandas map
+    assert simple.count("MapInArrow") == 1, simple
+    for marker in ("ArrowEvalPython", "BatchEvalPython", "MapInPandas"):
+        assert marker not in plan_of(t), marker
 
 
 def test_charset_fastpath_has_no_python(spark):

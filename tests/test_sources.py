@@ -260,7 +260,8 @@ def test_compact_table_preserves_rows_and_reduces_files(spark, tmp_path):
 def test_compact_table_keeps_sink_partition_directories(spark, tmp_path):
     """Compacting the triples sink rewrites it into the same
     pred=*/subj_bucket=* directories, one file each, so a
-    (pred, subj_bucket) lookup still reads one file; rows are equal."""
+    (pred, subj_bucket) lookup still reads one file; rows are equal,
+    and like the sink the compacted table has no checksum files."""
     from named_architecture_entity_recognition_spark.sources.lakehouse import (
         compact_table,
         read_triples,
@@ -282,6 +283,7 @@ def test_compact_table_keeps_sink_partition_directories(spark, tmp_path):
     assert len(dst_dirs) == 2 * 4 and dst_dirs == src_dirs
     assert stats["files_out"] == len(dst_dirs)
     assert stats["n_rows"] == len(rows)
+    assert list(src.rglob("*.crc")) == [] and list(dst.rglob("*.crc")) == []
     a, b = read_triples(spark, str(src)), read_triples(spark, str(dst))
     assert b.columns == a.columns
     assert a.exceptAll(b).count() == 0 and b.exceptAll(a).count() == 0
