@@ -2163,9 +2163,7 @@ def _q_ann_ivf_topk(spark, sf):
     their 4 nearest inverted lists, exact cosine inside probed lists."""
     e = _read(spark, sf, "embeddings")
     qs = _ann_queries(e)
-    # assign='expr': the Catalyst fold is the oracle-exact form (the
-    # numpy matmul default can differ by float ulps in argmax ties)
-    return cosine_topk_ivf(e, qs, k=5, n_centroids=16, nprobe=4, assign="expr")
+    return cosine_topk_ivf(e, qs, k=5, n_centroids=16, nprobe=4)
 
 
 #: 64-bit SimHash bit-string over distinct 2-word shingles (Spark

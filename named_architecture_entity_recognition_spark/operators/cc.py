@@ -133,39 +133,6 @@ def connected_components(
     return comp.select("node", F.col("root").alias("component"))
 
 
-def canonicalize_aliases(entities: DataFrame) -> DataFrame:
-    """Unify entities (within doc) whose name pools intersect.
-
-    Name pool = {lower(name)} U lower(aliases) (reference J3). Returns
-    the input with an added ``component`` column: the canonical
-    (min) '<doc_id>#<pool name>' of the alias component, suitable as a
-    grouping key for merged entities.
-    """
-    with_key = entities.withColumn("node", F.concat_ws("#", "doc_id", F.lower("name")))
-    pool = with_key.select(
-        F.col("node").alias("src"),
-        "doc_id",
-        F.explode(
-            F.array_union(
-                F.array(F.lower("name")),
-                # NULL aliases (entity tables read from external
-                # parquet/Iceberg) must not nullify the union and drop
-                # the entity's own-name edge
-                F.transform(
-                    F.coalesce(
-                        "alternative_names", F.array().cast("array<string>")
-                    ),
-                    F.lower,
-                ),
-            )
-        ).alias("alias"),
-    ).select("src", F.concat_ws("#", "doc_id", F.col("alias")).alias("dst"))
-    comp = connected_components(pool)
-    return with_key.join(comp, "node", "left").withColumn(
-        "component", F.coalesce("component", F.col("node"))
-    ).drop("node")
-
-
 def canonicalize_corpus(entities: DataFrame) -> DataFrame:
     """Corpus-level entity linking (north_star: "abbreviation/case
     canonicalization with connected-components union over alias edges"):

@@ -415,8 +415,7 @@ def prepare_corpus(
     parquet stage table once and read back, so the raw corpus is
     scanned exactly once and every later stage reads its own (much
     smaller) input exactly once — the same stage-table shape as
-    plans/lineage.py. Output identical either way (pytest-asserted);
-    the stage tables double as resume points.
+    plans/lineage.py. Output identical either way (pytest-asserted).
     """
     def mat(df: DataFrame, name: str) -> DataFrame:
         # stage-table materialization: cuts the re-scan every branch

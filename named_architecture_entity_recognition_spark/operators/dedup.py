@@ -1,5 +1,5 @@
 """Training-data deduplication operators over a flat documents table
-(doc_id, text): exact, MinHash+LSH, SimHash, n-gram Jaccard.
+(doc_id, text): exact, MinHash+LSH, SimHash, duplicated spans.
 
 Portability rule: all hashing is md5-based (identical in Spark SQL and
 DuckDB), so every operator has an exact DuckDB oracle and results are
@@ -23,6 +23,10 @@ import re
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+
+from named_architecture_entity_recognition_spark.operators.textstats import (
+    tokens,
+)
 
 
 def _words(col) -> Column:
@@ -149,7 +153,9 @@ def _banded_pairs(
     identical signatures — at 10^12 rows they would pair QUADRATICALLY
     in one degenerate bucket. No shingles = no content to near-match
     (exact dedup owns identical empties), so they are excluded up front
-    by a codegen'd pre-filter.
+    by a codegen'd pre-filter. It counts non-empty tokens: Spark's trim
+    strips only spaces, so a whitespace-only text like "\\t" splits into
+    two empty words and would otherwise share the one shingle " ".
 
     ``max_bucket_size``: hot-bucket guard. A band bucket holding B docs
     emits B*(B-1)/2 pairs — template/boilerplate corpora put thousands
@@ -164,7 +170,7 @@ def _banded_pairs(
         ensure_parallelism,
     )
 
-    eligible = docs.filter(F.size(_words(text_col)) >= F.lit(shingle_n))
+    eligible = docs.filter(F.size(tokens(text_col)) >= F.lit(shingle_n))
     banded = signatures(ensure_parallelism(eligible)).select(
         "doc_id", *carry, F.posexplode(bands).alias(*keys)
     )
@@ -216,43 +222,6 @@ def minhash_lsh_pairs(
         ),
         ("band_idx", "band_key"),
         max_bucket_size,
-    )
-
-
-def ngram_jaccard_pairs(
-    docs: DataFrame,
-    candidates: DataFrame,
-    text_col: str = "text",
-    shingle_n: int = 3,
-    threshold: float = 0.8,
-) -> DataFrame:
-    """Verify candidate pairs with exact n-gram Jaccard >= threshold.
-
-    candidates: (doc_a, doc_b). Joins the shingle sets back (two equi
-    joins) and computes |A∩B|/|A∪B| with array built-ins.
-    """
-    sh = docs.select(
-        "doc_id", shingles(F.col(text_col), shingle_n).alias("sh")
-    )
-    out = (
-        candidates.join(sh.withColumnRenamed("doc_id", "doc_a"), "doc_a")
-        .withColumnRenamed("sh", "sh_a")
-        .join(sh.withColumnRenamed("doc_id", "doc_b"), "doc_b")
-        .withColumnRenamed("sh", "sh_b")
-        .withColumn(
-            # two empty shingle sets define Jaccard 0 (no content, not a
-            # near-dup) — the plain ratio is a job-killing ANSI
-            # DIVIDE_BY_ZERO on any such candidate pair
-            "jaccard",
-            F.when(
-                F.size(F.array_union("sh_a", "sh_b")) > 0,
-                F.size(F.array_intersect("sh_a", "sh_b"))
-                / F.size(F.array_union("sh_a", "sh_b")),
-            ).otherwise(F.lit(0.0)),
-        )
-    )
-    return out.filter(F.col("jaccard") >= threshold).select(
-        "doc_a", "doc_b", F.round("jaccard", 6).alias("jaccard")
     )
 
 

@@ -123,16 +123,6 @@ def pagerank(
     return ranks.select("node", F.round("rank", 6).alias("rank"))
 
 
-def triple_edges(triples: DataFrame) -> DataFrame:
-    """KG triples (subj, pred, obj) -> directed subj->obj edge list for
-    :func:`pagerank` (literal-valued predicates like hasName excluded
-    by keeping only obj values that also appear as subjects is the
-    caller's choice; this keeps every edge)."""
-    return triples.select(
-        F.col("subj").alias("src"), F.col("obj").alias("dst")
-    )
-
-
 def triangle_count(
     edges: DataFrame, src: str = "src", dst: str = "dst"
 ) -> DataFrame:

@@ -226,54 +226,6 @@ def synth_ppm(width: int, height: int, rgb: tuple) -> bytes:
     return header + bytes(rgb) * (width * height)
 
 
-def resize_nn(px: "np.ndarray", out_w: int, out_h: int) -> "np.ndarray":
-    """Nearest-neighbor resize (pure numpy) — the real thumbnail kernel
-    for decoded rasters; deterministic (floor sampling grid)."""
-    h, w = px.shape[0], px.shape[1]
-    ys = (np.arange(out_h) * h) // out_h
-    xs = (np.arange(out_w) * w) // out_w
-    return px[ys][:, xs]
-
-
-THUMB_FEATURES = StructType(
-    [
-        StructField("doc_id", StringType(), False),
-        StructField("media_ref", StringType(), False),
-        StructField("thumb", ArrayType(DoubleType()), True),
-        StructField("error", StringType(), True),
-    ]
-)
-
-
-def extract_ppm_thumbnails(
-    media: DataFrame, grid: int = 2, bytes_col: str = "media_bytes"
-) -> DataFrame:
-    """decode -> resize(grid x grid) -> flatten to a 3*grid^2 vector in
-    [0,1] — a real decode+resize feature pipeline feeding ANN
-    (operators/similarity.py) directly. Same Arrow-batched map shape as
-    extract_ppm_features. Video frame-sampling is the remaining ffmpeg
-    integration point (no video codec in this container)."""
-
-    def process(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cols = [f.name for f in THUMB_FEATURES.fields]
-        for pdf in batches:
-            rows = []
-            for doc_id, ref, buf in zip(
-                pdf["doc_id"], pdf["media_ref"], pdf[bytes_col]
-            ):
-                try:
-                    _, _, px = decode_ppm(bytes(buf) if buf is not None else b"")
-                    t = resize_nn(px, grid, grid).astype(np.float64) / 255.0
-                    rows.append((doc_id, ref, [float(x) for x in t.ravel()], None))
-                except ValueError as e:
-                    rows.append((doc_id, ref, None, str(e)))
-            yield pd.DataFrame(rows, columns=cols)
-
-    return media.select("doc_id", "media_ref", bytes_col).mapInPandas(
-        process, schema=THUMB_FEATURES
-    )
-
-
 # ----------------------------------------------------------------- audio
 
 WAV_FEATURES = StructType(

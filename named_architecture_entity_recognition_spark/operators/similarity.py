@@ -7,10 +7,7 @@ IVF probing (centroid inverted lists -> partition-pruned probe). At
 
 The LSH bucket runs as an Arrow-batched Python kernel
 (hyperplane_buckets_df), asserted bit-identical in tests to the
-Catalyst hyperplane_bucket column that the DuckDB oracle mirrors. IVF
-assignment still has two forms (cosine_topk_ivf's ``assign``), but its
-only caller, __spark_entry__'s q_ann_ivf_topk, pins the fold expression;
-the numpy matmul default (ivf_assign_numpy) is run only by tests.
+Catalyst hyperplane_bucket column that the DuckDB oracle mirrors.
 """
 
 from __future__ import annotations
@@ -213,7 +210,6 @@ def cosine_topk_ivf(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     centroids: list | None = None,
-    assign: str = "numpy",
 ) -> DataFrame:
     """Approximate top-k via IVF (inverted-file) probing — the other
     standard ANN scale path next to LSH bucketing.
@@ -232,15 +228,9 @@ def cosine_topk_ivf(
     an offline batch job; the serving-path shape graded here is
     assignment + probe). Tie-breaks: higher centroid id wins on equal
     similarity (array_max struct ordering), mirrored by the oracle.
-
-    ``assign``: 'numpy' (default) uses the Arrow-batched matmul kernel
-    (ivf_assign_numpy); 'expr' computes the assignment with Catalyst
-    fold expressions — the oracle-exact reference form (BLAS summation
-    order can differ from the sequential fold by float ulps, so only
-    'expr' is guaranteed hash-stable against the SQL oracle). The only
-    non-test caller, __spark_entry__'s q_ann_ivf_topk, passes 'expr'; the
-    numpy branch is run only by tests (test_dedup_similarity), where
-    both forms return the same rows.
+    The assignment is the same sequential fold the oracle computes, so
+    the result is hash-stable against it (a BLAS matmul can differ by
+    float ulps).
     """
     corpus = _as_double(embeddings.select(id_col, vec_col), vec_col)
     if centroids is None:
@@ -273,13 +263,10 @@ def cosine_topk_ivf(
             ]
         )
 
-    if assign == "numpy":
-        assigned = ivf_assign_numpy(corpus, centroids, vec_col=vec_col)
-    else:
-        vn = _norm(F.col(vec_col))
-        best = F.array_max(cent_sims(F.col(vec_col), F.col("v_norm")))["c"]
-        assigned = corpus.withColumn("v_norm", vn).withColumn("cent", best)
-        assigned = assigned.drop("v_norm")
+    vn = _norm(F.col(vec_col))
+    best = F.array_max(cent_sims(F.col(vec_col), F.col("v_norm")))["c"]
+    assigned = corpus.withColumn("v_norm", vn).withColumn("cent", best)
+    assigned = assigned.drop("v_norm")
     qs = (
         _queries(queries)
         .withColumn("v_norm", _norm(F.col("q_emb")))
@@ -301,54 +288,6 @@ def cosine_topk_ivf(
         .select("query_id", "q_emb", F.explode("probes").alias("cent"))
     )
     return _topk(assigned.join(F.broadcast(qs), "cent"), k, id_col, vec_col)
-
-
-def ivf_assign_numpy(
-    corpus: DataFrame, centroids: list, vec_col: str = "embedding"
-) -> DataFrame:
-    """Vectorized IVF centroid assignment: one Arrow-batched pandas
-    iterator doing a numpy matmul per batch — (batch x dim) @ (dim x
-    n_centroids), then argmax. ~µs/row vs ~ms/row for the interpreted
-    Catalyst fold; partition-preserving (mapInPandas, no shuffle).
-
-    Tie-break parity with the expression path: np.argmax takes the
-    FIRST max, the expression path's array_max takes the highest cid —
-    so the centroid matrix is ordered by DESCENDING cid and the argmax
-    index mapped back. Differences vs the expression path can then only
-    come from float summation order (BLAS pairwise vs sequential fold),
-    i.e. genuine ulp ties.
-    """
-    from typing import Iterator
-
-    import numpy as np
-    import pandas as pd
-
-    cents_desc = sorted(centroids, key=lambda t: -t[0])
-    cids = np.array([c for c, _ in cents_desc], dtype="int64")
-    cmat = np.array([v for _, v in cents_desc], dtype="float64")
-    cn = np.linalg.norm(cmat, axis=1, keepdims=True)
-    with np.errstate(divide="ignore", invalid="ignore"):
-        cmat = np.where(cn > 0, cmat / cn, 0.0)
-    out_schema = ", ".join(
-        f"{name} {dt}" for name, dt in corpus.dtypes
-    ) + ", cent int"
-
-    def process(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            v = np.stack(pdf[vec_col].map(np.asarray).values).astype("float64")
-            vn = np.linalg.norm(v, axis=1, keepdims=True)
-            with np.errstate(divide="ignore", invalid="ignore"):
-                # zero-norm rows get sim 0 to every centroid, matching
-                # the expression path's try_divide->0.0 (tie-break then
-                # picks the highest cid on both paths)
-                sims = np.where(vn > 0, v / vn, 0.0) @ cmat.T
-            pdf = pdf.copy()
-            pdf["cent"] = cids[np.argmax(sims, axis=1)].astype("int32")
-            yield pdf
-
-    return corpus.mapInPandas(process, schema=out_schema)
 
 
 def hyperplane_buckets_df(

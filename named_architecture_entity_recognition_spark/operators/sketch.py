@@ -1,23 +1,15 @@
-"""Mergeable distinct-count sketches: KMV (k-minimum-values) and HLL.
+"""Mergeable distinct-count sketches: KMV (k-minimum-values).
 
-Two variants, one contract (estimate the number of distinct values per
-group with bounded state), chosen by what each is FOR:
-
-- ``kmv_*``: deterministic and **engine-portable** — the hash is
-  md5-based (same trick as operators/corpus.py), so DuckDB computes the
-  bit-identical sketch and the driver value-oracles it
-  (q_kmv_distinct). Standard error ~ 1/sqrt(k). The sketch itself is a
-  sorted array column of the k smallest hashes — a value you can store
-  in a rollup table and merge later (`kmv_merge_expr`), which is the
-  whole point of a sketch at 100 TB: pre-aggregate once, re-aggregate
-  cheaply at read time (composes with operators/rollup.py, whose
-  docstring points here for distinct counts).
-- ``hll_*``: thin wrappers over Spark's built-in Apache DataSketches
-  HLL functions (`hll_sketch_agg` / `hll_union_agg` /
-  `hll_sketch_estimate`) — the production path (JVM-side, constant
-  ~2^lgK bytes per group, streaming-friendly). Binary sketches are not
-  portable to DuckDB, so these are pytest-verified (error bound +
-  merge-of-parts == whole) rather than driver-oracled.
+``kmv_*`` estimates the number of distinct values per group with
+bounded state. It is deterministic and **engine-portable** — the hash
+is md5-based (same trick as operators/corpus.py), so DuckDB computes
+the bit-identical sketch and the driver value-oracles it
+(q_kmv_distinct). Standard error ~ 1/sqrt(k). The sketch itself is a
+sorted array column of the k smallest hashes — a value you can store
+in a rollup table and merge later (`kmv_merge_expr`), which is the
+whole point of a sketch at 100 TB: pre-aggregate once, re-aggregate
+cheaply at read time (composes with operators/rollup.py, whose
+docstring points here for distinct counts).
 
 Scale notes: the KMV build is `distinct` on (group, hash) — a map-side
 combinable hash aggregate, the same shuffle shape countDistinct uses —
@@ -113,31 +105,6 @@ def kmv_distinct(
     return sk.select(
         *[F.col(c) for c in keys],
         kmv_estimate_expr(F.col("sketch"), k).alias("est_distinct"),
-    )
-
-
-def hll_sketch(
-    df: DataFrame, keys: tuple[str, ...], col: str, lg_k: int = 12
-) -> DataFrame:
-    """Per-``keys`` DataSketches HLL sketch (binary column ``sketch``).
-    Store it in rollup tables; merge with :func:`hll_union_estimate`."""
-    return df.groupBy(*[F.col(c) for c in keys]).agg(
-        F.hll_sketch_agg(F.col(col).cast("string"), F.lit(lg_k)).alias("sketch")
-    )
-
-
-def hll_union_estimate(
-    sketches: DataFrame, keys: tuple[str, ...] = ()
-) -> DataFrame:
-    """Merge sketches (optionally re-grouped by a coarser ``keys``) and
-    estimate: ``*keys, est_distinct long``."""
-    key_cols = [F.col(c) for c in keys]
-    merged = sketches.groupBy(*key_cols).agg(
-        F.hll_union_agg("sketch").alias("sketch")
-    )
-    return merged.select(
-        *key_cols,
-        F.hll_sketch_estimate("sketch").cast("long").alias("est_distinct"),
     )
 
 

@@ -1,134 +1,20 @@
-"""Custom stateful streaming operator: per-user session windows via
-``applyInPandasWithState`` (SURVEY §2.6 — the reference is batch-only;
-this is the Structured Streaming extension point for operators the
-built-in windowed aggregations cannot express).
+"""Per-user session windows over an events table (SURVEY §2.6 — the
+reference is batch-only).
 
-A session = a maximal run of one user's events with gaps < ``gap``.
-State per user = the open session (start, last_ts, n_events,
-sum_value). An event extends the open session or closes it and starts a
-new one; event-time timeout (watermark) closes sessions with no
-successor event. Closed sessions are emitted downstream; the open one
-stays in the state store (RocksDB/HDFS-backed on a cluster).
+A session = a maximal run of one user's events with gaps < ``gap_minutes``.
 """
 
 from __future__ import annotations
 
-import datetime as dt
-from typing import Any, Iterator, Tuple
-
-import pandas as pd
-from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-from pyspark.sql.types import (
-    DoubleType,
-    LongType,
-    StructField,
-    StructType,
-    TimestampType,
-)
-
-SESSION_SCHEMA = StructType(
-    [
-        StructField("user_id", LongType()),
-        StructField("session_start", TimestampType()),
-        StructField("session_end", TimestampType()),
-        StructField("n_events", LongType()),
-        StructField("sum_value", DoubleType()),
-    ]
-)
-
-_STATE_SCHEMA = (
-    "start timestamp, last_ts timestamp, n_events long, sum_value double"
-)
-
-
-def _make_sessionize(gap_s: float):
-    """Build the per-group state function for a given session gap.
-    Emitted ``sum_value`` is rounded to 4 decimals on BOTH close paths
-    (in-batch and timeout) so stream output matches ``sessionize_batch``
-    / the DuckDB oracle exactly; the running sum in the state store
-    stays full-precision (rounding mid-session would accumulate error)."""
-
-    def _sessionize(
-        key: Tuple[Any],
-        pdfs: Iterator[pd.DataFrame],
-        state: GroupState,
-    ) -> Iterator[pd.DataFrame]:
-        user_id = key[0]
-        closed = []
-
-        def close(start, end, n, sv):
-            closed.append((user_id, start, end, n, round(sv, 4)))
-
-        if state.hasTimedOut:
-            if state.exists:
-                start, last_ts, n, sv = state.get
-                close(start, last_ts, n, sv)
-                state.remove()
-            yield pd.DataFrame(
-                closed,
-                columns=["user_id", "session_start", "session_end", "n_events", "sum_value"],
-            )
-            return
-
-        if state.exists:
-            start, last_ts, n, sv = state.get
-        else:
-            start = last_ts = None
-            n, sv = 0, 0.0
-
-        events = pd.concat(list(pdfs)).sort_values("ts")
-        for ts, value in zip(events["ts"], events["value"]):
-            ts = ts.to_pydatetime() if hasattr(ts, "to_pydatetime") else ts
-            if last_ts is not None and (ts - last_ts).total_seconds() >= gap_s:
-                close(start, last_ts, n, sv)
-                start, n, sv = ts, 0, 0.0
-            if start is None:
-                start = ts
-            last_ts = ts
-            n += 1
-            sv += float(value)
-
-        state.update((start, last_ts, n, sv))
-        # close the open session if no event arrives within gap (event time)
-        state.setTimeoutTimestamp(
-            int(last_ts.timestamp() * 1000) + int(gap_s * 1000)
-        )
-        yield pd.DataFrame(
-            closed,
-            columns=["user_id", "session_start", "session_end", "n_events", "sum_value"],
-        )
-
-    return _sessionize
-
-
-def sessionize_stream(
-    events_stream: DataFrame,
-    watermark: str = "1 hour",
-    gap_minutes: int = 30,
-) -> DataFrame:
-    """events(ts, user_id, value) stream -> closed-session rows."""
-    return (
-        events_stream.withWatermark("ts", watermark)
-        .groupBy("user_id")
-        .applyInPandasWithState(
-            _make_sessionize(gap_minutes * 60.0),
-            outputStructType=SESSION_SCHEMA,
-            stateStructType=_STATE_SCHEMA,
-            outputMode="append",
-            timeoutConf=GroupStateTimeout.EventTimeTimeout,
-        )
-    )
+from pyspark.sql import DataFrame, Window
+from pyspark.sql import functions as F
 
 
 def sessionize_batch(events: DataFrame, gap_minutes: int = 30) -> DataFrame:
-    """Batch cross-check of the same session semantics with window
-    functions: session id = running count of gap-exceeding boundaries
-    per user (expressible in plain SQL; used as the streaming test's
-    oracle and as the batch-mode operator)."""
-    from pyspark.sql import Window
-    from pyspark.sql import functions as F
-
+    """events(ts, user_id, value) -> (user_id, session_start,
+    session_end, n_events, sum_value) with window functions: session id
+    = running count of gap-exceeding boundaries per user (expressible
+    in plain SQL, so the DuckDB oracle mirrors it)."""
     w = Window.partitionBy("user_id").orderBy("ts")
     gapped = events.withColumn(
         "is_new",

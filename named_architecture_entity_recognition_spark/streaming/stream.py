@@ -1,89 +1,37 @@
-"""Structured Streaming wrapper: the same recognition stages running
-incrementally over an append-only documents table.
+"""Event-time windowed aggregation over an events table.
 
-The reference is batch-only (SURVEY §2.6); this module exists because
-every stage of our pipeline is doc_id-local (mapInPandas detection) or
-a per-doc aggregation, which makes it trivially streamable with
-``foreachBatch``: each micro-batch of new documents produces its
-mentions/entities/triples independently and appends to the sink —
-exactly-once via Spark's checkpointed offsets + idempotent overwrite of
-per-batch output paths.
+The reference is batch-only (SURVEY §2.6). ``windowed_event_counts`` is
+written in the Structured Streaming shape (a watermark plus an
+event-time ``window`` grouping), so the same function applies to a
+streaming DataFrame; here it runs on batch input, where Spark treats
+``window`` as an ordinary grouping expression and the watermark has no
+effect.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
-
-from named_architecture_entity_recognition_spark.schema import DOCUMENTS
-
-
-def read_documents_stream(
-    spark: SparkSession, path: str, max_files_per_trigger: int = 16
-) -> DataFrame:
-    return (
-        spark.readStream.schema(DOCUMENTS)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .parquet(path)
-    )
-
-
-def stream_triples(
-    docs_stream: DataFrame,
-    gazetteer_names,
-    out_path: str,
-    checkpoint_path: str,
-    cfg=None,
-    available_now: bool = True,
-):
-    """documents stream -> append-only triples sink via foreachBatch.
-
-    ``available_now=True`` drains everything currently in the source and
-    stops (test/batch-catchup mode); False runs continuously.
-    """
-    from named_architecture_entity_recognition_spark.plans.pipeline import (
-        RecognizerPipeline,
-    )
-
-    pipe = RecognizerPipeline(gazetteer_names, cfg=cfg or None, validate=True)
-
-    def process_batch(batch_df: DataFrame, batch_id: int):
-        if batch_df.isEmpty():
-            return
-        pipe.triples(batch_df).write.mode("append").parquet(out_path)
-
-    writer = docs_stream.writeStream.foreachBatch(process_batch).option(
-        "checkpointLocation", checkpoint_path
-    )
-    if available_now:
-        q = writer.trigger(availableNow=True).start()
-        q.awaitTermination()
-        return q
-    return writer.start()
+from pyspark.sql import DataFrame
+from pyspark.sql import functions as F
 
 
 def windowed_event_counts(
-    events_stream: DataFrame,
+    events: DataFrame,
     window: str = "10 minutes",
     slide: str | None = None,
     watermark: str = "30 minutes",
 ) -> DataFrame:
-    """Streaming windowed aggregation with late-data handling: tumbling
-    (or sliding) event-time windows over (event_type), watermarked so
-    state for windows older than ``watermark`` is evicted — the standard
-    Structured Streaming pattern the batch reference has no analog for
-    (SURVEY §2.6). Works identically on a batch DataFrame (Spark treats
-    ``window`` as a grouping expression), which is how the unit test
-    cross-checks the streaming result.
+    """Tumbling (or sliding) event-time windows over (event_type):
+    per window start/end and event type, the event count and the value
+    sum rounded to 4 places. ``watermark`` bounds the state a streaming
+    input would keep for late data; a batch input ignores it.
     """
-    from pyspark.sql import functions as F
-
     w = (
         F.window("ts", window, slide)
         if slide
         else F.window("ts", window)
     )
     return (
-        events_stream.withWatermark("ts", watermark)
+        events.withWatermark("ts", watermark)
         .groupBy(w.alias("win"), "event_type")
         .agg(
             F.count("*").cast("long").alias("n_events"),
@@ -96,55 +44,4 @@ def windowed_event_counts(
             "n_events",
             "sum_value",
         )
-    )
-
-
-def run_windowed_counts_stream(
-    spark: SparkSession,
-    events_path: str,
-    out_path: str,
-    checkpoint_path: str,
-    schema=None,
-    window: str = "10 minutes",
-    watermark: str = "30 minutes",
-) -> None:
-    """File-source streaming run of windowed_event_counts, draining all
-    available input (availableNow) in update-free append mode: the
-    watermark closes windows, closed windows append to parquet."""
-    if schema is None:
-        schema = spark.read.parquet(events_path).schema
-    src = spark.readStream.schema(schema).parquet(events_path)
-    agg = windowed_event_counts(src, window=window, watermark=watermark)
-    q = (
-        agg.writeStream.outputMode("append")
-        .option("checkpointLocation", checkpoint_path)
-        .trigger(availableNow=True)
-        .format("parquet")
-        .option("path", out_path)
-        .start()
-    )
-    q.awaitTermination()
-
-
-def dedup_events_stream(
-    events_stream: DataFrame,
-    keys=("user_id", "event_type"),
-    watermark: str = "1 hour",
-) -> DataFrame:
-    """Streaming exact dedup: first event per key wins, duplicate
-    arrivals within the watermark horizon are dropped, and the key's
-    dedup state is evicted once the watermark passes it —
-    ``dropDuplicatesWithinWatermark``, the streaming analog of
-    operators/dedup.py exact_dedup_groups. State size is bounded by
-    (distinct keys per watermark window), not by stream length — the
-    property that makes exact dedup feasible on an unbounded 10^12-event
-    stream.
-
-    Works on a batch DataFrame too (ordinary dropDuplicates semantics),
-    but batch dropDuplicates keeps an ARBITRARY row; the deterministic
-    batch equivalent for oracle checks is a row_number window ordered by
-    event time (see test_streaming_media stream/batch parity).
-    """
-    return events_stream.withWatermark("ts", watermark).dropDuplicatesWithinWatermark(
-        list(keys)
     )

@@ -7,7 +7,6 @@ import pytest
 from pyspark.sql import functions as F
 
 from named_architecture_entity_recognition_spark.operators.cc import (
-    canonicalize_aliases,
     connected_components,
 )
 
@@ -102,25 +101,6 @@ def test_null_alternative_names_not_dropped(spark):
     canon = canonicalize_corpus(ents).select("doc_id", "canonical_id")
     rows = {r.doc_id: r.canonical_id for r in canon.collect()}
     assert rows["d1"] == rows["d2"]
-
-
-def test_canonicalize_aliases_unifies_pools(spark):
-    entities = spark.createDataFrame(
-        [
-            ("d1", "WebUI", "COMPONENT", ["UI"], []),
-            ("d1", "Web User Interface", "COMPONENT", ["ui"], []),
-            ("d1", "Auth", "COMPONENT", [], []),
-            ("d2", "WebUI", "COMPONENT", ["UI"], []),  # other doc: own component
-        ],
-        "doc_id string, name string, entity_type string, "
-        "alternative_names array<string>, occurrences array<struct<sent_no:int,ref_type:string>>",
-    )
-    out = canonicalize_aliases(entities)
-    comp = {(r.doc_id, r.name): r.component for r in out.collect()}
-    # WebUI and 'Web User Interface' share pool name 'ui' within d1
-    assert comp[("d1", "WebUI")] == comp[("d1", "Web User Interface")]
-    assert comp[("d1", "Auth")] != comp[("d1", "WebUI")]
-    assert comp[("d2", "WebUI")] != comp[("d1", "WebUI")]  # doc-scoped
 
 
 def test_corpus_canonicalization_links_across_docs(spark):

@@ -4,7 +4,6 @@ import pytest
 
 from named_architecture_entity_recognition_spark.operators.graph import (
     pagerank,
-    triple_edges,
 )
 
 
@@ -66,15 +65,6 @@ def test_pagerank_partition_invariance_and_empty(spark):
     assert a == b
     empty = spark.createDataFrame([], "src string, dst string")
     assert pagerank(empty).count() == 0
-
-
-def test_triple_edges_shape(spark):
-    t = spark.createDataFrame(
-        [("e1", "occursIn", "s1"), ("e2", "sameAs", "e1")],
-        "subj string, pred string, obj string",
-    )
-    got = {(r.src, r.dst) for r in triple_edges(t).collect()}
-    assert got == {("e1", "s1"), ("e2", "e1")}
 
 
 def test_triangle_count_known_graph(spark):

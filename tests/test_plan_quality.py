@@ -164,10 +164,8 @@ def test_contamination_scan_prunes_columns(spark):
 
 
 def test_ivf_probe_join_is_broadcast_no_row_python(spark):
-    """IVF: the probed-list join must broadcast the tiny query side on
-    both assignment kernels; 'expr' has zero Python nodes, the default
-    numpy kernel exactly ONE Arrow-batched MapInPandas (the
-    assignment) — never row-at-a-time Python."""
+    """IVF: the probed-list join must broadcast the tiny query side,
+    and the assignment is a Catalyst fold — zero Python nodes."""
     from named_architecture_entity_recognition_spark.operators.similarity import (
         cosine_topk_ivf,
     )
@@ -176,20 +174,10 @@ def test_ivf_probe_join_is_broadcast_no_row_python(spark):
     qs = e.filter(F.col("vec_id") < 3).select(
         F.col("vec_id").alias("query_id"), "embedding"
     )
-    expr_plan = plan_of(
-        cosine_topk_ivf(e, qs, k=3, n_centroids=4, nprobe=2, assign="expr")
-    )
-    assert "BroadcastHashJoin" in expr_plan
+    plan = plan_of(cosine_topk_ivf(e, qs, k=3, n_centroids=4, nprobe=2))
+    assert "BroadcastHashJoin" in plan
     for marker in ("ArrowEvalPython", "BatchEvalPython", "MapInPandas"):
-        assert marker not in expr_plan
-    np_df = cosine_topk_ivf(e, qs, k=3, n_centroids=4, nprobe=2)
-    np_plan = plan_of(np_df)
-    assert "BroadcastHashJoin" in np_plan
-    assert "BatchEvalPython" not in np_plan and "ArrowEvalPython" not in np_plan
-    simple = np_df._sc._jvm.PythonSQLUtils.explainString(
-        np_df._jdf.queryExecution(), "simple"
-    )
-    assert simple.count("MapInPandas") == 1, simple
+        assert marker not in plan
 
 
 def test_repair_parse_python_confined_to_failed_residue(spark):

@@ -1,7 +1,7 @@
 """Hypertable rollup (operators/rollup.py) and distinct-count sketches
 (operators/sketch.py): re-aggregation invariance, grain validation, KMV
-exactness/error/merge, HLL error/merge, engine-portable hashing, and
-no-Python plan audits."""
+exactness/error/merge, engine-portable hashing, and no-Python plan
+audits."""
 
 from datetime import datetime, timedelta
 
@@ -13,8 +13,6 @@ from named_architecture_entity_recognition_spark.operators.rollup import (
     rollup_hypertable,
 )
 from named_architecture_entity_recognition_spark.operators.sketch import (
-    hll_sketch,
-    hll_union_estimate,
     kmv_distinct,
     kmv_estimate_expr,
     kmv_merge_expr,
@@ -197,25 +195,6 @@ def test_kmv_plan_has_no_python(spark, users):
         .toString()
     )
     assert "BatchEvalPython" not in plan and "ArrowEvalPython" not in plan
-
-
-def test_hll_error_bound_and_union(spark, users):
-    sk = hll_sketch(users, ("grp",), "uid", lg_k=12)
-    est = {r.grp: r.est_distinct for r in hll_union_estimate(sk, ("grp",)).collect()}
-    for grp, n in (("a", 40), ("b", 700), ("c", 5000)):
-        assert abs(est[grp] - n) / n < 0.05, (grp, est[grp])
-    # union of per-part sketches stays within the error bound too (the
-    # DataSketches union may promote the sketch representation, so the
-    # estimate can drift a few counts from the single-pass sketch —
-    # equality is NOT guaranteed, the bound is)
-    parts = users.withColumn("part", (F.crc32("uid") % 3).cast("int"))
-    part_sk = hll_sketch(parts, ("grp", "part"), "uid", lg_k=12)
-    merged = {
-        r.grp: r.est_distinct
-        for r in hll_union_estimate(part_sk, ("grp",)).collect()
-    }
-    for grp, n in (("a", 40), ("b", 700), ("c", 5000)):
-        assert abs(merged[grp] - n) / n < 0.05, (grp, merged[grp])
 
 
 def test_kmv_rejects_bad_k(spark, users):

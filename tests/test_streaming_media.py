@@ -1,20 +1,20 @@
-"""Structured Streaming incremental pipeline + multimodal span ops."""
+"""Event-time windows and sessions (streaming/) + multimodal span ops."""
+
+import datetime as dt
 
 import pytest
-from pyspark.sql import functions as F
 
 from named_architecture_entity_recognition_spark.operators.media import (
     extract_media_features,
     media_spans,
 )
+from named_architecture_entity_recognition_spark.streaming.sessions import (
+    sessionize_batch,
+)
 from named_architecture_entity_recognition_spark.streaming.stream import (
-    read_documents_stream,
-    stream_triples,
+    windowed_event_counts,
 )
-from named_architecture_entity_recognition_spark.synth import (
-    synth_documents,
-    synth_gazetteer,
-)
+from named_architecture_entity_recognition_spark.synth import synth_documents
 
 
 @pytest.fixture(scope="module")
@@ -47,94 +47,54 @@ def test_media_real_decode_is_stubbed(docs):
         extract_media_features(docs, decode="real").collect()
 
 
-def test_streaming_incremental_triples(spark, docs, tmp_path):
-    src = str(tmp_path / "src")
-    out = str(tmp_path / "out")
-    ckpt = str(tmp_path / "ckpt")
-    gaz = synth_gazetteer(20)
-
-    # batch 1: first 6 docs
-    docs.filter(F.col("doc_id") < "doc0000000006").write.mode("append").parquet(src)
-    stream = read_documents_stream(spark, src)
-    stream_triples(stream, gaz, out, ckpt, available_now=True)
-    n1 = spark.read.parquet(out).count()
-    assert n1 > 0
-
-    # batch 2: remaining docs arrive; only new ones are processed
-    docs.filter(F.col("doc_id") >= "doc0000000006").write.mode("append").parquet(src)
-    stream = read_documents_stream(spark, src)
-    stream_triples(stream, gaz, out, ckpt, available_now=True)
-    n2 = spark.read.parquet(out).count()
-    assert n2 > n1
-
-    # streamed total == batch total over the same docs
-    from named_architecture_entity_recognition_spark.plans.pipeline import (
-        RecognizerPipeline,
-    )
-
-    batch_n = RecognizerPipeline(gaz).triples(docs).count()
-    assert n2 == batch_n
-
-
-def test_windowed_event_counts_stream_matches_batch(spark, tmp_path):
-    """Streaming windowed agg with watermark (availableNow drain) equals
-    the same aggregation run in batch over closed windows."""
-    import datetime as dt
-
-    from pyspark.sql import functions as F
-
-    from named_architecture_entity_recognition_spark.streaming.stream import (
-        run_windowed_counts_stream,
-        windowed_event_counts,
-    )
-
+def test_windowed_event_counts_batch(spark):
+    """Tumbling and sliding event-time windows: per (window, type) the
+    count and the rounded value sum equal a plain-Python bucketing of
+    the same events."""
     base = dt.datetime(2026, 1, 1, 0, 0, 0)
     rows = [
-        (i, base + dt.timedelta(minutes=i * 3), i % 4, "click" if i % 2 else "view",
-         float(i))
+        (i, base + dt.timedelta(minutes=i * 3), i % 4,
+         "click" if i % 2 else "view", i * 1.25)
         for i in range(40)
     ]
     events = spark.createDataFrame(
-        rows, "event_id long, ts timestamp, user_id long, event_type string, value double"
-    )
-    src = str(tmp_path / "events")
-    events.repartition(3).write.parquet(src)
+        rows,
+        "event_id long, ts timestamp, user_id long, event_type string, "
+        "value double",
+    ).repartition(3)
 
-    out = str(tmp_path / "agg")
-    run_windowed_counts_stream(
-        spark, src, out, str(tmp_path / "ckpt"), window="10 minutes",
-        watermark="5 minutes",
-    )
-    got = spark.read.parquet(out)
-    batch = windowed_event_counts(
-        spark.read.parquet(src), window="10 minutes", watermark="5 minutes"
-    )
-    # the final (open) window is withheld by the watermark in streaming
-    # append mode; every window the stream emitted must match batch
-    j = got.join(
-        batch.withColumnRenamed("n_events", "n_b").withColumnRenamed(
-            "sum_value", "s_b"
-        ),
-        ["window_start", "window_end", "event_type"],
-    )
-    assert got.count() > 0
-    assert j.count() == got.count()
-    assert j.filter(
-        (F.col("n_events") != F.col("n_b")) | (F.col("sum_value") != F.col("s_b"))
-    ).count() == 0
+    def expected(width, step):
+        acc = {}
+        for _, ts, _, typ, v in rows:
+            minute = (ts - base) // dt.timedelta(minutes=1)
+            last = minute - minute % step  # latest window start <= ts
+            for start in range(last, minute - width, -step):
+                key = (base + dt.timedelta(minutes=start), typ)
+                n, s = acc.get(key, (0, 0.0))
+                acc[key] = (n + 1, s + v)
+        return {
+            (st, st + dt.timedelta(minutes=width), typ): (n, round(s, 4))
+            for (st, typ), (n, s) in acc.items()
+        }
+
+    for slide, step in ((None, 10), ("5 minutes", 5)):
+        got = {
+            (r.window_start, r.window_end, r.event_type): (
+                r.n_events, r.sum_value,
+            )
+            for r in windowed_event_counts(
+                events, window="10 minutes", slide=slide, watermark="5 minutes"
+            ).collect()
+        }
+        assert got == expected(10, step), slide
+    # 40 events over 120 minutes: 12 tumbling windows x 2 event types
+    assert len(expected(10, 10)) == 24
 
 
-def test_stateful_sessionization_stream_matches_batch(spark, tmp_path):
-    """applyInPandasWithState session windows: every session the stream
-    closes must match the batch window-function sessionization; the
-    final (open) session per user stays in state."""
-    import datetime as dt
-
-    from named_architecture_entity_recognition_spark.streaming.sessions import (
-        sessionize_batch,
-        sessionize_stream,
-    )
-
+def test_sessionize_batch_session_bounds(spark):
+    """Sessions split where a user's gap reaches 30 minutes (exactly
+    30 splits, 29 does not); bounds, counts and sums equal a
+    plain-Python walk over each user's sorted events."""
     base = dt.datetime(2026, 1, 1)
     rows = []
     for u in range(3):
@@ -144,92 +104,32 @@ def test_stateful_sessionization_stream_matches_batch(spark, tmp_path):
                 rows.append((u, t, float(u * 100 + s * 10 + i)))
                 t += dt.timedelta(minutes=5)
             t += dt.timedelta(minutes=45)
-    ev = spark.createDataFrame(rows, "user_id long, ts timestamp, value double")
-    src, out, ckpt = (str(tmp_path / p) for p in ("src", "out", "ckpt"))
-    ev.repartition(2).write.parquet(src)
+    for m, v in ((0, 0.5), (29, 1.25), (59, 2.0)):
+        rows.append((3, base + dt.timedelta(minutes=m), v))
+    ev = spark.createDataFrame(
+        rows, "user_id long, ts timestamp, value double"
+    ).repartition(2)
 
-    stream = spark.readStream.schema(ev.schema).parquet(src)
-    q = (
-        sessionize_stream(stream, watermark="10 minutes")
-        .writeStream.outputMode("append")
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .format("parquet")
-        .option("path", out)
-        .start()
-    )
-    q.awaitTermination()
-    got = spark.read.parquet(out)
-    batch = sessionize_batch(spark.read.parquet(src))
-    assert got.count() == 6  # 2 closed + 1 still-open session per user
-    assert batch.count() == 9
-    # sum_value in the join key: stream-emitted sums (rounded to 4) must
-    # equal the batch/oracle round(sum, 4) exactly, not just the window
-    # boundaries (ADVICE r1)
-    j = got.join(
-        batch,
-        ["user_id", "session_start", "session_end", "n_events", "sum_value"],
-        "inner",
-    )
-    assert j.count() == got.count()
+    want = set()
+    for u in sorted({r[0] for r in rows}):
+        evs = sorted((ts, v) for uid, ts, v in rows if uid == u)
+        cur = [evs[0]]
+        for ts, v in evs[1:]:
+            if ts - cur[-1][0] >= dt.timedelta(minutes=30):
+                want.add((u, cur[0][0], cur[-1][0], len(cur),
+                          round(sum(x for _, x in cur), 4)))
+                cur = []
+            cur.append((ts, v))
+        want.add((u, cur[0][0], cur[-1][0], len(cur),
+                  round(sum(x for _, x in cur), 4)))
 
-
-def test_dedup_stream_drops_duplicates_and_bounds_state(spark, tmp_path):
-    """dropDuplicatesWithinWatermark keeps the first arrival per key and
-    drops later duplicates; result matches the deterministic batch dedup
-    (earliest event per key) because the file source feeds rows in
-    event-time order."""
-    import datetime as dt
-
-    from pyspark.sql import Window
-    from pyspark.sql import functions as F
-
-    from named_architecture_entity_recognition_spark.streaming.stream import (
-        dedup_events_stream,
-    )
-
-    base = dt.datetime(2026, 1, 1, 0, 0, 0)
-    # 3 keys x repeated arrivals, single input file so arrival order is
-    # the row order we write (sorted by ts)
-    rows = [
-        (i, base + dt.timedelta(minutes=i), i % 3, "e", float(i))
-        for i in range(12)
-    ]
-    events = spark.createDataFrame(
-        rows,
-        "event_id long, ts timestamp, user_id long, event_type string, value double",
-    )
-    src = str(tmp_path / "src")
-    events.orderBy("ts").coalesce(1).write.parquet(src)
-
-    stream = spark.readStream.schema(
-        spark.read.parquet(src).schema
-    ).parquet(src)
-    deduped = dedup_events_stream(stream, keys=("user_id", "event_type"))
-    out = str(tmp_path / "out")
-    q = (
-        deduped.writeStream.outputMode("append")
-        .option("checkpointLocation", str(tmp_path / "ckpt"))
-        .trigger(availableNow=True)
-        .format("parquet")
-        .option("path", out)
-        .start()
-    )
-    q.awaitTermination()
     got = {
-        (r.user_id, r.event_type): r.event_id
-        for r in spark.read.parquet(out).collect()
+        (r.user_id, r.session_start, r.session_end, r.n_events, r.sum_value)
+        for r in sessionize_batch(ev, gap_minutes=30).collect()
     }
-
-    w = Window.partitionBy("user_id", "event_type").orderBy("ts", "event_id")
-    batch = {
-        (r.user_id, r.event_type): r.event_id
-        for r in events.withColumn("rn", F.row_number().over(w))
-        .filter("rn = 1")
-        .collect()
-    }
-    assert got == batch
-    assert len(got) == 3  # one survivor per key
+    assert got == want
+    assert len(got) == 11  # 3 per user for users 0-2, then [0, 29] + [59]
+    assert (3, base, base + dt.timedelta(minutes=29), 2, 1.75) in got
 
 
 def test_decode_ppm_gradient_comments_and_16bit():
@@ -285,34 +185,6 @@ def test_extract_ppm_features_decodes_and_quarantines(spark):
     assert rows["d1"].error is None
     assert rows["d2"].error is not None and rows["d2"].width is None
     assert rows["d3"].error is not None
-
-
-def test_resize_nn_and_thumbnails(spark):
-    import numpy as np
-
-    from named_architecture_entity_recognition_spark.operators.media import (
-        extract_ppm_thumbnails,
-        resize_nn,
-        synth_ppm,
-    )
-
-    # 4x4 checkerboard downsampled to 2x2 picks the floor-grid corners
-    px = np.zeros((4, 4, 3), dtype=np.uint8)
-    px[2:, 2:] = 255
-    small = resize_nn(px, 2, 2)
-    assert small.shape == (2, 2, 3)
-    assert small[0, 0, 0] == 0 and small[1, 1, 0] == 255
-    # upscale is deterministic too
-    assert resize_nn(small, 4, 4).shape == (4, 4, 3)
-
-    media = spark.createDataFrame(
-        [("d1", "m1", bytearray(synth_ppm(4, 4, (255, 0, 128))))],
-        "doc_id string, media_ref string, media_bytes binary",
-    )
-    row = extract_ppm_thumbnails(media, grid=2).collect()[0]
-    assert len(row.thumb) == 12
-    assert row.thumb[0] == 1.0 and row.thumb[1] == 0.0
-    assert row.thumb[2] == 128 / 255
 
 
 def test_fake_decode_is_md5_portable(spark):
