@@ -681,10 +681,10 @@ def _q_lsh_pairs(spark, sf):
 )
 def _q_dup_clusters(spark, sf):
     """Near-dup CLUSTERS (the actionable form of dedup at scale):
-    LSH candidate pairs -> connected components -> per-document
+    LSH doc <-> bucket edges -> connected components -> per-document
     (cluster_id, keep) verdict; singletons keep themselves. Same LSH
-    params as q_lsh_pairs, so the oracle extends that CTE with the
-    recursive-CTE component closure."""
+    params as q_lsh_pairs; the oracle closes that CTE's pair graph,
+    which has the same components, with a recursive CTE."""
     return dup_clusters(
         _read(spark, sf, "documents"), n_hashes=4, bands=2, shingle_n=3
     )
@@ -2197,7 +2197,9 @@ def _q_simhash(spark, sf):
 
 
 @_oracle(
-    f"WITH sig AS (SELECT doc_id, {_SIMHASH} AS sig FROM documents), "
+    # docs with fewer than shingle_n=2 tokens are never banded
+    f"WITH sig AS (SELECT doc_id, {_SIMHASH} AS sig FROM documents "
+    f"WHERE len({_TOKENS}) >= 2), "
     "banded AS (SELECT doc_id, sig, b AS block_idx, "
     "substr(sig, b * 4 + 1, 4) AS block "
     "FROM sig, unnest(generate_series(0, 15)) AS t(b)), "

@@ -279,7 +279,7 @@ def run_bench(sf_dir: str, cpus: str, n_synth_docs: int | None = None):
     # --- corpus-prep stress (extras only, NOT in the headline total):
     # the full prepare_corpus funnel over the flattened synthetic corpus
     # — template-generated, so near-dup density is adversarial (worst
-    # case for LSH+CC); hot-bucket cap engaged as a production run would
+    # case for LSH+CC); clustering is exact at any bucket size, no cap
     from pyspark.sql import functions as F
 
     from named_architecture_entity_recognition_spark.operators.corpus import (
@@ -298,7 +298,7 @@ def run_bench(sf_dir: str, cpus: str, n_synth_docs: int | None = None):
     )
     t0 = time.time()
     n_kept = (
-        prepare_corpus(flat, max_bucket_size=64)
+        prepare_corpus(flat)
         .filter("status = 'kept'")
         .count()
     )

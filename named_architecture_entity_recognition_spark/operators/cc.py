@@ -100,7 +100,7 @@ def connected_components(
     maps, parts = [], None
     while True:
         # each node's local roots, smallest first; the checkpoint keeps an
-        # upstream LSH join from re-running when the final map is read
+        # upstream LSH kernel from re-running when the final map is read
         roots = _ckpt(
             edges.mapInArrow(_local_roots, "node string, root string")
             .withColumn("part", F.spark_partition_id())

@@ -22,7 +22,7 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from named_architecture_entity_recognition_spark.operators.dedup import (
-    minhash_lsh_pairs,
+    minhash_bands,
     shingles,
 )
 from named_architecture_entity_recognition_spark.operators.sketch import (
@@ -51,10 +51,9 @@ def dup_clusters(
     bands: int = 4,
     shingle_n: int = 3,
     checkpoint_dir: str | None = None,
-    max_bucket_size: int | None = None,
 ) -> DataFrame:
-    """Near-duplicate CLUSTERS: LSH candidate pairs -> connected
-    components -> (doc_id, cluster_id, keep).
+    """Near-duplicate CLUSTERS: LSH band buckets -> connected components
+    -> (doc_id, cluster_id, keep).
 
     cluster_id = min doc_id in the component; keep = (doc_id ==
     cluster_id), i.e. one canonical representative per duplicate
@@ -63,44 +62,50 @@ def dup_clusters(
     per-document verdict, directly joinable as the dedup filter of a
     training pipeline.
 
-    Scale: pairs come from the banded LSH equi-join (never all-pairs);
-    CC is per-partition union-find plus a boundary merge over the pairs'
-    own partitions (operators/cc.py): one round and one action when
-    every cluster sits inside one partition, at most log2(P)+1 rounds
-    otherwise. The final join back to docs is a shuffle on doc_id.
+    Edges link each doc to its buckets (minhash_bands), never to other
+    docs: a bucket's star has the components of its pair clique, from
+    docs x bands edges instead of B(B-1)/2 pairs, so any bucket size
+    clusters exactly. Doc labels "d<key>" sort before bucket labels
+    "e|...", so every component's minimum is a doc. The repartition on
+    the bucket puts the MinHash kernel and CC's union-find
+    (operators/cc.py, at most log2(P)+1 rounds) in separate stages.
     """
     from named_architecture_entity_recognition_spark.operators.cc import (
         connected_components,
     )
 
-    pairs = minhash_lsh_pairs(
-        docs, text_col=text_col, n_hashes=n_hashes, bands=bands,
-        shingle_n=shingle_n, max_bucket_size=max_bucket_size,
-    )
-    # CC labels compare as strings; zero-pad numeric ids so the
-    # lexicographic min IS the numeric min ("02" < "10", unlike "2")
     ids = docs.select("doc_id")
     doc_type = dict(ids.dtypes)["doc_id"]
     numeric = doc_type in ("tinyint", "smallint", "int", "bigint")
+    # CC labels compare as strings: numeric ids shift by 2^63 onto
+    # [0, 2^64) and zero-pad to 20 digits, so label order is numeric
+    # order ("02" < "10", unlike "2"), negative ids included
+    shift = F.lit(str(2**63)).cast("decimal(20,0)")
+    dec = lambda c: c.cast("decimal(20,0)")  # noqa: E731
+    key = F.col("doc_id").cast("string")
+    if numeric:
+        key = F.lpad((dec(F.col("doc_id")) + shift).cast("string"), 20, "0")
 
-    def key(c):
-        c = c.cast("string")
-        return F.lpad(c, 20, "0") if numeric else c
+    def doc_of(label):
+        c = F.col(label).substr(F.lit(2), F.length(label))
+        return (dec(c) - shift).cast(doc_type) if numeric else c
 
-    edges = pairs.select(
-        key(F.col("doc_a")).alias("src"), key(F.col("doc_b")).alias("dst")
+    edges = minhash_bands(
+        docs, text_col, n_hashes, bands, shingle_n
+    ).repartition("band_idx", "band_key").select(
+        F.concat(F.lit("d"), key).alias("src"),
+        F.concat_ws("|", F.lit("e"), "band_idx", "band_key").alias("dst"),
     )
     comp = connected_components(edges, checkpoint_dir=checkpoint_dir)
     joined = ids.join(
-        comp.select(
-            F.col("node").cast(doc_type).alias("doc_id"),
-            F.col("component").cast(doc_type).alias("comp"),
+        comp.filter(F.col("node").startswith("d")).select(
+            doc_of("node").alias("doc_id"), doc_of("component").alias("comp")
         ),
         "doc_id",
         "left",
     )
     # comp includes the node itself in its reachable set, so comp <=
-    # doc_id whenever present; absent (no near-dup) -> singleton cluster
+    # doc_id whenever present; absent (too short to band) -> singleton
     return joined.select(
         "doc_id",
         F.coalesce("comp", "doc_id").alias("cluster_id"),
@@ -400,13 +405,16 @@ def prepare_corpus(
     survivors; drop reason ('lang' | 'quality' | 'exact_dup' |
     'near_dup') with NULL split otherwise. Every input doc appears
     exactly once; precedence = cheapest-filter-first, so expensive
-    stages (LSH join, CC) only see rows the per-row filters passed —
+    stages (MinHash, CC) only see rows the per-row filters passed —
     the standard funnel shape at 100 TB.
 
     Stage shapes: lang/quality are codegen'd per-row expressions; exact
     dedup is one window over the content fingerprint (shuffle on
-    fingerprint hash); near-dup is dup_clusters (banded LSH equi-join +
-    CC) confined to exact-dedup survivors; the split is a per-row hash.
+    fingerprint hash); near-dup is dup_clusters (LSH buckets + CC)
+    confined to exact-dedup survivors; the split is a per-row hash.
+
+    ``max_bucket_size`` is ignored (dup_clusters has no cap); the next
+    benchmark change stops passing it and removes it.
 
     The lazy plan scans the corpus once per union branch (4 scans —
     visible in explain; Spark does NOT dedup them). Fine at test scale;
@@ -456,10 +464,7 @@ def prepare_corpus(
     surv2 = ranked.filter(F.col("rn") == 1).select("doc_id", text_col)
 
     clusters = mat(
-        dup_clusters(
-            surv2, text_col=text_col, n_hashes=n_hashes, bands=bands,
-            shingle_n=shingle_n, max_bucket_size=max_bucket_size,
-        ),
+        dup_clusters(surv2, text_col, n_hashes, bands, shingle_n),
         "clusters",
     )
     near_drops = clusters.filter(~F.col("keep")).select(

@@ -61,7 +61,11 @@ def shingles(col, n: int = 3) -> Column:
     )
 
 
-def _drop_hot_buckets(banded: DataFrame, keys: tuple, cap: int) -> DataFrame:
+#: the two columns that name an LSH bucket in the band rows of _bands
+_BUCKET = ("band_idx", "band_key")
+
+
+def _drop_hot_buckets(banded: DataFrame, cap: int) -> DataFrame:
     """Drop rows whose (band) bucket holds more than ``cap`` docs.
 
     Shape matters at 100 TB: a ``count(*) OVER (PARTITION BY band)``
@@ -74,12 +78,12 @@ def _drop_hot_buckets(banded: DataFrame, keys: tuple, cap: int) -> DataFrame:
     template clusters — anti-joins back (AQE broadcasts the aggregated
     side when small). No task ever materializes a bucket."""
     over = (
-        banded.groupBy(*keys)
+        banded.groupBy(*_BUCKET)
         .agg(F.count(F.lit(1)).alias("_bucket_n"))
         .filter(F.col("_bucket_n") > cap)
-        .select(*keys)
+        .select(*_BUCKET)
     )
-    return banded.join(over, list(keys), "left_anti")
+    return banded.join(over, list(_BUCKET), "left_anti")
 
 
 def exact_dedup_groups(docs: DataFrame, text_col: str = "text") -> DataFrame:
@@ -131,54 +135,55 @@ def minhash_signature(col, n_hashes: int = 8, shingle_n: int = 3) -> Column:
     )
 
 
-def _banded_pairs(
+def _bands(
     docs: DataFrame,
     text_col: str,
     shingle_n: int,
     signatures,
     bands: Column,
-    keys: tuple,
-    max_bucket_size: int | None,
     carry: tuple = (),
 ) -> DataFrame:
-    """The banded candidate self-join of minhash_lsh_pairs and
-    simhash_pairs: docs sharing any band collide.
-
-    ``signatures`` maps the eligible docs to (doc_id, sig); ``bands`` is
-    the array of band values computed from ``sig``, posexploded into the
-    two ``keys`` columns. Output (doc_a, doc_b, plus ``<c>_a``/``<c>_b``
-    for each ``carry`` column) with doc_a < doc_b, distinct on the pair.
+    """The band rows of every LSH path: (doc_id, ``carry`` columns,
+    band_idx, band_key). ``signatures`` maps the eligible docs to
+    (doc_id, sig); ``bands`` is the array of band values computed from
+    ``sig``, posexploded into (band_idx, band_key).
 
     Docs with fewer than shingle_n words have EMPTY shingle sets and
-    identical signatures — at 10^12 rows they would pair QUADRATICALLY
-    in one degenerate bucket. No shingles = no content to near-match
-    (exact dedup owns identical empties), so they are excluded up front
-    by a codegen'd pre-filter. It counts non-empty tokens: Spark's trim
+    identical signatures — at 10^12 rows they would collide in one
+    degenerate bucket. No shingles = no content to near-match (exact
+    dedup owns identical empties), so they are excluded up front by a
+    codegen'd pre-filter. It counts non-empty tokens: Spark's trim
     strips only spaces, so a whitespace-only text like "\\t" splits into
     two empty words and would otherwise share the one shingle " ".
-
-    ``max_bucket_size``: hot-bucket guard. A band bucket holding B docs
-    emits B*(B-1)/2 pairs — template/boilerplate corpora put thousands
-    of docs in ONE bucket and the join goes quadratic (measured: a
-    4000-doc template corpus emits millions of pairs and dominates the
-    whole prep funnel). With the cap set, buckets larger than it are
-    dropped: such a bucket is a template CLUSTER, better handled by
-    exact-dedup of the template or a dedicated clustering pass, not by
-    enumerating every pair. None = exact candidate set.
     """
     from named_architecture_entity_recognition_spark.session import (
         ensure_parallelism,
     )
 
     eligible = docs.filter(F.size(tokens(text_col)) >= F.lit(shingle_n))
-    banded = signatures(ensure_parallelism(eligible)).select(
-        "doc_id", *carry, F.posexplode(bands).alias(*keys)
+    return signatures(ensure_parallelism(eligible)).select(
+        "doc_id", *carry, F.posexplode(bands).alias(*_BUCKET)
     )
+
+
+def _banded_pairs(banded: DataFrame, max_bucket_size: int | None) -> DataFrame:
+    """The banded candidate self-join of minhash_lsh_pairs and
+    simhash_pairs over ``_bands`` rows: docs sharing any band collide.
+    Output (doc_a, doc_b, plus ``<c>_a``/``<c>_b`` for each carried
+    column) with doc_a < doc_b, distinct on the pair.
+
+    ``max_bucket_size``: hot-bucket guard. A band bucket holding B docs
+    emits B*(B-1)/2 pairs — template/boilerplate corpora put thousands
+    of docs in ONE bucket and the join goes quadratic. With the cap
+    set, buckets larger than it are dropped. None = exact candidate
+    set. Clustering needs neither pairs nor the cap (dup_clusters).
+    """
+    carry = [c for c in banded.columns if c not in ("doc_id", *_BUCKET)]
     if max_bucket_size is not None:
-        banded = _drop_hot_buckets(banded, keys, max_bucket_size)
+        banded = _drop_hot_buckets(banded, max_bucket_size)
     a = banded.alias("a")
     b = banded.alias("b")
-    on = [F.col(f"a.{k}") == F.col(f"b.{k}") for k in keys]
+    on = [F.col(f"a.{k}") == F.col(f"b.{k}") for k in _BUCKET]
     return (
         a.join(b, on + [F.col("a.doc_id") < F.col("b.doc_id")])
         .select(
@@ -190,24 +195,17 @@ def _banded_pairs(
     )
 
 
-def minhash_lsh_pairs(
+def minhash_bands(
     docs: DataFrame,
     text_col: str = "text",
     n_hashes: int = 8,
     bands: int = 4,
     shingle_n: int = 3,
-    max_bucket_size: int | None = None,
 ) -> DataFrame:
-    """Candidate near-dup pairs via banded MinHash-LSH.
-
-    signature split into ``bands`` bands of n_hashes/bands rows; docs
-    sharing any full band collide. Output (doc_a, doc_b) with doc_a <
-    doc_b, distinct. Shuffle = one groupBy-free self-equi-join on
-    (band_idx, band_key). ``max_bucket_size``: the hot-bucket cap of
-    _banded_pairs (None = exact candidate set).
-    """
+    """(doc_id, band_idx, band_key) MinHash-LSH buckets: the signature
+    split into ``bands`` bands of n_hashes/bands rows, '|'-joined."""
     rows_per_band = n_hashes // bands
-    return _banded_pairs(
+    return _bands(
         docs,
         text_col,
         shingle_n,
@@ -220,7 +218,25 @@ def minhash_lsh_pairs(
                 "|", F.slice("sig", b * rows_per_band + 1, rows_per_band)
             ),
         ),
-        ("band_idx", "band_key"),
+    )
+
+
+def minhash_lsh_pairs(
+    docs: DataFrame,
+    text_col: str = "text",
+    n_hashes: int = 8,
+    bands: int = 4,
+    shingle_n: int = 3,
+    max_bucket_size: int | None = None,
+) -> DataFrame:
+    """Candidate near-dup pairs via banded MinHash-LSH: docs sharing
+    any bucket of minhash_bands. Output (doc_a, doc_b) with doc_a <
+    doc_b, distinct. Shuffle = one groupBy-free self-equi-join on
+    (band_idx, band_key). ``max_bucket_size``: the hot-bucket cap of
+    _banded_pairs (None = exact candidate set).
+    """
+    return _banded_pairs(
+        minhash_bands(docs, text_col, n_hashes, bands, shingle_n),
         max_bucket_size,
     )
 
@@ -287,8 +303,8 @@ def simhash_pairs(
     distance <= max_hamming must agree EXACTLY on at least one block,
     so an equi-join on (block_idx, block_bits) finds all such pairs
     with zero false negatives and no all-pairs scan — the same banded
-    self-join as minhash_lsh_pairs (_banded_pairs, including its
-    short-doc filter and ``max_bucket_size`` hot-block cap).
+    self-join as minhash_lsh_pairs (_bands' short-doc filter and
+    _banded_pairs' ``max_bucket_size`` hot-block cap).
     Verification = exact Hamming distance on the joined signatures,
     confined to candidates.
 
@@ -301,7 +317,7 @@ def simhash_pairs(
             "use 0, 1, 3, 7, 15, 31 or 63"
         )
     blk = 64 // nb
-    cand = _banded_pairs(
+    blocks = _bands(
         docs,
         text_col,
         shingle_n,
@@ -312,10 +328,9 @@ def simhash_pairs(
             F.sequence(F.lit(0), F.lit(nb - 1)),
             lambda b: F.col("sig").substr(b * blk + F.lit(1), F.lit(blk)),
         ),
-        ("block_idx", "block"),
-        max_bucket_size,
         carry=("sig",),
     )
+    cand = _banded_pairs(blocks, max_bucket_size)
     hamming = F.size(
         F.filter(
             F.zip_with(

@@ -70,22 +70,19 @@ def quality_score(col) -> Column:
 
 
 def lang_id(col) -> Column:
-    """Marker-word vote language ID; 'und' when no marker hits."""
+    """Marker-word vote language ID; 'und' when no marker hits. Each
+    count is evaluated once; the first maximum wins, so ties go to the
+    language listed first and the leading 0 makes all-zero 'und'."""
     t = tokens(col)
-    scores = [
-        (lang, F.size(F.filter(t, lambda w: w.isin(*markers))))
-        for lang, markers in _LANG_MARKERS.items()
-    ]
-    best = None
-    best_score = None
-    for lang, score in scores:
-        if best is None:
-            best, best_score = F.lit(lang), score
-        else:
-            cond = score > best_score
-            best = F.when(cond, F.lit(lang)).otherwise(best)
-            best_score = F.when(cond, score).otherwise(best_score)
-    return F.when(best_score > 0, best).otherwise(F.lit("und"))
+    langs = F.array(*map(F.lit, ("und", *_LANG_MARKERS)))
+    scores = F.array(
+        F.lit(0),
+        *[F.size(F.filter(t, lambda w: w.isin(*markers)))
+          for markers in _LANG_MARKERS.values()],
+    )
+    return F.element_at(
+        langs, F.array_position(scores, F.array_max(scores)).cast("int")
+    )
 
 
 def fingerprint(col) -> Column:

@@ -40,6 +40,109 @@ def test_dup_clusters_transitive(spark):
     assert sorted(r.doc_id for r in out if r.keep) == [1]
 
 
+def test_dup_clusters_mixed_sign_ids(spark):
+    """Negative numeric ids round-trip through the string CC labels and
+    keep their numeric order: the representative of {-5, -3, 4} is -5,
+    and an unrelated doc stays a singleton."""
+    base = "alpha beta gamma delta epsilon zeta eta theta iota kappa"
+    docs = spark.createDataFrame(
+        [(-3, base), (4, base), (-5, base),
+         (7, "totally different words here that share nothing at all"),
+         (-1, "short")],
+        "doc_id bigint, text string",
+    )
+    rows = {r.doc_id: (r.cluster_id, r.keep)
+            for r in dup_clusters(docs, n_hashes=4, bands=2).collect()}
+    assert rows == {
+        -5: (-5, True), -3: (-5, False), 4: (-5, False),
+        7: (7, True), -1: (-1, True),
+    }
+
+
+def _minhash_buckets(docs, n_hashes, bands, shingle_n=3):
+    """{(band, key): [doc_id]} by hashlib MinHash: per seed k, the min
+    md5 hex of str(k) + shingle over a doc's distinct word shingles;
+    docs with fewer than shingle_n words are not banded."""
+    import hashlib
+
+    rows = n_hashes // bands
+    buckets: dict = {}
+    for doc_id, text in docs:
+        words = text.split()
+        if len(words) < shingle_n:
+            continue
+        sh = {" ".join(words[i:i + shingle_n])
+              for i in range(len(words) - shingle_n + 1)}
+        sig = [min(hashlib.md5((str(k) + s).encode()).hexdigest()
+                   for s in sh) for k in range(n_hashes)]
+        for b in range(bands):
+            key = "|".join(sig[b * rows:(b + 1) * rows])
+            buckets.setdefault((b, key), []).append(doc_id)
+    return buckets
+
+
+def _bfs_clusters(ids, edges):
+    """{doc_id: min doc_id of its component} by BFS over ``edges``."""
+    adj = {i: [] for i in ids}
+    for a, b in edges:
+        adj[a].append(b)
+        adj[b].append(a)
+    out: dict = {}
+    for start in sorted(ids):
+        if start in out:
+            continue
+        out[start] = start
+        todo = [start]
+        while todo:
+            for nxt in adj[todo.pop()]:
+                if nxt not in out:
+                    out[nxt] = start
+                    todo.append(nxt)
+    return out
+
+
+def test_dup_clusters_whale_bucket_exact(spark):
+    """A band bucket far above the old cap of 64: dup_clusters equals a
+    BFS over every bucket's full clique, and clustering the capped
+    candidate pairs (max_bucket_size=64) does not — the input does
+    reach the case the cap used to lose."""
+    import itertools
+    import random
+
+    from named_architecture_entity_recognition_spark.operators.dedup import (
+        minhash_lsh_pairs,
+    )
+
+    rng = random.Random(7)
+    vocab = [f"w{i}" for i in range(400)]
+    template = [rng.choice(vocab) for _ in range(40)]
+    docs = []
+    for i in range(150):
+        words = list(template)
+        words[rng.randrange(len(words))] = rng.choice(vocab)
+        docs.append((i, " ".join(words)))
+    for i in range(150, 300):
+        docs.append((i, " ".join(rng.choice(vocab) for _ in range(12))))
+    df = spark.createDataFrame(docs, "doc_id bigint, text string")
+
+    buckets = _minhash_buckets(docs, n_hashes=4, bands=2)
+    assert max(len(m) for m in buckets.values()) > 64
+    clique = [e for m in buckets.values()
+              for e in itertools.combinations(m, 2)]
+    ids = [i for i, _ in docs]
+    want = _bfs_clusters(ids, clique)
+
+    got = {r.doc_id: r.cluster_id
+           for r in dup_clusters(df, n_hashes=4, bands=2).collect()}
+    assert got == want
+
+    capped = minhash_lsh_pairs(df, n_hashes=4, bands=2, max_bucket_size=64)
+    capped_clusters = _bfs_clusters(
+        ids, [(r.doc_a, r.doc_b) for r in capped.collect()]
+    )
+    assert capped_clusters != want
+
+
 def test_hash_split_deterministic_and_stable_under_backfill(spark):
     docs = spark.range(1000).withColumnRenamed("id", "doc_id")
     s1 = {r.doc_id: r.split for r in hash_split(docs).collect()}
@@ -560,10 +663,10 @@ def test_prepare_corpus_materialized_identical_and_single_raw_scan(
 
     lazy = {
         (r.doc_id, r.status, r.split)
-        for r in prepare_corpus(docs, max_bucket_size=64).collect()
+        for r in prepare_corpus(docs).collect()
     }
     out = prepare_corpus(
-        docs, max_bucket_size=64, materialize_dir=str(tmp_path / "stages")
+        docs, materialize_dir=str(tmp_path / "stages")
     )
     materialized = {(r.doc_id, r.status, r.split) for r in out.collect()}
     assert materialized == lazy

@@ -410,6 +410,32 @@ def test_lsh_hot_bucket_cap(spark):
     assert capped == {(100, 101)}   # cap keeps only the genuine pair
 
 
+def test_simhash_pairs_oracle_drops_short_docs(spark):
+    """The q_simhash_pairs DuckDB oracle bands only the docs
+    simhash_pairs bands: texts with fewer than shingle_n=2 tokens all
+    share the all-ones signature, and must not pair on it."""
+    import duckdb
+
+    import __spark_entry__ as entrymod
+    from named_architecture_entity_recognition_spark.operators.dedup import (
+        simhash_pairs,
+    )
+
+    rows = [(1, ""), (2, ""), (3, "one"), (4, "a b c d e"), (5, "a b c d e")]
+    df = spark.createDataFrame(rows, "doc_id bigint, text string")
+    got = {
+        tuple(r)
+        for r in simhash_pairs(df, max_hamming=15, shingle_n=2).collect()
+    }
+    assert got == {(4, 5, 0)}
+
+    con = duckdb.connect()
+    con.execute("CREATE TABLE documents (doc_id BIGINT, text VARCHAR)")
+    con.executemany("INSERT INTO documents VALUES (?, ?)", rows)
+    oracle = entrymod.oracle_sql()["q_simhash_pairs"]
+    assert set(con.execute(oracle).fetchall()) == got
+
+
 def test_simhash_hot_block_cap(spark):
     from named_architecture_entity_recognition_spark.operators.dedup import (
         simhash_pairs,

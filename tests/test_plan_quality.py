@@ -229,6 +229,47 @@ def test_hot_bucket_cap_is_partial_agg_not_window(spark):
         assert "partial_count" in simple or "HashAggregate" in simple, simple
 
 
+def test_dup_clusters_one_minhash_pass_no_join_before_cc(spark):
+    """dup_clusters feeds CC doc <-> bucket edges: over every SQL
+    execution it runs, the MinHash kernel (MapInPandas) appears once,
+    no join or hot-bucket anti-join sits upstream of CC's union-find
+    (MapInArrow), and an Exchange separates the two Python nodes, so
+    no task holds a Python worker for each."""
+    from named_architecture_entity_recognition_spark.operators.corpus import (
+        dup_clusters,
+    )
+
+    docs = spark.createDataFrame(
+        [(i, "common template words here repeated over and over")
+         for i in range(6)]
+        + [(9, "one other document about something else entirely")],
+        "doc_id int, text string",
+    )
+    store = spark._jsparkSession.sharedState().statusStore()
+    execs = store.executionsList()
+    # the store keeps only the latest executions: mark by id, not index
+    mark = execs.apply(execs.size() - 1).executionId() if execs.size() else -1
+    dup_clusters(docs, n_hashes=4, bands=2).collect()
+    spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty(30_000)
+    execs = store.executionsList()
+    plans = []
+    for i in range(execs.size() - 1, -1, -1):
+        if execs.apply(i).executionId() <= mark:
+            break
+        desc = execs.apply(i).physicalPlanDescription()
+        # the tree of the plan that ran (AQE prints the initial one too)
+        tree = desc.split("== Initial Plan ==")[0].split("\n\n")[0]
+        plans.append(tree.splitlines())
+    nodes = [ln for tree in plans for ln in tree]
+    assert sum("MapInPandas" in ln for ln in nodes) == 1, plans
+    cc = next(t for t in plans if any("MapInArrow" in ln for ln in t))
+    at = [i for i, ln in enumerate(cc) if "MapInArrow" in ln][0]
+    upstream = cc[at + 1:]
+    assert not any("Join" in ln or "LeftAnti" in ln for ln in upstream), cc
+    py = [i for i, ln in enumerate(upstream) if "MapInPandas" in ln]
+    assert py and any("Exchange" in ln for ln in upstream[: py[0]]), cc
+
+
 def test_rollup_grouping_sets_single_pass(spark):
     """ROLLUP must compile to ONE Expand + hash aggregate over one
     scan — not a self-union of per-level aggregations."""
