@@ -138,9 +138,7 @@ def _flat_to_spans_docs(docs: DataFrame, words_per_sentence: int = 8) -> DataFra
     matcher work is ~0.1 s across 32 cores). When the scan's
     parallelism is below the session's core count, repartition the tiny
     text input first — one cheap exchange that unlocks every core. On a
-    real 100 TB table splits >> cores and this branch never fires (the
-    same failure mode at the source level is handled by
-    sources/lakehouse.compact_table)."""
+    real 100 TB table splits >> cores and this branch never fires."""
     docs = ensure_parallelism(docs)
     w = F.split(F.trim("text"), r"\s+")
     n_chunks = F.greatest(F.ceil(F.size(w) / words_per_sentence), F.lit(1)).cast("int")
@@ -955,8 +953,8 @@ def _q_bm25_topk(spark, sf):
 def _q_zorder_key(spark, sf):
     """Morton (Z-order) clustering key over (l_partkey, l_suppkey):
     exact fixed-width buckets of one broadcast min/max row, then a pure
-    codegen'd bit-interleave — the key cluster_by_zorder range-sorts by
-    so parquet footer stats prune on BOTH dimensions. Oracle rebuilds
+    codegen'd bit-interleave — range-sorting by it lets parquet footer
+    stats prune on BOTH dimensions. Oracle rebuilds
     the identical bucket + bit math in DuckDB."""
     li = _read(spark, sf, "lineitem").select(
         "l_orderkey", "l_linenumber", "l_partkey", "l_suppkey"

@@ -39,15 +39,13 @@ def asof_join(
     on: str = "user_id",
     ts: str = "ts",
     suffix: str = "_right",
-    tolerance_s: float | None = None,
 ) -> DataFrame:
     """Left as-of join: every left row, plus the latest right row with
     the same ``on`` key and ``right.ts <= left.ts`` (left-join
     semantics — unmatched left rows keep nulls).
 
     Right payload columns (everything except ``on``) are appended with
-    ``suffix``. ``tolerance_s`` drops matches older than the given
-    number of seconds (the match becomes null, the left row stays).
+    ``suffix``.
 
     Ties: a right row AT the left row's timestamp matches. If the right
     side has duplicate (key, ts) rows the one with the GREATEST payload
@@ -92,16 +90,6 @@ def asof_join(
         .withColumn("_m", matched)
         .filter(F.col("_side") == 1)
     )
-    if tolerance_s is not None:
-        ok = (
-            F.col("_m").isNotNull()
-            & (
-                F.col("_ats").cast("double")
-                - F.col("_m")[ts].cast("double")
-                <= float(tolerance_s)
-            )
-        )
-        rows = rows.withColumn("_m", F.when(ok, F.col("_m")))
     out_cols = [F.col("_lpay")[c].alias(c) for c in lpay_cols] + [
         F.col("_m")[c].alias(c + suffix) for c in rpay_cols
     ]

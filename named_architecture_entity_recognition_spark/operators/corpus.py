@@ -327,7 +327,6 @@ def contamination(
     text_col: str = "text",
     shingle_n: int = 3,
     threshold: float = 0.5,
-    max_shingle_df: int | None = None,
 ) -> DataFrame:
     """Benchmark-contamination check: which eval documents leak into the
     training corpus?
@@ -342,15 +341,6 @@ def contamination(
     count shared shingles per pair (map-side partial agg), divide by the
     eval doc's shingle count.
 
-    ``max_shingle_df``: production fan-out cap. A boilerplate shingle
-    appearing in millions of train docs explodes the join while
-    carrying no leakage signal; with the cap set, shingles whose TRAIN
-    document frequency exceeds it are dropped from the train side of
-    the join (eval shingle counts — the denominator — are unchanged, so
-    containment scores can only shrink: the cap trades recall on
-    boilerplate-only overlap for a bounded join, never inflates a
-    score). None (default) applies no cap — exact containment.
-
     Output: (eval_id, train_id, containment) with containment >=
     threshold.
     """
@@ -363,14 +353,6 @@ def contamination(
         F.col("doc_id").alias("train_id"),
         F.explode(shingles(F.col(text_col), shingle_n)).alias("sh"),
     )
-    if max_shingle_df is not None:
-        rare = (
-            tr.groupBy("sh")
-            .agg(F.count("*").alias("df"))
-            .filter(F.col("df") <= max_shingle_df)
-            .select("sh")
-        )
-        tr = tr.join(rare, "sh")
     shared = (
         ev.join(tr, "sh")
         .groupBy("eval_id", "train_id")

@@ -12,8 +12,9 @@ Catalyst.
 Scale notes (100 TB): shingling/minhash are narrow per-row maps; the
 only shuffles are the final groupBy/join on band/bucket keys, which is
 exactly the LSH design goal (candidate pairs only, never all-pairs).
-Hot buckets (boilerplate text) are bounded by banding width; AQE skew
-join handles residual imbalance.
+A hot bucket (boilerplate text) of B docs still emits B*(B-1)/2 pairs;
+clustering that must stay linear reads the band rows instead
+(corpus.dup_clusters). AQE skew join handles residual imbalance.
 """
 
 from __future__ import annotations
@@ -63,27 +64,6 @@ def shingles(col, n: int = 3) -> Column:
 
 #: the two columns that name an LSH bucket in the band rows of _bands
 _BUCKET = ("band_idx", "band_key")
-
-
-def _drop_hot_buckets(banded: DataFrame, cap: int) -> DataFrame:
-    """Drop rows whose (band) bucket holds more than ``cap`` docs.
-
-    Shape matters at 100 TB: a ``count(*) OVER (PARTITION BY band)``
-    window would shuffle the ENTIRE mega-bucket into one task's state
-    before it could be dropped — the pathological bucket this cap
-    exists for is exactly the one that lands on a single task. A
-    groupBy partial aggregate instead collapses the hot key map-side
-    (each task contributes one count row), and the over-cap key list —
-    at most N/cap keys, tiny in practice since over-cap buckets are
-    template clusters — anti-joins back (AQE broadcasts the aggregated
-    side when small). No task ever materializes a bucket."""
-    over = (
-        banded.groupBy(*_BUCKET)
-        .agg(F.count(F.lit(1)).alias("_bucket_n"))
-        .filter(F.col("_bucket_n") > cap)
-        .select(*_BUCKET)
-    )
-    return banded.join(over, list(_BUCKET), "left_anti")
 
 
 def exact_dedup_groups(docs: DataFrame, text_col: str = "text") -> DataFrame:
@@ -166,21 +146,14 @@ def _bands(
     )
 
 
-def _banded_pairs(banded: DataFrame, max_bucket_size: int | None) -> DataFrame:
+def _banded_pairs(banded: DataFrame) -> DataFrame:
     """The banded candidate self-join of minhash_lsh_pairs and
     simhash_pairs over ``_bands`` rows: docs sharing any band collide.
     Output (doc_a, doc_b, plus ``<c>_a``/``<c>_b`` for each carried
-    column) with doc_a < doc_b, distinct on the pair.
-
-    ``max_bucket_size``: hot-bucket guard. A band bucket holding B docs
-    emits B*(B-1)/2 pairs — template/boilerplate corpora put thousands
-    of docs in ONE bucket and the join goes quadratic. With the cap
-    set, buckets larger than it are dropped. None = exact candidate
-    set. Clustering needs neither pairs nor the cap (dup_clusters).
+    column) with doc_a < doc_b, distinct on the pair: the exact
+    candidate set.
     """
     carry = [c for c in banded.columns if c not in ("doc_id", *_BUCKET)]
-    if max_bucket_size is not None:
-        banded = _drop_hot_buckets(banded, max_bucket_size)
     a = banded.alias("a")
     b = banded.alias("b")
     on = [F.col(f"a.{k}") == F.col(f"b.{k}") for k in _BUCKET]
@@ -227,17 +200,14 @@ def minhash_lsh_pairs(
     n_hashes: int = 8,
     bands: int = 4,
     shingle_n: int = 3,
-    max_bucket_size: int | None = None,
 ) -> DataFrame:
     """Candidate near-dup pairs via banded MinHash-LSH: docs sharing
     any bucket of minhash_bands. Output (doc_a, doc_b) with doc_a <
     doc_b, distinct. Shuffle = one groupBy-free self-equi-join on
-    (band_idx, band_key). ``max_bucket_size``: the hot-bucket cap of
-    _banded_pairs (None = exact candidate set).
+    (band_idx, band_key).
     """
     return _banded_pairs(
-        minhash_bands(docs, text_col, n_hashes, bands, shingle_n),
-        max_bucket_size,
+        minhash_bands(docs, text_col, n_hashes, bands, shingle_n)
     )
 
 
@@ -294,7 +264,6 @@ def simhash_pairs(
     max_hamming: int = 3,
     shingle_n: int = 2,
     text_col: str = "text",
-    max_bucket_size: int | None = None,
 ) -> DataFrame:
     """Hamming-<=k candidate pairs over 64-bit SimHash signatures.
 
@@ -303,8 +272,7 @@ def simhash_pairs(
     distance <= max_hamming must agree EXACTLY on at least one block,
     so an equi-join on (block_idx, block_bits) finds all such pairs
     with zero false negatives and no all-pairs scan — the same banded
-    self-join as minhash_lsh_pairs (_bands' short-doc filter and
-    _banded_pairs' ``max_bucket_size`` hot-block cap).
+    self-join as minhash_lsh_pairs (_bands' short-doc filter).
     Verification = exact Hamming distance on the joined signatures,
     confined to candidates.
 
@@ -330,7 +298,7 @@ def simhash_pairs(
         ),
         carry=("sig",),
     )
-    cand = _banded_pairs(blocks, max_bucket_size)
+    cand = _banded_pairs(blocks)
     hamming = F.size(
         F.filter(
             F.zip_with(

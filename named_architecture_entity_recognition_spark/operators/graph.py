@@ -27,12 +27,9 @@ join. The static (src, dst, outdeg) edge frame is checkpointed once —
 without truncation its upstream lineage (e.g. a triple-extraction
 pipeline) re-executes every iteration. Iteration state is lazily
 checkpointed so the final action doesn't drag a 10-deep join lineage.
-With ``tol`` set, each iteration pays one scalar action: max |Δrank|
-is computed by the same aggregate that materializes that iteration's
-checkpoint, so early exit costs no extra job. At production scale pass
-``checkpoint_dir`` for reliable checkpointing (executor loss
-mid-iteration otherwise kills the job — same contract as
-connected_components).
+At production scale pass ``checkpoint_dir`` for reliable checkpointing
+(executor loss mid-iteration otherwise kills the job — same contract
+as connected_components).
 
 Reference parity: beyond-reference capability (the reference holds one
 in-memory document and has no graph analytics).
@@ -48,15 +45,11 @@ def pagerank(
     edges: DataFrame,
     damping: float = 0.85,
     iterations: int = 10,
-    tol: float | None = None,
     checkpoint_dir: str | None = None,
-    stats: dict | None = None,
 ) -> DataFrame:
     """edges(src string, dst string) -> (node string, rank double).
 
-    Fixed ``iterations`` rounds (deterministic, oracle-friendly); set
-    ``tol`` to stop early once max |Δrank| < tol (adds one scalar
-    action per iteration). ``stats`` gets {"iterations": n}.
+    Fixed ``iterations`` rounds: deterministic and oracle-friendly.
     """
     spark = edges.sparkSession
     if checkpoint_dir:
@@ -86,40 +79,22 @@ def pagerank(
     estatic = _ckpt(e.join(outdeg, "src"))
     base = (1.0 - damping) / n
     ranks = nodes.withColumn("rank", F.lit(1.0 / n))
-    iters = 0
     for _ in range(iterations):
-        iters += 1
         contrib = (
             estatic.join(ranks, estatic.src == ranks.node)
             .groupBy("dst")
             .agg(F.sum(F.col("rank") / F.col("outdeg")).alias("_c"))
             .withColumnRenamed("dst", "node")
         )
-        new_ranks = (
-            ranks.withColumnRenamed("rank", "_old")
-            .join(contrib, "node", "left")
+        ranks = _ckpt(
+            ranks.join(contrib, "node", "left")
             .select(
                 "node",
                 (F.lit(base) + damping * F.coalesce("_c", F.lit(0.0))).alias(
                     "rank"
                 ),
-                "_old",
             )
         )
-        new_ranks = _ckpt(new_ranks)
-        if tol is not None:
-            # the one action: materializes the checkpoint AND returns
-            # the convergence signal (no separate job)
-            delta = new_ranks.agg(
-                F.max(F.abs(F.col("rank") - F.col("_old")))
-            ).first()[0]
-            ranks = new_ranks.drop("_old")
-            if delta is not None and delta < tol:
-                break
-        else:
-            ranks = new_ranks.drop("_old")
-    if stats is not None:
-        stats["iterations"] = iters
     return ranks.select("node", F.round("rank", 6).alias("rank"))
 
 

@@ -1,5 +1,5 @@
-"""Multi-dimensional data layout: Z-order (Morton) clustering for
-data skipping.
+"""Multi-dimensional data layout: the Z-order (Morton) clustering key
+for data skipping.
 
 Sorting a table by one column gives parquet/Iceberg files tight min/max
 ranges on THAT column only — predicates on any other column still read
@@ -12,8 +12,8 @@ files from footer stats alone.
 
 Scale shape: ONE tiny min/max aggregate per call (a single row,
 broadcast back), then the bucket+interleave is a pure per-row codegen'd
-projection — no shuffle until the final ``repartitionByRange`` that the
-layout rewrite needs anyway. Nothing driver-side, nothing sampled:
+projection — no shuffle; a writer range-partitions and sorts by the
+key. Nothing is collected, nothing sampled:
 buckets are exact fixed-width bins of [min, max], so the key is
 deterministic and the DuckDB oracle recomputes it bit-for-bit
 (q_zorder_key in __spark_entry__.py).
@@ -21,7 +21,7 @@ deterministic and the DuckDB oracle recomputes it bit-for-bit
 Caveats: fixed-width binning keys skewed dimensions unevenly (Delta
 uses sampled range ids instead — trade determinism for balance); that
 only degrades *pruning* on the skewed dimension, never correctness, and
-the range partitioner still balances the output files by key
+a range partitioner still balances the output files by key
 frequency. ``bits`` beyond ~20/dim is pointless: files hold millions of
 rows, so only the top bits ever decide file boundaries.
 
@@ -84,25 +84,4 @@ def zorder_key(
         df.join(F.broadcast(stats))
         .withColumn(key_col, interleave_bits(buckets, bits))
         .drop(*[f"_min_{c}" for c in cols], *[f"_max_{c}" for c in cols])
-    )
-
-
-def cluster_by_zorder(
-    df: DataFrame,
-    cols: list[str],
-    bits: int = 8,
-    num_partitions: int | None = None,
-) -> DataFrame:
-    """Rewrite ``df``'s layout: range-partition + sort by the Morton
-    key so every output file covers a small hyper-rectangle of the
-    interleaved dimensions. Write the result with
-    ``partitionBy``-free parquet/Iceberg and footer stats do the rest."""
-    parts = num_partitions or int(
-        df.sparkSession.conf.get("spark.sql.shuffle.partitions")
-    )
-    keyed = zorder_key(df, cols, bits=bits)
-    return (
-        keyed.repartitionByRange(parts, "z")
-        .sortWithinPartitions("z")
-        .drop("z")
     )

@@ -3,14 +3,13 @@ with typed metadata, decoded/feature-extracted via Arrow-batched
 mapInPandas.
 
 Decode paths:
-- ``decode='fake'``: deterministic synthetic features from the
-  media_ref (plumbing-only; no bytes needed).
+- ``extract_media_features``: deterministic synthetic features from
+  the media_ref (plumbing-only; no bytes needed).
 - REAL decode: ``extract_ppm_features`` parses actual P6 PPM image
   bytes with a pure-numpy decoder (``decode_ppm``) — header, comments,
   maxval, raw RGB plane — no codec library required. Compressed formats
-  (JPEG/PNG/video) remain the PIL/ffmpeg integration point
-  (``decode='real'`` raises where that call goes; those libs are not in
-  this container).
+  (JPEG/PNG/video) need a codec library, which this package does not
+  use.
 """
 
 from __future__ import annotations
@@ -87,23 +86,13 @@ def _fake_decode(media_ref: str, dim: int):
     return width, height, [float(x) for x in vec]
 
 
-def extract_media_features(
-    docs: DataFrame, dim: int = 16, decode: str = "fake"
-) -> DataFrame:
-    """Media spans -> (dims, embedding) via Arrow-batched mapInPandas.
-
-    decode='real' is the integration point for actual decoders (PIL /
-    torchvision / ffmpeg) — unavailable in this container, hence:
-    """
+def extract_media_features(docs: DataFrame, dim: int = 16) -> DataFrame:
+    """Media spans -> (dims, embedding) via Arrow-batched mapInPandas,
+    from the synthetic _fake_decode."""
     spans = media_spans(docs)
 
     def process(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
-            if decode == "real":
-                raise NotImplementedError(
-                    "real media decode requires PIL/ffmpeg, not present in "
-                    "this container; wire the decoder here"
-                )
             out = {
                 "doc_id": pdf["doc_id"],
                 "media_ref": pdf["media_ref"],

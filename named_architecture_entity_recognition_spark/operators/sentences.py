@@ -60,15 +60,6 @@ def validate_documents(docs: DataFrame) -> DataFrame:
     )
 
 
-def quarantine_split(docs: DataFrame) -> tuple:
-    """(valid_docs, quarantined_docs) keeping the original span payload."""
-    verdict = validate_documents(docs).select("doc_id", "valid")
-    joined = docs.join(verdict, "doc_id", "left")
-    ok = joined.filter(F.col("valid")).drop("valid")
-    bad = joined.filter(~F.col("valid")).drop("valid")
-    return ok, bad
-
-
 def get_line(sentences: DataFrame, doc_id: str, sent_no: int) -> str:
     """Positional lookup (reference getLine, F2) — test helper."""
     row = sentences.filter(

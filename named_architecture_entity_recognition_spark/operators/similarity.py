@@ -154,7 +154,6 @@ def cosine_topk_lsh(
     n_planes: int = 8,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    multiprobe: int = 0,
 ) -> DataFrame:
     """Approximate top-k: candidates restricted to the query's LSH
     bucket (equi-join on bucket), then exact cosine + per-query top-k.
@@ -163,14 +162,7 @@ def cosine_topk_lsh(
 
     Buckets come from hyperplane_buckets_df, computed AFTER the
     float->double cast on both sides, so the fold inputs are the same
-    doubles the hyperplane_bucket column (and its oracle) sees.
-
-    ``multiprobe``: recall knob. 0 probes only the query's own bucket;
-    1 additionally probes every Hamming-1 neighbor bucket (n_planes
-    extra probes per query — a vector near a hyperplane lands one sign
-    flip away, the dominant LSH miss mode). Still an equi-join: the
-    QUERY side fans out (tiny, broadcast), the corpus index is
-    untouched."""
+    doubles the hyperplane_bucket column (and its oracle) sees."""
     corpus = hyperplane_buckets_df(
         _as_double(embeddings.select(id_col, vec_col), vec_col),
         vec_col=vec_col, n_planes=n_planes,
@@ -178,26 +170,6 @@ def cosine_topk_lsh(
     qs = hyperplane_buckets_df(
         _queries(queries), vec_col="q_emb", n_planes=n_planes
     )
-    if multiprobe:
-        if multiprobe != 1:
-            raise ValueError("multiprobe supports 0 or 1 (Hamming-1 probing)")
-        # probe list in plain column algebra: own bucket + each one-bit
-        # flip (substr concat around position p)
-        b = F.col("bucket")
-        probes = F.array_union(
-            F.array(b),
-            F.transform(
-                F.sequence(F.lit(1), F.lit(n_planes)),
-                lambda p: F.concat(
-                    b.substr(F.lit(1), p - 1),
-                    F.when(b.substr(p, F.lit(1)) == "1", F.lit("0")).otherwise(
-                        F.lit("1")
-                    ),
-                    b.substr(p + 1, F.lit(n_planes)),
-                ),
-            ),
-        )
-        qs = qs.withColumn("bucket", F.explode(probes))
     return _topk(corpus.join(F.broadcast(qs), "bucket"), k, id_col, vec_col)
 
 

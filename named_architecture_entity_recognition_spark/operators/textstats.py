@@ -341,16 +341,15 @@ def collocations(
 
 def lm_score(
     docs: DataFrame,
-    lm_docs: DataFrame | None = None,
     text_col: str = "text",
     alpha: float = 0.5,
     id_col: str = "doc_id",
 ) -> DataFrame:
     """CCNet-style language-model quality signal: train an additively
-    smoothed bigram LM on ``lm_docs`` (default: the corpus itself) and
-    score every doc by the cross-entropy of its bigrams under it —
+    smoothed bigram LM on the corpus itself and score every doc by
+    the cross-entropy of its bigrams under it —
     (doc_id, n_bigrams, cross_entropy in nats, lower = more fluent
-    relative to the reference corpus). The standard perplexity filter
+    relative to the corpus). The standard perplexity filter
     of training-data pipelines (CCNet buckets corpora by exactly this
     statistic).
 
@@ -370,8 +369,6 @@ def lm_score(
     """
     if alpha <= 0:
         raise ValueError(f"alpha must be > 0, got {alpha}")
-    ref = lm_docs if lm_docs is not None else docs
-
     def bigrams_of(frame, keep_id):
         tok = frame.select(
             F.col(id_col), tokens(F.col(text_col)).alias("t")
@@ -390,7 +387,7 @@ def lm_score(
             ).alias("bg"),
         ).select(*cols, "bg.w1", "bg.w2")
 
-    ref_bg = bigrams_of(ref, keep_id=False)
+    ref_bg = bigrams_of(docs, keep_id=False)
     pair = ref_bg.groupBy("w1", "w2").agg(
         F.count(F.lit(1)).cast("double").alias("_n")
     )
@@ -398,7 +395,7 @@ def lm_score(
         F.count(F.lit(1)).cast("double").alias("_h")
     )
     vocab = (
-        ref.select(F.explode(tokens(F.col(text_col))).alias("x"))
+        docs.select(F.explode(tokens(F.col(text_col))).alias("x"))
         .agg(F.countDistinct("x").cast("double").alias("_v"))
     )
     scored = (

@@ -38,7 +38,7 @@ class RecognizerPipeline:
 
     def mentions(self, docs: DataFrame) -> DataFrame:
         # F1 validation happens inside the detection pass itself
-        # (validate_format) — a separate quarantine_split would scan the
+        # (validate_format) — a separate validation pass would scan the
         # documents twice; quarantined docs surface as 'quarantined'
         # records for the metrics layer
         return detect_mentions_df(

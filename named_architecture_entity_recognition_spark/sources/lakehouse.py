@@ -71,8 +71,8 @@ def write_triples(
     write distribution mode requests the same clustering.
 
     The fallback writes through Hadoop's checksum-free
-    RawLocalFileSystem (RAW_LOCAL_FS), set on this writer and
-    compact_table's alone. What is left is a per-file floor. Without
+    RawLocalFileSystem (RAW_LOCAL_FS), set on this writer alone. What
+    is left is a per-file floor. Without
     the Hadoop native library every created file and directory forks a
     `chmod`, and every Parquet file's writer set-up scans the whole
     (~1,100-entry) Hadoop configuration. A 200-doc, 32-bucket build on
@@ -102,79 +102,6 @@ def read_triples(spark: SparkSession, source: str) -> DataFrame:
     if "/" not in source and iceberg_available(spark):
         return spark.read.table(source)
     return spark.read.parquet(source)
-
-
-def compact_table(
-    spark: SparkSession,
-    source: str,
-    target: str,
-    target_mb: int = 128,
-) -> dict:
-    """Rewrite a LOCAL parquet directory into ~``target_mb``-sized
-    files — the lakehouse small-file maintenance job. This is the plain
-    parquet form; on an Iceberg deployment the equivalent operation is
-    the `rewrite_data_files` procedure (not dispatched here — the
-    sandbox has no runtime jar, and Iceberg compaction is a catalog
-    procedure call, not a DataFrame job). Input sizing uses local
-    ``Path`` stats, so object-store/HDFS URIs are rejected explicitly
-    rather than mis-reporting bytes_in=0.
-
-    Why it exists here: long-running ingest jobs accumulate small
-    files, and Spark's FilePartition packing then silently bins them
-    into exactly one read task per core — ZERO wave slack, so one slow
-    executor stalls every downstream job (this repo measured it:
-    tools/scaling.py's 128 x 1.5 MB files collapsed to 32 tasks on
-    local[32]). Compaction restores healthy task granularity at the
-    source instead of every reader tuning maxPartitionBytes.
-
-    A hive-partitioned source (``col=value`` directories, e.g. the
-    triples sink's ``pred=*/subj_bucket=*``) keeps its partition
-    directories: rows are clustered by the partition columns, so each
-    directory is rewritten as ONE file and readers keep directory
-    pruning. The rewrite goes through write_triples' checksum-free
-    local filesystem (RAW_LOCAL_FS), so it writes no `.crc` files.
-
-    Returns {"files_in", "bytes_in", "files_out", "n_rows"}.
-    Row-preservation (count + content) is pytest-asserted; file count
-    of an unpartitioned source = ceil(bytes / target_mb) bounded below
-    by 1, of a partitioned one = its number of directories.
-    """
-    import math
-    from pathlib import Path
-
-    if "://" in source and not source.startswith("file://"):
-        raise ValueError(
-            f"compact_table sizes input via local filesystem stats; "
-            f"got non-local URI {source!r}"
-        )
-    src = Path(source.removeprefix("file://"))
-    data_files = sorted(src.rglob("*.parquet"))
-    bytes_in = sum(p.stat().st_size for p in data_files)
-    df = spark.read.parquet(source)
-    n_files = max(1, math.ceil(bytes_in / (target_mb * 1024 * 1024)))
-    # partition columns, outermost first, as Spark discovers them: each
-    # directory's rows meet in one task and become one file. A flat
-    # table has none, and repartition(n) round-robins its rows for even
-    # file sizes (writers of sorted/clustered tables should use
-    # repartitionByRange on their cluster key instead to keep
-    # data-skipping stats tight)
-    part_cols = [
-        d.split("=", 1)[0] for d in data_files[0].relative_to(src).parts[:-1] if "=" in d
-    ]
-    (
-        df.repartition(n_files, *part_cols)
-        .write.mode("overwrite")
-        .options(**RAW_LOCAL_FS)
-        .partitionBy(*part_cols)
-        .parquet(target)
-    )
-    out_files = [p for p in Path(target).rglob("*.parquet")]
-    return {
-        "files_in": len(data_files),
-        "bytes_in": bytes_in,
-        "files_out": len(out_files),
-        "n_rows": spark.read.parquet(target).count(),
-    }
 
 
 def write_bucketed(

@@ -17,22 +17,16 @@ from pyspark.sql import functions as F
 def windowed_event_counts(
     events: DataFrame,
     window: str = "10 minutes",
-    slide: str | None = None,
     watermark: str = "30 minutes",
 ) -> DataFrame:
-    """Tumbling (or sliding) event-time windows over (event_type):
+    """Tumbling event-time windows over (event_type):
     per window start/end and event type, the event count and the value
     sum rounded to 4 places. ``watermark`` bounds the state a streaming
     input would keep for late data; a batch input ignores it.
     """
-    w = (
-        F.window("ts", window, slide)
-        if slide
-        else F.window("ts", window)
-    )
     return (
         events.withWatermark("ts", watermark)
-        .groupBy(w.alias("win"), "event_type")
+        .groupBy(F.window("ts", window).alias("win"), "event_type")
         .agg(
             F.count("*").cast("long").alias("n_events"),
             F.round(F.sum("value"), 4).alias("sum_value"),

@@ -1,5 +1,5 @@
 """As-of join operator (operators/asof.py): point-in-time semantics,
-tie handling, tolerance, and a brute-force parity check."""
+tie handling, and a brute-force parity check."""
 
 from datetime import datetime, timedelta
 
@@ -44,22 +44,6 @@ def test_latest_at_or_before(spark, frames):
     assert out[4].value_right is None         # key absent on right
     # left columns survive untouched
     assert out[1].tag == "p1" and out[4].user_id == 200
-
-
-def test_tolerance_drops_stale_matches(spark, frames):
-    left, right = frames
-    out = {
-        r.event_id: r
-        for r in asof_join(left, right, tolerance_s=5).collect()
-    }
-    assert out[1].value_right == 3.0          # 50-45 = 5s, inside
-    assert out[3].value_right == 2.0          # 0s
-    out10 = {
-        r.event_id: r
-        for r in asof_join(left, right, tolerance_s=4).collect()
-    }
-    assert out10[1].value_right is None       # 5s > 4s -> match nulled
-    assert out10[1].event_id == 1             # ...but the left row stays
 
 
 def test_matches_bruteforce_on_random_data(spark):

@@ -102,16 +102,10 @@ def _bfs_clusters(ids, edges):
 
 
 def test_dup_clusters_whale_bucket_exact(spark):
-    """A band bucket far above the old cap of 64: dup_clusters equals a
-    BFS over every bucket's full clique, and clustering the capped
-    candidate pairs (max_bucket_size=64) does not — the input does
-    reach the case the cap used to lose."""
+    """A band bucket of more than 64 docs: dup_clusters equals a BFS
+    over every bucket's full clique."""
     import itertools
     import random
-
-    from named_architecture_entity_recognition_spark.operators.dedup import (
-        minhash_lsh_pairs,
-    )
 
     rng = random.Random(7)
     vocab = [f"w{i}" for i in range(400)]
@@ -135,12 +129,6 @@ def test_dup_clusters_whale_bucket_exact(spark):
     got = {r.doc_id: r.cluster_id
            for r in dup_clusters(df, n_hashes=4, bands=2).collect()}
     assert got == want
-
-    capped = minhash_lsh_pairs(df, n_hashes=4, bands=2, max_bucket_size=64)
-    capped_clusters = _bfs_clusters(
-        ids, [(r.doc_a, r.doc_b) for r in capped.collect()]
-    )
-    assert capped_clusters != want
 
 
 def test_hash_split_deterministic_and_stable_under_backfill(spark):
@@ -303,36 +291,6 @@ def test_argument_guards(spark):
     d = docs.withColumn("source", F.lit("s")).withColumn("text", F.lit("x y"))
     with _pytest.raises(ValueError, match="budget_tokens"):
         pack_sequences(d, 0)
-
-
-def test_contamination_df_cap_bounds_boilerplate_fanout(spark):
-    """The doc-frequency cap drops boilerplate shingles from the train
-    side: boilerplate-only overlaps disappear, genuine containment
-    survives, and no score ever increases."""
-    boiler = "this document is provided under the standard license terms"
-    ev = spark.createDataFrame(
-        [(100, boiler), (200, "alpha beta gamma delta epsilon")],
-        "doc_id bigint, text string",
-    )
-    tr_rows = [(i, boiler + f" filler{i} more filler words here") for i in range(1, 6)]
-    tr_rows.append((50, "alpha beta gamma delta epsilon plus unique suffix words"))
-    tr = spark.createDataFrame(tr_rows, "doc_id bigint, text string")
-
-    uncapped = {
-        (r.eval_id, r.train_id): r.containment
-        for r in contamination(tr, ev, threshold=0.1).collect()
-    }
-    capped = {
-        (r.eval_id, r.train_id): r.containment
-        for r in contamination(tr, ev, threshold=0.1, max_shingle_df=2).collect()
-    }
-    # boilerplate eval doc matched every train doc uncapped, none capped
-    assert any(k[0] == 100 for k in uncapped)
-    assert not any(k[0] == 100 for k in capped)
-    # the genuine containment pair survives at full score
-    assert capped[(200, 50)] == uncapped[(200, 50)]
-    # monotone: capping never increases a score
-    assert all(capped[k] <= uncapped[k] for k in capped)
 
 
 def test_funnel_composes_with_packing(spark):
@@ -710,8 +668,7 @@ def test_chunk_documents_random_reconstruction(spark):
 
 def test_lm_score_semantics(spark):
     """Frequent-pattern docs score lower cross-entropy than rare-
-    pattern docs; <2-token docs are absent; unseen bigrams (scoring
-    against a separate reference corpus) stay finite via smoothing."""
+    pattern docs; <2-token docs are absent; alpha must be positive."""
     import math
 
     import pytest as _pytest
@@ -735,11 +692,6 @@ def test_lm_score_semantics(spark):
         abs(-math.log(p) - got["fluent"].cross_entropy) < 2.0
         for _ in (0,)
     )  # same order of magnitude; exact value mixes 5 bigrams
-    # held-out scoring: unseen bigrams finite, worse than in-corpus
-    ref = docs.filter("doc_id != 'rare'")
-    held = {r.doc_id: r for r in lm_score(docs, lm_docs=ref).collect()}
-    assert math.isfinite(held["rare"].cross_entropy)
-    assert held["rare"].cross_entropy > held["fluent"].cross_entropy
     with _pytest.raises(ValueError, match="alpha"):
         lm_score(docs, alpha=0.0)
 

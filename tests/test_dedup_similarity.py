@@ -358,58 +358,6 @@ def test_hyperplane_python_kernel_identical_to_expression(spark, embeddings):
         assert len(set(a.values())) > 2  # the planes split the corpus
 
 
-def test_lsh_multiprobe_recovers_one_flip_neighbor(spark, embeddings):
-    """Hamming-1 multiprobe must recall at least everything the single
-    probe finds, and strictly more when a true neighbor sits one sign
-    flip away (the dominant LSH miss mode)."""
-    from named_architecture_entity_recognition_spark.operators.similarity import (
-        cosine_topk_lsh,
-    )
-
-    qs = embeddings.select(F.col("vec_id").alias("query_id"), "embedding")
-    base = {
-        (r.query_id, r.neighbor_id)
-        for r in cosine_topk_lsh(embeddings, qs, k=5, n_planes=6).collect()
-    }
-    probed = {
-        (r.query_id, r.neighbor_id)
-        for r in cosine_topk_lsh(
-            embeddings, qs, k=5, n_planes=6, multiprobe=1
-        ).collect()
-    }
-    # per query, the probed candidate pool is a superset, so every
-    # neighbor with a score above the base kth-best must still appear;
-    # globally the pool can only grow
-    assert len(probed) >= len(base)
-    # at 6 planes over 41 random vectors, some true neighbor is one
-    # flip away for at least one query — multiprobe must find new pairs
-    assert probed != base
-
-    import pytest as _pytest
-
-    with _pytest.raises(ValueError, match="multiprobe"):
-        cosine_topk_lsh(embeddings, qs, k=5, multiprobe=2)
-
-
-def test_lsh_hot_bucket_cap(spark):
-    """max_bucket_size drops template mega-buckets (quadratic pair
-    source) while genuine small-cluster pairs survive."""
-    template = "the quick brown fox jumps over the lazy dog every day"
-    rows = [(i, template) for i in range(30)]           # one mega-bucket
-    rows += [(100, "a unique pair of documents here ok fine"),
-             (101, "a unique pair of documents here ok fine")]
-    docs = spark.createDataFrame(rows, "doc_id long, text string")
-    uncapped = minhash_lsh_pairs(docs, n_hashes=4, bands=2).count()
-    capped = {
-        (r.doc_a, r.doc_b)
-        for r in minhash_lsh_pairs(
-            docs, n_hashes=4, bands=2, max_bucket_size=5
-        ).collect()
-    }
-    assert uncapped >= 30 * 29 // 2  # the template cluster went quadratic
-    assert capped == {(100, 101)}   # cap keeps only the genuine pair
-
-
 def test_simhash_pairs_oracle_drops_short_docs(spark):
     """The q_simhash_pairs DuckDB oracle bands only the docs
     simhash_pairs bands: texts with fewer than shingle_n=2 tokens all
@@ -434,23 +382,6 @@ def test_simhash_pairs_oracle_drops_short_docs(spark):
     con.executemany("INSERT INTO documents VALUES (?, ?)", rows)
     oracle = entrymod.oracle_sql()["q_simhash_pairs"]
     assert set(con.execute(oracle).fetchall()) == got
-
-
-def test_simhash_hot_block_cap(spark):
-    from named_architecture_entity_recognition_spark.operators.dedup import (
-        simhash_pairs,
-    )
-
-    template = "the quick brown fox jumps over the lazy dog every day"
-    rows = [(i, template) for i in range(20)]
-    rows += [(100, "a unique pair of documents here ok fine"),
-             (101, "a unique pair of documents here ok fine")]
-    docs = spark.createDataFrame(rows, "doc_id long, text string")
-    capped = {
-        (r.doc_a, r.doc_b)
-        for r in simhash_pairs(docs, max_hamming=3, max_bucket_size=5).collect()
-    }
-    assert capped == {(100, 101)}
 
 
 def test_int8_quantization_codes_bounded_and_invertible(spark, embeddings):

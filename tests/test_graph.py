@@ -43,20 +43,6 @@ def test_pagerank_hub_dominates_and_dup_edges_ignored(spark):
     assert ranks == pytest.approx(_expected(star, iters=5), abs=2e-6)
 
 
-def test_pagerank_tol_early_exit_on_cycle(spark):
-    """A cycle keeps the uniform distribution fixed, so delta == 0
-    after the first iteration: tol must stop the loop immediately."""
-    cyc = [(f"n{i}", f"n{(i + 1) % 6}") for i in range(6)]
-    df = spark.createDataFrame(cyc, "src string, dst string")
-    stats = {}
-    got = {
-        r.node: r.rank
-        for r in pagerank(df, iterations=50, tol=1e-12, stats=stats).collect()
-    }
-    assert stats["iterations"] == 1
-    assert got == pytest.approx({f"n{i}": round(1 / 6, 6) for i in range(6)})
-
-
 def test_pagerank_partition_invariance_and_empty(spark):
     edges = [(f"u{i % 13}", f"u{(i * 7) % 13}") for i in range(60) if i % 13 != (i * 7) % 13]
     df = spark.createDataFrame(edges, "src string, dst string")

@@ -4,7 +4,6 @@ import pytest
 from pyspark.sql import functions as F
 
 from named_architecture_entity_recognition_spark.operators.layout import (
-    cluster_by_zorder,
     interleave_bits,
     zorder_key,
 )
@@ -40,37 +39,6 @@ def test_zorder_key_range_and_determinism(spark):
     assert all(0 <= z < (1 << 16) for z in vals)
     again = [r.z for r in zorder_key(df.repartition(13), ["a", "v"], bits=8).collect()]
     assert sorted(vals) == sorted(again)
-
-
-def test_cluster_tightens_both_dimensions(spark):
-    """After Z-order clustering, each partition covers a small
-    hyper-rectangle: the per-partition span of the SECOND dimension
-    must be far tighter than under a linear sort by the first."""
-    n, parts = 4096, 16
-    # a and b independent: a full 64x64 grid
-    df = spark.createDataFrame(
-        [(i, i % 64, i // 64) for i in range(n)],
-        "id int, a int, b int",
-    )
-
-    def mean_span(clustered, col):
-        spans = (
-            clustered.withColumn("_p", F.spark_partition_id())
-            .groupBy("_p")
-            .agg((F.max(col) - F.min(col)).alias("s"))
-            .collect()
-        )
-        return sum(r.s for r in spans) / len(spans)
-
-    z = cluster_by_zorder(df, ["a", "b"], bits=6, num_partitions=parts)
-    linear = df.repartitionByRange(parts, "a").sortWithinPartitions("a")
-    # linear sort by a: b spans ~the full 0..63 range in every partition
-    assert mean_span(linear, "b") > 50
-    # z-order: both dimensions tight
-    assert mean_span(z, "b") < 25
-    assert mean_span(z, "a") < 25
-    # layout rewrite preserves the rows exactly
-    assert z.count() == n and z.columns == df.columns
 
 
 def test_zorder_stats_join_is_broadcast(spark):

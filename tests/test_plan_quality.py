@@ -200,35 +200,6 @@ def test_repair_parse_python_confined_to_failed_residue(spark):
     assert simple.count("MapInPandas") == 1, simple
 
 
-def test_hot_bucket_cap_is_partial_agg_not_window(spark):
-    """The LSH/SimHash hot-bucket caps must NOT use a window over the
-    band key: count(*) OVER (PARTITION BY band) shuffles the entire
-    mega-bucket into one task's state before it can be dropped — the
-    pathological bucket the cap exists for is exactly the one that
-    lands on a single task. The partial-agg groupBy + anti-join shape
-    collapses hot keys map-side instead."""
-    from named_architecture_entity_recognition_spark.operators.dedup import (
-        minhash_lsh_pairs,
-        simhash_pairs,
-    )
-
-    docs = spark.createDataFrame(
-        [(i, "common template words here repeated") for i in range(6)],
-        "doc_id int, text string",
-    )
-    for df in (
-        minhash_lsh_pairs(docs, n_hashes=4, bands=2, max_bucket_size=5),
-        simhash_pairs(docs, max_hamming=3, max_bucket_size=5),
-    ):
-        simple = df._sc._jvm.PythonSQLUtils.explainString(
-            df._jdf.queryExecution(), "simple"
-        )
-        assert "Window" not in simple, simple
-        # the cap itself: a partial hash aggregate feeding a LeftAnti
-        assert "LeftAnti" in simple, simple
-        assert "partial_count" in simple or "HashAggregate" in simple, simple
-
-
 def test_dup_clusters_one_minhash_pass_no_join_before_cc(spark):
     """dup_clusters feeds CC doc <-> bucket edges: over every SQL
     execution it runs, the MinHash kernel (MapInPandas) appears once,

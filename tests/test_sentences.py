@@ -5,7 +5,6 @@ from pyspark.sql import functions as F
 
 from named_architecture_entity_recognition_spark.operators.sentences import (
     get_line,
-    quarantine_split,
     reassemble_text,
     text_spans,
     validate_documents,
@@ -52,12 +51,6 @@ def test_validate_documents(docs):
     assert not out["bad"].valid and out["bad"].n_invalid == 1
 
 
-def test_quarantine_split(docs):
-    ok, bad = quarantine_split(docs)
-    assert [r.doc_id for r in ok.select("doc_id").collect()] == ["good"]
-    assert [r.doc_id for r in bad.select("doc_id").collect()] == ["bad"]
-
-
 def test_get_line_1_indexed(docs):
     s = text_spans(docs)
     assert get_line(s, "good", 1) == "First sentence."
@@ -75,6 +68,7 @@ def test_span_sequence_invariant(docs):
     is preserved through the pipeline (input_hint invariant): the
     pipeline never mutates documents, so verify the identity holds after
     a pass through validation."""
-    ok, _ = quarantine_split(docs)
+    valid = validate_documents(docs).filter("valid").select("doc_id")
+    ok = docs.join(valid, "doc_id")
     src = docs.filter(F.col("doc_id") == "good").select("doc_id", "spans")
     assert src.exceptAll(ok.select("doc_id", "spans")).count() == 0

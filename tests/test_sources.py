@@ -72,6 +72,30 @@ def test_gazetteer_from_names(spark):
     assert [r.name for r in g.orderBy("name").collect()] == ["A", "B"]
 
 
+def test_submit_job_gazetteer_csv_and_txt(spark, tmp_path):
+    """submit_job reads a gazetteer CSV through read_gazetteer_csv:
+    column 2 trimmed, blanks dropped, duplicates merged, sorted — the
+    list its former line-splitting parser gave for this file. A .txt
+    gazetteer is one name per line."""
+    import sys
+    from pathlib import Path
+
+    sys.path.insert(0, str(Path(__file__).resolve().parents[1] / "tools"))
+    from submit_job import load_gazetteer
+
+    csv = tmp_path / "gaz.csv"
+    csv.write_text(
+        "modelElementID,componentName\n"
+        "_1,WebUI\n_2,  Image Provider \n_3,\n_4,WebUI\n_5,Auth\n"
+    )
+    assert load_gazetteer(spark, str(csv)) == [
+        "Auth", "Image Provider", "WebUI"
+    ]
+    txt = tmp_path / "gaz.txt"
+    txt.write_text(" WebUI\n\nAuth\nWebUI\n")
+    assert load_gazetteer(spark, str(txt)) == ["Auth", "WebUI"]
+
+
 def files_read(q):
     """numFiles metric of the executed scan — files AFTER partition
     pruning (inputFiles() lists the relation pre-pruning)."""
@@ -231,66 +255,6 @@ def test_sink_roundtrip_both_branches(spark, tmp_path):
     back = read_triples(spark, target)
     assert back.count() == 2
     assert back.filter(back.pred == "hasName").count() == 1
-
-
-def test_compact_table_preserves_rows_and_reduces_files(spark, tmp_path):
-    """128 tiny files -> ceil(bytes/target) files; row count AND
-    content identical; read parallelism no longer pinned to the
-    original file count."""
-    from pyspark.sql import functions as F
-
-    from named_architecture_entity_recognition_spark.sources.lakehouse import (
-        compact_table,
-    )
-
-    src = str(tmp_path / "small")
-    spark.range(0, 20000).withColumn(
-        "payload", F.md5(F.col("id").cast("string"))
-    ).repartition(128).write.parquet(src)
-    dst = str(tmp_path / "compact")
-    stats = compact_table(spark, src, dst, target_mb=1)
-    assert stats["files_in"] == 128
-    assert stats["n_rows"] == 20000
-    assert 1 <= stats["files_out"] < 128
-    a = spark.read.parquet(src).select("id", "payload")
-    b = spark.read.parquet(dst).select("id", "payload")
-    assert a.exceptAll(b).count() == 0 and b.exceptAll(a).count() == 0
-
-
-def test_compact_table_keeps_sink_partition_directories(spark, tmp_path):
-    """Compacting the triples sink rewrites it into the same
-    pred=*/subj_bucket=* directories, one file each, so a
-    (pred, subj_bucket) lookup still reads one file; rows are equal,
-    and like the sink the compacted table has no checksum files."""
-    from named_architecture_entity_recognition_spark.sources.lakehouse import (
-        compact_table,
-        read_triples,
-        write_triples,
-    )
-
-    rows = [
-        (f"d{i % 3}#e{i}", pred, f"obj{i}")
-        for i in range(100)
-        for pred in ("instanceOf", "hasName")
-    ]
-    triples = spark.createDataFrame(rows, "subj string, pred string, obj string")
-    src, dst = tmp_path / "triples", tmp_path / "compact"
-    write_triples(triples, str(src), n_buckets=4)
-    stats = compact_table(spark, str(src), str(dst), target_mb=1)
-
-    src_dirs = sorted(d.relative_to(src) for d in src.glob("pred=*/subj_bucket=*"))
-    dst_dirs = sorted(d.relative_to(dst) for d in dst.glob("pred=*/subj_bucket=*"))
-    assert len(dst_dirs) == 2 * 4 and dst_dirs == src_dirs
-    assert stats["files_out"] == len(dst_dirs)
-    assert stats["n_rows"] == len(rows)
-    assert list(src.rglob("*.crc")) == [] and list(dst.rglob("*.crc")) == []
-    a, b = read_triples(spark, str(src)), read_triples(spark, str(dst))
-    assert b.columns == a.columns
-    assert a.exceptAll(b).count() == 0 and b.exceptAll(a).count() == 0
-    for subj in ("d0#e0", "d1#e1", "d2#e2"):
-        lookup = b.filter((b.pred == "hasName") & (b.subj_bucket == bucket_of(spark, subj, 4)))
-        assert files_read(lookup) == 1
-        assert lookup.filter(b.subj == subj).count() == 1
 
 
 def test_bucketed_join_plans_no_exchange(spark, tmp_path):

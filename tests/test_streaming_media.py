@@ -42,15 +42,10 @@ def test_media_features_deterministic(docs):
     assert 64 <= w <= 2048 and 64 <= h <= 2048 and len(vec) == 8
 
 
-def test_media_real_decode_is_stubbed(docs):
-    with pytest.raises(Exception):
-        extract_media_features(docs, decode="real").collect()
-
-
 def test_windowed_event_counts_batch(spark):
-    """Tumbling and sliding event-time windows: per (window, type) the
-    count and the rounded value sum equal a plain-Python bucketing of
-    the same events."""
+    """Tumbling event-time windows: per (window, type) the count and
+    the rounded value sum equal a plain-Python bucketing of the same
+    events."""
     base = dt.datetime(2026, 1, 1, 0, 0, 0)
     rows = [
         (i, base + dt.timedelta(minutes=i * 3), i % 4,
@@ -63,32 +58,27 @@ def test_windowed_event_counts_batch(spark):
         "value double",
     ).repartition(3)
 
-    def expected(width, step):
-        acc = {}
-        for _, ts, _, typ, v in rows:
-            minute = (ts - base) // dt.timedelta(minutes=1)
-            last = minute - minute % step  # latest window start <= ts
-            for start in range(last, minute - width, -step):
-                key = (base + dt.timedelta(minutes=start), typ)
-                n, s = acc.get(key, (0, 0.0))
-                acc[key] = (n + 1, s + v)
-        return {
-            (st, st + dt.timedelta(minutes=width), typ): (n, round(s, 4))
-            for (st, typ), (n, s) in acc.items()
-        }
-
-    for slide, step in ((None, 10), ("5 minutes", 5)):
-        got = {
-            (r.window_start, r.window_end, r.event_type): (
-                r.n_events, r.sum_value,
-            )
-            for r in windowed_event_counts(
-                events, window="10 minutes", slide=slide, watermark="5 minutes"
-            ).collect()
-        }
-        assert got == expected(10, step), slide
+    acc = {}
+    for _, ts, _, typ, v in rows:
+        minute = (ts - base) // dt.timedelta(minutes=1)
+        start = base + dt.timedelta(minutes=minute - minute % 10)
+        n, s = acc.get((start, typ), (0, 0.0))
+        acc[(start, typ)] = (n + 1, s + v)
+    expected = {
+        (st, st + dt.timedelta(minutes=10), typ): (n, round(s, 4))
+        for (st, typ), (n, s) in acc.items()
+    }
+    got = {
+        (r.window_start, r.window_end, r.event_type): (
+            r.n_events, r.sum_value,
+        )
+        for r in windowed_event_counts(
+            events, window="10 minutes", watermark="5 minutes"
+        ).collect()
+    }
+    assert got == expected
     # 40 events over 120 minutes: 12 tumbling windows x 2 event types
-    assert len(expected(10, 10)) == 24
+    assert len(expected) == 24
 
 
 def test_sessionize_batch_session_bounds(spark):

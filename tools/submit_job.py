@@ -34,21 +34,16 @@ from pathlib import Path
 sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
 
 
-def load_gazetteer(path: str) -> list:
-    """Component names from a CSV (2nd column, reference gazetteer
-    format — test/.../GoldstandardParser.java:92-114) or one-per-line
-    text file."""
-    p = Path(path)
-    names = set()
-    lines = p.read_text().splitlines()
-    if p.suffix == ".csv":
-        for ln in lines[1:]:
-            parts = ln.split(",")
-            if len(parts) >= 2 and parts[1].strip():
-                names.add(parts[1].strip())
-    else:
-        names = {ln.strip() for ln in lines if ln.strip()}
-    return sorted(names)
+def load_gazetteer(spark, path: str) -> list:
+    """Sorted component names from a reference-format gazetteer CSV
+    (csv_sources.read_gazetteer_csv) or a one-per-line text file."""
+    from named_architecture_entity_recognition_spark.sources import csv_sources
+
+    if Path(path).suffix == ".csv":
+        gaz = csv_sources.read_gazetteer_csv(spark, path)
+        return sorted(r.name for r in gaz.select("name").collect())
+    lines = Path(path).read_text().splitlines()
+    return sorted({ln.strip() for ln in lines if ln.strip()})
 
 
 def sink_files(output: str):
@@ -68,6 +63,7 @@ def main(argv=None):
     args = ap.parse_args(argv)
 
     from named_architecture_entity_recognition_spark.plans.lineage import (
+        StageCheckpoint,
         checkpointed_pipeline,
     )
     from named_architecture_entity_recognition_spark.session import get_spark
@@ -91,7 +87,7 @@ def main(argv=None):
         )
 
         docs = read_documents(spark, args.input)
-        gaz = load_gazetteer(args.gazetteer) if args.gazetteer else []
+        gaz = load_gazetteer(spark, args.gazetteer) if args.gazetteer else []
 
     t0 = time.time()
     triples = checkpointed_pipeline(
@@ -104,11 +100,10 @@ def main(argv=None):
 
     write_triples(triples.select("subj", "pred", "obj"), args.output)
     dt = time.time() - t0
-    metrics = {}
-    for stage in ("mentions", "entities", "triples"):
-        mp = Path(args.checkpoint) / stage / "_naer_manifest.json"
-        if mp.exists():
-            metrics[stage] = json.loads(mp.read_text())
+    metrics = {
+        s: StageCheckpoint(args.checkpoint, s, args.n_buckets).metrics()
+        for s in ("mentions", "entities", "triples")
+    }
     out = {
         "n_triples": n,
         "sec": round(dt, 2),
