@@ -8,9 +8,11 @@ into the prompt), so recognition reduces to dictionary matching plus
 alias/abbreviation/anaphora handling — exactly what this module does.
 
 Everything here is pure-Python over ONE document's sentence list, so it
-parallelizes embarrassingly across documents via ``applyInPandas``
-(Arrow batches of whole docs); no cross-document state exists. The
-gazetteer is compiled once on the driver and broadcast.
+parallelizes embarrassingly across documents through the one
+``mapInArrow`` kernel (operators/mentions.py, Arrow batches of whole
+docs); no cross-document state exists. Each worker compiles a
+dictionary once and keeps it in ``mentions._COMPILED``; the compiled
+``GazIndex`` holds the ``MatcherConfig`` that detection runs under.
 
 Match rules (each mention records which rule fired):
 
@@ -22,9 +24,11 @@ Match rules (each mention records which rule fired):
   R_NORM    normalized token-window match: case/hyphen/space collapsed
             ("bbb-web" = "BBB web"), with acronym<->camel-word
             equivalence ("BigBlueButton web" = "BBB web").
-  R_FUZZY   char-set Jaccard >= 0.90 between normalized token window
-            and normalized name (typos: "fsels" ~ "FSESL"); threshold
-            mirrors model/SoftwareArchitectureDocumentation.java:160.
+  R_FUZZY   char-set Jaccard >= JACCARD_THRESHOLD (0.90, as
+            model/SoftwareArchitectureDocumentation.java:160) between a
+            4-6 char normalized name and a token window one char longer
+            or shorter (typos: "fsels" ~ "FSESL"). At these lengths the
+            threshold holds only for equal char sets.
   R_STEM    inflection of the name ("re-encoding" -> "ReEncoder").
   R_COMPOUND name embedded as the head of a longer compound token
             ("PersistenceProvider" -> "Persistence").
@@ -46,9 +50,12 @@ Socket Layer" ~ FSESL).
 from __future__ import annotations
 
 import re
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 
-from named_architecture_entity_recognition_spark.functions.jaccard import char_jaccard
+from named_architecture_entity_recognition_spark.functions.jaccard import (
+    JACCARD_THRESHOLD,
+    char_jaccard,
+)
 
 DIRECT = "DIRECT"
 INDIRECT = "INDIRECT"
@@ -82,6 +89,8 @@ _DEMONSTRATIVE_START = re.compile(
 
 _WORD_RE = re.compile(r"[A-Za-z0-9]+")
 _STEM_SUFFIXES = ("ing", "s", "es")
+# R_STEM applies to normalized names at least this long
+_STEM_MIN_PREFIX = 7
 
 # Copular-definitional sentence ("X is a Java-based application"): such a
 # sentence defines what X *is* rather than what it *does*; a following
@@ -173,18 +182,12 @@ def acronym_of(word: str) -> str:
 
 @dataclass(frozen=True)
 class MatcherConfig:
-    fuzzy_threshold: float = 0.90
-    stem_min_prefix: int = 7
     max_window: int = 4
     enable_head_noun: bool = True
     enable_pronoun: bool = True
     enable_fuzzy: bool = True
     enable_stem: bool = True
     enable_alias_induction: bool = True
-    ambiguous_words: frozenset = field(
-        default_factory=lambda: frozenset(_AMBIGUOUS_WORDS)
-    )
-    role_heads: frozenset = field(default_factory=lambda: frozenset(_ROLE_HEADS))
 
 
 @dataclass(frozen=True)
@@ -202,6 +205,11 @@ class GazEntry:
     head: str | None
     camel_head: str | None
     prefix: str | None  # unique distinctive first token ('webrtc' of WebRTC-SFU)
+    # R_STEM probes in cascade order ("reencoding" of ReEncoder); empty
+    # when the rule is off or the name is short. The stem index posts
+    # exactly these strings, so a window triggers the entry iff a probe hits
+    stems: tuple
+    fuzzy: bool  # R_FUZZY applies: the rule is on and the norm has 4-6 chars
 
 
 def _boundary_pattern(name: str) -> str:
@@ -222,13 +230,14 @@ class GazIndex:
     list, and matched entries still run the full (unchanged) per-entry
     rule cascade in compile order.
 
-    Sequence-compatible (iter/len/[]), so existing callers holding "a
-    list of entries" keep working.
+    The index holds the ``MatcherConfig`` it was compiled with
+    (``cfg``), and detection reads it from here: the posting lists and
+    the rule cascade always run under one configuration.
     """
 
     __slots__ = (
         "entries", "exact_idx", "norm_idx", "acr_tok_idx", "expand_idx",
-        "stem_idx", "compound_idx", "fuzzy_idx", "fuzzy_strict",
+        "stem_idx", "compound_idx", "fuzzy_idx",
         "head_idx", "camel_head_idx", "prefix_idx", "line_cache", "cfg",
     )
 
@@ -236,7 +245,6 @@ class GazIndex:
         self.entries = list(entries)
         self.cfg = cfg
         self.line_cache: dict = {}  # line -> (kept, has_strong, copular)
-        self.fuzzy_strict = cfg.fuzzy_threshold >= 0.87
         self.exact_idx: dict = {}
         self.norm_idx: dict = {}
         self.acr_tok_idx: dict = {}
@@ -282,36 +290,17 @@ class GazIndex:
             # all-caps acronym expanded by a window's initials (R_EXPAND)
             if e.name.isupper() and 3 <= len(e.norm) <= 6:
                 post(self.expand_idx, e.norm, it)
-            # stem probes indexed by the exact probe strings the rule
-            # cascade tests (stem+suffix), so a window triggers an entry
-            # iff the probe would hit — no prefix fan-out
-            if cfg.enable_stem and len(e.norm) >= cfg.stem_min_prefix:
-                for k in (1, 2):
-                    stem = e.norm[:-k]
-                    for suf in _STEM_SUFFIXES:
-                        cand = stem + suf
-                        if cand != e.norm:
-                            post(self.stem_idx, cand, it)
+            for probe in e.stems:
+                post(self.stem_idx, probe, it)
             if len(e.norm) >= 6:
                 post(self.compound_idx, e.norm[:6], it)
-            # char-set Jaccard >= 0.90 between strings of <=6/<=7 unique
-            # chars forces set equality (J <= 6/7 < 0.9 for unequal
-            # sets), so at the default threshold the charset IS the
-            # trigger key; below 0.87 fall back to a first-char trigger
-            if cfg.enable_fuzzy and 4 <= len(e.norm) <= 6:
-                key = frozenset(e.norm) if self.fuzzy_strict else e.norm[0]
-                post(self.fuzzy_idx, key, it)
+            # a 4-6 char norm has at most 6 distinct chars, so a window
+            # with another char set scores at most 6/7 < JACCARD_THRESHOLD:
+            # the char set IS the trigger key
+            if e.fuzzy:
+                post(self.fuzzy_idx, frozenset(e.norm), it)
 
-    def __iter__(self):
-        return iter(self.entries)
-
-    def __len__(self):
-        return len(self.entries)
-
-    def __getitem__(self, i):
-        return self.entries[i]
-
-    def candidates(self, lv: "LineView", cfg: "MatcherConfig"):
+    def candidates(self, lv: "LineView"):
         """Entries possibly matching this line, in compile order.
         Hot path (called once per distinct line): bound methods hoisted
         to locals — ~10% of cold-path matcher CPU was attribute lookups
@@ -322,10 +311,9 @@ class GazIndex:
         for tok in lv.token_set:
             for i, e in exact_get(tok, ()):
                 put(i, e)
-        wn = lv.window_norms(cfg.max_window)
+        wn = lv.window_norms()
         norm_get = self.norm_idx.get
         stem_get = self.stem_idx.get if self.stem_idx else None
-        fuzzy_strict = self.fuzzy_idx and self.fuzzy_strict
         fuzzy_get = self.fuzzy_idx.get if self.fuzzy_idx else None
         for acc in wn:
             for i, e in norm_get(acc, ()):
@@ -333,12 +321,8 @@ class GazIndex:
             if stem_get is not None:
                 for i, e in stem_get(acc, ()):
                     put(i, e)
-            if fuzzy_strict and 3 <= len(acc) <= 7:
+            if fuzzy_get is not None and 3 <= len(acc) <= 7:
                 for i, e in fuzzy_get(frozenset(acc), ()):
-                    put(i, e)
-        if self.fuzzy_idx and not self.fuzzy_strict:
-            for c in lv.firstchars:
-                for i, e in fuzzy_get(c, ()):
                     put(i, e)
         if self.acr_tok_idx:
             acr_get = self.acr_tok_idx.get
@@ -346,11 +330,10 @@ class GazIndex:
                 for i, e in acr_get(a, ()):
                     put(i, e)
         if self.expand_idx:
-            iw = lv.initials_windows()
-            for key, posts in self.expand_idx.items():
-                if key in iw:
-                    for i, e in posts:
-                        put(i, e)
+            expand_get = self.expand_idx.get
+            for key in lv.initials_windows():
+                for i, e in expand_get(key, ()):
+                    put(i, e)
         if self.compound_idx:
             compound_get = self.compound_idx.get
             for p6 in lv.tok_prefix6():
@@ -396,7 +379,7 @@ def compile_gazetteer(names, cfg: MatcherConfig | None = None):
         norm = normalize_name(name)
         # single common word, or a multi-word name made only of common
         # words ("Test Driver"), needs stronger (case-sensitive) evidence
-        ambiguous = all(t in cfg.ambiguous_words for t in toks)
+        ambiguous = all(t in _AMBIGUOUS_WORDS for t in toks)
         prefix = None
         if len(toks) > 1:
             p0 = toks[0]
@@ -408,7 +391,7 @@ def compile_gazetteer(names, cfg: MatcherConfig | None = None):
                 distinctive
                 and first_tok_counts[p0] == 1
                 and len(p0) >= 4
-                and p0 not in cfg.ambiguous_words
+                and p0 not in _AMBIGUOUS_WORDS
                 and p0 not in all_norms
                 and p0 not in head_counts
             ):
@@ -416,7 +399,7 @@ def compile_gazetteer(names, cfg: MatcherConfig | None = None):
         head = None
         if len(toks) > 1:
             h = toks[-1]
-            if head_counts[h] == 1 and h not in all_norms and h in cfg.role_heads:
+            if head_counts[h] == 1 and h not in all_norms and h in _ROLE_HEADS:
                 head = h
         camel_head = None
         ctoks = camel_by_name[name]
@@ -426,9 +409,15 @@ def compile_gazetteer(names, cfg: MatcherConfig | None = None):
                 camel_head_counts.get(ch, 0) == 1
                 and ch not in all_norms
                 and ch not in head_counts
-                and ch in cfg.role_heads
+                and ch in _ROLE_HEADS
             ):
                 camel_head = ch
+        stems = ()
+        if cfg.enable_stem and len(norm) >= _STEM_MIN_PREFIX:
+            stems = tuple(
+                probe for k in (1, 2) for suf in _STEM_SUFFIXES
+                if (probe := norm[:-k] + suf) != norm
+            )
         entries.append(
             GazEntry(
                 name=name,
@@ -450,6 +439,8 @@ def compile_gazetteer(names, cfg: MatcherConfig | None = None):
                 head=head,
                 camel_head=camel_head,
                 prefix=prefix,
+                stems=stems,
+                fuzzy=cfg.enable_fuzzy and 4 <= len(norm) <= 6,
             )
         )
     return GazIndex(entries, cfg)
@@ -474,12 +465,13 @@ class LineView:
 
     __slots__ = (
         "line", "low", "spans", "words", "low_words", "token_set",
-        "_firstchars", "_acr_equiv", "gap_dotted", "_initials",
+        "max_window", "_acr_equiv", "gap_dotted", "_initials",
         "_window_norms", "_tok_prefix6",
     )
 
-    def __init__(self, line: str):
+    def __init__(self, line: str, max_window: int = 4):
         self.line = line
+        self.max_window = max_window
         self.low = line.lower()
         self.spans = _token_spans(line)
         self.words = [w for w, _, _ in self.spans]
@@ -490,17 +482,10 @@ class LineView:
         for k in range(len(self.spans) - 1):
             g.append("." in line[self.spans[k][2] : self.spans[k + 1][1]])
         self.gap_dotted = g
-        self._firstchars = None
         self._acr_equiv = None
         self._initials = None
         self._window_norms = None
         self._tok_prefix6 = None
-
-    @property
-    def firstchars(self):
-        if self._firstchars is None:
-            self._firstchars = {w[0] for w in self.low_words if w}
-        return self._firstchars
 
     @property
     def acr_equiv(self):
@@ -522,7 +507,7 @@ class LineView:
     def dotted(self, i: int, j: int) -> bool:
         return any(self.gap_dotted[i:j])
 
-    def window_norms(self, max_window: int = 4, max_len: int = 40):
+    def window_norms(self, max_len: int = 40):
         """{concat-of-lowered-tokens: (i, j)} over all windows of up to
         max_window tokens that do not cross a '.' gap; first (leftmost)
         window wins. Built once per line; entry matching becomes a hash
@@ -531,6 +516,7 @@ class LineView:
             wn = {}
             lw = self.low_words
             gd = self.gap_dotted
+            max_window = self.max_window
             for i in range(len(lw)):
                 acc = lw[i]
                 if acc not in wn:
@@ -597,7 +583,7 @@ def _word_matches_token(word: str, tok: str) -> bool:
     return False
 
 
-def _surface_matches(lv: LineView, entry: GazEntry, cfg: MatcherConfig):
+def _surface_matches(lv: LineView, entry: GazEntry):
     """Yield (rule, (tok_lo, tok_hi)) matches of entry in the line."""
     line, spans, words = lv.line, lv.spans, lv.words
     out = []
@@ -646,7 +632,7 @@ def _surface_matches(lv: LineView, entry: GazEntry, cfg: MatcherConfig):
         hit = lv.initials_windows().get(norm)
         if hit and not _generic_at(line, spans, hit):
             return [("R_NORM", hit)]
-    wn = lv.window_norms(cfg.max_window)
+    wn = lv.window_norms()
     low_words = lv.low_words
     # R_NORM: normalized window equality ("bbb-web" == "BBB web")
     hit = wn.get(norm)
@@ -671,15 +657,10 @@ def _surface_matches(lv: LineView, entry: GazEntry, cfg: MatcherConfig):
             ) and not _generic_at(line, spans, (i, i + n_tok - 1)):
                 return [("R_NORM", (i, i + n_tok - 1))]
     # R_STEM: inflections of the name ("re-encoding" -> reencoder)
-    if cfg.enable_stem and len(norm) >= cfg.stem_min_prefix:
-        for k in (1, 2):
-            stem = norm[:-k]
-            for suf in _STEM_SUFFIXES:
-                cand = stem + suf
-                if cand != norm:
-                    hit = wn.get(cand)
-                    if hit is not None and not _generic_at(line, spans, hit):
-                        return [("R_STEM", hit)]
+    for probe in entry.stems:
+        hit = wn.get(probe)
+        if hit is not None and not _generic_at(line, spans, hit):
+            return [("R_STEM", hit)]
     # R_COMPOUND: name embedded as head of a longer single token
     if len(norm) >= 6:
         for i, w in lv.tok_prefix6().get(norm[:6], ()):
@@ -687,21 +668,21 @@ def _surface_matches(lv: LineView, entry: GazEntry, cfg: MatcherConfig):
                 if not _generic_at(line, spans, (i, i)):
                     return [("R_COMPOUND", (i, i))]
     # R_FUZZY: char-set Jaccard for short acronym-like names (typos)
-    if cfg.enable_fuzzy and 4 <= len(norm) <= 6:
+    if entry.fuzzy:
         for acc, span in wn.items():
             if (
                 abs(len(acc) - len(norm)) <= 1
                 and acc
                 and acc[0] == norm[0]
                 and acc != norm
-                and char_jaccard(acc, norm) >= cfg.fuzzy_threshold
+                and char_jaccard(acc, norm) >= JACCARD_THRESHOLD
                 and not _generic_at(line, spans, span)
             ):
                 return [("R_FUZZY", span)]
     return out
 
 
-def induce_aliases(lines, gazetteer, cfg: MatcherConfig):
+def induce_aliases(lines, gazetteer: "GazIndex"):
     """Scan the doc for acronym definitions tied to gazetteer entities.
 
     Pattern: a sequence of 2-4 capitalized words W1..Wk whose initials
@@ -735,7 +716,7 @@ def induce_aliases(lines, gazetteer, cfg: MatcherConfig):
             if sub is None:
                 continue
             sub_phrase = " ".join(sub)
-            for entry in gazetteer:
+            for entry in gazetteer.entries:
                 if entry.ci_regex.search(sub_phrase):
                     aliases.setdefault(
                         acro,
@@ -744,7 +725,7 @@ def induce_aliases(lines, gazetteer, cfg: MatcherConfig):
     return aliases
 
 
-def detect_mentions(lines, gazetteer, cfg: MatcherConfig | None = None):
+def detect_mentions(lines, gazetteer: "GazIndex"):
     """Detect component mentions in one document.
 
     Returns [(sentence_no 1-indexed, gazetteer name, DIRECT|INDIRECT, rule)].
@@ -753,12 +734,12 @@ def detect_mentions(lines, gazetteer, cfg: MatcherConfig | None = None):
     entity occurs literally (case-insensitively); anaphoric rules emit
     INDIRECT.
     """
-    return detect_doc(lines, gazetteer, cfg)[0]
+    return detect_doc(lines, gazetteer)[0]
 
 
-def _match_line(line, gazetteer: "GazIndex", cfg: MatcherConfig):
+def _match_line(line, gazetteer: "GazIndex"):
     """Context-free per-line matching: surface rules + subsumption +
-    head-noun/prefix anaphora. Depends ONLY on (line, gazetteer, cfg) —
+    head-noun/prefix anaphora. Depends ONLY on (line, gazetteer) —
     doc-sequential state (pronouns, doc-induced aliases) is layered on
     by ``detect_doc``. Returns (kept, has_strong, copular) where kept is
     the emit-ready match list.
@@ -767,10 +748,10 @@ def _match_line(line, gazetteer: "GazIndex", cfg: MatcherConfig):
     corpora are dominated by repeated boilerplate sentences, and a hit
     skips the whole rule cascade.
     """
-    lv = LineView(line)
+    lv = LineView(line, gazetteer.cfg.max_window)
     matches = []  # (name, ref, rule, span)
-    for entry in gazetteer.candidates(lv, cfg):
-        for rule, span in _surface_matches(lv, entry, cfg):
+    for entry in gazetteer.candidates(lv):
+        for rule, span in _surface_matches(lv, entry):
             ref = DIRECT if rule in ("R_EXACT", "R_NORM") else INDIRECT
             matches.append((entry.name, ref, rule, span))
     # subsumption: drop matches strictly inside a longer other-entity match
@@ -785,7 +766,7 @@ def _match_line(line, gazetteer: "GazIndex", cfg: MatcherConfig):
     matched_names = {m[0] for m in kept}
     has_strong = any(m[2] in ("R_EXACT", "R_NORM") for m in kept)
     # head-noun anaphora (per entity, only if that entity not already matched)
-    if cfg.enable_head_noun:
+    if gazetteer.cfg.enable_head_noun:
         low = lv.low
         head_cands: dict = {}
         for tok in lv.token_set:
@@ -855,7 +836,7 @@ def _match_line(line, gazetteer: "GazIndex", cfg: MatcherConfig):
 _LINE_CACHE_MAX = 200_000
 
 
-def expansion_comentions(lines, gazetteer: "GazIndex", cfg: MatcherConfig):
+def expansion_comentions(lines, gazetteer: "GazIndex"):
     """Doc-level acronym-expansion co-mention map: if an all-caps
     gazetteer name (e.g. FSESL) is spelled out somewhere in the doc as a
     camel-initials window ("FreeSWITCH Event Socket Layer") that itself
@@ -865,16 +846,15 @@ def expansion_comentions(lines, gazetteer: "GazIndex", cfg: MatcherConfig):
     out: dict = {}
     if not gazetteer.expand_idx:
         return out
+    expand_get = gazetteer.expand_idx.get
     for line in lines:
         if not line:
             continue
         lv = LineView(line)
-        iw = lv.initials_windows()
-        for norm_key, posts in gazetteer.expand_idx.items():
-            hit = iw.get(norm_key)
-            if hit is None:
+        for key, (i, j) in lv.initials_windows().items():
+            posts = expand_get(key)
+            if posts is None:
                 continue
-            i, j = hit
             expansion = " ".join(lv.words[i : j + 1])
             for _idx, acro_entry in posts:
                 for other in gazetteer.entries:
@@ -885,37 +865,25 @@ def expansion_comentions(lines, gazetteer: "GazIndex", cfg: MatcherConfig):
     return out
 
 
-def detect_doc(lines, gazetteer, cfg: MatcherConfig | None = None):
-    """One-pass per-document detection: returns ``(mentions, aliases)``
-    where mentions is the ``detect_mentions`` list and aliases the
-    ``induce_aliases`` dict (computed once, not twice, per doc).
+def detect_doc(lines, gazetteer: "GazIndex"):
+    """One-pass per-document detection under ``gazetteer.cfg``: returns
+    ``(mentions, aliases)`` where mentions is the ``detect_mentions``
+    list and aliases the ``induce_aliases`` dict (computed once, not
+    twice, per doc).
 
     Line-pure matching results are cached on the GazIndex (boilerplate
-    sentences repeat heavily in real corpora); docs with induced
-    aliases bypass the cache because alias hits are doc-specific.
+    sentences repeat heavily in real corpora). Doc-specific alias
+    extras are layered on AFTER the cache, so alias-bearing docs both
+    use and warm it.
     """
-    cfg = cfg or MatcherConfig()
-    if not isinstance(gazetteer, GazIndex):
-        gazetteer = GazIndex(gazetteer, cfg)
-    elif cfg != gazetteer.cfg:
-        # the index's posting lists (stem/fuzzy/ambiguity) were built
-        # for gazetteer.cfg; a different runtime cfg (e.g. lower
-        # fuzzy_threshold) could under-generate candidates. Recompile
-        # from the names so candidates() never drops a surface match.
-        gazetteer = compile_gazetteer([e.name for e in gazetteer.entries], cfg)
-    aliases = induce_aliases(lines, gazetteer, cfg) if cfg.enable_alias_induction else {}
+    cfg = gazetteer.cfg
+    aliases = induce_aliases(lines, gazetteer) if cfg.enable_alias_induction else {}
     comentions = (
-        expansion_comentions(lines, gazetteer, cfg)
+        expansion_comentions(lines, gazetteer)
         if cfg.enable_alias_induction
         else {}
     )
-    # cache only valid for the config the index was compiled with. It
-    # stores the LINE-PURE result (_match_line depends only on (line,
-    # gazetteer, cfg)); doc-specific alias extras are layered on AFTER
-    # the cache, so alias-bearing docs both use and warm it too (until
-    # r4 they bypassed it entirely — on alias-rich corpora that made
-    # every repeat of a hot line pay the full rule cascade).
-    cache = gazetteer.line_cache if cfg == gazetteer.cfg else None
+    cache = gazetteer.line_cache
     out = []
     focus = []  # single focused entity of the previous sentence
     focus_line = -10  # sentence that set the focus (pronoun decay = 1 line)
@@ -926,13 +894,12 @@ def detect_doc(lines, gazetteer, cfg: MatcherConfig | None = None):
             # text span yields no mentions and clears the pronoun focus
             focus = []
             continue
-        hit = cache.get(line) if cache is not None else None
+        hit = cache.get(line)
         if hit is None:
-            hit = _match_line(line, gazetteer, cfg)
-            if cache is not None:
-                if len(cache) >= _LINE_CACHE_MAX:
-                    cache.clear()
-                cache[line] = hit
+            hit = _match_line(line, gazetteer)
+            if len(cache) >= _LINE_CACHE_MAX:
+                cache.clear()
+            cache[line] = hit
         kept, has_strong, copular = hit
         if aliases:
             # doc-induced aliases (count as DIRECT: alias containment,

@@ -159,7 +159,7 @@ def _detect(
                 names, types = gaz_map.get(doc_id, default_names), closure_types
             else:
                 names, types = unpack(tuple(packed[r]))
-            mentions, aliases = detect_doc(lines, _compiled_gaz(names, cfg), cfg)
+            mentions, aliases = detect_doc(lines, _compiled_gaz(names, cfg))
             yield doc_id, 0, mentions, aliases, types
 
     def process(batches):

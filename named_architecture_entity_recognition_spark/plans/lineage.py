@@ -5,7 +5,8 @@ Every stage writes its output partitioned by ``doc_bucket =
 pmod(xxhash64(doc_id), n_buckets)`` plus a manifest recording rows
 in/out per bucket. A resumed run recomputes ONLY buckets missing from
 the manifest (the anti-join happens on bucket ids, i.e. partition
-pruning at the file level — no data read for completed buckets).
+pruning at the file level — no data read for completed buckets). A
+stage written under another bucket count is recomputed whole.
 
 At production scale the same protocol is Iceberg snapshots + hidden
 bucket partitioning; parquet directories are the sandbox stand-in.
@@ -79,6 +80,11 @@ class StageCheckpoint:
         """
         spark = inputs.sparkSession
         manifest = self._load_manifest()
+        if manifest["n_buckets"] != self.n_buckets:
+            # under another bucket count every bucket id names other
+            # docs: drop the manifest first, then _recover drops the data
+            self.manifest_path.unlink()
+            manifest = self._load_manifest()
         done = {int(b) for b in manifest["buckets"]}
         todo = sorted(set(range(self.n_buckets)) - done)
         bucketed = with_bucket(inputs, self.n_buckets, key)

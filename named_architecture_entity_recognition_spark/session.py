@@ -42,9 +42,19 @@ def ensure_parallelism(df, factor: int = 1):
     """Repartition ONLY when the input has fewer partitions than the
     cluster has cores (e.g. a small single-row-group parquet file that
     Spark cannot split). At production scale inputs arrive with
-    thousands of partitions and this is a no-op — no shuffle added."""
+    thousands of partitions and this is a no-op — no shuffle added.
+
+    Runs no job. Counting the RDD partitions of an input that AQE plans
+    (one holding a shuffle) would run its map stage an extra time, so
+    its plan states the count (0 if none, which repartitions). Counting
+    any other input's partitions only lists its splits."""
     target = df.sparkSession.sparkContext.defaultParallelism * factor
-    if df.rdd.getNumPartitions() < target:
+    plan = df._jdf.queryExecution().executedPlan()
+    if plan.nodeName() == "AdaptiveSparkPlan":
+        n = plan.executedPlan().outputPartitioning().numPartitions()
+    else:
+        n = df.rdd.getNumPartitions()
+    if n < target:
         return df.repartition(target)
     return df
 

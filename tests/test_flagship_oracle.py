@@ -32,8 +32,8 @@ from pyspark.sql import functions as F
 import __spark_entry__ as SE
 from named_architecture_entity_recognition_spark.operators.matching import (
     _AMBIGUOUS_WORDS,
+    _STEM_MIN_PREFIX,
     _STEM_SUFFIXES,
-    MatcherConfig,
 )
 
 SF = os.environ.get("SPARK_GRAFT_SF_SMALL", "/root/testdata/sf0.001")
@@ -82,10 +82,9 @@ def test_gazetteer_is_single_token_unambiguous():
 
 
 def test_no_stem_compound_or_fuzzy_reachability(vocab):
-    cfg = MatcherConfig()
     for g in SE._FLAGSHIP_GAZETTEER:
-        # R_STEM requires len >= stem_min_prefix
-        assert len(g) < cfg.stem_min_prefix, f"{g} could stem-match"
+        # R_STEM requires len >= _STEM_MIN_PREFIX
+        assert len(g) < _STEM_MIN_PREFIX, f"{g} could stem-match"
         # R_COMPOUND: corpus word strictly extending the name by > 2
         for w in vocab:
             assert not (

@@ -72,6 +72,26 @@ def test_partial_resume_completes_missing_buckets(spark, docs, tmp_path):
     assert st3.completed_buckets() == {0, 1, 2, 3}
 
 
+def test_resume_under_another_bucket_count_recomputes_whole_stage(
+    spark, docs, tmp_path
+):
+    """Bucket ids under 4 buckets name other docs than under 8, so a
+    complete 4-bucket stage resumed with 8 buckets must equal a fresh
+    8-bucket run, not keep buckets 0-3 and add 4-7 on top."""
+
+    def compute(pending):
+        return pending.select("doc_id", "doc_bucket")
+
+    root = str(tmp_path / "rebucket")
+    StageCheckpoint(root, "ids", n_buckets=4).run(compute, docs)
+    st = StageCheckpoint(root, "ids", n_buckets=8)
+    got = st.run(compute, docs).collect()
+    fresh = StageCheckpoint(str(tmp_path / "fresh"), "ids", n_buckets=8)
+    want = fresh.run(compute, docs).collect()
+    assert sorted(map(tuple, got)) == sorted(map(tuple, want))
+    assert st.metrics()["n_buckets"] == 8
+
+
 def test_crash_between_write_and_manifest_no_duplicates(spark, docs, tmp_path):
     """The r1-flagged resume-atomicity hazard: a crash AFTER bucket data
     lands but BEFORE the manifest records it must not duplicate rows on

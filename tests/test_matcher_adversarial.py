@@ -29,7 +29,7 @@ def _score(doc_range, seed=13):
     for d in doc_range:
         lines, gaz_map, gold, _ = synth_holdout_adversarial(d, seed=seed)
         names = [n for v in gaz_map.values() for n in v]
-        mentions = detect_mentions(lines, compile_gazetteer(names, cfg), cfg)
+        mentions = detect_mentions(lines, compile_gazetteer(names, cfg))
         rec = {(n.lower(), s) for s, n, _, _ in mentions}
         tp += len(rec & gold)
         fp += len(rec - gold)
@@ -67,7 +67,7 @@ def test_distractor_pairs_never_cross_fire():
     for d in range(N_DOCS):
         lines, gaz_map, gold, _ = synth_holdout_adversarial(d)
         names = [n for v in gaz_map.values() for n in v]
-        mentions = detect_mentions(lines, compile_gazetteer(names, cfg), cfg)
+        mentions = detect_mentions(lines, compile_gazetteer(names, cfg))
         rec = {(n.lower(), s) for s, n, _, _ in mentions}
         for a, b in pairs:
             for name, twin in ((a, b), (b, a)):
@@ -85,7 +85,7 @@ def test_acronym_collision_binds_defined_entity():
     for d in range(N_DOCS):
         lines, gaz_map, gold, _ = synth_holdout_adversarial(d)
         names = [n for v in gaz_map.values() for n in v]
-        mentions = detect_mentions(lines, compile_gazetteer(names, cfg), cfg)
+        mentions = detect_mentions(lines, compile_gazetteer(names, cfg))
         ocs_lines = [
             i + 1
             for i, ln in enumerate(lines)

@@ -31,7 +31,7 @@ def _score(doc_range, seed=7):
     misses = []
     for d in doc_range:
         lines, gaz, gold = synth_holdout_sad(d, seed=seed)
-        mentions = detect_mentions(lines, compile_gazetteer(gaz, cfg), cfg)
+        mentions = detect_mentions(lines, compile_gazetteer(gaz, cfg))
         rec = {(n.lower(), s) for s, n, _, _ in mentions}
         tp += len(rec & gold)
         fp += len(rec - gold)

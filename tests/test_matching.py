@@ -14,7 +14,7 @@ CFG = MatcherConfig()
 
 def detect(lines, names):
     gaz = compile_gazetteer(names, CFG)
-    return detect_mentions(lines, gaz, CFG)
+    return detect_mentions(lines, gaz)
 
 
 def test_normalize_and_camel():
@@ -155,11 +155,11 @@ def test_line_cache_equivalence():
         + ["Kurento Media Server KMS is the media engine.", "Later KMS restarts."]
     )
     g1 = compile_gazetteer(["AlphaHub", "Kurento Media Server"], cfg)
-    first = detect_mentions(lines, g1, cfg)
-    again = detect_mentions(lines, g1, cfg)  # warm cache second pass
+    first = detect_mentions(lines, g1)
+    again = detect_mentions(lines, g1)  # warm cache second pass
     assert first == again
     g2 = compile_gazetteer(["AlphaHub", "Kurento Media Server"], cfg)
-    assert detect_mentions(lines, g2, cfg) == first
+    assert detect_mentions(lines, g2) == first
     assert any(r == "R_ALIAS" for _, _, _, r in first)
     assert sum(1 for _, n, _, _ in first if n == "AlphaHub") == 10
 

@@ -61,3 +61,32 @@ def test_console_progress_bar_off(spark):
     so a captured log keeps one result per line."""
     assert spark.sparkContext.getConf().get("spark.ui.showConsoleProgress") == "false"
     assert not spark.sparkContext._jsc.sc().progressBar().isDefined()
+
+
+def test_ensure_parallelism_runs_no_job(spark, tmp_path):
+    """The repartition decision runs no job: a shuffled input keeps the
+    partition count its plan states (counting its RDD partitions would
+    run the shuffle's map stage once more), and a one-file parquet scan
+    is still spread over every core."""
+    from pyspark.sql import functions as F
+
+    from named_architecture_entity_recognition_spark.session import (
+        ensure_parallelism,
+    )
+
+    sc = spark.sparkContext
+    target = sc.defaultParallelism
+    agg = spark.range(2000).groupBy((F.col("id") % 50).alias("k")).count()
+    spark.range(2000).coalesce(1).write.parquet(str(tmp_path / "one"))
+    scan = spark.read.parquet(str(tmp_path / "one"))
+    assert scan.rdd.getNumPartitions() == 1
+    sc.setJobGroup("ensure_parallelism", "ensure_parallelism")
+    try:
+        kept = ensure_parallelism(agg)
+        spread = ensure_parallelism(scan)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert sc.statusTracker().getJobIdsForGroup("ensure_parallelism") == []
+    assert kept is agg
+    assert spread.rdd.getNumPartitions() == target

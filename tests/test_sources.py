@@ -96,6 +96,30 @@ def test_submit_job_gazetteer_csv_and_txt(spark, tmp_path):
     assert load_gazetteer(spark, str(txt)) == ["Auth", "WebUI"]
 
 
+def test_submit_job_n_buckets_reaches_the_sink(tmp_path):
+    """--n-buckets sets the sink's subject buckets too. main() stops its
+    Spark session, so the job runs in its own process."""
+    import os
+    import subprocess
+    import sys
+    from pathlib import Path
+
+    repo = Path(__file__).resolve().parents[1]
+    out = tmp_path / "triples"
+    run = subprocess.run(
+        [sys.executable, str(repo / "tools" / "submit_job.py"), "--synth", "20",
+         "--n-buckets", "4", "--output", str(out),
+         "--checkpoint", str(tmp_path / "ckpt")],
+        env={**os.environ, "SPARK_GRAFT_CPUS": "2"},
+        capture_output=True,
+        text=True,
+        timeout=600,
+    )
+    assert run.returncode == 0, run.stderr[-3000:]
+    buckets = {d.name for d in out.glob("pred=*/subj_bucket=*")}
+    assert buckets == {f"subj_bucket={b}" for b in range(4)}, sorted(buckets)
+
+
 def files_read(q):
     """numFiles metric of the executed scan — files AFTER partition
     pruning (inputFiles() lists the relation pre-pruning)."""

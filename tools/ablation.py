@@ -5,8 +5,8 @@ prompt strategy / temperature / model per project and printing metrics
 per config).
 
 The deterministic engine's configuration surface is MatcherConfig, so
-the sweep ablates each matcher rule family (and tightens thresholds)
-and reports P/R/F1 per (config x project) over the five ArDoCo
+the sweep ablates each matcher rule family (and narrows the token
+window) and reports P/R/F1 per (config x project) over the five ArDoCo
 benchmark projects plus the held-out synthetic suite. Output: a table
 to stdout and one JSON line (machine-readable, same spirit as
 bench.py) so results land in committed artifacts, not prose.
@@ -36,8 +36,8 @@ from tune_matcher import clean_component_name, load_project
 
 BASE = Path("/root/reference/src/test/resources/evaluation_resources")
 
-# named ablations: each drops one rule family or tightens one knob of
-# the full config (the engine's "prompt variants")
+# named ablations: each drops one rule family or narrows the token
+# window of the full config (the engine's "prompt variants")
 ABLATIONS: dict[str, dict] = {
     "full": {},
     "no_fuzzy": {"enable_fuzzy": False},
@@ -45,7 +45,6 @@ ABLATIONS: dict[str, dict] = {
     "no_pronoun": {"enable_pronoun": False},
     "no_head_noun": {"enable_head_noun": False},
     "no_alias_induction": {"enable_alias_induction": False},
-    "fuzzy_095": {"fuzzy_threshold": 0.95},
     "window_2": {"max_window": 2},
 }
 
@@ -81,12 +80,12 @@ def _score_config(cfg: MatcherConfig, lines, gaz_names, gold):
         for d, doc_lines in enumerate(lines):
             rec |= {
                 (clean_component_name(n).lower(), s, d)
-                for s, n, _, _ in detect_mentions(doc_lines, gaz, cfg)
+                for s, n, _, _ in detect_mentions(doc_lines, gaz)
             }
     else:
         rec = {
             (clean_component_name(n).lower(), s)
-            for s, n, _, _ in detect_mentions(lines, gaz, cfg)
+            for s, n, _, _ in detect_mentions(lines, gaz)
         }
     tp, fp, fn = len(rec & gold), len(rec - gold), len(gold - rec)
     return tp, fp, fn

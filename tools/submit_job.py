@@ -58,7 +58,11 @@ def main(argv=None):
     ap.add_argument("--gazetteer", help="gazetteer csv/txt path")
     ap.add_argument("--output", required=True)
     ap.add_argument("--checkpoint", required=True)
-    ap.add_argument("--n-buckets", type=int, default=64)
+    ap.add_argument(
+        "--n-buckets", type=int, default=64,
+        help="doc buckets of the checkpoint stages and subject buckets"
+        " of the sink",
+    )
     ap.add_argument("--synth", type=int, help="generate N synthetic docs instead of --input")
     args = ap.parse_args(argv)
 
@@ -98,7 +102,9 @@ def main(argv=None):
         write_triples,
     )
 
-    write_triples(triples.select("subj", "pred", "obj"), args.output)
+    write_triples(
+        triples.select("subj", "pred", "obj"), args.output, n_buckets=args.n_buckets
+    )
     dt = time.time() - t0
     metrics = {
         s: StageCheckpoint(args.checkpoint, s, args.n_buckets).metrics()

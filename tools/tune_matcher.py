@@ -19,7 +19,6 @@ from pathlib import Path
 sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
 
 from named_architecture_entity_recognition_spark.operators.matching import (
-    MatcherConfig,
     compile_gazetteer,
     detect_mentions,
 )
@@ -55,12 +54,11 @@ def load_project(proj: str):
 
 
 def main(verbose: bool = False):
-    cfg = MatcherConfig()
     tot_tp = tot_fp = tot_fn = 0
     for proj in sorted(p.name for p in BASE.iterdir() if p.is_dir()):
         lines, gold, gaz_names = load_project(proj)
-        gaz = compile_gazetteer(gaz_names, cfg)
-        mentions = detect_mentions(lines, gaz, cfg)
+        gaz = compile_gazetteer(gaz_names)
+        mentions = detect_mentions(lines, gaz)
         rec = {(clean_component_name(name).lower(), sent) for sent, name, _, _ in mentions}
         rules = {}
         for sent, name, _, rule in mentions:
