@@ -34,6 +34,7 @@ from named_architecture_entity_recognition_spark.operators.textstats import (
     quality_score,
     tokens,
 )
+from named_architecture_entity_recognition_spark.sources.lakehouse import RAW_LOCAL_FS
 
 #: the salted md5 fractions below read 8 hex digits
 _HEX8 = float(16**8)
@@ -414,7 +415,7 @@ def prepare_corpus(
         if materialize_dir is None:
             return df
         path = f"{materialize_dir}/{name}"
-        df.write.mode("overwrite").parquet(path)
+        df.write.mode("overwrite").options(**RAW_LOCAL_FS).parquet(path)
         return df.sparkSession.read.parquet(path)
 
     c = F.col(text_col)

@@ -22,6 +22,8 @@ from pathlib import Path
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from named_architecture_entity_recognition_spark.sources.lakehouse import RAW_LOCAL_FS
+
 MANIFEST = "_naer_manifest.json"
 
 
@@ -99,7 +101,12 @@ class StageCheckpoint:
             rows_in = (
                 pending.groupBy("doc_bucket").count().withColumnRenamed("count", "rows_in")
             )
-            out.write.mode("overwrite").partitionBy("doc_bucket").parquet(str(staging))
+            (
+                out.write.mode("overwrite")
+                .options(**RAW_LOCAL_FS)
+                .partitionBy("doc_bucket")
+                .parquet(str(staging))
+            )
             # publish: per-bucket atomic rename (same filesystem). At
             # production scale this is the Iceberg snapshot commit; the
             # staging+rename protocol is its parquet-dir stand-in.

@@ -7,11 +7,19 @@ multi-executor cluster; in this sandbox it runs local[N].
 
 from __future__ import annotations
 
+import hashlib
 import os
+import shutil
+import subprocess
+import tempfile
+import zipfile
 from pathlib import Path
 
 from pyspark import SparkConf
+from pyspark.find_spark_home import _find_spark_home
 from pyspark.sql import SparkSession
+
+_JVM_SRC = Path(__file__).resolve().parent / "jvm" / "NoForkLocalFileSystem.java"
 
 #: knobs chosen for the 100TB design point and safe at local scale
 _DEFAULTS = {
@@ -59,6 +67,51 @@ def ensure_parallelism(df, factor: int = 1):
     return df
 
 
+def nofork_fs_jar() -> str:
+    """The jar holding ``jvm/NoForkLocalFileSystem.java``, the local
+    filesystem the package's writers name in ``lakehouse.RAW_LOCAL_FS``.
+
+    Compiled once with ``javac`` against the running Spark's Hadoop
+    client API and cached in ``jvm/build/`` under the digest of the
+    source. The jar is published with ``os.replace``, so concurrent
+    builders race harmlessly and an edited source gets a new jar. Under
+    spark-submit, a job that writes to ``file:`` paths ships this jar
+    with ``--jars``; ``hdfs://`` and ``s3a://`` targets never load the
+    ``file:`` implementation."""
+    digest = hashlib.sha256(_JVM_SRC.read_bytes()).hexdigest()[:16]
+    jar = _JVM_SRC.parent / "build" / f"nofork-fs-{digest}.jar"
+    if jar.exists():
+        return str(jar)
+    javac = shutil.which("javac")
+    if javac is None:
+        raise RuntimeError(f"javac (JDK 17+) is needed to build {jar} from {_JVM_SRC}")
+    api = sorted(Path(_find_spark_home(), "jars").glob("hadoop-client-api-*.jar"))
+    if not api:
+        raise RuntimeError(f"no hadoop-client-api jar under {_find_spark_home()}/jars")
+    jar.parent.mkdir(parents=True, exist_ok=True)
+    with tempfile.TemporaryDirectory(dir=jar.parent) as tmp:
+        classes = Path(tmp, "classes")
+        subprocess.run(
+            [javac, "--release", "17", "-cp", os.pathsep.join(map(str, api)),
+             "-d", str(classes), str(_JVM_SRC)],
+            check=True,
+        )
+        part = Path(tmp, jar.name)
+        with zipfile.ZipFile(part, "w") as z:
+            for c in sorted(classes.rglob("*.class")):
+                z.write(c, c.relative_to(classes).as_posix())
+        os.replace(part, jar)
+    return str(jar)
+
+
+def _prepend_path(conf: dict, key: str, entry: str) -> None:
+    """Put ``entry`` first on the path-list setting ``key``, keeping any
+    value already configured (in ``conf`` or the Spark defaults)."""
+    existing = conf.get(key) or SparkConf().get(key, "")
+    paths = [entry, *existing.split(os.pathsep)]
+    conf[key] = os.pathsep.join(dict.fromkeys(p for p in paths if p))
+
+
 def get_spark(
     app_name: str = "naer-spark",
     master: str | None = None,
@@ -85,11 +138,15 @@ def get_spark(
     # Python workers unpickle the package's Arrow kernels by reference,
     # so they must import the package even when the driver starts
     # outside the repo root: put its parent directory first on their
-    # PYTHONPATH, keeping any value already configured
-    key = "spark.executorEnv.PYTHONPATH"
-    existing = conf.get(key) or SparkConf().get(key, "")
-    paths = [str(Path(__file__).resolve().parents[1]), *existing.split(os.pathsep)]
-    conf[key] = os.pathsep.join(dict.fromkeys(p for p in paths if p))
+    # PYTHONPATH
+    _prepend_path(
+        conf, "spark.executorEnv.PYTHONPATH", str(Path(__file__).resolve().parents[1])
+    )
+    # the package's local writers name the no-fork filesystem class. A
+    # JVM that spark-submit started has its class path fixed already:
+    # there the jar comes with --jars (tools/package.py builds it)
+    if "PYSPARK_GATEWAY_PORT" not in os.environ:
+        _prepend_path(conf, "spark.driver.extraClassPath", nofork_fs_jar())
     for k, v in conf.items():
         builder = builder.config(k, v)
     return builder.getOrCreate()

@@ -17,12 +17,17 @@ from pyspark.sql import functions as F
 
 N_SUBJ_BUCKETS = 256
 
-#: writer options for local parquet output: Hadoop's checksum-free
-#: RawLocalFileSystem (no `.crc` sibling per file, as on an object
-#: store), kept out of the JVM-wide FileSystem cache so writers without
-#: these options keep their checksums
+#: writer options for the package's local parquet output: Hadoop's
+#: checksum-free RawLocalFileSystem (no `.crc` sibling per file, as on
+#: an object store) in the subclass jvm/NoForkLocalFileSystem.java,
+#: which sets each new file's and directory's mode with one chmod(2)
+#: call where Hadoop without its native library forks a `chmod`
+#: process. session.get_spark puts its jar on the driver class path.
+#: Kept out of the JVM-wide FileSystem cache so writers without these
+#: options keep their checksums. Only `file:` paths load this class;
+#: `hdfs://` and `s3a://` targets use their own filesystems.
 RAW_LOCAL_FS = {
-    "fs.file.impl": "org.apache.hadoop.fs.RawLocalFileSystem",
+    "fs.file.impl": "named_architecture_entity_recognition_spark.jvm.NoForkLocalFileSystem",
     "fs.file.impl.disable.cache": "true",
 }
 
@@ -70,16 +75,18 @@ def write_triples(
     one per writer task. AQE still splits a skewed key. Iceberg's `hash`
     write distribution mode requests the same clustering.
 
-    The fallback writes through Hadoop's checksum-free
-    RawLocalFileSystem (RAW_LOCAL_FS), set on this writer alone. What
-    is left is a per-file floor. Without
-    the Hadoop native library every created file and directory forks a
-    `chmod`, and every Parquet file's writer set-up scans the whole
-    (~1,100-entry) Hadoop configuration. A 200-doc, 32-bucket build on
-    4 vCPUs writes its 96 files in 1.5-1.8 CPU-s where the same rows as
-    one file take 0.2-0.25 s: 13-16 CPU-ms per file, ~5 of them in the
-    two forked chmods (its directory's and its own) and ~3 in the JVM's
-    system time."""
+    The fallback writes through RAW_LOCAL_FS, set on this writer alone:
+    Hadoop's checksum-free local filesystem, setting each created file's
+    and directory's mode with a chmod(2) call instead of the `chmod`
+    process Hadoop forks without its native library. What is left is a
+    per-file floor of ~7 CPU-ms. On 4 vCPUs (`local[2]`, median of 9
+    writes of the 54,398 triples of a 200-doc build), the 96-file,
+    32-bucket sink takes 1.34 JVM CPU-s where the same rows as one file
+    take 0.69 s; with forked chmods it took 2.71 s, 0.61 s of them in
+    the reaped children. Every Parquet file's writer set-up scans the
+    whole (~1,100-entry) Hadoop configuration (~0.45 ms); the rest
+    (task-attempt directories, the committer's renames, writer buffers)
+    is not broken down."""
     spark = triples.sparkSession
     if "/" not in target and iceberg_available(spark):
         (

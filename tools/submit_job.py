@@ -2,9 +2,9 @@
 
 Cluster launch (north_rule):
 
-    python tools/package.py                       # build dist/naer_spark.zip
+    python tools/package.py       # build dist/naer_spark.zip, dist/nofork-fs.jar
     spark-submit --master <cluster> \
-        --py-files dist/naer_spark.zip \
+        --py-files dist/naer_spark.zip --jars dist/nofork-fs.jar \
         tools/submit_job.py \
         --input  <documents table path or iceberg name> \
         --gazetteer <csv path (modelElementID,componentName) or txt> \
