@@ -168,7 +168,8 @@ def _detect(
         # the matcher allocates many short-lived acyclic objects per
         # line; cyclic GC adds contention at high core counts for zero
         # reclaim. The worker process is reused and the generator can be
-        # closed early or raise, so gc is restored on EVERY exit path.
+        # closed early or raise, so gc is restored on EVERY exit path;
+        # pyspark's daemon runs a full collection after each task
         gc_was_enabled = gc.isenabled()
         gc.disable()
         try:
@@ -177,7 +178,6 @@ def _detect(
         finally:
             if gc_was_enabled:
                 gc.enable()
-                gc.collect()
 
     slim = docs.select("doc_id", _sents_expr())
     if joined:

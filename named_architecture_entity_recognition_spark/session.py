@@ -20,6 +20,7 @@ from pyspark.find_spark_home import _find_spark_home
 from pyspark.sql import SparkSession
 
 _JVM_SRC = Path(__file__).resolve().parent / "jvm" / "NoForkLocalFileSystem.java"
+_WORKER_DAEMON = "named_architecture_entity_recognition_spark.worker_daemon"
 
 #: knobs chosen for the 100TB design point and safe at local scale
 _DEFAULTS = {
@@ -142,11 +143,15 @@ def get_spark(
     _prepend_path(
         conf, "spark.executorEnv.PYTHONPATH", str(Path(__file__).resolve().parents[1])
     )
-    # the package's local writers name the no-fork filesystem class. A
-    # JVM that spark-submit started has its class path fixed already:
-    # there the jar comes with --jars (tools/package.py builds it)
+    # the package's local writers name the no-fork filesystem class, and
+    # its worker daemon spares each Python task the zip directory reads.
+    # A JVM that spark-submit started has its class path fixed already:
+    # there the jar comes with --jars (tools/package.py builds it). Its
+    # executors start their daemon before --py-files reaches them, so
+    # there the daemon is named with --conf where they can import it
     if "PYSPARK_GATEWAY_PORT" not in os.environ:
         _prepend_path(conf, "spark.driver.extraClassPath", nofork_fs_jar())
+        conf.setdefault("spark.python.daemon.module", _WORKER_DAEMON)
     for k, v in conf.items():
         builder = builder.config(k, v)
     return builder.getOrCreate()

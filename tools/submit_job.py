@@ -12,6 +12,14 @@ Cluster launch (north_rule):
         --checkpoint <stage-checkpoint root> \
         [--n-buckets 256] [--synth N_DOCS]
 
+Under spark-submit, ``get_spark`` leaves ``spark.python.daemon.module``
+alone, so the executors run PySpark's stock daemon. Where the executor
+``PYTHONPATH`` holds the package when the daemon starts, add
+``--conf spark.python.daemon.module=named_architecture_entity_recognition_spark.worker_daemon``
+so reused workers stop re-reading ``pyspark.zip`` before each task.
+``--py-files`` alone does not cover the daemon: it reaches the workers
+per task.
+
 Local smoke (same code path):
 
     python tools/submit_job.py --synth 2000 --output /tmp/naer_out \
