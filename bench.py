@@ -141,7 +141,7 @@ def run_bench(sf_dir: str, cpus: str, n_synth_docs: int | None = None):
                 mentions,
             )
 
-            mentions._COMPILED.clear()
+            mentions._compiled_gaz.cache_clear()
             _gc.collect()
             _time.sleep(0.02)
             return [_os.getpid()]

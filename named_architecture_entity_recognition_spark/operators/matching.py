@@ -11,8 +11,10 @@ Everything here is pure-Python over ONE document's sentence list, so it
 parallelizes embarrassingly across documents through the one
 ``mapInArrow`` kernel (operators/mentions.py, Arrow batches of whole
 docs); no cross-document state exists. Each worker compiles a
-dictionary once and keeps it in ``mentions._COMPILED``; the compiled
-``GazIndex`` holds the ``MatcherConfig`` that detection runs under.
+dictionary once, under the default ``MatcherConfig``, and keeps it in
+the LRU cache of ``mentions._compiled_gaz``. The compiled ``GazIndex``
+holds the ``MatcherConfig`` that detection runs under, so
+``tools/ablation.py`` varies it by compiling here, in pure Python.
 
 Match rules (each mention records which rule fired):
 

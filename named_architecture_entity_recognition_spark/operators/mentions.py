@@ -11,8 +11,11 @@ A1-A4 grouping fused per (doc_id, name), schema.ENTITIES).
 One dictionary resolver serves every dictionary shape: a JOIN row
 carries its own packed ``TYPE\\x00name`` list; a closure dictionary
 (flat list, typed map or ``{doc_id: names}``) is the degenerate case of
-a row without one, where the doc_id picks the names. Compiled
-gazetteers are cached per (reused) worker process.
+a row without one, where the doc_id picks the names. A row's
+dictionary is the only input that changes what the kernel computes:
+every dictionary compiles under the matcher's default configuration,
+and each (reused) worker process keeps the 16 most recently used
+compiled dictionaries.
 
 The Python boundary receives ONLY (doc_id, sents[, names]): sentences
 are projected out of the span structs JVM-side (``_sents_expr``), so
@@ -30,7 +33,6 @@ from pyspark.sql import functions as F
 from pyspark.sql.pandas.types import to_arrow_schema
 
 from named_architecture_entity_recognition_spark.operators.matching import (
-    MatcherConfig,
     compile_gazetteer,
     detect_doc,
 )
@@ -59,25 +61,15 @@ def normalize_gazetteer(gazetteer_names):
         return (), {k: tuple(v) for k, v in gazetteer_names.items()}, {}
     return tuple(gazetteer_names), {}, {}
 
-#: worker-process-level cache: (names tuple, cfg) -> compiled gazetteer.
-#: compile_gazetteer(200 names) costs ~175 ms; per-task recompiles were
-#: a measurable fraction of short tasks' runtime. Bounded LRU: with
-#: per-doc dictionaries ({doc_id: names}) a reused worker would
-#: otherwise accumulate one compiled index + line cache (up to 200k
-#: entries each) per distinct dictionary, unbounded.
-_COMPILED: dict = {}
-_COMPILED_CAP = 16
 
-
-def _compiled_gaz(names: tuple, cfg: MatcherConfig):
-    key = (names, cfg)
-    got = _COMPILED.pop(key, None)  # pop+reinsert = move to MRU end
-    if got is None:
-        if len(_COMPILED) >= _COMPILED_CAP:
-            _COMPILED.pop(next(iter(_COMPILED)))  # evict LRU
-        got = compile_gazetteer(list(names), cfg)
-    _COMPILED[key] = got
-    return got
+@functools.lru_cache(maxsize=16)
+def _compiled_gaz(names: tuple):
+    """Worker-process-level cache: names tuple -> compiled gazetteer.
+    compile_gazetteer(200 names) costs ~175 ms, a measurable fraction of
+    a short task. Bounded: with per-doc dictionaries ({doc_id: names}) a
+    reused worker would otherwise keep one compiled index + line cache
+    (up to 200k entries each) per distinct dictionary."""
+    return compile_gazetteer(list(names))
 
 
 def _line_is_valid(ln) -> bool:
@@ -122,7 +114,7 @@ def _sents_expr():
 
 
 def _detect(
-    docs, build, schema, cfg, validate_format, gazetteer_names=(), gaz_names=None
+    docs, build, schema, validate_format, gazetteer_names=(), gaz_names=None
 ):
     """documents -> ``schema`` rows through the one Arrow kernel.
     ``build`` turns a batch's per-document ``(doc_id, n_bad, mentions,
@@ -130,7 +122,6 @@ def _detect(
     dictionary is its packed ``names`` column when ``gaz_names`` is
     joined in; otherwise ``gazetteer_names`` rides in the task closure
     (broadcast semantics)."""
-    cfg = cfg or MatcherConfig()
     default_names, gaz_map, closure_types = normalize_gazetteer(gazetteer_names)
     joined = gaz_names is not None
 
@@ -159,7 +150,7 @@ def _detect(
                 names, types = gaz_map.get(doc_id, default_names), closure_types
             else:
                 names, types = unpack(tuple(packed[r]))
-            mentions, aliases = detect_doc(lines, _compiled_gaz(names, cfg))
+            mentions, aliases = detect_doc(lines, _compiled_gaz(names))
             yield doc_id, 0, mentions, aliases, types
 
     def process(batches):
@@ -259,7 +250,6 @@ def _entity_batch(detected):
 def detect_mentions_df(
     docs: DataFrame,
     gazetteer_names,
-    cfg: MatcherConfig | None = None,
     validate_format: bool = False,
 ) -> DataFrame:
     """documents(doc_id, spans) -> mentions rows (see schema.MENTIONS).
@@ -274,14 +264,13 @@ def detect_mentions_df(
     (model/SoftwareArchitectureDocumentation.java:117-124).
     """
     return _detect(
-        docs, _mention_batch, MENTIONS, cfg, validate_format, gazetteer_names
+        docs, _mention_batch, MENTIONS, validate_format, gazetteer_names
     )
 
 
 def detect_entities_df(
     docs: DataFrame,
     gazetteer_names,
-    cfg: MatcherConfig | None = None,
     validate_format: bool = False,
 ) -> DataFrame:
     """documents -> entities (schema.ENTITIES) with the A1-A4 grouping
@@ -296,14 +285,13 @@ def detect_entities_df(
     aliases sorted distinct, alias-only groups dropped.
     """
     return _detect(
-        docs, _entity_batch, ENTITIES, cfg, validate_format, gazetteer_names
+        docs, _entity_batch, ENTITIES, validate_format, gazetteer_names
     )
 
 
 def detect_entities_df_joined(
     docs: DataFrame,
     gaz_df: DataFrame,
-    cfg: MatcherConfig | None = None,
     validate_format: bool = False,
     broadcast: bool = False,
 ) -> DataFrame:
@@ -337,5 +325,5 @@ def detect_entities_df_joined(
     if broadcast:
         gaz_names = F.broadcast(gaz_names)
     return _detect(
-        docs, _entity_batch, ENTITIES, cfg, validate_format, gaz_names=gaz_names
+        docs, _entity_batch, ENTITIES, validate_format, gaz_names=gaz_names
     )

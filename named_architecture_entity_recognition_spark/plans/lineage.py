@@ -156,7 +156,6 @@ def checkpointed_pipeline(
     gazetteer_names,
     root: str,
     n_buckets: int = 8,
-    cfg=None,
 ) -> DataFrame:
     """Full pipeline with per-stage checkpoints: mentions -> entities ->
     triples, each resumable per doc bucket."""
@@ -172,7 +171,7 @@ def checkpointed_pipeline(
 
     st_mentions = StageCheckpoint(root, "mentions", n_buckets)
     mentions = st_mentions.run(
-        lambda d: detect_mentions_df(d.drop("doc_bucket"), gazetteer_names, cfg),
+        lambda d: detect_mentions_df(d.drop("doc_bucket"), gazetteer_names),
         docs,
     )
     st_entities = StageCheckpoint(root, "entities", n_buckets)

@@ -13,14 +13,12 @@ partition directory. The gazetteer rides in the detection closure
 
 from __future__ import annotations
 
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 
 from pyspark.sql import DataFrame
 
-from named_architecture_entity_recognition_spark.operators.matching import MatcherConfig
 from named_architecture_entity_recognition_spark.operators.mentions import (
     detect_entities_df,
-    detect_mentions_df,
 )
 from named_architecture_entity_recognition_spark.operators.triples import to_triples
 
@@ -33,43 +31,25 @@ class RecognizerPipeline:
 
     #: one corpus-wide list, or {doc_id: [names]} per-doc dictionaries
     gazetteer_names: object
-    cfg: MatcherConfig = field(default_factory=MatcherConfig)
     validate: bool = True
 
-    def mentions(self, docs: DataFrame) -> DataFrame:
-        # F1 validation happens inside the detection pass itself
-        # (validate_format) — a separate validation pass would scan the
-        # documents twice; quarantined docs surface as 'quarantined'
-        # records for the metrics layer
-        return detect_mentions_df(
-            docs, self.gazetteer_names, self.cfg, validate_format=self.validate
-        )
-
     def entities(self, docs: DataFrame) -> DataFrame:
-        # A1-A4 grouping is (doc_id, name)-local, so it runs fused
-        # inside the detection workers: detect_entities_df runs the same
-        # Arrow kernel and dictionary resolver as detect_mentions_df,
-        # with the entity output builder instead of the mention one, and
-        # the flagship needs NO shuffle at all. assemble_entities remains
+        # F1 validation happens inside the detection pass itself
+        # (validate_format), so the documents are scanned once. A1-A4
+        # grouping is (doc_id, name)-local, so it runs fused inside the
+        # detection workers: detect_entities_df runs the same Arrow
+        # kernel and dictionary resolver as detect_mentions_df, with the
+        # entity output builder instead of the mention one, and the
+        # flagship needs NO shuffle at all. assemble_entities remains
         # the grouping operator for mention streams from other sources
         # (parsed LLM answers), and an equivalence test pins
         # detect_entities_df == assemble(detect_mentions_df).
         return detect_entities_df(
-            docs, self.gazetteer_names, self.cfg, validate_format=self.validate
+            docs, self.gazetteer_names, validate_format=self.validate
         )
 
-    def triples(self, docs: DataFrame, canonicalize: bool = False) -> DataFrame:
-        """KG triples; with ``canonicalize=True`` the corpus-level
-        entity-linking stage (CC over alias edges, operators/cc.py)
-        additionally emits (entity_id, sameAs, canonical_id) triples
-        unifying the same component across documents."""
-        ents = self.entities(docs)
-        out = to_triples(ents)
-        if canonicalize:
-            from named_architecture_entity_recognition_spark.operators.cc import (
-                canonicalize_corpus,
-                sameas_triples,
-            )
-
-            out = out.unionByName(sameas_triples(canonicalize_corpus(ents)))
-        return out
+    def triples(self, docs: DataFrame) -> DataFrame:
+        """KG triples of the entities. Cross-document entity linking
+        composes on the entities: sameas_triples(canonicalize_corpus(
+        entities)) (operators/cc.py)."""
+        return to_triples(self.entities(docs))

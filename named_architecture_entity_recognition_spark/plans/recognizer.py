@@ -7,22 +7,26 @@ Reference surface (recognizer/NamedEntityRecognizer.java:57-151):
     Set<NamedEntity> out = recognizer.recognize(sad);                 // E1
     Set<NamedEntity> out = recognizer.recognize(sad, possibleEntities); // E2
 
-Our equivalent: the detector is the pluggable stage (the reference's
-Prompt/ChatModel pair). The default is the deterministic gazetteer
-scorer; an LLM-backed detector slots in by emitting answer blobs in the
+Our equivalent:
+
+    recognizer = NamedEntityRecognizer.Builder().gazetteer(names).build()
+    out = recognizer.recognize(docs)                     # E1
+    out = recognizer.recognize(docs, possible_entities)  # E2
+
+The detector stands where the reference's Prompt/ChatModel pair does:
+the deterministic gazetteer scorer, which always runs under the
+matcher's default configuration, so the dictionary is the Builder's one
+setting. An LLM-backed detector slots in by emitting answer blobs in the
 reference's JSON/structured-text formats and routing them through
 ``parsers.answers`` (same contract the reference's prompts define).
 """
 
 from __future__ import annotations
 
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 
 from pyspark.sql import DataFrame
 
-from named_architecture_entity_recognition_spark.operators.matching import (
-    MatcherConfig,
-)
 from named_architecture_entity_recognition_spark.plans.pipeline import (
     RecognizerPipeline,
 )
@@ -32,34 +36,18 @@ from named_architecture_entity_recognition_spark.plans.pipeline import (
 class NamedEntityRecognizer:
     """recognize(docs[, possible_entities]) -> entities DataFrame."""
 
-    cfg: MatcherConfig = field(default_factory=MatcherConfig)
-    validate: bool = True
     default_gazetteer: object = ()
 
     class Builder:
         def __init__(self):
-            self._cfg = MatcherConfig()
-            self._validate = True
             self._gazetteer = ()
-
-        def matcher_config(self, cfg: MatcherConfig):
-            self._cfg = cfg
-            return self
-
-        def validate_format(self, v: bool):
-            self._validate = v
-            return self
 
         def gazetteer(self, names):
             self._gazetteer = names
             return self
 
         def build(self) -> "NamedEntityRecognizer":
-            return NamedEntityRecognizer(
-                cfg=self._cfg,
-                validate=self._validate,
-                default_gazetteer=self._gazetteer,
-            )
+            return NamedEntityRecognizer(default_gazetteer=self._gazetteer)
 
     def recognize(
         self, docs: DataFrame, possible_entities=None
@@ -71,10 +59,10 @@ class NamedEntityRecognizer:
         vocabulary — our deterministic engine is dictionary-scoped by
         design, so an empty dictionary yields no mentions)."""
         gaz = possible_entities if possible_entities is not None else self.default_gazetteer
-        pipe = RecognizerPipeline(gaz, cfg=self.cfg, validate=self.validate)
+        pipe = RecognizerPipeline(gaz)
         return pipe.entities(docs)
 
     def recognize_triples(self, docs: DataFrame, possible_entities=None) -> DataFrame:
         gaz = possible_entities if possible_entities is not None else self.default_gazetteer
-        pipe = RecognizerPipeline(gaz, cfg=self.cfg, validate=self.validate)
+        pipe = RecognizerPipeline(gaz)
         return pipe.triples(docs)

@@ -121,16 +121,17 @@ def get_spark(
 ) -> SparkSession:
     """Build (or reuse) a SparkSession.
 
-    ``master`` defaults to ``local[$SPARK_GRAFT_CPUS or *]`` so the same
-    entrypoint works under spark-submit on a real cluster (where master
-    comes from the submit command and this argument stays None *and* an
-    existing session is returned).
+    ``master`` defaults to ``local[$SPARK_GRAFT_CPUS or *]`` when this
+    call starts the JVM itself. Under spark-submit (the launcher sets
+    ``PYSPARK_GATEWAY_PORT``) a ``None`` master keeps the one the submit
+    command gave, so the same entrypoint runs on a real cluster.
     """
+    submitted = "PYSPARK_GATEWAY_PORT" in os.environ
     builder = SparkSession.builder.appName(app_name)
-    if master is None:
-        cpus = os.environ.get("SPARK_GRAFT_CPUS", "*")
-        master = f"local[{cpus}]"
-    builder = builder.master(master)
+    if master is None and not submitted:
+        master = f"local[{os.environ.get('SPARK_GRAFT_CPUS', '*')}]"
+    if master is not None:
+        builder = builder.master(master)
     conf = dict(_DEFAULTS)
     if shuffle_partitions is not None:
         conf["spark.sql.shuffle.partitions"] = str(shuffle_partitions)
@@ -149,7 +150,7 @@ def get_spark(
     # there the jar comes with --jars (tools/package.py builds it). Its
     # executors start their daemon before --py-files reaches them, so
     # there the daemon is named with --conf where they can import it
-    if "PYSPARK_GATEWAY_PORT" not in os.environ:
+    if not submitted:
         _prepend_path(conf, "spark.driver.extraClassPath", nofork_fs_jar())
         conf.setdefault("spark.python.daemon.module", _WORKER_DAEMON)
     for k, v in conf.items():

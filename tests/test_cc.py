@@ -130,7 +130,13 @@ def test_corpus_canonicalization_links_across_docs(spark):
     assert triples.filter("pred = 'sameAs'").count() == 4
 
 
-def test_pipeline_canonicalize_flag_adds_sameas(spark):
+def test_pipeline_entities_canonicalized_add_sameas(spark):
+    """Entity linking composes on the pipeline's entities: the same
+    component in two documents gets one canonical id."""
+    from named_architecture_entity_recognition_spark.operators.cc import (
+        canonicalize_corpus,
+        sameas_triples,
+    )
     from named_architecture_entity_recognition_spark.plans.pipeline import (
         RecognizerPipeline,
     )
@@ -145,7 +151,7 @@ def test_pipeline_canonicalize_flag_adds_sameas(spark):
         DOCUMENTS,
     )
     pipe = RecognizerPipeline(["BBB web"])
-    t = pipe.triples(docs, canonicalize=True)
+    t = sameas_triples(canonicalize_corpus(pipe.entities(docs)))
     same = t.filter("pred = 'sameAs'").select("obj").distinct()
     assert t.filter("pred = 'sameAs'").count() == 2
     assert same.count() == 1  # both docs' entities share one canonical id

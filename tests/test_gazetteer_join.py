@@ -149,41 +149,40 @@ def test_compiled_gazetteer_cache_is_a_bounded_lru(monkeypatch):
     entries and evicts the least recently used one; a hit returns the
     cached index without recompiling."""
     from named_architecture_entity_recognition_spark.operators import mentions
-    from named_architecture_entity_recognition_spark.operators.matching import (
-        MatcherConfig,
-    )
 
     compiles = []
 
-    def fake_compile(names, cfg):
+    def fake_compile(names):
         compiles.append(tuple(names))
         return ("compiled", tuple(names))
 
     monkeypatch.setattr(mentions, "compile_gazetteer", fake_compile)
-    monkeypatch.setattr(mentions, "_COMPILED", {})
-    cfg = MatcherConfig()
-    dicts = [(f"Name{i}",) for i in range(17)]
+    mentions._compiled_gaz.cache_clear()
+    try:
+        dicts = [(f"Name{i}",) for i in range(17)]
+        for d in dicts[:16]:
+            assert mentions._compiled_gaz(d) == ("compiled", d)
+        assert len(compiles) == 16
+        # a hit: no recompile; dicts[0] becomes the most recently used
+        assert mentions._compiled_gaz(dicts[0]) == ("compiled", dicts[0])
+        assert len(compiles) == 16
 
-    for d in dicts[:16]:
-        assert mentions._compiled_gaz(d, cfg) == ("compiled", d)
-    assert len(compiles) == 16
-    # a hit: same object back, no recompile; dicts[0] becomes most recent
-    assert mentions._compiled_gaz(dicts[0], cfg) == ("compiled", dicts[0])
-    assert len(compiles) == 16
+        # the 17th dictionary evicts the least recently used, dicts[1]
+        mentions._compiled_gaz(dicts[16])
+        assert len(compiles) == 17
+        assert mentions._compiled_gaz.cache_info().currsize == 16
 
-    # the 17th dictionary evicts the least recently used: dicts[1]
-    mentions._compiled_gaz(dicts[16], cfg)
-    cached = {names for names, _ in mentions._COMPILED}
-    assert len(mentions._COMPILED) == 16
-    assert dicts[1] not in cached
-    assert dicts[0] in cached and dicts[16] in cached
-
-    # the re-accessed entry survived: no recompile; the evicted one does
-    mentions._compiled_gaz(dicts[0], cfg)
-    assert len(compiles) == 17
-    mentions._compiled_gaz(dicts[1], cfg)
-    assert compiles[-1] == dicts[1] and len(compiles) == 18
-    assert len(mentions._COMPILED) == 16
+        # the re-used dicts[0] and the newest survive: no recompile
+        mentions._compiled_gaz(dicts[0])
+        mentions._compiled_gaz(dicts[16])
+        assert len(compiles) == 17
+        # the evicted one compiles again
+        mentions._compiled_gaz(dicts[1])
+        assert compiles[-1] == dicts[1] and len(compiles) == 18
+        assert mentions._compiled_gaz.cache_info().currsize == 16
+    finally:
+        # drop the fake results so no later caller in this process gets one
+        mentions._compiled_gaz.cache_clear()
 
 
 def test_dictionary_resolver_join_equals_closure_in_one_batch(spark):

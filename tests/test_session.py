@@ -1,6 +1,7 @@
 """session.get_spark: Python workers import the package wherever the
-driver process starts, no console progress bar is drawn, and the
-package's local writers set file modes without forking a process."""
+driver process starts, a spark-submit master is kept, no console
+progress bar is drawn, and the package's local writers set file modes
+without forking a process."""
 
 import os
 import shutil
@@ -60,6 +61,44 @@ def test_driver_outside_repo_root_runs_package_kernels(tmp_path):
         timeout=600,
     )
     assert "ROWS 1" in run.stdout.splitlines(), run.stderr[-3000:]
+
+
+def test_spark_submit_master_is_kept(tmp_path):
+    """Under spark-submit, get_spark() without a master keeps the one the
+    launcher was given instead of replacing it with local[*]."""
+    import pyspark
+
+    script = tmp_path / "job.py"
+    script.write_text(
+        textwrap.dedent(
+            f"""
+            import sys
+
+            sys.path.insert(0, {str(REPO)!r})
+            from named_architecture_entity_recognition_spark.session import get_spark
+
+            spark = get_spark("sub")
+            print("MASTER", spark.sparkContext.master)
+            spark.stop()
+            """
+        )
+    )
+    submit = Path(pyspark.__file__).parent / "bin" / "spark-submit"
+    env = {
+        **os.environ,
+        "PYSPARK_PYTHON": sys.executable,
+        "PYSPARK_DRIVER_PYTHON": sys.executable,
+    }
+    run = subprocess.run(
+        [str(submit), "--master", "local[1]", "--driver-memory", "1g",
+         str(script)],
+        cwd=tmp_path,
+        env=env,
+        capture_output=True,
+        text=True,
+        timeout=600,
+    )
+    assert "MASTER local[1]" in run.stdout.splitlines(), run.stderr[-3000:]
 
 
 def test_console_progress_bar_off(spark):

@@ -32,6 +32,9 @@ KEEP = {
         "J1/A7: reference getLineNumber, argmax over char-Jaccard",
     "operators.dedup.simhash64":
         "reference form: the SimHash kernel is tested against it",
+    "operators.cc.canonicalize_corpus":
+        "J3: cross-document entity linking, CC over name/alias edges",
+    "operators.cc.sameas_triples": "J3: the linked entities as sameAs triples",
     "operators.entities.change_name": "P5: reference changeName",
     "operators.entities.dedup_entities": "A3: LinkedHashSet dedup",
     "operators.entities.occurrence_lines": "A2: getOccurrenceLines",
@@ -54,6 +57,8 @@ KEEP = {
         "J1/J2 + F5: parsed occurrences resolved, -1 dropped",
     "plans.lineage.StageCheckpoint.completed_buckets":
         "A6: the per-stage resume state the lineage tests read",
+    "plans.recognizer.NamedEntityRecognizer.Builder.build":
+        "E1/E2: reference NamedEntityRecognizer.Builder.build",
     "plans.recognizer.NamedEntityRecognizer.recognize":
         "E1/E2: reference NamedEntityRecognizer.recognize",
     "plans.recognizer.NamedEntityRecognizer.recognize_triples":
@@ -69,43 +74,51 @@ KEEP = {
 }
 
 
-def _used_names() -> set:
-    """Names that code uses: Name ids, attribute names and the last
-    component of every imported name."""
-    used = set()
+def _used_names() -> tuple:
+    """(names, attributes) that code uses. ``names``: Name ids,
+    attribute names and the last component of every imported name, what
+    a top-level function can be reached by. ``attributes``: attribute
+    names only (``x.name``), the one way a method is reached."""
+    names, attributes = set(), set()
     for path in CALLERS:
         for node in ast.walk(ast.parse(path.read_text())):
             if isinstance(node, ast.Name):
-                used.add(node.id)
+                names.add(node.id)
             elif isinstance(node, ast.Attribute):
-                used.add(node.attr)
+                attributes.add(node.attr)
             elif isinstance(node, (ast.Import, ast.ImportFrom)):
-                used.update(a.name.rsplit(".", 1)[-1] for a in node.names)
-    return used
+                names.update(a.name.rsplit(".", 1)[-1] for a in node.names)
+    return names | attributes, attributes
 
 
 def _package_defs() -> dict:
-    """{dotted name: bare name} of every top-level function and every
-    non-dunder method of a top-level class in the package."""
+    """{dotted name: (bare name, is_method)} of every top-level function
+    and every non-dunder method of a class in the package, nested
+    classes included."""
     out = {}
+
+    def walk(prefix, body, in_class):
+        for node in body:
+            if isinstance(node, ast.FunctionDef) and not (
+                in_class and node.name.startswith("__")
+            ):
+                out[f"{prefix}.{node.name}"] = (node.name, in_class)
+            elif isinstance(node, ast.ClassDef):
+                walk(f"{prefix}.{node.name}", node.body, True)
+
     for path in PKG.rglob("*.py"):
         mod = ".".join(path.relative_to(PKG).with_suffix("").parts)
-        for node in ast.parse(path.read_text()).body:
-            if isinstance(node, ast.FunctionDef):
-                out[f"{mod}.{node.name}"] = node.name
-            elif isinstance(node, ast.ClassDef):
-                for m in node.body:
-                    if isinstance(m, ast.FunctionDef) and not (
-                        m.name.startswith("__")
-                    ):
-                        out[f"{mod}.{node.name}.{m.name}"] = m.name
+        walk(mod, ast.parse(path.read_text()).body, False)
     return out
 
 
 def test_every_function_has_a_caller_or_a_kept_reason():
     defs = _package_defs()
-    used = _used_names()
-    unreferenced = {q for q, name in defs.items() if name not in used}
+    names, attributes = _used_names()
+    unreferenced = {
+        q for q, (name, is_method) in defs.items()
+        if name not in (attributes if is_method else names)
+    }
     orphans = sorted(unreferenced - KEEP.keys())
     assert not orphans, f"no production caller and not kept: {orphans}"
     gone = sorted(KEEP.keys() - defs.keys())

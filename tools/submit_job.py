@@ -84,8 +84,8 @@ def main(argv=None):
         synth_gazetteer,
     )
 
-    # under spark-submit the master comes from the launcher; get_spark
-    # only fills it in when running standalone
+    # under spark-submit the master comes from the launcher (--master);
+    # get_spark fills in local[*] only when it starts the JVM itself
     spark = get_spark("naer-kg-submit")
 
     if args.synth:
@@ -121,7 +121,6 @@ def main(argv=None):
     out = {
         "n_triples": n,
         "sec": round(dt, 2),
-        "triples_per_sec": round(n / dt, 1),
         "sink_files": sink_files(args.output),
         "stage_metrics": metrics,
     }

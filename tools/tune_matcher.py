@@ -1,7 +1,7 @@
 """Dev harness: measure matcher P/R against the reference gold CSVs.
 
 Runs the pure-Python doc-local matcher (the same code the Spark
-applyInPandas stage executes) over the 5 ArDoCo benchmark SADs and
+mapInArrow kernel executes) over the 5 ArDoCo benchmark SADs and
 prints per-project precision/recall after the reference's own
 evaluation normalization (TestProjectEvaluator.java:40-43,209-238:
 lowercase + strip the word 'component').
