@@ -2,11 +2,11 @@
 local[$SPARK_GRAFT_CPUS]; prints ONE JSON line:
 
   {"metric": ..., "value": <total sec>, "unit": "sec",
-   "queries": {...}, "sf": ..., "triples_per_sec": ...}
+   "queries": {...}, "sf": ..., "n_docs": ...}
 
 Headline set = the flagship NAER KG pipeline (documents -> triples,
-measuring triples/sec, the engine's primary metric) + representative
-operator queries (dedup, ANN, aggregation, window argmax).
+the engine's primary path) + representative operator queries (dedup,
+ANN, aggregation, window argmax).
 
 Scaling evidence (north_rule): run `python tools/scaling.py` which
 executes this same pipeline at local[8] and local[32] and reports
@@ -175,7 +175,6 @@ def run_bench(sf_dir: str, cpus: str, n_synth_docs: int | None = None):
     timings["naer_kg_pipeline"] = round(dt, 3)
     extras["n_docs"] = n_synth_docs
     extras["n_triples"] = n_triples
-    extras["triples_per_sec"] = round(n_triples / dt, 1)
 
     # --- operator headliners on the driver tables (steady-state)
     for name in headliners:
@@ -334,7 +333,6 @@ def compact_headline(result):
         "queries": dict(result["queries"]),
         "sf": result["sf"],
         "n_docs": result.get("n_docs"),
-        "triples_per_sec": result.get("triples_per_sec"),
         "naer_entities_closure_sec": result.get("naer_entities_closure_sec"),
         "naer_entities_docgaz_sec": result.get("naer_entities_docgaz_sec"),
         "docgaz_overhead_x": result.get("docgaz_overhead_x"),
@@ -342,8 +340,7 @@ def compact_headline(result):
     # hard budget with headroom under the driver's 2000-char tail
     if len(json.dumps(compact)) > 1500:
         for k in ("n_docs", "naer_entities_closure_sec",
-                  "naer_entities_docgaz_sec", "docgaz_overhead_x",
-                  "triples_per_sec"):
+                  "naer_entities_docgaz_sec", "docgaz_overhead_x"):
             compact.pop(k, None)
     while len(json.dumps(compact)) > 1500 and len(compact["queries"]) > 1:
         # drop the fastest non-flagship entries first, never the total

@@ -20,9 +20,9 @@ Match rules (each mention records which rule fired):
 
   R_EXACT   word-boundary surface match (reference DIRECT containment,
             serialization/NamedEntityParser.java:188-204); ambiguous
-            common-word names additionally need a case-sensitive hit,
-            a "<name> component/layer/service" context, and no
-            package-path context ("logic.api").
+            common-word names need a "<name> component/layer/subsystem"
+            context, or a case-sensitive hit outside a package path
+            ("logic.api").
   R_NORM    normalized token-window match: case/hyphen/space collapsed
             ("bbb-web" = "BBB web"), with acronym<->camel-word
             equivalence ("BigBlueButton web" = "BBB web").
@@ -93,6 +93,12 @@ _WORD_RE = re.compile(r"[A-Za-z0-9]+")
 _STEM_SUFFIXES = ("ing", "s", "es")
 # R_STEM applies to normalized names at least this long
 _STEM_MIN_PREFIX = 7
+# longest token-window norm a line offers for lookup
+_WINDOW_MAX_LEN = 40
+# R_COMPOUND: a name norm at least this long, embedded as the head of a
+# token at least _COMPOUND_MIN_TAIL chars longer ("PersistenceProvider")
+_COMPOUND_MIN_NORM = 6
+_COMPOUND_MIN_TAIL = 3
 
 # Copular-definitional sentence ("X is a Java-based application"): such a
 # sentence defines what X *is* rather than what it *does*; a following
@@ -194,16 +200,18 @@ class MatcherConfig:
 
 @dataclass(frozen=True)
 class GazEntry:
-    """Precompiled per-name matching artifacts (broadcast to executors)."""
+    """Precompiled per-name matching artifacts: what the rule cascade
+    and the posting lists read, nothing more."""
 
     name: str
     norm: str
     tokens: tuple
-    is_ambiguous: bool
-    cs_regex: "re.Pattern"
     ci_regex: "re.Pattern"
-    pkg_regex: "re.Pattern"
-    ctx_regex: "re.Pattern"  # '<name> component|layer|subsystem'
+    # ambiguous common-word name only ("Storage"): its (context, case-
+    # sensitive, package-path) regexes, the evidence R_EXACT needs for it
+    # ('<name> component|layer|subsystem', "Storage", "logic.api");
+    # None for every other name
+    strict: tuple | None
     head: str | None
     camel_head: str | None
     prefix: str | None  # unique distinctive first token ('webrtc' of WebRTC-SFU)
@@ -222,15 +230,15 @@ def _boundary_pattern(name: str) -> str:
 class GazIndex:
     """Compiled gazetteer: entry list + inverted trigger indexes.
 
-    Candidate generation is driven from the LINE side (tokens / window
-    norms / initials present in the sentence) through posting lists,
-    instead of testing every entry against every line — the per-
-    (line x entry) candidate scan was ~40% of matcher CPU at 200
-    entries and grows linearly with dictionary size; the posting-list
-    walk is ~O(tokens per line). Semantics are identical: every entry
-    the old trigger test accepted is reachable through some posting
-    list, and matched entries still run the full (unchanged) per-entry
-    rule cascade in compile order.
+    Candidate generation is driven from the LINE side (tokens, window
+    norms, token prefixes, initials present in the sentence) through
+    posting lists, instead of testing every entry against every line.
+    Every probe is an exact key lookup, so a line makes ~O(tokens)
+    probes whatever the dictionary size. Semantics are identical to
+    testing every entry: each rule that can fire for an entry has a
+    posting list that yields it (tests/test_gazindex_property.py,
+    tests/test_matcher_differential.py), and candidates run the full
+    per-entry rule cascade in compile order.
 
     The index holds the ``MatcherConfig`` it was compiled with
     (``cfg``), and detection reads it from here: the posting lists and
@@ -239,7 +247,7 @@ class GazIndex:
 
     __slots__ = (
         "entries", "exact_idx", "norm_idx", "acr_tok_idx", "expand_idx",
-        "stem_idx", "compound_idx", "fuzzy_idx",
+        "stem_idx", "fuzzy_idx",
         "head_idx", "camel_head_idx", "prefix_idx", "line_cache", "cfg",
     )
 
@@ -252,7 +260,6 @@ class GazIndex:
         self.acr_tok_idx: dict = {}
         self.expand_idx: dict = {}
         self.stem_idx: dict = {}
-        self.compound_idx: dict = {}
         self.fuzzy_idx: dict = {}
         self.head_idx: dict = {}
         self.camel_head_idx: dict = {}
@@ -281,9 +288,10 @@ class GazIndex:
                 post(self.camel_head_idx, e.camel_head, it)
             if e.prefix:
                 post(self.prefix_idx, e.prefix, it)
-            if e.is_ambiguous:
+            if e.strict is not None:
                 continue
-            # window-norm equality ("bbb-web" == "BBB web")
+            # window-norm equality ("bbb-web" == "BBB web"), and the
+            # compound head probed by a line token's prefixes (R_COMPOUND)
             post(self.norm_idx, e.norm, it)
             # acronym<->camel token equivalence ("BBB" ~ "BigBlueButton")
             for t in set(e.tokens):
@@ -294,8 +302,6 @@ class GazIndex:
                 post(self.expand_idx, e.norm, it)
             for probe in e.stems:
                 post(self.stem_idx, probe, it)
-            if len(e.norm) >= 6:
-                post(self.compound_idx, e.norm[:6], it)
             # a 4-6 char norm has at most 6 distinct chars, so a window
             # with another char set scores at most 6/7 < JACCARD_THRESHOLD:
             # the char set IS the trigger key
@@ -336,10 +342,10 @@ class GazIndex:
             for key in lv.initials_windows():
                 for i, e in expand_get(key, ()):
                     put(i, e)
-        if self.compound_idx:
-            compound_get = self.compound_idx.get
-            for p6 in lv.tok_prefix6():
-                for i, e in compound_get(p6, ()):
+        # R_COMPOUND: a norm that is a prefix of a token, leaving a tail
+        for w in lv.token_set:
+            for k in range(_COMPOUND_MIN_NORM, len(w) - _COMPOUND_MIN_TAIL + 1):
+                for i, e in norm_get(w[:k], ()):
                     put(i, e)
         return [found[i] for i in sorted(found)]
 
@@ -420,24 +426,28 @@ def compile_gazetteer(names, cfg: MatcherConfig | None = None):
                 probe for k in (1, 2) for suf in _STEM_SUFFIXES
                 if (probe := norm[:-k] + suf) != norm
             )
+        strict = None
+        if ambiguous:
+            strict = (
+                re.compile(
+                    _boundary_pattern(name)
+                    + r"[\s\-]+(component|layer|subsystem)",
+                    re.IGNORECASE,
+                ),
+                re.compile(_boundary_pattern(name)),
+                re.compile(
+                    r"(\.{}|{}\.)[a-z0-9]".format(
+                        re.escape(toks[0]), re.escape(toks[-1])
+                    )
+                ),
+            )
         entries.append(
             GazEntry(
                 name=name,
                 norm=norm,
                 tokens=toks,
-                is_ambiguous=ambiguous,
-                cs_regex=re.compile(_boundary_pattern(name)),
                 ci_regex=re.compile(_boundary_pattern(name), re.IGNORECASE),
-                pkg_regex=re.compile(
-                    r"(\.{}|{}\.)[a-z0-9]".format(
-                        re.escape(toks[0]), re.escape(toks[-1])
-                    )
-                ),
-                ctx_regex=re.compile(
-                    _boundary_pattern(name)
-                    + r"[\s\-]+(component|layer|subsystem)",
-                    re.IGNORECASE,
-                ),
+                strict=strict,
                 head=head,
                 camel_head=camel_head,
                 prefix=prefix,
@@ -468,7 +478,7 @@ class LineView:
     __slots__ = (
         "line", "low", "spans", "words", "low_words", "token_set",
         "max_window", "_acr_equiv", "gap_dotted", "_initials",
-        "_window_norms", "_tok_prefix6",
+        "_window_norms",
     )
 
     def __init__(self, line: str, max_window: int = 4):
@@ -487,7 +497,6 @@ class LineView:
         self._acr_equiv = None
         self._initials = None
         self._window_norms = None
-        self._tok_prefix6 = None
 
     @property
     def acr_equiv(self):
@@ -509,11 +518,11 @@ class LineView:
     def dotted(self, i: int, j: int) -> bool:
         return any(self.gap_dotted[i:j])
 
-    def window_norms(self, max_len: int = 40):
+    def window_norms(self):
         """{concat-of-lowered-tokens: (i, j)} over all windows of up to
-        max_window tokens that do not cross a '.' gap; first (leftmost)
-        window wins. Built once per line; entry matching becomes a hash
-        lookup instead of a scan."""
+        max_window tokens and _WINDOW_MAX_LEN chars that do not cross a
+        '.' gap; first (leftmost) window wins. Built once per line;
+        entry matching becomes a hash lookup instead of a scan."""
         if self._window_norms is None:
             wn = {}
             lw = self.low_words
@@ -527,21 +536,12 @@ class LineView:
                     if gd[j - 1]:
                         break
                     acc += lw[j]
-                    if len(acc) > max_len:
+                    if len(acc) > _WINDOW_MAX_LEN:
                         break
                     if acc not in wn:
                         wn[acc] = (i, j)
             self._window_norms = wn
         return self._window_norms
-
-    def tok_prefix6(self):
-        """{token[:6]: [(index, token)]} for compound-token lookup."""
-        if self._tok_prefix6 is None:
-            d = {}
-            for i, w in enumerate(self.low_words):
-                d.setdefault(w[:6], []).append((i, w))
-            self._tok_prefix6 = d
-        return self._tok_prefix6
 
     def initials_windows(self):
         """{initials-string: (i, j)} for windows of 2..6 initial chars
@@ -589,15 +589,16 @@ def _surface_matches(lv: LineView, entry: GazEntry):
     """Yield (rule, (tok_lo, tok_hi)) matches of entry in the line."""
     line, spans, words = lv.line, lv.spans, lv.words
     out = []
-    if entry.is_ambiguous:
-        m = entry.ctx_regex.search(line)
+    if entry.strict is not None:
+        ctx_regex, cs_regex, pkg_regex = entry.strict
+        m = ctx_regex.search(line)
         if m:
             out.append(("R_EXACT", _char_to_token_range(spans, m.start(), m.end())))
         else:
-            m = entry.cs_regex.search(line)
+            m = cs_regex.search(line)
             if (
                 m
-                and not entry.pkg_regex.search(lv.low)
+                and not pkg_regex.search(lv.low)
                 and not _possessive_before(line, m.start())
                 and not _QUANTITY_OF_BEFORE.search(line[: m.start()])
             ):
@@ -664,9 +665,9 @@ def _surface_matches(lv: LineView, entry: GazEntry):
         if hit is not None and not _generic_at(line, spans, hit):
             return [("R_STEM", hit)]
     # R_COMPOUND: name embedded as head of a longer single token
-    if len(norm) >= 6:
-        for i, w in lv.tok_prefix6().get(norm[:6], ()):
-            if len(w) > len(norm) + 2 and w.startswith(norm):
+    if len(norm) >= _COMPOUND_MIN_NORM:
+        for i, w in enumerate(low_words):
+            if len(w) >= len(norm) + _COMPOUND_MIN_TAIL and w.startswith(norm):
                 if not _generic_at(line, spans, (i, i)):
                     return [("R_COMPOUND", (i, i))]
     # R_FUZZY: char-set Jaccard for short acronym-like names (typos)
@@ -779,13 +780,6 @@ def _match_line(line, gazetteer: "GazIndex"):
         for entry in (head_cands[i] for i in sorted(head_cands)):
             if entry.name in matched_names:
                 continue
-            if (
-                entry.head is None or entry.head not in lv.token_set
-            ) and (
-                entry.camel_head is None
-                or entry.camel_head not in lv.token_set
-            ):
-                continue
             if entry.head and re.search(
                 # not hyphen-attached ("client-side"), not quantifier-
                 # preceded ("each client"), not indefinite-generic
@@ -815,22 +809,17 @@ def _match_line(line, gazetteer: "GazIndex"):
         for tok in lv.token_set:
             for i, e in gazetteer.prefix_idx.get(tok, ()):
                 pref_cands[i] = e
+        # the posting list holds the prefix token: it is a whole word here
         for entry in (pref_cands[i] for i in sorted(pref_cands)):
             if (
-                entry.prefix
-                and entry.prefix in lv.token_set
                 # sentence-initial bare prefix ("WebRTC provides the
                 # user with ...") is a statement about the technology
                 # itself, not an anaphoric reference to the component
-                and lv.low_words[:1] != [entry.prefix]
+                lv.low_words[:1] != [entry.prefix]
                 and entry.name not in matched_names
             ):
-                if re.search(
-                    r"(?i)(?<![a-z0-9])" + re.escape(entry.prefix) + r"(?![a-z0-9])",
-                    line,
-                ):
-                    kept.append((entry.name, INDIRECT, "R_PREFIX", (-1, -1)))
-                    matched_names.add(entry.name)
+                kept.append((entry.name, INDIRECT, "R_PREFIX", (-1, -1)))
+                matched_names.add(entry.name)
     return kept, has_strong, bool(_COPULAR_RE.search(line))
 
 

@@ -38,7 +38,10 @@ word = st.sampled_from(
      "AlphaProvider", "alphaprovider", "fsels", "FSESL", "client",
      "Provider", "pro14", "DataStore", "datastores", "X9", "connects",
      "to", "It", "processes", "requests", "provider's", "A.B",
-     "BigBlueButton", "Alpha Provider", "re-encoding"]
+     "BigBlueButton", "Alpha Provider", "re-encoding",
+     # compounds: a name norm of >= 6 chars as the head of a longer
+     # token ("Provider" in "ProviderHub"), the R_COMPOUND shape
+     "ProviderHub", "WebRTCGateway", "AlphaProviderStore", "datastorehub"]
 )
 line_strategy = st.builds(
     lambda ws: " ".join(ws) + ".",

@@ -3,7 +3,7 @@
 Runs the identical NAER KG pipeline job on the identical deterministic
 input at local[N] and local[4N] (sandbox stand-in for N vs 4N
 executors; no real cluster available) in separate JVMs, and reports
-throughput at both plus efficiency = (T_N / T_4N) / 4.
+the best time and triple count at both plus efficiency = (T_N / T_4N) / 4.
 
 Usage: python tools/scaling.py [n_docs] [N]
 Writes results as JSON to stdout; paste into BASELINE.md.
@@ -81,8 +81,7 @@ for _ in range({repeats}):
     best = dt if best is None else min(best, dt)
 print(json.dumps({{"cpus": cpus, "sec": round(best, 2),
                    "n_triples": n_triples, "reps": reps,
-                   "probe_ms": probes,
-                   "triples_per_sec": round(n_triples / best, 1)}}))
+                   "probe_ms": probes}}))
 spark.stop()
 """
 
