@@ -188,8 +188,8 @@ def run_bench(sf_dir: str, cpus: str, n_synth_docs: int | None = None):
     # --- JOIN-transport gazetteer (VERDICT r4 #6, extras only): the
     # same corpus and the same full gazetteer, but delivered per-doc
     # through detect_entities_df_joined (one dictionary partial-agg
-    # exchange + doc_id join) instead of the task closure — quantifies
-    # the 100×-transport's overhead vs the closure-path flagship.
+    # exchange + doc_id join) instead of the task closure, timed next to
+    # the closure-path flagship.
     # broadcast=False on purpose: measure the honest at-scale path
     # (sort-merge join), not the small-dim shortcut.
     from pyspark.sql import functions as F
@@ -216,7 +216,6 @@ def run_bench(sf_dir: str, cpus: str, n_synth_docs: int | None = None):
     extras["docgaz_rows_match"] = (
         clo.exceptAll(join).isEmpty() and join.exceptAll(clo).isEmpty()
     )
-    extras["docgaz_overhead_x"] = round(t_join / max(t_clo, 1e-9), 2)
 
     # --- span-level dedup (new r5, extras only): ExactSubstr-shape
     # duplicated-interval detection over the driver documents table
@@ -302,9 +301,6 @@ def run_bench(sf_dir: str, cpus: str, n_synth_docs: int | None = None):
         .count()
     )
     extras["corpus_prep_sec"] = round(time.time() - t0, 3)
-    extras["corpus_prep_docs_per_sec"] = round(
-        n_synth_docs / (time.time() - t0), 1
-    )
     extras["corpus_prep_kept"] = n_kept
 
     total = round(sum(timings.values()), 3)
@@ -335,12 +331,11 @@ def compact_headline(result):
         "n_docs": result.get("n_docs"),
         "naer_entities_closure_sec": result.get("naer_entities_closure_sec"),
         "naer_entities_docgaz_sec": result.get("naer_entities_docgaz_sec"),
-        "docgaz_overhead_x": result.get("docgaz_overhead_x"),
     }
     # hard budget with headroom under the driver's 2000-char tail
     if len(json.dumps(compact)) > 1500:
         for k in ("n_docs", "naer_entities_closure_sec",
-                  "naer_entities_docgaz_sec", "docgaz_overhead_x"):
+                  "naer_entities_docgaz_sec"):
             compact.pop(k, None)
     while len(json.dumps(compact)) > 1500 and len(compact["queries"]) > 1:
         # drop the fastest non-flagship entries first, never the total

@@ -16,6 +16,11 @@ the LRU cache of ``mentions._compiled_gaz``. The compiled ``GazIndex``
 holds the ``MatcherConfig`` that detection runs under, so
 ``tools/ablation.py`` varies it by compiling here, in pure Python.
 
+Each distinct line is matched once (``_match_line``, cached on the
+``GazIndex``): its surface matches plus its acronym definitions and
+expansion co-mentions. ``detect_doc`` folds the latter two over the
+document into doc-level aliases, then runs the doc-sequential rules.
+
 Match rules (each mention records which rule fired):
 
   R_EXACT   word-boundary surface match (reference DIRECT containment,
@@ -35,7 +40,11 @@ Match rules (each mention records which rule fired):
   R_COMPOUND name embedded as the head of a longer compound token
             ("PersistenceProvider" -> "Persistence").
   R_ALIAS   doc-induced acronym alias ("Kurento Media Server KMS ..."
-            defines KMS -> Kurento; later bare "KMS" hits count).
+            defines KMS -> Kurento; a bare "KMS" anywhere in the doc
+            counts, before the definition too).
+  R_COMENTION a bare all-caps name whose spelled-out form somewhere in
+            the doc holds another name ("FSESL" after "FreeSWITCH Event
+            Socket Layer" -> FreeSWITCH too), INDIRECT.
   R_HEAD    head-noun anaphora for architectural role nouns
             ("the client" -> "HTML5 Client"), INDIRECT.
   R_CAMEL_HEAD determinered camel head ("the UI" -> "WebUI"), INDIRECT.
@@ -106,6 +115,12 @@ _COMPOUND_MIN_TAIL = 3
 # not attribute to X (benchmark evidence: every annotated pronoun
 # occurrence has an action-verb antecedent).
 _COPULAR_RE = re.compile(r"\b(is|are)\s+(a|an|the)\b", re.IGNORECASE)
+
+# Acronym definition: 2-4 capitalized words, then an all-caps token right
+# after them or in parentheses ("Kurento Media Server (KMS)").
+_ACRONYM_DEF_RE = re.compile(
+    r"((?:[A-Z][A-Za-z0-9]*\s+){1,3}[A-Z][A-Za-z0-9]*)\s+\(?([A-Z]{2,6})\)?"
+)
 
 # Opinion-framed sentence ("We think FreeSWITCH is an amazing piece of
 # software", "We consider the X design interesting"): commentary about
@@ -254,7 +269,7 @@ class GazIndex:
     def __init__(self, entries, cfg: "MatcherConfig"):
         self.entries = list(entries)
         self.cfg = cfg
-        self.line_cache: dict = {}  # line -> (kept, has_strong, copular)
+        self.line_cache: dict = {}  # line -> the _match_line result
         self.exact_idx: dict = {}
         self.norm_idx: dict = {}
         self.acr_tok_idx: dict = {}
@@ -685,49 +700,6 @@ def _surface_matches(lv: LineView, entry: GazEntry):
     return out
 
 
-def induce_aliases(lines, gazetteer: "GazIndex"):
-    """Scan the doc for acronym definitions tied to gazetteer entities.
-
-    Pattern: a sequence of 2-4 capitalized words W1..Wk whose initials
-    spell an all-caps token T appearing right after the sequence or in
-    parentheses, where some Wi surface-matches a gazetteer name
-    -> T becomes a doc-local alias of that entity
-    ("Kurento Media Server KMS is ..." => KMS -> Kurento).
-    """
-    aliases: dict = {}
-    defn = re.compile(
-        r"((?:[A-Z][A-Za-z0-9]*\s+){1,3}[A-Z][A-Za-z0-9]*)\s+\(?([A-Z]{2,6})\)?"
-    )
-    for line in lines:
-        if not line:
-            continue
-        for m in defn.finditer(line):
-            phrase, acro = m.group(1), m.group(2)
-            words = phrase.split()
-            # the regex is greedy-leftmost, so a capitalized sentence
-            # opener swallows leading words ("The Nebula Cache Service
-            # NCS" captures phrase "The Nebula ..."); trim from the left
-            # until the initials spell the acronym — still requires the
-            # exact-initials + gazetteer-surface evidence, so no new
-            # false aliases are possible
-            sub = None
-            for start in range(len(words) - 1):
-                cand = words[start:]
-                if "".join(w[0] for w in cand).upper() == acro:
-                    sub = cand
-                    break
-            if sub is None:
-                continue
-            sub_phrase = " ".join(sub)
-            for entry in gazetteer.entries:
-                if entry.ci_regex.search(sub_phrase):
-                    aliases.setdefault(
-                        acro,
-                        (entry.name, re.compile(_boundary_pattern(acro))),
-                    )
-    return aliases
-
-
 def detect_mentions(lines, gazetteer: "GazIndex"):
     """Detect component mentions in one document.
 
@@ -744,8 +716,11 @@ def _match_line(line, gazetteer: "GazIndex"):
     """Context-free per-line matching: surface rules + subsumption +
     head-noun/prefix anaphora. Depends ONLY on (line, gazetteer) —
     doc-sequential state (pronouns, doc-induced aliases) is layered on
-    by ``detect_doc``. Returns (kept, has_strong, copular) where kept is
-    the emit-ready match list.
+    by ``detect_doc``. Returns (kept, has_strong, copular, defs,
+    comentions): kept is the emit-ready match list, defs the line's
+    ``(acronym, name)`` definitions and comentions its ``(acronym name,
+    other name)`` expansion pairs, which ``detect_doc`` folds over the
+    doc (both ``()`` when alias induction is off).
 
     Being line-pure makes the result cacheable per worker: web-scale
     corpora are dominated by repeated boilerplate sentences, and a hit
@@ -820,86 +795,103 @@ def _match_line(line, gazetteer: "GazIndex"):
             ):
                 kept.append((entry.name, INDIRECT, "R_PREFIX", (-1, -1)))
                 matched_names.add(entry.name)
-    return kept, has_strong, bool(_COPULAR_RE.search(line))
+    copular = bool(_COPULAR_RE.search(line))
+    if not gazetteer.cfg.enable_alias_induction:
+        return kept, has_strong, copular, (), ()
+    # acronym definitions tied to a dictionary name ("Kurento Media
+    # Server KMS is ..." => KMS -> Kurento): the first entry in compile
+    # order that surface-matches the phrase, as a doc-level setdefault
+    # would keep it
+    defs = []
+    for m in _ACRONYM_DEF_RE.finditer(line):
+        phrase, acro = m.group(1), m.group(2)
+        words = phrase.split()
+        # the regex is greedy-leftmost, so a capitalized sentence opener
+        # swallows leading words ("The Nebula Cache Service NCS"); trim
+        # from the left until the initials spell the acronym
+        for start in range(len(words) - 1):
+            if "".join(w[0] for w in words[start:]).upper() == acro:
+                sub_phrase = " ".join(words[start:])
+                for entry in gazetteer.entries:
+                    if entry.ci_regex.search(sub_phrase):
+                        defs.append((acro, entry.name))
+                        break
+                break
+    # acronym-expansion co-mentions: an all-caps name (FSESL) spelled out
+    # as an initials window ("FreeSWITCH Event Socket Layer") that holds
+    # another name (FreeSWITCH) => (FSESL, FreeSWITCH)
+    comentions = set()
+    for key, (i, j) in lv.initials_windows().items() if gazetteer.expand_idx else ():
+        posts = gazetteer.expand_idx.get(key)
+        if posts is None:
+            continue
+        expansion = " ".join(lv.words[i : j + 1])
+        for _idx, acro_entry in posts:
+            for other in gazetteer.entries:
+                if other.name != acro_entry.name and other.ci_regex.search(expansion):
+                    comentions.add((acro_entry.name, other.name))
+    return kept, has_strong, copular, tuple(defs), tuple(comentions)
 
 
 #: per-worker cap on cached distinct lines (result tuples are tiny)
 _LINE_CACHE_MAX = 200_000
 
 
-def expansion_comentions(lines, gazetteer: "GazIndex"):
-    """Doc-level acronym-expansion co-mention map: if an all-caps
-    gazetteer name (e.g. FSESL) is spelled out somewhere in the doc as a
-    camel-initials window ("FreeSWITCH Event Socket Layer") that itself
-    contains another gazetteer name (FreeSWITCH), then a BARE use of the
-    acronym elsewhere also references the contained entity (the gold
-    standard annotates both)."""
-    out: dict = {}
-    if not gazetteer.expand_idx:
-        return out
-    expand_get = gazetteer.expand_idx.get
-    for line in lines:
-        if not line:
-            continue
-        lv = LineView(line)
-        for key, (i, j) in lv.initials_windows().items():
-            posts = expand_get(key)
-            if posts is None:
-                continue
-            expansion = " ".join(lv.words[i : j + 1])
-            for _idx, acro_entry in posts:
-                for other in gazetteer.entries:
-                    if other.name == acro_entry.name:
-                        continue
-                    if other.ci_regex.search(expansion):
-                        out.setdefault(acro_entry.name, set()).add(other.name)
-    return out
-
-
 def detect_doc(lines, gazetteer: "GazIndex"):
     """One-pass per-document detection under ``gazetteer.cfg``: returns
     ``(mentions, aliases)`` where mentions is the ``detect_mentions``
-    list and aliases the ``induce_aliases`` dict (computed once, not
-    twice, per doc).
+    list and aliases the doc's induced ``{acronym: name}`` map.
 
-    Line-pure matching results are cached on the GazIndex (boilerplate
-    sentences repeat heavily in real corpora). Doc-specific alias
-    extras are layered on AFTER the cache, so alias-bearing docs both
-    use and warm it.
+    Each line is resolved once through the line-pure ``_match_line``
+    result cached on the GazIndex (boilerplate sentences repeat heavily
+    in real corpora). Its acronym definitions and expansion co-mentions
+    are folded over the whole doc first, so an alias defined on line 5
+    also tags a bare use on line 1; the doc-sequential extras (aliases,
+    co-mentions, pronouns) are then layered on AFTER the cache.
     """
     cfg = gazetteer.cfg
-    aliases = induce_aliases(lines, gazetteer) if cfg.enable_alias_induction else {}
-    comentions = (
-        expansion_comentions(lines, gazetteer)
-        if cfg.enable_alias_induction
-        else {}
-    )
     cache = gazetteer.line_cache
+    hits = []  # None for a null/empty line
+    for line in lines:
+        hit = None
+        if line:
+            hit = cache.get(line)
+            if hit is None:
+                hit = _match_line(line, gazetteer)
+                if len(cache) >= _LINE_CACHE_MAX:
+                    cache.clear()
+                cache[line] = hit
+        hits.append(hit)
+    aliases: dict = {}
+    comentions: dict = {}
+    for hit in hits:
+        if hit is not None:
+            for acro, name in hit[3]:
+                aliases.setdefault(acro, name)
+            for acro_name, other in hit[4]:
+                comentions.setdefault(acro_name, set()).add(other)
+    alias_rx = [
+        (name, re.compile(_boundary_pattern(acro))) for acro, name in aliases.items()
+    ]
     out = []
     focus = []  # single focused entity of the previous sentence
     focus_line = -10  # sentence that set the focus (pronoun decay = 1 line)
     focus_copular = False  # focus was set by a definitional "X is a ..." line
-    for sent_no, line in enumerate(lines, 1):
-        if not line:
+    for sent_no, (line, hit) in enumerate(zip(lines, hits), 1):
+        if hit is None:
             # dirty row resilience (F5: drop, don't fail) — a null/empty
             # text span yields no mentions and clears the pronoun focus
             focus = []
             continue
-        hit = cache.get(line)
-        if hit is None:
-            hit = _match_line(line, gazetteer)
-            if len(cache) >= _LINE_CACHE_MAX:
-                cache.clear()
-            cache[line] = hit
-        kept, has_strong, copular = hit
-        if aliases:
+        kept, has_strong, copular, _defs, _comentions = hit
+        if alias_rx:
             # doc-induced aliases (count as DIRECT: alias containment,
             # NamedEntityParser.java:196-200); appended after the
             # line-pure pass, mirroring their standalone-token nature.
             # Never mutate `kept` — it may be the cached list.
             matched = {m[0] for m in kept}
             extra = []
-            for acro, (name, rx) in aliases.items():
+            for name, rx in alias_rx:
                 if name in matched:
                     continue
                 mm = rx.search(line)

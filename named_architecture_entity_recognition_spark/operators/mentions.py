@@ -194,7 +194,7 @@ def _mention_batch(detected):
             rows.append((doc_id, "quarantined", "", n_bad, None, "F1", None))
         for sent_no, name, ref, rule in mentions:
             rows.append((doc_id, "mention", name, sent_no, ref, rule, None))
-        for acro, (name, _rx) in aliases.items():
+        for acro, name in aliases.items():
             rows.append((doc_id, "alias", name, None, None, "R_ALIAS", acro))
     cols = list(zip(*rows)) or [()] * len(_MENTIONS_ARROW)
     return pa.RecordBatch.from_arrays(
@@ -219,7 +219,7 @@ def _entity_batch(detected):
         for sent_no, name, ref, _rule in mentions:
             occ_by_name.setdefault(name, set()).add((sent_no, ref))
         alias_by_name: dict = {}
-        for acro, (name, _rx) in aliases.items():
+        for acro, name in aliases.items():
             alias_by_name.setdefault(name, set()).add(acro)
         for name in sorted(occ_by_name):
             col_doc.append(doc_id)

@@ -158,7 +158,8 @@ def checkpointed_pipeline(
     n_buckets: int = 8,
 ) -> DataFrame:
     """Full pipeline with per-stage checkpoints: mentions -> entities ->
-    triples, each resumable per doc bucket."""
+    triples, each resumable per doc bucket. F1-invalid docs are
+    quarantined in the mentions stage, as ``RecognizerPipeline`` does."""
     from named_architecture_entity_recognition_spark.operators.entities import (
         assemble_entities,
     )
@@ -171,7 +172,9 @@ def checkpointed_pipeline(
 
     st_mentions = StageCheckpoint(root, "mentions", n_buckets)
     mentions = st_mentions.run(
-        lambda d: detect_mentions_df(d.drop("doc_bucket"), gazetteer_names),
+        lambda d: detect_mentions_df(
+            d.drop("doc_bucket"), gazetteer_names, validate_format=True
+        ),
         docs,
     )
     st_entities = StageCheckpoint(root, "entities", n_buckets)

@@ -199,5 +199,5 @@ def test_detect_doc_never_crashes_and_emits_valid_rows(lines):
         assert name in names
         assert ref in ("DIRECT", "INDIRECT")
         assert isinstance(rule, str) and rule
-    for acro, (name, _rx) in aliases.items():
+    for acro, name in aliases.items():
         assert name in names and acro

@@ -1,10 +1,14 @@
 """Checkpoint/resume with per-partition lineage (north_rule)."""
 
 import json
+from collections import Counter
 
 import pytest
 from pyspark.sql import functions as F
 
+from named_architecture_entity_recognition_spark.plans.pipeline import (
+    RecognizerPipeline,
+)
 from named_architecture_entity_recognition_spark.plans.lineage import (
     StageCheckpoint,
     checkpointed_pipeline,
@@ -155,3 +159,31 @@ def test_checkpointed_pipeline_end_to_end(spark, docs, tmp_path):
     # full resume is a no-op producing identical output
     t2 = checkpointed_pipeline(docs, gaz, root, n_buckets=2)
     assert t2.count() == n1
+
+
+def test_checkpointed_pipeline_quarantines_f1_invalid_docs(spark, docs, tmp_path):
+    """The resumable pipeline and RecognizerPipeline give the same
+    triples when some docs break F1: each quarantines a doc whose first
+    text line lost its terminator, instead of emitting triples for it."""
+    first_text = F.array_position(F.transform("spans", lambda s: s["kind"]), "text")
+    broken = docs.withColumn(
+        "spans",
+        F.when(
+            F.col("doc_id").isin([r.doc_id for r in docs.select("doc_id").take(8)[::2]]),
+            F.transform(
+                "spans",
+                lambda s, i: F.when(
+                    i + 1 == first_text,
+                    s.withField("text", F.regexp_replace(s["text"], r"[.!?]\s*$", "")),
+                ).otherwise(s),
+            ),
+        ).otherwise(F.col("spans")),
+    )
+    gaz = synth_gazetteer(20)
+
+    def spo(triples):
+        return Counter(tuple(r) for r in triples.select("subj", "pred", "obj").collect())
+
+    resumable = spo(checkpointed_pipeline(broken, gaz, str(tmp_path / "f1"), n_buckets=2))
+    assert resumable == spo(RecognizerPipeline(gaz).triples(broken))
+    assert resumable != spo(RecognizerPipeline(gaz, validate=False).triples(broken))

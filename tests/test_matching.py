@@ -1,10 +1,13 @@
 """Unit tests for the doc-local mention matcher rules."""
 
+import pytest
+
 from named_architecture_entity_recognition_spark.operators.matching import (
     MatcherConfig,
     acronym_of,
     camel_tokens,
     compile_gazetteer,
+    detect_doc,
     detect_mentions,
     normalize_name,
 )
@@ -112,6 +115,47 @@ def test_alias_induction_acronym_definition():
         ["Kurento"],
     )
     assert (2, "Kurento", "DIRECT", "R_ALIAS") in out
+
+
+@pytest.mark.parametrize("expansion_first", [True, False])
+def test_bare_acronym_co_mentions_the_name_in_its_expansion(expansion_first):
+    """FSESL spelled out as "FreeSWITCH Event Socket Layer" anywhere in
+    the doc: a bare FSESL line, before or after it, also references
+    FreeSWITCH (R_COMENTION); the expansion line itself does not."""
+    lines = ["The FreeSWITCH Event Socket Layer carries events.",
+             "FSESL restarts nightly."]
+    if not expansion_first:
+        lines.reverse()
+    bare = lines.index("FSESL restarts nightly.") + 1
+    out = detect(lines, ["FreeSWITCH", "FSESL"])
+    assert (bare, "FSESL", "DIRECT", "R_EXACT") in out
+    assert (bare, "FreeSWITCH", "INDIRECT", "R_COMENTION") in out
+    assert [m for m in out if m[3] == "R_COMENTION"] == [
+        (bare, "FreeSWITCH", "INDIRECT", "R_COMENTION")
+    ]
+
+
+def test_alias_defined_after_first_bare_use_tags_that_line():
+    """Aliases are doc-level: a definition on a later line still tags an
+    earlier bare use."""
+    out = detect(
+        ["Later KMS restarts.", "Kurento Media Server KMS is the media engine."],
+        ["Kurento"],
+    )
+    assert (1, "Kurento", "DIRECT", "R_ALIAS") in out
+
+
+def test_cached_lines_carry_no_alias_into_another_doc():
+    """Two docs on one compiled gazetteer: the second repeats the first's
+    bare-acronym line (a line-cache hit) but not its definition, so it
+    gets no R_ALIAS and no alias."""
+    gaz = compile_gazetteer(["Kurento"], CFG)
+    first, first_aliases = detect_doc(
+        ["Kurento Media Server KMS is the media engine.", "Later KMS restarts."], gaz
+    )
+    assert (2, "Kurento", "DIRECT", "R_ALIAS") in first and "KMS" in first_aliases
+    second, second_aliases = detect_doc(["Later KMS restarts.", "The KMS logs grow."], gaz)
+    assert second == [] and not second_aliases
 
 
 def test_subsumption_suppresses_inner_entity():
